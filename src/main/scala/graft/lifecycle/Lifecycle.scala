@@ -174,8 +174,8 @@ class Lifecycle(
   def sessionControlDate(): Timestamp =
     controlDateFrom(store.getEnv("BATCH_CONTROL_DATE"))
 
-  /** The session vars startup needs, in ONE env-store job (vs four
-    * window-over-events jobs per batch start). */
+  /** The session vars startup needs, in ONE env-store lookup (vs one
+    * per variable). */
   private def sessionVars(): (SessionFlags, Timestamp) = {
     val env = store.getEnvs(FlagVars :+ "BATCH_CONTROL_DATE")
     (flagsFrom(env), controlDateFrom(env.get("BATCH_CONTROL_DATE")))
@@ -315,8 +315,8 @@ class Lifecycle(
         // BEFORE the WAITING insert avoids appending (and then having to
         // close) a doomed run. The non-exclusive branch gets the same
         // rejection from the transactional admit below, so a pre-check
-        // there would just be a second identical latest-state window job
-        // on every startup.
+        // there would just be a second identical latest-state read on
+        // every startup.
         else if (exclusiveRun && duplicateRunCheck(master.module_id, params))
           failureEvent(master.module_id, master.sub_system, DuplicateRun, params)
         else if (exclusiveRun) {                      // body:511-530
@@ -420,7 +420,7 @@ class Lifecycle(
       // reference's silent (here: logged) no-op. A pre-checked variant
       // would let a racing Success mask a Failure.
       // the admit's LAST observation feeds the rejection message — a
-      // fresh currentStatus there would be a second full window job
+      // fresh currentStatus there would be a second latest-state read
       // whose only consumer is a log line
       var observed: Option[String] = None
       store.appendEventGuarded(
@@ -458,16 +458,18 @@ class Lifecycle(
   /** Restore a run context from the state view: the latest RUNNING row for
     * (module, run_id) — proc_get_transaction_info's latest-row intent
     * (body:158-165; SURVEY §2.5 W1 note) — rehydrates parameters and
-    * run_date into a fresh context. */
+    * run_date into a fresh context. Latest = max run_date (NULL lowest,
+    * as `ORDER BY run_date DESC` puts it last), then max event_seq:
+    * reduced on the driver over the filtered rows, no sort planned. */
   def continueRun(batchName: String, runLevel: Option[Long], runId: Long): Either[BatchError, BatchContext] =
     getModuleInfo(batchName, runLevel).flatMap { master =>
       val rows = store.monitorState.filter(
           col("module_id") === master.module_id &&
           col("run_id") === runId &&
           col("run_status") === RunStatus.Running)
-        .orderBy(col("run_date").desc, col("event_seq").desc)
-        .limit(1).collect()
-      rows.headOption match {
+        .collect()
+      rows.maxByOption(r =>
+        (Option(r.getAs[Timestamp]("run_date")), r.getAs[Long]("event_seq"))) match {
         case None => Left(NoActiveRun(batchName, runId))
         case Some(r) =>
           Right(new BatchContext(master,
@@ -495,16 +497,15 @@ class Lifecycle(
       maxPolls: Long = Long.MaxValue): Int = {
     val deps = store.dependencies
       .filter(col("child_id") === master.module_id).collect().toSeq
+    lazy val masters = store.batchMaster.collect()
     var last = 0
     for (dep <- deps if last != 2) {
-      val parentName = store.batchMaster
-        .filter(col("module_id") === dep.parent_module_id)
-        .collect().headOption.map(_.module_name)
+      val parentName = masters.find(_.module_id == dep.parent_module_id).map(_.module_name)
       parentName.foreach { pn =>
         var polls = 0L
         var waiting = true
         while (waiting) {
-          val st = parentLatestRunStatus(dep.parent_module_id, pn,
+          val st = parentLatestRunStatus(store.monitorState, dep.parent_module_id, pn,
             master.module_name, params, controlDate)
           last = DependencyMatrix.decode(st, dep.dependency_type)
           if (last != 1) waiting = false
@@ -520,15 +521,19 @@ class Lifecycle(
     last
   }
 
-  /** Status of the parent's latest run (max run_id) for the control date
-    * (body:269-322). When parent and child share a module name, the
-    * parameter prefixes before 'Run_level=<' must match (the reference's
-    * duplicated SUBSTR/INSTR predicate, body:290-320); otherwise any
-    * parameters qualify. None = parent has no qualifying run yet.
+  /** Status of the parent's latest run (max run_id, then max event_seq)
+    * for the control date (body:269-322), read from `monitorState`. When
+    * parent and child share a module name, the parameter prefixes before
+    * 'Run_level=<' must match (the reference's duplicated SUBSTR/INSTR
+    * predicate, body:290-320); otherwise any parameters qualify. None =
+    * parent has no qualifying run yet. The predicates stay Spark
+    * expressions (session-time-zone `date_trunc`, `upper`, `instr`); the
+    * latest-run pick is a driver reduce over the filtered rows.
     */
-  private def parentLatestRunStatus(parentId: Long, parentName: String,
+  private[graft] def parentLatestRunStatus(monitorState: org.apache.spark.sql.DataFrame,
+      parentId: Long, parentName: String,
       childName: String, params: String, controlDate: Timestamp): Option[String] = {
-    val base = store.monitorState.filter(
+    val base = monitorState.filter(
       col("module_id") === parentId &&
       date_trunc("DAY", col("control_date")) === date_trunc("DAY", lit(controlDate)))
     val scoped =
@@ -540,8 +545,8 @@ class Lifecycle(
             "substring(parameters, 1, greatest(instr(parameters, 'Run_level=<') - 2, 0))"))
           base.filter(storedPrefix === pre)
       }
-    scoped.orderBy(col("run_id").desc).limit(1)
-      .select("run_status").collect().headOption.map(_.getString(0))
+    scoped.select("run_id", "event_seq", "run_status").collect()
+      .maxByOption(r => (r.getLong(0), r.getLong(1))).map(_.getString(2))
   }
 
   // ---- S7: func_get_loader_file_name (body:1163-1251) --------------------
@@ -574,14 +579,16 @@ class Lifecycle(
       else 1
     val t = store.loaderFiles.filter(upper(col("batch_name")) === batchName.toUpperCase)
     val avgName = upper(col("file_name")) === "AVG_${DAY}_VDN"
-    val branch1 = t.filter(lit(flag) === 1)
-    val branch2 = t.filter(avgName && lit(flag) === 2)
-    val branch3 = t.filter(!avgName && lit(flag) === 3)
-    val names = branch1.unionAll(branch2).unionAll(branch3)
-      .select(regexp_replace(col("file_name"), "\\$\\{DAY\\}", runDay).as("file_name"),
-        col("file_seq"))
-      .orderBy("file_seq")
-      .select("file_name").collect().map(_.getString(0)).toSeq
+    // the three UNION ALL branches are mutually exclusive on the flag
+    val branch = flag match {
+      case 1 => t
+      case 2 => t.filter(avgName)
+      case _ => t.filter(!avgName)
+    }
+    // ordered by file_seq on the driver: the manifest is dimension-sized
+    val names = branch
+      .select(regexp_replace(col("file_name"), "\\$\\{DAY\\}", runDay), col("file_seq"))
+      .collect().sortBy(_.getLong(1)).map(_.getString(0)).toSeq
     if (names.isEmpty) {
       store.appendLog(graft.state.BatchLogRec(ts(clock.now()), "func_get_loader_file_name",
         610, "graft.lifecycle", Some(batchName),

@@ -111,12 +111,16 @@ object ControlStore {
     * scope both stores share. Epoch-day compare, NOT `date_trunc`
     * (which truncates in the session time zone and would never match the
     * UTC literal on a non-UTC session — see Lifecycle.getRunId's
-    * original derivation). */
+    * original derivation). Filter → collect → driver max, so no
+    * aggregate is planned: over a local-relation state view the whole
+    * lookup runs on the driver. */
   def maxRunId(monitorState: DataFrame, moduleId: Long, at: Instant): Long = {
     val epochDay = Math.floorDiv(at.getEpochSecond, 86400L)
     monitorState.filter(
         col("module_id") === moduleId &&
         expr("unix_micros(run_date) div 86400000000") === lit(epochDay))
-      .agg(coalesce(max("run_id"), lit(0L))).head().getLong(0)
+      .select("run_id").collect()
+      .collect { case r if !r.isNullAt(0) => r.getLong(0) }
+      .maxOption.getOrElse(0L)
   }
 }

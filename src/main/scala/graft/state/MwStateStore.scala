@@ -2,12 +2,15 @@ package graft.state
 
 import java.nio.file.{Files, Path, Paths}
 import java.time.format.DateTimeFormatter
+import java.util.concurrent.atomic.AtomicReference
 
 import scala.jdk.CollectionConverters._
 import scala.reflect.runtime.universe.TypeTag
+import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Retention marker for the multi-writer batch_log (see
   * [[MwStateStore.purgeBatchLog]]): immutable commits can't rewrite
@@ -33,6 +36,14 @@ private[state] final case class LogPurge(horizon: java.sql.Timestamp)
   *    payload-as-data design makes an append one tmp-write + one atomic
   *    link — no Spark job, no parquet task commit — while staying fully
   *    durable-on-return (the X1 autonomous-transaction property).
+  *  - Reads are answered from ONE driver-resident, version-stamped
+  *    snapshot of the decoded rows, shared by every driver thread: each
+  *    read lists the commit log and decodes only the commits above the
+  *    snapshot's version, on the driver. Read frames are local
+  *    relations, so a lookup that filters and collects them launches no
+  *    Spark job either; only reloading a checkpoint (when another
+  *    writer's checkpoint has moved past the snapshot, or a vacuum has
+  *    opened a gap under it) and writing one do.
   *  - Read-modify-write ([[transactRunId]]) runs inside
   *    `TxnLog.commit(v => …)`: the payload derives `max(run_id)+1` from
   *    the snapshot `< v`, and winning `v` proves no concurrent
@@ -45,17 +56,17 @@ private[state] final case class LogPurge(horizon: java.sql.Timestamp)
   *    single-writer rewrite-in-place.
   *  - Every K commits the committer writes a consolidated parquet
   *    CHECKPOINT (all kinds, seqs baked in) and publishes it by atomic
-  *    directory rename; readers load the newest checkpoint plus the ≤K
-  *    JSON tail commits, so read cost is bounded regardless of history
-  *    length, and [[vacuum]] can drop checkpoint-covered commits.
+  *    directory rename; a cold reader loads the newest checkpoint plus
+  *    the ≤K JSON tail commits, so read cost is bounded regardless of
+  *    history length, and [[vacuum]] can drop checkpoint-covered commits.
   *
   * Crash safety, by construction: a temp payload without its link is
   * invisible; a published link is complete (the link appears only after
   * the payload is on disk); a half-written checkpoint never gets
   * renamed into place; a crash between checkpoint and vacuum merely
-  * leaves redundant commits. The JSON round-trip is Spark's own
-  * (`spark.read.schema(…).json`), timestamps as explicit-offset ISO
-  * instants, so parsing is session-timezone-proof.
+  * leaves redundant commits. The JSON round-trip is Spark's own parser
+  * (`from_json`, schema-pinned, FAILFAST), timestamps as explicit-offset
+  * ISO instants, so parsing is session-timezone-proof.
   *
   * Scale: identical to [[TxnLog]]'s story — control-plane rates (one
   * commit per run transition), O(writers) retry contention, bounded
@@ -65,6 +76,8 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
     checkpointEvery: Int = 64,
     publisher: CommitPublisher = TxnLog.HardLink)
     extends ControlStore {
+  import MwStateStore._
+
   require(checkpointEvery > 0, s"checkpointEvery must be positive, got $checkpointEvery")
 
   val log = new TxnLog(dir, publisher)
@@ -83,7 +96,6 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
   // under PERMISSIVE mode. Fixed 6-digit micros (Spark's own timestamp
   // precision) with an explicit offset, and the SAME pattern pinned on
   // the read side, makes the round-trip lossless and session-TZ-proof.
-  private val TsPattern = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
   private val Iso = DateTimeFormatter.ofPattern(TsPattern)
     .withZone(java.time.ZoneOffset.UTC)
 
@@ -96,12 +108,8 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
     } + "\""
 
   /** Generic flat-Product JSON encoder, schema-driven so field names
-    * come from the SAME Encoder the read side pins its schema to — a
-    * codec and its decoder cannot disagree on a name. `fields` is hoisted
-    * by [[payload]]: TypeTag-driven schema derivation goes through
-    * scala-reflect's global-locked runtime mirror, so paying it per ROW
-    * (worse, per commit RETRY × row) would serialize all writers on the
-    * reflection lock for no reason. */
+    * come from the SAME schema the decoder pins — a codec and its
+    * decoder cannot disagree on a name. */
   private def rowJson(fields: Array[org.apache.spark.sql.types.StructField],
       row: Product): String =
     fields.iterator.zip(row.productIterator).map { case (f, raw) =>
@@ -121,12 +129,35 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
       s"${js(f.name)}:$enc"
     }.mkString("{", ",", "}")
 
-  private def payload[T <: Product : TypeTag](kind: String, rows: Seq[T]): String = {
-    val fields = Encoders.product[T].schema.fields
+  private def payload(kind: String, rows: Seq[Product]): String = {
+    val fields = schemaOf(kind).fields
     (kind +: rows.map(rowJson(fields, _))).mkString("\n")
   }
 
-  // ---- snapshot read ------------------------------------------------------
+  /** THE decoder — latest reads, as-of reads and [[checkpoint]] all go
+    * through it: commit payloads → (kind, version, row), schema-pinned
+    * and FAILFAST, so a malformed control event aborts the read instead
+    * of nulling out. Spark's own JSON parser (`from_json` with the
+    * encoder's [[TsPattern]]) over a local Dataset, which
+    * ConvertToLocalRelation evaluates on the driver: no Spark job. Kinds
+    * outside `keep` (by default: kinds this build does not know) are
+    * skipped. Rows come back in commit order. */
+  private def decode(commits: Seq[(Long, String)],
+      keep: String => Boolean = KindsByTag.contains): Seq[(String, Long, Row)] = {
+    val lines = for {
+      (v, p) <- commits
+      ls = p.split('\n')
+      if keep(ls.head)
+      l <- ls.iterator.drop(1) if l.nonEmpty
+    } yield (ls.head, v, l)
+    lines.groupBy(_._1).toSeq.flatMap { case (kind, ls) =>
+      spark.createDataFrame(ls.map(t => Row(t._2, t._3)).asJava, PayloadLineSchema)
+        .select(col("v"), from_json(col("json"), schemaOf(kind), JsonOptions))
+        .collect().toSeq.map(r => (kind, r.getLong(0), r.getStruct(1)))
+    }.sortBy(_._2)
+  }
+
+  // ---- snapshot -----------------------------------------------------------
 
   private def listCheckpointVersions(): Seq[Long] =
     if (!Files.isDirectory(ckptDir)) Seq.empty
@@ -142,38 +173,72 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
     if (vs.isEmpty) 0L else vs.max
   }
 
-  /** ((version, kind, JSON line) tail rows, checkpoint version). Retries
-    * until the view is CONSISTENT: a concurrent checkpoint+vacuum can
-    * (a) delete a tail commit mid-read (NoSuchFileException), or —
-    * subtler — (b) land entirely between our checkpoint listing and our
-    * commit listing, so the vacuumed versions are simply ABSENT with no
-    * exception and events ckptV+1..ckptV' would silently vanish from the
-    * view. Versions are dense by construction and vacuum only deletes
-    * prefixes a published checkpoint covers, so consistency is checkable:
-    * the checkpoint version must not have moved, and a non-empty tail
-    * must start exactly at ckptV+1. */
-  private def snapshot(): (Seq[(Long, String, String)], Long) = {
+  /** Checkpoint `ckptV`'s rows of `kinds`, tagged with `ckptV` (0 = no
+    * checkpoint, no rows). None when the checkpoint DIR vanished (GC
+    * deleted our listed version out from under us — two newer
+    * checkpoints + a vacuum since the listing); a missing KIND subdir
+    * inside a present checkpoint just means the kind was empty at
+    * checkpoint time. The two must not be conflated, or the reader
+    * would silently serve the ≤K tail as the entire table. */
+  private def checkpointRows(ckptV: Long,
+      kinds: Seq[String]): Option[Seq[(String, Long, Row)]] =
+    if (ckptV == 0) Some(Seq.empty)
+    else if (!Files.isDirectory(ckptPath(ckptV))) None
+    else try Some(kinds.flatMap { kind =>
+        val kindPath = ckptPath(ckptV).resolve(kind)
+        if (!Files.isDirectory(kindPath)) Seq.empty
+        else spark.read.schema(schemaOf(kind)).parquet(kindPath.toString)
+          .collect().toSeq.map(r => (kind, ckptV, r))
+      })
+    catch {
+      // GC finishing while Spark reads the parquet surfaces as a
+      // Spark-side FileNotFound / path-not-found, not a NIO exception
+      case NonFatal(e) if !Files.isDirectory(ckptPath(ckptV)) ||
+          fileVanished(e, Seq(ckptPath(ckptV).toString)) => None
+    }
+
+  private val cache = new AtomicReference(Snapshot.Empty)
+
+  /** The snapshot as of the newest commit, refreshed from the cached
+    * one: only commits above its version are decoded; the newest
+    * checkpoint is reloaded only when it has moved past the cache
+    * (another writer checkpointed — and may have vacuumed — commits this
+    * cache never saw). Retries until the view is CONSISTENT: a
+    * concurrent checkpoint+vacuum can (a) delete a tail commit mid-read
+    * (NoSuchFileException), or — subtler — (b) land entirely between
+    * our checkpoint listing and our commit listing, so the vacuumed
+    * versions are simply ABSENT with no exception and events would
+    * silently vanish from the view. Versions are dense by construction
+    * and vacuum only deletes prefixes a published checkpoint covers, so
+    * consistency is checkable: the checkpoint version must not have
+    * moved, and the tail must continue exactly at the base's version. */
+  private def current(): Snapshot = {
     val MaxAttempts = 10
     var attempt = 0
     var lastError: Throwable = null
     while (attempt < MaxAttempts) {
       val ckptV = latestCheckpointVersion()
+      val cached = cache.get
       try {
-        val commits = log.commitsAfter(ckptV)
-        // FULL contiguity, not just the head: directory iteration during
-        // concurrent link creation can miss a MID-tail entry (hash-order
-        // readdir passes the slot before the entry lands), and a
-        // head-only check would bless that listing with an event silently
-        // absent from the middle
-        val dense = commits.map(_._1) == ((ckptV + 1) to (ckptV + commits.length))
-        if (dense && latestCheckpointVersion() == ckptV) {
-          val tail = commits.flatMap { case (v, p) =>
-            val lines = p.split('\n')
-            lines.drop(1).filter(_.nonEmpty).map(l => (v, lines.head, l))
+        val base =
+          if (ckptV <= cached.version) Some(cached)
+          else checkpointRows(ckptV, Kinds).map(Snapshot.Empty.plus(ckptV, _))
+        base.foreach { b =>
+          val commits = log.commitsAfter(b.version)
+          // FULL contiguity, not just the head: directory iteration during
+          // concurrent link creation can miss a MID-tail entry (hash-order
+          // readdir passes the slot before the entry lands), and a
+          // head-only check would bless that listing with an event silently
+          // absent from the middle
+          val dense = commits.map(_._1) == ((b.version + 1) to (b.version + commits.length))
+          if (dense && latestCheckpointVersion() == ckptV) {
+            val next =
+              if (commits.isEmpty) b else b.plus(commits.last._1, decode(commits))
+            cache.accumulateAndGet(next, (held, n) => if (n.version > held.version) n else held)
+            return next
           }
-          return (tail, ckptV)
         }
-        attempt += 1 // gap in the tail or the checkpoint moved — re-read
+        attempt += 1 // checkpoint vanished, gap in the tail, or the checkpoint moved
       } catch {
         case e: java.nio.file.NoSuchFileException => lastError = e; attempt += 1
       }
@@ -183,62 +248,13 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
         s"$MaxAttempts attempts (checkpoint/vacuum storm?)", lastError)
   }
 
-  /** One kind's full frame: newest checkpoint + tail commits. `cap`
-    * (checkpointing only) pins the view to commits ≤ cap, so a commit
-    * racing past the checkpoint's chosen version can never be baked in
-    * AND replayed from the tail — the duplicate a capless dump would
-    * create for seq-free kinds. */
-  /** Schema-pinned FAILFAST json frame over tail rows — a malformed
-    * control event must abort, not null out. Shared by the latest-view
-    * and time-travel readers so the codec cannot drift between them. */
-  private def tailFrame(schema: org.apache.spark.sql.types.StructType,
-      lines: Seq[String]): DataFrame = {
-    import spark.implicits._
-    spark.read.schema(schema)
-      .option("timestampFormat", TsPattern)
-      .option("mode", "FAILFAST")
-      .json(spark.createDataset(lines))
-  }
+  /** A local-relation frame over decoded rows: filters and collects on it
+    * run on the driver. */
+  private def frame(kind: String, rows: Iterable[Row]): DataFrame =
+    spark.createDataFrame(rows.toSeq.asJava, schemaOf(kind))
 
-  /** checkpoint parquet ∪ tail. None when the checkpoint DIR vanished
-    * (GC deleted our listed version out from under us — two newer
-    * checkpoints + a vacuum since the listing); a missing KIND subdir
-    * inside a present checkpoint just means the kind was empty at
-    * checkpoint time. The two must not be conflated, or the reader
-    * would silently serve the ≤K tail as the entire table. */
-  private def ckptUnion(schema: org.apache.spark.sql.types.StructType,
-      ckptV: Long, kind: String, tailDf: DataFrame): Option[DataFrame] =
-    if (ckptV == 0) Some(tailDf)
-    else if (Files.isDirectory(ckptPath(ckptV))) {
-      val kindPath = ckptPath(ckptV).resolve(kind)
-      Some(if (Files.isDirectory(kindPath))
-        spark.read.schema(schema).parquet(kindPath.toString).union(tailDf)
-      else tailDf)
-    } else None
-
-  private def readKindAt[T <: Product : TypeTag](
-      kind: String, cap: Option[Long] = None): DataFrame = {
-    val schema = Encoders.product[T].schema
-    var attempt = 0
-    while (true) {
-      val (tails, ckptV) = snapshot()
-      val lines = tails
-        .filter(t => t._2 == kind && cap.forall(t._1 <= _))
-        .map(_._3)
-      ckptUnion(schema, ckptV, kind, tailFrame(schema, lines)) match {
-        case Some(df) => return df
-        case None =>
-          attempt += 1
-          if (attempt >= 10) throw new IllegalStateException(
-            s"MwStateStore $dir: checkpoint $ckptV vanished under $attempt " +
-              "consecutive reads (GC storm?)")
-      }
-    }
-    sys.error("unreachable")
-  }
-
-  private def readKind[T <: Product : TypeTag](kind: String): DataFrame =
-    readKindAt[T](kind)
+  private def kindFrame(kind: String): DataFrame =
+    frame(kind, current().of(kind).map(_._2))
 
   // ---- time travel --------------------------------------------------------
 
@@ -277,7 +293,7 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
     false
   }
 
-  /** One kind's frame AS OF commit version `asOf` — exactly the table a
+  /** One kind's rows AS OF commit version `asOf` — exactly the table a
     * reader saw when `asOf` was the newest commit (Delta-style time
     * travel; the commit version is the store's only clock, so "as of"
     * is exact, not approximate). Reconstruction = the newest SURVIVING
@@ -287,8 +303,8 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
     * the version is gone — the read then fails LOUDLY naming the oldest
     * still-reconstructable version rather than silently serving a
     * partial table (the same no-silent-partial-view doctrine as
-    * [[snapshot]]'s density check). */
-  private def readKindAsOf[T <: Product : TypeTag](kind: String, asOf: Long): DataFrame = {
+    * [[current]]'s density check). */
+  private def rowsAsOf(kind: String, asOf: Long): Seq[Row] = {
     require(asOf >= 1, s"asOf must be >= 1, got $asOf")
     // checkpoint floor, NOT a raw listing: after a vacuum that empties
     // the commit dir, latestVersion() without the floor reports 0 and
@@ -297,7 +313,6 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
     val latest = version
     require(asOf <= latest,
       s"MwStateStore $dir: asOf $asOf is in the future (latest commit is $latest)")
-    val schema = Encoders.product[T].schema
     var attempt = 0
     var lastProblem = ""
     while (attempt < 10) {
@@ -311,30 +326,19 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
           // cheap attempts, then report as unreconstructable
           lastProblem = s"commits ${ckptV + 1}..$asOf incomplete over checkpoint $ckptV"
           attempt += 1
-        } else {
-          val lines = commits.flatMap { case (_, p) =>
-            val ls = p.split('\n')
-            if (ls.head == kind) ls.drop(1).filter(_.nonEmpty).toSeq else Seq.empty
-          }
-          ckptUnion(schema, ckptV, kind, tailFrame(schema, lines)) match {
-            case Some(df) => return df
-            case None =>
-              lastProblem = s"checkpoint $ckptV vanished (GC race)"
-              attempt += 1
-          }
+        } else checkpointRows(ckptV, Seq(kind)) match {
+          case Some(base) =>
+            return (base ++ decode(commits, _ == kind)).map(_._3)
+          case None =>
+            lastProblem = s"checkpoint $ckptV vanished (GC race)"
+            attempt += 1
         }
       } catch {
-        // a checkpoint GC'd between the directory check and the Spark
-        // parquet read surfaces as a Spark-side FileNotFound /
-        // AnalysisException (possibly nested in a job failure), not the
-        // NIO NoSuchFileException the commit-log reads throw — and as-of
-        // reads target OLD checkpoints, the prime GC candidates, so both
-        // shapes are the same retryable race. Anything that is not a
-        // vanished-file signal ANCHORED to this store's checkpoint or
-        // commit-log directories stays fatal — and if the checkpoint dir
-        // is simply gone (GC finished while Spark was mid-read), that
-        // directory check alone settles it without any message parsing.
-        case scala.util.control.NonFatal(e)
+        // as-of reads target OLD checkpoints and commits, the prime
+        // vacuum/GC candidates: a vanished-file signal ANCHORED to this
+        // store's checkpoint or commit-log directories is the retryable
+        // race; anything else stays fatal
+        case NonFatal(e)
           if (ckptV > 0 && !Files.isDirectory(ckptPath(ckptV))) ||
             fileVanished(e, Seq(ckptPath(ckptV).toString,
               Paths.get(dir, "_txn").toString)) =>
@@ -376,24 +380,24 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
   }
 
   def monitorEventsAsOf(asOf: Long): DataFrame =
-    readKindAsOf[MonitorEvent]("monitor", asOf)
+    frame("monitor", rowsAsOf("monitor", asOf))
   def envvarEventsAsOf(asOf: Long): DataFrame =
-    readKindAsOf[EnvVarEvent]("envvar", asOf)
+    frame("envvar", rowsAsOf("envvar", asOf))
 
   /** [[monitorState]] as of a commit version — "what did the control
     * plane believe when run 123 started" as a first-class query. */
   def monitorStateAsOf(asOf: Long): DataFrame =
-    StateStore.latestState(monitorEventsAsOf(asOf), Seq("run_key"), Seq(col("event_seq").desc))
+    frame("monitor", rowsAsOf("monitor", asOf)
+      .foldLeft(Map.empty[String, Row])(newest(RunKeyIdx, MonitorSeqIdx)).values)
 
   // ---- monitor event log --------------------------------------------------
 
-  def monitorEvents: DataFrame = readKind[MonitorEvent]("monitor")
-  def envvarEvents: DataFrame = readKind[EnvVarEvent]("envvar")
+  def monitorEvents: DataFrame = kindFrame("monitor")
+  def envvarEvents: DataFrame = kindFrame("envvar")
 
-  /** Current batch_monitor state — same W1 view as the single-writer
-    * store. */
-  def monitorState: DataFrame =
-    StateStore.latestState(monitorEvents, Seq("run_key"), Seq(col("event_seq").desc))
+  /** Current batch_monitor state — the W1 view of the single-writer
+    * store (latest event per run_key), kept up to date in the snapshot. */
+  def monitorState: DataFrame = frame("monitor", current().runs.values)
 
   /** Append a monitor event; the caller's `event_seq` is IGNORED — the
     * commit version is the seq (returned). Durable on return. */
@@ -436,11 +440,10 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
 
   def getEnvs(names: Seq[String]): Map[String, String] =
     if (names.isEmpty) Map.empty
-    else StateStore.latestState(
-        envvarEvents.filter(col("variable_name").isin(names: _*)),
-        Seq("variable_name"), Seq(col("event_seq").desc))
-      .select("variable_name", "value").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
+    else {
+      val env = current().env
+      names.flatMap(n => env.get(n).map(r => n -> r.getString(EnvValueIdx))).toMap
+    }
 
   def updEnv(name: String, value: String): Unit = updEnvAssigned(name, value)
 
@@ -454,31 +457,26 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
   // Seq-free appends: one commit per put (multi-row payload), read back
   // through the same schema-pinned codec.
 
-  private def putKind[T <: Product : TypeTag](kind: String, rows: Seq[T]): Unit =
+  private def putKind(kind: String, rows: Seq[Product]): Unit =
     if (rows.nonEmpty) {
       log.commit(_ => payload(kind, rows), floor = latestCheckpointVersion())
         .tap(maybeCheckpoint)
       ()
     }
 
-  def batchMaster: Dataset[BatchMaster] =
-    readKind[BatchMaster]("master").as(Encoders.product[BatchMaster])
+  def batchMaster: Dataset[BatchMaster] = kindFrame("master").as(Master.encoder)
   def putBatchMaster(rows: Seq[BatchMaster]): Unit = putKind("master", rows)
 
-  def dependencies: Dataset[BatchDependency] =
-    readKind[BatchDependency]("dependency").as(Encoders.product[BatchDependency])
+  def dependencies: Dataset[BatchDependency] = kindFrame("dependency").as(Dependency.encoder)
   def putDependencies(rows: Seq[BatchDependency]): Unit = putKind("dependency", rows)
 
-  def loaderFiles: Dataset[TmpRunLoader] =
-    readKind[TmpRunLoader]("loader").as(Encoders.product[TmpRunLoader])
+  def loaderFiles: Dataset[TmpRunLoader] = kindFrame("loader").as(Loader.encoder)
   def putLoaderFiles(rows: Seq[TmpRunLoader]): Unit = putKind("loader", rows)
 
-  def runCommands: Dataset[RunCommand] =
-    readKind[RunCommand]("runcmd").as(Encoders.product[RunCommand])
+  def runCommands: Dataset[RunCommand] = kindFrame("runcmd").as(RunCmd.encoder)
   def putRunCommands(rows: Seq[RunCommand]): Unit = putKind("runcmd", rows)
 
-  def mailAddresses: Dataset[MailAddr] =
-    readKind[MailAddr]("mailaddr").as(Encoders.product[MailAddr])
+  def mailAddresses: Dataset[MailAddr] = kindFrame("mailaddr").as(MailAddress.encoder)
   def putMailAddresses(rows: Seq[MailAddr]): Unit = putKind("mailaddr", rows)
 
   // ---- batch log + mail audit --------------------------------------------
@@ -486,13 +484,19 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
   def appendLog(rec: BatchLogRec): Unit = putKind("log", Seq(rec))
 
   /** Purge-aware view: rows at or after every marker's horizon. */
-  def batchLog: DataFrame = batchLogAt(None)
+  def batchLog: DataFrame = frame("log", retainedLog(current(), Long.MaxValue))
 
-  private def batchLogAt(cap: Option[Long]): DataFrame = {
-    val hz = readKindAt[LogPurge]("logpurge", cap).agg(max("horizon")).collect()(0)
-    val base = readKindAt[BatchLogRec]("log", cap)
-    if (hz.isNullAt(0)) base
-    else base.filter(col("run_date") >= lit(hz.getTimestamp(0)))
+  /** The max purge horizon among markers committed at or below `cap`. */
+  private def horizon(s: Snapshot, cap: Long): Option[java.sql.Timestamp] =
+    s.of("logpurge").collect { case (v, r) if v <= cap && !r.isNullAt(0) => r.getTimestamp(0) }
+      .reduceOption((a, b) => if (a.compareTo(b) >= 0) a else b)
+
+  /** Log rows committed at or below `cap` that survive its horizon
+    * (`run_date >= horizon`; a NULL run_date never does, as in SQL). */
+  private def retainedLog(s: Snapshot, cap: Long): Seq[Row] = {
+    val hz = horizon(s, cap)
+    s.of("log").collect { case (v, r) if v <= cap && hz.forall(h =>
+      !r.isNullAt(LogRunDateIdx) && r.getTimestamp(LogRunDateIdx).compareTo(h) >= 0) => r }
   }
 
   /** S6 retention as an EVENT: immutable commits can't rewrite history,
@@ -503,7 +507,7 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
     putKind("logpurge", Seq(LogPurge(horizon)))
 
   def appendMailAudit(rec: MailAudit): Unit = putKind("mailaudit", Seq(rec))
-  def mailAudit: DataFrame = readKind[MailAudit]("mailaudit")
+  def mailAudit: DataFrame = kindFrame("mailaudit")
 
   /** No writer role to release — multi-writer by construction. */
   def close(): Unit = ()
@@ -527,36 +531,33 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
     if (v == 0L) return 0L
     val target = ckptPath(v)
     if (Files.exists(target)) return v
+    // the snapshot's listing follows the one that chose v, so it holds
+    // every commit ≤ v; every dump is pinned to commits ≤ v — a commit
+    // racing past v lands in the tail the reader pairs with this
+    // checkpoint, and a capless dump would deliver it TWICE (baked in +
+    // replayed)
+    val s = current()
+    if (s.version < v) throw new IllegalStateException(
+      s"MwStateStore $dir: snapshot at ${s.version} cannot checkpoint version $v")
     Files.createDirectories(ckptDir)
     val tmp = Files.createTempDirectory(ckptDir, ".tmp-")
-    // every dump is pinned to commits ≤ v: a commit racing past v lands
-    // in the tail the reader pairs with this checkpoint, and a capless
-    // dump would deliver it TWICE (baked in + replayed)
-    val cap = Some(v)
-    def dump(kind: String, df: DataFrame): Unit =
-      if (!df.isEmpty)
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.resolve(kind).toString)
-    dump("monitor", readKindAt[MonitorEvent]("monitor", cap))
-    dump("envvar", readKindAt[EnvVarEvent]("envvar", cap))
-    dump("master", readKindAt[BatchMaster]("master", cap))
-    dump("dependency", readKindAt[BatchDependency]("dependency", cap))
-    dump("loader", readKindAt[TmpRunLoader]("loader", cap))
-    dump("runcmd", readKindAt[RunCommand]("runcmd", cap))
-    dump("mailaddr", readKindAt[MailAddr]("mailaddr", cap))
-    dump("mailaudit", readKindAt[MailAudit]("mailaudit", cap))
-    // the purge horizon BAKES IN: log rows are stored pre-filtered and
-    // the marker set folds to its max (still needed — a marker filters
-    // rows appended after it with pre-horizon run_date)
-    dump("log", batchLogAt(cap))
-    dump("logpurge",
-      readKindAt[LogPurge]("logpurge", cap).agg(max("horizon").as("horizon"))
-        .filter(col("horizon").isNotNull))
-    // a checkpoint that RACED PAST ours mid-dump is the one hazard: the
-    // dumps above read "newest checkpoint + tail ≤ cap", so a newer
-    // checkpoint appearing mid-dump would have fed them rows ABOVE our
-    // cap for the seq-free kinds. Readers always take the max version,
-    // so such a stale-labeled dump would never be READ — but don't even
-    // publish it: discard and defer to the winner.
+    Kinds.foreach { kind =>
+      val rows = kind match {
+        // the purge horizon BAKES IN: log rows are stored pre-filtered and
+        // the marker set folds to its max (still needed — a marker filters
+        // rows appended after it with pre-horizon run_date)
+        case "log" => retainedLog(s, v)
+        case "logpurge" => horizon(s, v).map(Row(_)).toSeq
+        case k => s.of(k).collect { case (cv, r) if cv <= v => r }
+      }
+      if (rows.nonEmpty)
+        frame(kind, rows).coalesce(1).write.mode("overwrite").parquet(tmp.resolve(kind).toString)
+    }
+    // a checkpoint that RACED PAST ours is the one hazard: a snapshot
+    // reloaded from a newer checkpoint tags that checkpoint's rows with
+    // ITS version, so the ≤ v dumps above would have dropped them.
+    // Readers always take the max version, so such a dump would never be
+    // READ — but don't even publish it: discard and defer to the winner.
     if (latestCheckpointVersion() != ckptV0) { deleteRecursively(tmp); return v }
     try Files.move(tmp, target)
     catch { case _: java.nio.file.FileAlreadyExistsException |
@@ -572,9 +573,9 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
     * cumulative bytes over a deployment's life. The newest
     * `retainCheckpoints` survive: readers always take the max, but a
     * reader that listed the previous max just before this vacuum may
-    * still be lazily reading its parquet — retaining one predecessor
-    * gives those in-flight frames their grace window (same reasoning as
-    * the tail-commit retry, which covers the JSON side). The checkpoint
+    * still be reading its parquet — retaining one predecessor gives
+    * those in-flight reads their grace window (same reasoning as the
+    * tail-commit retry, which covers the JSON side). The checkpoint
     * version remains the floor [[TxnLog.commit]] consults, so vacuuming
     * can never cause version/seq reuse. */
   def vacuum(retainCheckpoints: Int = 2): Unit = {
@@ -597,5 +598,84 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
       finally children.close()
     }
     Files.deleteIfExists(path)
+  }
+}
+
+object MwStateStore {
+  private val TsPattern = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
+  private val JsonOptions = Map("timestampFormat" -> TsPattern, "mode" -> "FAILFAST")
+  private val PayloadLineSchema = StructType(Seq(
+    StructField("v", LongType, nullable = false), StructField("json", StringType, nullable = false)))
+
+  /** A payload kind's row type. Its encoder and schema are derived on
+    * first use: derivation is scala-reflect work, and a store should not
+    * pay it for kinds it never touches. The schema is nullable, as the
+    * JSON and parquet readers deliver it (a NULL in a primitive field
+    * still fails at the typed `.as`). */
+  private final class Kind[T <: Product : TypeTag] {
+    lazy val encoder: Encoder[T] = Encoders.product[T]
+    lazy val schema: StructType =
+      StructType(encoder.schema.fields.map(_.copy(nullable = true)))
+  }
+  private val Monitor = new Kind[MonitorEvent]
+  private val EnvVar = new Kind[EnvVarEvent]
+  private val Master = new Kind[BatchMaster]
+  private val Dependency = new Kind[BatchDependency]
+  private val Loader = new Kind[TmpRunLoader]
+  private val RunCmd = new Kind[RunCommand]
+  private val MailAddress = new Kind[MailAddr]
+  private val Log = new Kind[BatchLogRec]
+
+  /** Every payload kind by its tag; also the checkpoint's dump order. */
+  private val KindList: Seq[(String, Kind[_])] = Seq(
+    "monitor" -> Monitor, "envvar" -> EnvVar, "master" -> Master,
+    "dependency" -> Dependency, "loader" -> Loader, "runcmd" -> RunCmd,
+    "mailaddr" -> MailAddress, "mailaudit" -> new Kind[MailAudit], "log" -> Log,
+    "logpurge" -> new Kind[LogPurge])
+  private val KindsByTag: Map[String, Kind[_]] = KindList.toMap
+  private val Kinds: Seq[String] = KindList.map(_._1)
+  private def schemaOf(kind: String): StructType = KindsByTag(kind).schema
+
+  private lazy val RunKeyIdx = Monitor.schema.fieldIndex("run_key")
+  private lazy val MonitorSeqIdx = Monitor.schema.fieldIndex("event_seq")
+  private lazy val EnvNameIdx = EnvVar.schema.fieldIndex("variable_name")
+  private lazy val EnvValueIdx = EnvVar.schema.fieldIndex("value")
+  private lazy val EnvSeqIdx = EnvVar.schema.fieldIndex("event_seq")
+  private lazy val LogRunDateIdx = Log.schema.fieldIndex("run_date")
+
+  /** Latest-row-per-key fold step: the highest seq wins (the W1 view's
+    * `row_number() OVER (PARTITION BY key ORDER BY event_seq DESC) = 1`). */
+  private def newest(keyIdx: Int, seqIdx: Int)(m: Map[String, Row], r: Row): Map[String, Row] = {
+    val key = r.getString(keyIdx)
+    if (m.get(key).exists(_.getLong(seqIdx) >= r.getLong(seqIdx))) m else m.updated(key, r)
+  }
+
+  /** The decoded store as of commit `version`: every kind's rows tagged
+    * with the commit that wrote them (checkpoint rows with the
+    * checkpoint's version), plus the latest-value views the lifecycle
+    * reads — monitor state by run_key and envvar values by name. An
+    * immutable value, shared by every driver thread. */
+  private final case class Snapshot(version: Long,
+      rows: Map[String, Vector[(Long, Row)]],
+      runs: Map[String, Row],
+      env: Map[String, Row]) {
+    def of(kind: String): Vector[(Long, Row)] = rows.getOrElse(kind, Vector.empty)
+
+    /** This snapshot with `decoded` folded in, stamped `upTo`. */
+    def plus(upTo: Long, decoded: Seq[(String, Long, Row)]): Snapshot = {
+      val byKind = decoded.groupBy(_._1)
+      def latest(kind: String, m: Map[String, Row], keyIdx: Int, seqIdx: Int) =
+        byKind.getOrElse(kind, Nil).map(_._3).foldLeft(m)(newest(keyIdx, seqIdx))
+      Snapshot(upTo,
+        byKind.foldLeft(rows) { case (acc, (kind, rs)) =>
+          acc.updated(kind, acc.getOrElse(kind, Vector.empty) ++ rs.map(t => t._2 -> t._3))
+        },
+        latest("monitor", runs, RunKeyIdx, MonitorSeqIdx),
+        latest("envvar", env, EnvNameIdx, EnvSeqIdx))
+    }
+  }
+
+  private object Snapshot {
+    val Empty: Snapshot = Snapshot(0L, Map.empty, Map.empty, Map.empty)
   }
 }

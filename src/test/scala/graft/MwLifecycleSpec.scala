@@ -197,6 +197,51 @@ class MwLifecycleSpec extends AnyFunSuite {
     assert(child.isRight, s"child must proceed after parent SUCCESS, got $child")
   }
 
+  /** Spark jobs started by `body` on this thread. Jobs are tagged by a
+    * job group; a marker job in another group, once the listener has
+    * seen it, proves every earlier job event was delivered (the listener
+    * bus is FIFO). */
+  private def sparkJobs[T](body: => T): (T, Int) = {
+    val (group, marker) = (s"count-${System.nanoTime()}", s"marker-${System.nanoTime()}")
+    val counted = new java.util.concurrent.atomic.AtomicInteger(0)
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
+          case `group` => counted.incrementAndGet()
+          case `marker` => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener never saw the marker job")
+      (out, counted.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("a warm snapshot serves an exclusive startup over a satisfied MANDATORY parent, and its endup, with zero Spark jobs") {
+    val (_, store, at) = fixture()
+    store.putDependencies(Seq(BatchDependency(1L, 2L, "MANDATORY")))
+    val lc = new Lifecycle(store, new FakeClock(at))
+    // the parent's run satisfies the dependency and warms the snapshot
+    val parent = lc.startup("etl_load").toOption.get
+    assert(lc.endup(parent, RunStatus.Success, Some(1L), Some(0L)))
+    val ((child, closed), jobs) = sparkJobs {
+      val child = lc.startup("etl_report", exclusiveRun = true)
+      (child, child.exists(lc.endup(_, RunStatus.Success, Some(1L), Some(0L))))
+    }
+    assert(child.map(_.runId) === Right(1L), s"the child must start: $child")
+    assert(closed, "the child's endup must land")
+    assert(jobs === 0, s"startup + endup launched $jobs Spark jobs")
+  }
+
   test("session flags and control date flow through the multi-writer env store") {
     val (dir, store, at) = fixture()
     store.updEnv("BATCH_FLG_DBG", "Y")

@@ -201,6 +201,86 @@ class MwStateStoreSpec extends TxnLogBehaviors {
     } finally pool.shutdown()
   }
 
+  test("a cached snapshot never serves data another writer has since checkpointed and vacuumed away") {
+    val dir = tmpDir()
+    val (a, b) = (new MwStateStore(spark, dir), new MwStateStore(spark, dir))
+    val at = "2026-02-01T10:00:00.123456Z"
+    def assign(s: MwStateStore, key: String): Long =
+      s.transactRunId(42L, java.time.Instant.parse(at),
+        (rid, seq) => ev(key, moduleId = 42L, runId = rid, at = at).copy(event_seq = seq))._1
+    def state(s: MwStateStore): Map[String, (String, Long)] =
+      s.monitorState.select("run_key", "run_status", "run_id").collect()
+        .map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
+    def seqs(s: MwStateStore): Seq[Long] =
+      s.monitorEvents.select("event_seq").collect().map(_.getLong(0)).sorted.toSeq
+
+    assert(assign(a, "a-1") === 1L)
+    a.updEnv("FLAG", "a")
+    // A's snapshot is warm at version 2
+    assert(state(a) === Map("a-1" -> ("R", 1L)))
+    assert(a.getEnvs(Seq("FLAG")) === Map("FLAG" -> "a"))
+    // B writes past A's snapshot — new runs, closing A's run, a new flag
+    // value — then checkpoints and vacuums: the commits A would decode
+    // incrementally are gone
+    assert((1 to 3).map(i => assign(b, s"b-$i")) === Seq(2L, 3L, 4L))
+    b.appendMonitorEvent(ev("a-1", moduleId = 42L, runId = 1L, status = "S", at = at))
+    b.updEnv("FLAG", "b")
+    assert(b.checkpoint() === 7L)
+    b.vacuum(retainCheckpoints = 1)
+    assert(b.oldestReconstructableVersion() === 7L, "commits 1..7 must be vacuumed")
+
+    assert(seqs(a) === Seq(1L, 3L, 4L, 5L, 6L), "every monitor event exactly once")
+    assert(state(a) === Map("a-1" -> ("S", 1L), "b-1" -> ("R", 2L), "b-2" -> ("R", 3L),
+      "b-3" -> ("R", 4L)))
+    assert(a.getEnvs(Seq("FLAG")) === Map("FLAG" -> "b"))
+    assert(assign(a, "a-2") === 5L, "run ids continue B's, contiguously")
+    // the snapshot A reloaded from B's checkpoint keeps folding new commits
+    assert(assign(b, "b-4") === 6L)
+    assert(seqs(a) === Seq(1L, 3L, 4L, 5L, 6L, 8L, 9L))
+    assert(state(a).values.map(_._2).toSeq.sorted === (1L to 6L))
+    assert(a.monitorEvents.count() === seqs(b).length.toLong)
+  }
+
+  test("a malformed tail commit fails reads loudly instead of decoding to NULLs") {
+    def line(runDate: String, moduleId: String): String =
+      s"""{"run_key":"bad","event_seq":2,"module_id":$moduleId,"run_date":"$runDate",""" +
+        """"run_id":0,"parameters":null,"audit_id":null,"run_status":"R","sub_system":null,""" +
+        """"exclusive_run_yn":"N","control_date":null,"end_time":null,""" +
+        """"records_processed":null,"records_in_error":null}"""
+    def storeWith(payloadLine: String): MwStateStore = {
+      val store = new MwStateStore(spark, tmpDir())
+      assert(store.appendMonitorEvent(ev("ok")) === 1L)
+      assert(store.monitorState.count() === 1L) // warm snapshot at version 1
+      assert(store.log.tryCommit(2L, "monitor\n" + payloadLine))
+      store
+    }
+    // control: the hand-written line is well-formed as written
+    val good = storeWith(line("2026-02-01T10:00:00.000000Z", "1"))
+    assert(good.monitorEvents.filter(col("run_key") === "bad")
+      .select("module_id", "run_date").collect().map(r => (r.getLong(0), r.getTimestamp(1))).toSeq ===
+      Seq((1L, Timestamp.from(java.time.Instant.parse("2026-02-01T10:00:00Z")))))
+    Seq(
+      "a timestamp outside the pinned pattern" -> line("2026-02-01 10:00:00", "1"),
+      "a string in a long field" -> line("2026-02-01T10:00:00.000000Z", "\"one\"")
+    ).foreach { case (what, bad) =>
+      val store = storeWith(bad)
+      val reads: Seq[(String, () => Any)] = Seq(
+        "monitorEvents" -> (() => store.monitorEvents.collect()),
+        "monitorState" -> (() => store.monitorState.collect()),
+        // one snapshot serves every read: it cannot advance past the bad commit
+        "getEnvs" -> (() => store.getEnvs(Seq("FLAG"))),
+        "monitorEventsAsOf" -> (() => store.monitorEventsAsOf(2L).collect()),
+        "checkpoint" -> (() => store.checkpoint()),
+        "a cold store" -> (() => new MwStateStore(spark, store.dir).monitorState.collect()))
+      reads.foreach { case (read, f) =>
+        val e = intercept[org.apache.spark.SparkException](f())
+        assert(e.getMessage.contains("FAILFAST"), s"$what / $read: ${e.getMessage}")
+      }
+      assert(!Files.exists(Paths.get(store.dir, "_ckpt", f"${2L}%020d")),
+        s"$what: a malformed commit must never be baked into a checkpoint")
+    }
+  }
+
   test("latest-state view matches the single-writer store's W1 semantics") {
     val store = new MwStateStore(spark, tmpDir())
     store.appendMonitorEvent(ev("a", status = "W"))

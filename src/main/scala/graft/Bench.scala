@@ -30,17 +30,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Fallback-mode sweep (r17 verdict item 7): SPARK_GRAFT_NO_EXTENSIONS=1
-    // runs the whole registry WITHOUT GraftExtensions, so the UDF /
-    // interpreted fallbacks (TextOps, Dedup — the extension-less path the
-    // equality specs pin but never price) get a recorded cost. A
-    // deployment that forgets the extension should know the bill, not
-    // discover it. The mode is excluded from the floor gate and never
-    // overwrites bench_last_run.json — different execution profile,
-    // separate record (BASELINE.md).
-    val noExt = sys.env.get("SPARK_GRAFT_NO_EXTENSIONS")
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       // UTC is the precondition of Tables.events' NTZ→TIMESTAMP cast
@@ -49,10 +39,8 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    val spark = (if (noExt) builder
-      else builder.config("spark.sql.extensions", "graft.GraftExtensions"))
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
-    if (noExt) System.err.println("[bench] FALLBACK MODE: GraftExtensions not installed — UDF/interpreted paths priced")
     spark.sparkContext.setLogLevel("WARN")
     // X5 observability: per-run plan metrics via SparkListener (the
     // engine analogue of DBMS_APPLICATION_INFO session longops,
@@ -185,13 +173,6 @@ object Bench {
     // gate's verdict can feed it (see below). Semantics documented at the
     // gate itself.
     val floors: Map[String, Double] =
-      if (noExt) {
-        // floors were recorded on the extension path; gating the
-        // deliberately-slower fallback sweep against them would flag
-        // the mode itself
-        System.err.println("[bench] fallback mode: floor gate skipped")
-        Map.empty
-      } else
       loadFloors().getOrElse {
         System.err.println("[bench] no bench_floors.json resource; regression gate skipped")
         Map.empty
@@ -326,7 +307,6 @@ object Bench {
       val cpusJson = cpus.toIntOption.map(_.toString).getOrElse("\"" + cpus + "\"")
       s"""{"cpus":$cpusJson,"start":${l2(sweepLoadStart)},"end":${l2(loadavg())},"queries":$per}"""
     }
-    val mode = if (noExt) "no_extensions" else "default"
     // plan verdicts ride the compact stdout line (small — flagged
     // queries only); the full per-query plan map goes to the FILE
     // copies, where truncation cannot eat it (the stdout line has been
@@ -337,7 +317,7 @@ object Bench {
       s"\"$n\":{\"stages\":${p.stages},\"tasks\":${p.tasks},\"shr\":${p.shuffleRead},\"shw\":${p.shuffleWrite}}"
     }.mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":${ms3(total)},"unit":"sec","mode":"$mode","regressions":$regr,"watch":$watchJson,"plan_verdicts":$verdictJson,"queries":$qs,"loadavg":$loadJson,"sf":"$sfDir","total_sec":${ms3(total)}}"""
+      s"""{"metric":"total","value":${ms3(total)},"unit":"sec","regressions":$regr,"watch":$watchJson,"plan_verdicts":$verdictJson,"queries":$qs,"loadavg":$loadJson,"sf":"$sfDir","total_sec":${ms3(total)}}"""
     // the durable file record carries the plan map too
     val fileLine = line.dropRight(1) + s""","plan":$planJson}"""
     // durability: bounded log captures have twice truncated the stdout
@@ -356,7 +336,7 @@ object Bench {
     // for FULL sweeps (a BENCH_ONLY dev subset must not overwrite the
     // full record) and only when the resources dir is visible from the
     // cwd (a deployment running the bench elsewhere keeps the /tmp copy).
-    if (only.isEmpty && !noExt) {
+    if (only.isEmpty) {
       val res = java.nio.file.Paths.get("src/main/resources")
       if (java.nio.file.Files.isDirectory(res))
         try java.nio.file.Files.write(res.resolve("bench_last_run.json"),

@@ -7,11 +7,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{BigramArray, BloomAgg, BloomMightContain, BpeEncode, DeflateLen, DotProduct, GramSet, IvfScores, MgFrequentItems, MinHashSigDoc, NormTextExpr, PqAdc, PqEncode, PqLut, SimHashDoc, TopKByScore, TopWordCount}
 
 /** Session extension registering the engine's native Catalyst expressions
-  * (installed with `.config("spark.sql.extensions", "graft.GraftExtensions")`;
-  * Verify/Bench/tests do this). Queries degrade gracefully when the
-  * extension is absent — Similarity/Dedup fall back to interpreted HOF or
-  * UDF formulations with identical results — so a plain session can still
-  * run every query, just slower.
+  * under their `graft_*` SQL names (installed with
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")`), for SQL
+  * text and `call_function` callers such as the kernel microbench. The
+  * operators do not need it: they build each kernel directly through
+  * [[org.apache.spark.sql.graftshim.Native]], so every query runs the
+  * same kernels in any session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def arity(name: String, n: Int, children: Seq[Expression]): Seq[Expression] = {

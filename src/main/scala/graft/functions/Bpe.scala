@@ -36,8 +36,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Bpe {
 
-  /** An ordered merge list with its rank lookup — serializable so the
-    * UDF-fallback closure can ship it to executors whole. */
+  /** An ordered merge list with its rank lookup — serializable so a
+    * closure can ship it to executors whole. */
   final class MergeTable(val merges: IndexedSeq[(String, String)]) extends Serializable {
     val rank: Map[(String, String), Int] = merges.zipWithIndex.toMap
   }
@@ -118,8 +118,8 @@ object Bpe {
     syms
   }
 
-  /** Flat token stream of a word sequence — the Seq twin the UDF fallback
-    * and the differential generator share with [[BpeEncode]]. */
+  /** Flat token stream of a word sequence — the Seq twin the differential
+    * generator (and TextOpsSpec's reference UDF) share with [[BpeEncode]]. */
   def encodeWords(words: Seq[String], table: MergeTable): Seq[String] =
     words.flatMap(w => encodeWord(if (w == null) "" else w, table))
 }

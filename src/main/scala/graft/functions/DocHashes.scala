@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-document fingerprint math shared by the native expressions below and
-  * the UDF fallbacks in Dedup. Static-forwarder methods so whole-stage
+  * the differential generator. Static-forwarder methods so whole-stage
   * codegen can call them directly (`graft.functions.DocHashes.simhash(...)`)
   * — the generated code stays a single static call per row, no interpreted
   * expression-tree walk and, crucially, NO explode + re-group shuffle: the
@@ -179,8 +179,8 @@ object DocHashes {
     topCount(arr)
   }
 
-  // Seq[String] twins for the UDF fallback path (bit-identical: same bytes
-  // hashed with the same seeds).
+  // Seq[String] twins for the differential generator and the specs
+  // (bit-identical: same bytes hashed with the same seeds).
   def shingleHashesSeq(words: Seq[String], shingle: Int): Array[Long] = {
     val arr = new GenericArrayData(words.map(w => UTF8String.fromString(w)).toArray[Any])
     shingleHashes(arr, shingle)

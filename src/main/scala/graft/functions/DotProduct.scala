@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * builtins < native Expression < UDF).
   *
   * Determinism contract: strictly sequential left-to-right double
-  * accumulation — bit-identical to the interpreted fallback and to the
+  * accumulation — bit-identical to the interpreted HOF form and to the
   * DuckDB oracle's `list_aggregate(..., 'sum')`, which is what makes
   * differential testing of float math possible.
   *

@@ -31,14 +31,14 @@ import org.apache.spark.sql.types._
   * (list id, centroid, centroid norm) — evaluated once on the driver.
   *
   * NULL-embedding rows are outside the contract (kernel: NULL result;
-  * tree fallback: an array of null-scored structs) — the embeddings
+  * builtin tree form: an array of null-scored structs) — the embeddings
   * loader guarantees non-null vectors, and a null norm cannot arise from
   * a non-null vector. Null ELEMENTS contribute 0, like graft_dot.
   *
   * Division follows builtin `Divide`, not raw IEEE: a zero divisor (a
   * zero-norm vector × a centroid norm) throws DIVIDE_BY_ZERO under ANSI
-  * and produces a NULL score otherwise — so the kernel and the tree
-  * fallback fail (or null) identically on degenerate vectors
+  * and produces a NULL score otherwise — so the kernel and the builtin
+  * tree form fail (or null) identically on degenerate vectors
   * (SimilaritySpec pins both).
   */
 object IvfScoresKernel {
@@ -97,7 +97,7 @@ object IvfScoresKernel {
   /** The genuine ANSI divide-by-zero error — a SparkArithmeticException
     * carrying the DIVIDE_BY_ZERO error class and 22012 SQLSTATE, so
     * harnesses matching on SparkThrowable (or any future Spark changing
-    * the message wording) see the kernel and the tree fallback behave
+    * the message wording) see the kernel and the builtin tree form behave
     * identically. QueryExecutionErrors is private[spark]; evaluating a
     * literal ANSI `Divide` is the public surface that throws it. */
   private[functions] def divideByZero(): ArithmeticException =

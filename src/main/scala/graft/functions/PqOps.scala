@@ -31,7 +31,7 @@ import org.apache.spark.sql.types._
   * shipped as a plan constant, not re-evaluated per row.
   *
   * NULL-embedding rows are outside the contract: as BinaryExpressions the
-  * kernels return NULL for them, while the builtin-tree fallback returns
+  * kernels return NULL for them, while the builtin tree form returns
   * an array built over null scores. The embeddings loader guarantees
   * non-null vectors (null ELEMENTS inside a vector are handled — they
   * contribute 0, like graft_dot); callers feeding other sources must
@@ -66,8 +66,8 @@ object PqOps {
     * applies: plain IEEE </> first (so -0.0 == 0.0 — java.lang.Double
     * .compare would order them), NaN greater than every value, NaN ==
     * NaN. Using anything else here would let a NaN-scored subspace
-    * (an Inf/NaN embedding component) encode differently with and
-    * without the extension. */
+    * (an Inf/NaN embedding component) encode differently from the
+    * builtin tree form. */
   private def cmpSql(x: Double, y: Double): Int =
     if (x < y) -1
     else if (x > y) 1

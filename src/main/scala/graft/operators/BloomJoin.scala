@@ -22,9 +22,7 @@ import graft.sources.Tables
   * equi-joins whose creation-side stats qualify); this face makes the
   * technique explicit and deterministic — it applies regardless of stats
   * thresholds, works from any precomputed key frame (e.g. a stored
-  * index's key set), and degrades to the same driver-folded filter
-  * without GraftExtensions (Dedup.bloomOfBuckets's fallback, identical
-  * bits).
+  * index's key set).
   */
 object BloomJoin {
 
@@ -35,11 +33,10 @@ object BloomJoin {
     * exactly (enforced; a LongType fact key against a DoubleType dim key
     * would join under numeric coercion in the plain join but render "5"
     * vs "5.0" in the filter and silently drop rows). Null dim keys are
-    * dropped before the build: they never match a semi join, and the
-    * extension-less driver fold would NPE on them. The join condition
+    * dropped before the build: they never match a semi join. The join condition
     * uses frame-qualified references so factKey == dimKey (the common
     * stored-index round-trip) resolves unambiguously. */
-  def bloomSemiJoin(s: SparkSession, fact: DataFrame, dim: DataFrame,
+  def bloomSemiJoin(fact: DataFrame, dim: DataFrame,
       factKey: String, dimKey: String): DataFrame = {
     val ft = fact.schema(factKey).dataType
     val dt = dim.schema(dimKey).dataType
@@ -47,7 +44,7 @@ object BloomJoin {
       s"bloomSemiJoin keys must have identical types (the string-form Bloom probe " +
         s"cannot see numeric coercion): $factKey is ${ft.sql}, $dimKey is ${dt.sql}")
     val dimKeys = dim.select(col(dimKey)).filter(col(dimKey).isNotNull)
-    val bytes = Dedup.bloomOfBuckets(s,
+    val bytes = Dedup.bloomOfBuckets(
       dimKeys.select(col(dimKey).cast("string").as("bucket")))
     // The filter is sized for Dedup's stored-bucket cardinality
     // (BloomBits, ~7 bits/key at ~150k keys). A dim far above that
@@ -71,7 +68,7 @@ object BloomJoin {
             "most fact rows. Result stays exact; resize BloomBits for this dim.")
     }
     val candidates = fact
-      .filter(Dedup.bloomContainsCol(s, col(factKey).cast("string"), bytes))
+      .filter(Dedup.bloomContainsCol(col(factKey).cast("string"), bytes))
     candidates.join(dimKeys,
       candidates(factKey) === dimKeys(dimKey), "left_semi")
   }
@@ -82,7 +79,7 @@ object BloomJoin {
   def qBloomJoin(s: SparkSession, dir: String): DataFrame = {
     val premium = Tables.customer(s, dir)
       .filter(col("c_acctbal") > 9000).select("c_custkey")
-    bloomSemiJoin(s, Tables.orders(s, dir), premium, "o_custkey", "c_custkey")
+    bloomSemiJoin(Tables.orders(s, dir), premium, "o_custkey", "c_custkey")
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n_orders"),
         sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"))

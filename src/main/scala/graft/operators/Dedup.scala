@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.LongType
 
+import graft.functions.{GramSet, MinHashSigDoc, SimHashDoc}
 import graft.sources.Tables
 
 /** Deduplication operators for a training-data pipeline over `documents`
@@ -27,14 +29,6 @@ import graft.sources.Tables
   * differential gate.
   */
 object Dedup {
-
-  // native-kernel dispatch on the constructing session — see
-  // TextOps.normText for the active-session rationale; the tree form and
-  // kernel are pinned equal by TextOpsSpec
-  private def normText(c: Column): Column =
-    if (SparkSession.getActiveSession.exists(_.catalog.functionExists("graft_norm_text")))
-      call_function("graft_norm_text", c)
-    else trim(regexp_replace(regexp_replace(lower(c), "[^a-z ]", ""), " +", " "))
 
   // ---- exact dedup (hash-groupBy) ----------------------------------------
   // Group by a 128-bit content hash, keep the lowest doc_id. Grouping by
@@ -70,7 +64,7 @@ object Dedup {
     * high-cardinality uniform keys. */
   def spanDedup(docs: DataFrame): DataFrame = {
     val spans = docs
-      .select(col("doc_id"), split(normText(col("text")), " ").as("words"))
+      .select(col("doc_id"), split(TextOps.normText(col("text")), " ").as("words"))
       .withColumn("n", size(col("words")))
       .select(col("doc_id"), col("words"), col("n"),
         explode(expr(s"sequence(1, n, $SpanSize)")).as("start"))
@@ -165,7 +159,7 @@ object Dedup {
   def exactSubstrings(docs: DataFrame, seedCap: Int = SubstrSeedCap): DataFrame = {
     require(seedCap >= 2, s"seedCap must allow at least one duplicate pair, got $seedCap")
     val seeds = docs
-      .select(col("doc_id"), split(normText(col("text")), " ").as("words"))
+      .select(col("doc_id"), split(TextOps.normText(col("text")), " ").as("words"))
       .withColumn("n", size(col("words")))
       .filter(col("n") >= SubstrSeedK)
       .select(col("doc_id"),
@@ -241,26 +235,15 @@ object Dedup {
     substrRemovalSummary(Tables.documents(s, dir))
 
   // ---- n-gram Jaccard near-dup -------------------------------------------
-  /** Distinct word-3-gram set of the normalized text (requires >= 3 words)
-    * — the builtin-tree fallback, package-private so DedupSpec pins it
-    * against the native kernel. */
-  private[graft] def gramSetTree: Column = expr(
-    """array_distinct(transform(sequence(1, size(words) - 2),
-      |  i -> concat_ws(' ', element_at(words, i), element_at(words, i + 1), element_at(words, i + 2))))
-      |""".stripMargin)
-
-  /** [[gramSetTree]] as the native [[graft.functions.GramSet]] kernel when
-    * the session has GraftExtensions (r22, guide §4): the distinct-3-gram
-    * projection is the expensive half of every signature derivation
-    * (per gram: a sequence element, three element_at evaluations, a
-    * concat_ws alloc, then a second array_distinct pass) and it fronts
-    * the n-gram dedup family plus both capstone pipelines. Same strings
-    * in the same first-occurrence order → identical join keys, buckets
-    * and jaccards. */
-  private def gramSet(s: SparkSession): Column =
-    if (s.catalog.functionExists("graft_gramset"))
-      call_function("graft_gramset", col("words"), lit(3))
-    else { graft.functions.FallbackWarning.note("graft_gramset"); gramSetTree }
+  /** Distinct word-3-gram set of the normalized text (requires >= 3
+    * words) — the native [[graft.functions.GramSet]] kernel (r22, guide
+    * §4): the distinct-3-gram projection is the expensive half of every
+    * signature derivation and it fronts the n-gram dedup family plus
+    * both capstone pipelines. DedupSpec pins it against the builtin
+    * array_distinct(transform(...)) tree: same strings in the same
+    * first-occurrence order → identical join keys, buckets and
+    * jaccards. */
+  private def gramSet: Column = Native.col(GramSet(Native.expr(col("words")), 3))
 
   /** Candidate blocking key: 40-char prefix of the normalized text. A real
     * pipeline would use MinHash bands (below) — the prefix block keeps this
@@ -282,11 +265,11 @@ object Dedup {
   private def gramBucketsOf(docs: DataFrame): DataFrame = {
     val byBucket = Window.partitionBy("bucket").orderBy("doc_id")
     docs
-      .select(col("doc_id"), normText(col("text")).as("norm"))
+      .select(col("doc_id"), TextOps.normText(col("text")).as("norm"))
       .withColumn("words", split(col("norm"), " "))
       .filter(size(col("words")) >= 3)
       .select(col("doc_id"), md5(substring(col("norm"), 1, 40).cast("binary")).as("bucket"),
-        gramSet(docs.sparkSession).as("grams"))
+        gramSet.as("grams"))
       .withColumn("rn", row_number().over(byBucket))
       .filter(col("rn") <= NgramBucketCap).drop("rn")
   }
@@ -399,24 +382,14 @@ object Dedup {
   /** Distinct word-[[DecontamGram]]-gram rows (doc_id, g) of a
     * (doc_id, text) frame — one definition for the training and
     * benchmark sides, mirrored by the `grams` CTE of the oracle. The
-    * builtin tree, package-private for DedupSpec's kernel-equality pin. */
-  private[graft] def decontamGramSetTree: Column = expr(
-    s"""array_distinct(transform(sequence(1, size(w) - ${DecontamGram - 1}),
-       |  i -> array_join(slice(w, i, $DecontamGram), ' ')))""".stripMargin)
-
-  private def decontamGrams(docs: DataFrame): DataFrame = {
-    // same kernel dispatch as [[gramSet]] — array_join(slice(...)) builds
-    // the identical space-joined string concat_ws does (both skip nulls),
-    // so one kernel serves both widths
-    val s = docs.sparkSession
-    val g =
-      if (s.catalog.functionExists("graft_gramset"))
-        call_function("graft_gramset", col("w"), lit(DecontamGram))
-      else { graft.functions.FallbackWarning.note("graft_gramset"); decontamGramSetTree }
-    docs.select(col("doc_id"), split(normText(col("text")), " ").as("w"))
+    * [[gramSet]] kernel at width [[DecontamGram]]: it builds the
+    * identical space-joined string array_join(slice(...)) does (both
+    * skip nulls), pinned by DedupSpec. */
+  private def decontamGrams(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), split(TextOps.normText(col("text")), " ").as("w"))
       .filter(size(col("w")) >= DecontamGram)
-      .select(col("doc_id"), explode(g).as("g"))
-  }
+      .select(col("doc_id"),
+        explode(Native.col(GramSet(Native.expr(col("w")), DecontamGram))).as("g"))
 
   /** Benchmark decontamination (the GPT-3-style eval-overlap gate):
     * report every TRAINING document sharing at least one
@@ -509,7 +482,7 @@ object Dedup {
       // the Bloom sidecar rides every bootstrap (one extra bucket-column
       // pass) so the pre-gate never pays a build at probe time
       writeBloomBytes(sig.sparkSession, tmp,
-        bloomOfBuckets(sig.sparkSession, sig.select("bucket")))
+        bloomOfBuckets(sig.select("bucket")))
     }
 
   /** Union `buckets` into the store's Bloom sidecar — called by every
@@ -620,24 +593,18 @@ object Dedup {
     * lazy ensure / map-side probe) keyed by the signature BUCKET
     * strings; `_idbloom.bin` ([[graft.sources.IdBloom]]) is the same
     * implementation keyed by doc ids, so the rename-failure discipline
-    * and the native-vs-fallback fork are maintained ONCE. */
+    * is maintained ONCE. */
   private val bucketBloom =
     new graft.sources.BloomSidecar("_bloom.bin", BloomBits, BloomHashes)
 
   /** Build the Bloom filter of a bucket column: the `graft_bloom`
-    * partial aggregate when the session has GraftExtensions (map tasks
-    * carry bit arrays, never the bucket stream), else the same filter
-    * folded per partition and OR-merged on the driver — identical bits
-    * either way (OR is associative; DedupSpec asserts native ≡
-    * fallback). */
-  private[graft] def bloomOfBuckets(s: SparkSession, buckets: DataFrame): Array[Byte] =
-    bucketBloom.buildOf(s, buckets)
+    * partial aggregate (map tasks carry bit arrays, never the bucket
+    * stream). */
+  private[graft] def bloomOfBuckets(buckets: DataFrame): Array[Byte] =
+    bucketBloom.buildOf(buckets)
 
   private def writeBloomBytes(s: SparkSession, path: String, bytes: Array[Byte]): Unit =
     bucketBloom.write(s, path, bytes)
-
-  private def readBloomBytes(s: SparkSession, path: String): Option[Array[Byte]] =
-    bucketBloom.read(s, path)
 
   /** The store's Bloom sidecar, built from the stored buckets if absent
     * (one column scan, paid once per store version — the `_docs`
@@ -646,12 +613,11 @@ object Dedup {
   private[graft] def ensureBloomSidecar(s: SparkSession, path: String): Array[Byte] =
     bucketBloom.ensureFrom(s, path)(s.read.parquet(path).select("bucket"))
 
-  /** The membership probe as a Column — native expression with the
-    * filter riding as a literal when the extension is registered, else
-    * a UDF over the same [[graft.functions.GBloom]] bits (null-safe:
-    * gateAgg's coalesce routes null probes to the conservative branch). */
-  private[graft] def bloomContainsCol(s: SparkSession, bucket: Column, bytes: Array[Byte]): Column =
-    bucketBloom.mightContain(s, bucket, bytes)
+  /** The membership probe as a Column — the native expression with the
+    * filter riding as a literal (null-safe: gateAgg's coalesce routes
+    * null probes to the conservative branch). */
+  private[graft] def bloomContainsCol(bucket: Column, bytes: Array[Byte]): Column =
+    bucketBloom.mightContain(bucket, bytes)
 
   /** Gate an incoming signature batch against the STORED corpus: the
     * incoming batch's shard set (≤ [[SigShards]] values — control-plane,
@@ -718,7 +684,7 @@ object Dedup {
     // mostly-novel batch gates in approximately the filter's
     // false-positive fraction of its former shuffle volume.
     val prefilter =
-      if (useBloom) Some(bloomContainsCol(s, col("bucket"), ensureBloomSidecar(s, path)))
+      if (useBloom) Some(bloomContainsCol(col("bucket"), ensureBloomSidecar(s, path)))
       else None
     gateAgg(incoming.select(col("doc_id"), col("bucket"), col("grams").as("grams_a")),
       capped.select(col("bucket"), col("grams").as("grams_b")), ordered, prefilter)
@@ -940,21 +906,12 @@ object Dedup {
   /** Per-document MinHash signature in ONE codegen'd projection
     * (graft.functions.MinHashSigDoc): the signature is computed where the
     * document row lives — no gram explode, no re-group shuffle, no
-    * interpreted transform/array_min walk per permutation. Falls back to a
-    * UDF with identical math on sessions without GraftExtensions. */
-  private def minhashCol(s: SparkSession, words: Column): Column =
-    if (s.catalog.functionExists("graft_minhash")) call_function("graft_minhash", words)
-    else {
-      graft.functions.FallbackWarning.note("graft_minhash")
-      udf((w: Seq[String]) => graft.functions.DocHashes.minhashSeq(w, 3, NumHashes)).apply(words)
-    }
+    * interpreted transform/array_min walk per permutation. */
+  private def minhashCol(words: Column): Column =
+    Native.col(MinHashSigDoc(Native.expr(words), 3, NumHashes))
 
-  private def simhashCol(s: SparkSession, words: Column): Column =
-    if (s.catalog.functionExists("graft_simhash")) call_function("graft_simhash", words)
-    else {
-      graft.functions.FallbackWarning.note("graft_simhash")
-      udf((w: Seq[String]) => graft.functions.DocHashes.simhashSeq(w, 1)).apply(words)
-    }
+  private def simhashCol(words: Column): Column =
+    Native.col(SimHashDoc(Native.expr(words)))
 
   /** Candidate near-dup pairs: docs sharing ≥1 LSH band. `n_bands` is the
     * number of agreeing bands; with 4 bands × 4 rows the collision curve
@@ -972,10 +929,10 @@ object Dedup {
     */
   def qDedupMinhash(s: SparkSession, dir: String): DataFrame = {
     val base = Tables.documents(s, dir)
-      .select(col("doc_id"), normText(col("text")).as("norm"))
+      .select(col("doc_id"), TextOps.normText(col("text")).as("norm"))
       .withColumn("words", split(col("norm"), " "))
       .filter(size(col("words")) >= 3)
-      .select(col("doc_id"), minhashCol(s, col("words")).as("sig"))
+      .select(col("doc_id"), minhashCol(col("words")).as("sig"))
     // Band key = hash of 4 consecutive signature rows; explode to (band, key).
     val banded = base.select(col("doc_id"),
       posexplode(array((0 until Bands).map { b =>
@@ -1035,8 +992,8 @@ object Dedup {
     // shuffle that the aggregate formulations required; the only remaining
     // shuffle is the banded candidate join.
     val base = Tables.documents(s, dir)
-      .select(col("doc_id"), split(normText(col("text")), " ").as("words"))
-      .select(col("doc_id"), simhashCol(s, col("words")).as("simhash"))
+      .select(col("doc_id"), split(TextOps.normText(col("text")), " ").as("words"))
+      .select(col("doc_id"), simhashCol(col("words")).as("simhash"))
     bandedHammingPairs(base, "doc_id", "simhash", 3, "doc_a", "doc_b")
   }
 

@@ -260,7 +260,7 @@ object Pipeline {
     // re-ship the 2 MiB filter as a plan literal — one pass, cached
     // (bounded by the batch's distinct ids), does the work once
     val possible = incIds.filter(
-      graft.sources.IdBloom.mightContain(s,
+      graft.sources.IdBloom.mightContain(
         col(idCol), graft.sources.IdBloom.ensure(s, path, idCol))).persist()
     try {
       if (possible.count() == 0L) return // provably novel batch

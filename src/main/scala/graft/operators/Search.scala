@@ -23,17 +23,6 @@ import graft.sources.Tables
   */
 object Search {
 
-  /** lowercase, strip non [a-z ], collapse runs of spaces, trim —
-    * byte-identical to the oracle's regexp_replace chain (one
-    * definition ↔ one oracle CTE, the [[TextOps]] convention). */
-  // native-kernel dispatch on the constructing session — see
-  // TextOps.normText for the active-session rationale; the tree form and
-  // kernel are pinned equal by TextOpsSpec
-  private def normText(c: Column): Column =
-    if (SparkSession.getActiveSession.exists(_.catalog.functionExists("graft_norm_text")))
-      call_function("graft_norm_text", c)
-    else trim(regexp_replace(regexp_replace(lower(c), "[^a-z ]", ""), " +", " "))
-
   // ---- BM25 keyword search ------------------------------------------------
 
   /** The demo query (corpus vocabulary is synthetic, SURVEY §7.6); a
@@ -47,7 +36,7 @@ object Search {
     * base of the in-query scorer and the stored index writer (one
     * definition, so the two faces can never disagree on tokenization). */
   private def docWords(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), split(normText(col("text")), " ").as("words"))
+    docs.select(col("doc_id"), split(TextOps.normText(col("text")), " ").as("words"))
       .withColumn("dl", size(col("words")).cast(LongType))
 
   /** The BM25 scoring stage shared by [[bm25]] and [[qBm25Probe]]:
@@ -596,12 +585,12 @@ object Search {
     val lex = rankTop(bm25(Tables.documents(s, dir)),
       Seq(col("bm25").desc, col("doc_id")), "rank_lex")
       .select(col("doc_id"), col("rank_lex"))
-    val e = Similarity.withNorm(s, Tables.embeddings(s, dir))
+    val e = Similarity.withNorm(Tables.embeddings(s, dir))
     val q = e.filter(col("vec_id") === 0)
       .select(col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
     val scored = e.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
       .withColumn("cosine",
-        round(Similarity.dotCol(s, col("q_emb"), col("embedding"))
+        round(Similarity.dotCol(col("q_emb"), col("embedding"))
           / (col("q_nrm") * col("nrm")), 6))
     val dense = rankTop(scored.select(col("vec_id"), col("cosine")),
       Seq(col("cosine").desc, col("vec_id")), "rank_dense")
@@ -639,7 +628,7 @@ object Search {
   private[graft] def fuzzyPairs(docs: DataFrame): DataFrame = {
     val byBlock = Window.partitionBy("blk").orderBy("doc_id")
     val base = docs
-      .select(col("doc_id"), normText(col("text")).as("norm"))
+      .select(col("doc_id"), TextOps.normText(col("text")).as("norm"))
       .filter(length(col("norm")) >= 8)
       .select(col("doc_id"), substring(col("norm"), 1, 8).as("blk"),
         substring(col("norm"), 1, FuzzyPrefixLen).as("pfx"))

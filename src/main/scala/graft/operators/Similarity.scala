@@ -1,9 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Native
 
+import graft.functions.{DotProduct, IvfScores, PqAdc, PqEncode, PqLut, TopKByScore}
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (`embedding: array<float>`,
@@ -25,11 +28,10 @@ import graft.sources.Tables
   *    single probe loses (recall vs brute force asserted in
   *    SimilaritySpec, not by SQL oracle).
   *
-  * Dot products run through the native codegen'd `graft_dot` expression
-  * (graft.functions.DotProduct, injected by GraftExtensions) when the
-  * session has it, falling back to the interpreted `aggregate`/`zip_with`
-  * higher-order functions otherwise. Both accumulate sequentially in
-  * double — bit-identical to each other and to the DuckDB oracle's
+  * Dot products run through the native codegen'd expression
+  * graft.functions.DotProduct, built directly through the
+  * [[org.apache.spark.sql.graftshim.Native]] shim. It accumulates
+  * sequentially in double — bit-identical to the DuckDB oracle's
   * `list_aggregate(..., 'sum')`, which is what makes differential testing
   * of float math possible at all.
   */
@@ -67,34 +69,22 @@ object Similarity {
     (h >>> 11).toDouble / (1L << 53).toDouble - 0.5
   }
 
-  /** The interpreted HOF fallback for the dot product. Package-private so
-    * SimilaritySpec pins THIS expression — not a copy — against the
-    * native one. The coalesce keeps it result-identical to DotProduct on
-    * degenerate inputs too: a null element or the null padding zip_with
-    * adds for unequal lengths contributes 0 instead of collapsing the
-    * whole sum to NULL. */
-  private[graft] def interpretedDot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => coalesce(x.cast("double") * y.cast("double"), lit(0.0))),
-      lit(0.0), (acc, v) => acc + v)
-
-  /** Sequential-fold dot product in double precision: the injected native
-    * expression when the session has GraftExtensions, else the
-    * interpreted fallback (same result, slower). */
-  private[graft] def dotCol(s: SparkSession, a: Column, b: Column): Column =
-    if (s.catalog.functionExists("graft_dot")) call_function("graft_dot", a, b)
-    else { graft.functions.FallbackWarning.note("graft_dot"); interpretedDot(a, b) }
+  /** Sequential-fold dot product in double precision (the native
+    * [[graft.functions.DotProduct]] kernel). */
+  private[graft] def dotCol(a: Column, b: Column): Column =
+    Native.col(DotProduct(Native.expr(a), Native.expr(b)))
 
   private def planeArr(p: Int): Column =
     array((0 until Dim).map(d => lit(planeComponent(p, d))): _*)
 
   /** Sign-bucket of `embedding` under the given plane family. */
-  def lshBucket(s: SparkSession, embedding: Column, planes: Seq[Int]): Column =
+  def lshBucket(embedding: Column, planes: Seq[Int]): Column =
     planes.zipWithIndex.map { case (p, k) =>
-      when(dotCol(s, embedding, planeArr(p)) > 0, lit(1L << k)).otherwise(lit(0L))
+      when(dotCol(embedding, planeArr(p)) > 0, lit(1L << k)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  private[graft] def withNorm(s: SparkSession, df: DataFrame): DataFrame =
-    df.withColumn("nrm", sqrt(dotCol(s, col("embedding"), col("embedding"))))
+  private[graft] def withNorm(df: DataFrame): DataFrame =
+    df.withColumn("nrm", sqrt(dotCol(col("embedding"), col("embedding"))))
 
   // ---- cosine near-dup pairs: banded LSH blocking within label ----------
   // (The synthetic corpus has no planted high-cosine dup clusters — max
@@ -102,8 +92,8 @@ object Similarity {
   // shape is what matters: bounded blocks → pairs within block → exact
   // cosine threshold.)
   def qEmbedNeardup(s: SparkSession, dir: String): DataFrame = {
-    val e = withNorm(s, Tables.embeddings(s, dir))
-    val bandCols = (0 until NdBands).map(b => lshBucket(s, col("embedding"), ndPlaneIds(b)))
+    val e = withNorm(Tables.embeddings(s, dir))
+    val bandCols = (0 until NdBands).map(b => lshBucket(col("embedding"), ndPlaneIds(b)))
     // The banded frame CARRIES the embedding + norm, and the repartition
     // on the band keys makes both self-join sides canonicalize to the
     // SAME exchange (qDedupMinhash's pattern): one corpus scan computes
@@ -123,7 +113,7 @@ object Similarity {
       col("embedding").as("emb_b"), col("nrm").as("nrm_b"))
     a.join(b.hint("shuffle_hash"), Seq("label", "band", "bkt"))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine", round(dotCol(s, col("emb_a"), col("emb_b")) / (col("nrm_a") * col("nrm_b")), 6))
+      .withColumn("cosine", round(dotCol(col("emb_a"), col("emb_b")) / (col("nrm_a") * col("nrm_b")), 6))
       // Threshold BEFORE the distinct: cosine is functional on the pair,
       // so the dedup shuffle carries only surviving pairs, not every
       // band collision (same ordering as qDedupSimhash).
@@ -142,26 +132,26 @@ object Similarity {
     * and aggregate ([[qAnnTopkAgg]]) top-k faces — one definition, so
     * the two formulations can never score differently. */
   private def bruteScored(s: SparkSession, dir: String): DataFrame =
-    bruteScoredOver(s, withNorm(s, Tables.embeddings(s, dir)))
+    bruteScoredOver(withNorm(Tables.embeddings(s, dir)))
 
   /** [[bruteScored]] over an already-normalized frame — the seam that
     * lets [[writeAnnRecallStore]] share ONE persisted withNorm pass
     * between the exact side and the candidate-volume measurement. */
-  private def bruteScoredOver(s: SparkSession, e: DataFrame): DataFrame = {
+  private def bruteScoredOver(e: DataFrame): DataFrame = {
     val queries = e.filter(pmod(col("vec_id"), lit(100L)) === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
     val corpus = e.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"), col("nrm").as("n_nrm"))
     corpus.crossJoin(broadcast(queries))
       .filter(col("n_id") =!= col("q_id"))
-      .withColumn("cosine", round(dotCol(s, col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")), 6))
+      .withColumn("cosine", round(dotCol(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")), 6))
   }
 
   def qAnnTopk(s: SparkSession, dir: String): DataFrame =
-    qAnnTopkOver(s, withNorm(s, Tables.embeddings(s, dir)))
+    qAnnTopkOver(s, withNorm(Tables.embeddings(s, dir)))
 
   private def qAnnTopkOver(s: SparkSession, e: DataFrame): DataFrame = {
     val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("n_id"))
-    bruteScoredOver(s, e)
+    bruteScoredOver(e)
       // null cosines never rank — [[topkCol]]'s contract, carried here
       // so the window and aggregate faces stay output-identical even in
       // non-ANSI sessions where a zero divisor yields NULL instead of
@@ -279,14 +269,13 @@ object Similarity {
     // this runs inside the one-time q_ann_plan_build, where re-scanning
     // the corpus per aggregate would inflate the priced build (r20
     // review); persist + unpersist, corpus-sized but build-plane
-    val e = withNorm(s, vectors).persist()
-    try measuredCandidatesOver(s, e)
+    val e = withNorm(vectors).persist()
+    try measuredCandidatesOver(e)
     finally { e.unpersist(); () }
   }
 
-  private def measuredCandidatesOver(s: SparkSession,
-      e: DataFrame): (Long, Double, Double) = {
-    val b = e.withColumn("bucket", lshBucket(s, col("embedding"), 0 until AnnPlanes))
+  private def measuredCandidatesOver(e: DataFrame): (Long, Double, Double) = {
+    val b = e.withColumn("bucket", lshBucket(col("embedding"), 0 until AnnPlanes))
     val hist = b.groupBy("bucket").count().collect()
       .map(r => r.getAs[Number](0).longValue -> r.getLong(1)).toMap
     val n = hist.values.sum
@@ -300,12 +289,12 @@ object Similarity {
     }.sum - nQ
     val cents = trainQuantizer(e)
     val lists = e.withColumn("list_id",
-      ivfListId(s, cents)(col("embedding"), col("nrm")))
+      ivfListId(cents)(col("embedding"), col("nrm")))
     val lhist = lists.groupBy("list_id").count().collect()
       .map(r => r.getAs[Number](0).intValue -> r.getLong(1)).toMap
     // Σ_q Σ_{l ∈ probes(q)} |list l| = Σ_l (#queries probing l)·|list l|
     val probed = lists.filter(pmod(col("vec_id"), lit(100L)) === 0)
-      .select(ivfProbeLists(s, cents)(col("embedding"), col("nrm")).as("l"))
+      .select(ivfProbeLists(cents)(col("embedding"), col("nrm")).as("l"))
       .groupBy("l").count().collect()
       .map(r => r.getAs[Number](0).intValue -> r.getLong(1))
     val ivfCand = probed.map { case (l, qc) => qc * lhist.getOrElse(l, 0L) }.sum - nQ
@@ -387,7 +376,7 @@ object Similarity {
     // and all four candidate-volume aggregates. Values are identical to
     // the two standalone entry points' (same frames, same arithmetic),
     // which SimilaritySpec pins.
-    val e = withNorm(s, Tables.embeddings(s, dir)).persist()
+    val e = withNorm(Tables.embeddings(s, dir)).persist()
     val (recalls, costs) = try {
       val exact = qAnnTopkOver(s, e).persist()
       val rec = try {
@@ -397,7 +386,7 @@ object Similarity {
           t -> BigDecimal(m).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
         }.toMap
       } finally exact.unpersist()
-      val (n, lshC, ivfC) = measuredCandidatesOver(s, e)
+      val (n, lshC, ivfC) = measuredCandidatesOver(e)
       (rec + ("brute" -> 1.0),
         (annTierFaces.keySet + "brute").map(t =>
           t -> annTierCostMeasured(t, n, lshC, ivfC)).toMap)
@@ -534,39 +523,19 @@ object Similarity {
   }
 
   /** Top-k per (score, id) as ONE expression: the native
-    * [[graft.functions.TopKByScore]] aggregate when the session has
-    * GraftExtensions, else a collect+sort fallback with the identical
-    * ordering — the struct sorts ascending on (negated score, id),
-    * which IS (score desc, id asc), double-negation being exact. The
-    * fallback materializes every candidate per group (what the native
-    * k-capped heap exists to avoid); results are equal either way
-    * (SimilaritySpec asserts it, null scores included).
+    * [[graft.functions.TopKByScore]] aggregate, a k-capped heap per
+    * group ordered by (score desc, id asc).
     *
-    * Null contract, BOTH faces: a null score or id never ranks — the
-    * native aggregate skips it in update(), and the fallback's `when`
-    * feeds collect_list a null (which it drops) instead of a
-    * null-fielded struct (which array_sort would rank FIRST). Under
-    * this session's ANSI default a zero-norm cosine fails fast before
-    * either face sees a null; the contract matters for non-ANSI
-    * sessions, where the cosine is NULL.
+    * Null contract: a null score or id never ranks — the aggregate skips
+    * it in update(). Under this session's ANSI default a zero-norm
+    * cosine fails fast before the aggregate sees a null; the contract
+    * matters for non-ANSI sessions, where the cosine is NULL.
     *
-    * NaN contract: NaN ranks FIRST on both faces (Spark's sort order:
-    * NaN greatest). Negation alone cannot express that in the fallback
-    * — -NaN is still NaN and would sort LAST ascending — so the sort
-    * key leads with an is-NaN flag (0 for NaN, 1 otherwise) and the
-    * negated score only orders the non-NaN remainder. */
-  private[graft] def topkCol(s: SparkSession, score: Column, id: Column, k: Int): Column =
-    if (s.catalog.functionExists("graft_topk"))
-      call_function("graft_topk", score, id, lit(k))
-    else {
-      graft.functions.FallbackWarning.note("graft_topk")
-      transform(
-        slice(array_sort(collect_list(
-          when(score.isNotNull && id.isNotNull,
-            struct((!isnan(score)).cast("int").as("nn"),
-              (-score).as("ns"), id.as("i"))))), 1, k),
-        x => struct(x.getField("i").as("neighbor_id"), (-x.getField("ns")).as("cosine")))
-    }
+    * NaN contract: NaN ranks FIRST (Spark's sort order: NaN greatest).
+    * SimilaritySpec pins both contracts against a collect+sort form. */
+  private[graft] def topkCol(score: Column, id: Column, k: Int): Column =
+    Native.col(TopKByScore(Native.expr(score), Native.expr(id), Literal(k))
+      .toAggregateExpression())
 
   /** [[qAnnTopk]] re-expressed as a bounded AGGREGATE instead of a
     * window: the window face sorts every scored candidate of a query
@@ -581,7 +550,7 @@ object Similarity {
   def qAnnTopkAgg(s: SparkSession, dir: String): DataFrame =
     explodeRanks(bruteScored(s, dir)
       .groupBy("q_id")
-      .agg(topkCol(s, col("cosine"), col("n_id"), 5).as("top")))
+      .agg(topkCol(col("cosine"), col("n_id"), 5).as("top")))
 
   // ---- multi-probe LSH ANN (Spark-native scale path) --------------------
   /** ANN via multi-probe LSH: corpus vectors sit in their own sign bucket
@@ -619,21 +588,21 @@ object Similarity {
     * rather than a per-query window sort — same results by the
     * aggregate's total-ordering contract, proven window-vs-aggregate in
     * SimilaritySpec and hash-proven here by the unchanged oracle. */
-  private def annTopkFromBuckets(s: SparkSession, corpus: DataFrame,
+  private def annTopkFromBuckets(corpus: DataFrame,
       queries: DataFrame): DataFrame = {
     // A corpus vector has exactly one bucket and probe buckets are
     // distinct, so no (q, n) pair can duplicate across probes.
     val scored = corpus.join(broadcast(queries), Seq("bucket"))
       .filter(col("n_id") =!= col("q_id"))
-      .withColumn("cosine", round(dotCol(s, col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")), 6))
+      .withColumn("cosine", round(dotCol(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")), 6))
     explodeRanks(scored.groupBy("q_id")
-      .agg(topkCol(s, col("cosine"), col("n_id"), 5).as("top")))
+      .agg(topkCol(col("cosine"), col("n_id"), 5).as("top")))
   }
 
   def qAnnLsh(s: SparkSession, dir: String): DataFrame = {
-    val e = withNorm(s, Tables.embeddings(s, dir))
-      .withColumn("bucket", lshBucket(s, col("embedding"), 0 until AnnPlanes))
-    annTopkFromBuckets(s,
+    val e = withNorm(Tables.embeddings(s, dir))
+      .withColumn("bucket", lshBucket(col("embedding"), 0 until AnnPlanes))
+    annTopkFromBuckets(
       e.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
         col("nrm").as("n_nrm"), col("bucket")),
       probeQueries(e))
@@ -655,7 +624,7 @@ object Similarity {
     val probed = idx.filter(pmod(col("vec_id"), lit(100L)) === 0)
       .select("bucket").distinct().collect()
       .flatMap(r => probeBuckets(r.getAs[Number](0).longValue)).distinct.toSeq
-    annTopkFromBuckets(s,
+    annTopkFromBuckets(
       probeAnnIndex(s, path, probed)
         .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
           col("nrm").as("n_nrm"), col("bucket")),
@@ -767,38 +736,24 @@ object Similarity {
   }
 
   /** Per-centroid (cosine, list id) score structs for a vector; argmax =
-    * array_max's lexicographic struct order (score first). Native
-    * [[graft.functions.IvfScores]] kernel under GraftExtensions — the
-    * quantizer rides as one packed literal instead of IvfLists × Dim
-    * per-component `lit()`s — else the equivalent builtin tree. */
-  private def ivfScores(s: SparkSession, centroids: Array[(Int, Array[Double], Double)])(
+    * array_max's lexicographic struct order (score first). The native
+    * [[graft.functions.IvfScores]] kernel — the quantizer rides as one
+    * packed literal instead of IvfLists × Dim per-component `lit()`s. */
+  private def ivfScores(centroids: Array[(Int, Array[Double], Double)])(
       emb: Column, nrm: Column): Column =
-    if (s.catalog.functionExists("graft_ivf_scores"))
-      call_function("graft_ivf_scores", emb, nrm,
-        typedlit(centroids.map { case (i, c, cn) => (i, c.toSeq, cn) }.toSeq))
-    else {
-      graft.functions.FallbackWarning.note("graft_ivf_scores")
-      ivfScoresTree(s, centroids)(emb, nrm)
-    }
-
-  /** Builtin-composition fallback / spec cross-check twin of the native
-    * scores kernel. */
-  private[graft] def ivfScoresTree(s: SparkSession, centroids: Array[(Int, Array[Double], Double)])(
-      emb: Column, nrm: Column): Column = array(centroids.map { case (i, c, cn) =>
-    val cArr = array(c.map(lit): _*)
-    struct((dotCol(s, emb, cArr) / (nrm * lit(cn))).as("score"), lit(i).as("list_id"))
-  }: _*)
+    Native.col(IvfScores(Native.expr(emb), Native.expr(nrm), Native.expr(
+      typedlit(centroids.map { case (i, c, cn) => (i, c.toSeq, cn) }.toSeq))))
 
   /** Nearest-centroid list assignment (the corpus side of IVF). */
-  private def ivfListId(s: SparkSession, centroids: Array[(Int, Array[Double], Double)])(
+  private def ivfListId(centroids: Array[(Int, Array[Double], Double)])(
       emb: Column, nrm: Column): Column =
-    array_max(ivfScores(s, centroids)(emb, nrm)).getField("list_id")
+    array_max(ivfScores(centroids)(emb, nrm)).getField("list_id")
 
   /** The [[IvfProbes]] nearest lists for a query vector, as an exploded
     * column (one row per probed list). */
-  private def ivfProbeLists(s: SparkSession, centroids: Array[(Int, Array[Double], Double)])(
+  private def ivfProbeLists(centroids: Array[(Int, Array[Double], Double)])(
       emb: Column, nrm: Column): Column =
-    explode(slice(transform(reverse(array_sort(ivfScores(s, centroids)(emb, nrm))),
+    explode(slice(transform(reverse(array_sort(ivfScores(centroids)(emb, nrm))),
       x => x.getField("list_id")), 1, IvfProbes))
 
   // ---- k-means clustering faces (data curation) ---------------------------
@@ -807,17 +762,17 @@ object Similarity {
 
   /** The (cosine, cluster) argmax pair of a vector against the trained
     * centroids — [[ivfListId]] exposing the winning score too. */
-  private def ivfAssign(s: SparkSession, centroids: Array[(Int, Array[Double], Double)])(
+  private def ivfAssign(centroids: Array[(Int, Array[Double], Double)])(
       emb: Column, nrm: Column): Column =
-    array_max(ivfScores(s, centroids)(emb, nrm))
+    array_max(ivfScores(centroids)(emb, nrm))
 
   /** (vec_id, cluster_id, sim) — every embedding assigned to its nearest
     * trained centroid, the shared base of both clustering faces. */
-  private def assignedClusters(s: SparkSession, vectors: DataFrame): DataFrame = {
-    val e = withNorm(s, vectors)
+  private def assignedClusters(vectors: DataFrame): DataFrame = {
+    val e = withNorm(vectors)
     val centroids = trainQuantizer(e)
     e.select(col("vec_id"),
-        ivfAssign(s, centroids)(col("embedding"), col("nrm")).as("a"))
+        ivfAssign(centroids)(col("embedding"), col("nrm")).as("a"))
       .select(col("vec_id"), col("a").getField("list_id").as("cluster_id"),
         col("a").getField("score").as("sim"))
   }
@@ -839,7 +794,7 @@ object Similarity {
     kmeansFrom(s, Tables.embeddings(s, dir))
 
   private[graft] def kmeansFrom(s: SparkSession, vectors: DataFrame): DataFrame =
-    assignedClusters(s, vectors)
+    assignedClusters(vectors)
       .withColumn("fp", round(col("sim") * lit(1e6)).cast(org.apache.spark.sql.types.LongType))
       .groupBy("cluster_id")
       .agg(count(lit(1)).as("n"),
@@ -861,10 +816,10 @@ object Similarity {
   private[graft] def clusterSampleFrom(s: SparkSession, vectors: DataFrame): DataFrame = {
     val pri = conv(substring(md5(col("vec_id").cast("string").cast("binary")), 1, 8), 16, 10)
       .cast("double")
-    assignedClusters(s, vectors)
+    assignedClusters(vectors)
       .select(col("cluster_id"), col("vec_id"), pri.as("pri"))
       .groupBy("cluster_id")
-      .agg(topkCol(s, col("pri"), col("vec_id"), ClusterSampleK).as("top"))
+      .agg(topkCol(col("pri"), col("vec_id"), ClusterSampleK).as("top"))
       .select(col("cluster_id"), explode(col("top.neighbor_id")).as("vec_id"))
       .orderBy("cluster_id", "vec_id")
   }
@@ -885,15 +840,15 @@ object Similarity {
     * in-query IVF face SimilaritySpec runs against constructed corpora
     * (e.g. the zero-norm NaN-query equivalence case). */
   private[graft] def qAnnIvfFrom(s: SparkSession, vectors: DataFrame): DataFrame = {
-    val e = withNorm(s, vectors)
+    val e = withNorm(vectors)
     val centroids = trainQuantizer(e)
     val corpus = e.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
         col("nrm").as("n_nrm"),
-        ivfListId(s, centroids)(col("embedding"), col("nrm")).as("bucket"))
+        ivfListId(centroids)(col("embedding"), col("nrm")).as("bucket"))
     val queries = e.filter(pmod(col("vec_id"), lit(100L)) === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"),
-        ivfProbeLists(s, centroids)(col("embedding"), col("nrm")).as("bucket"))
-    annTopkFromBuckets(s, corpus, queries)
+        ivfProbeLists(centroids)(col("embedding"), col("nrm")).as("bucket"))
+    annTopkFromBuckets(corpus, queries)
   }
 
   // ---- SemDeDup-style semantic dedup (within-cluster cosine) ------------
@@ -940,15 +895,15 @@ object Similarity {
     *    sequential twin bit-for-bit.
     */
   def qDedupSemantic(s: SparkSession, dir: String): DataFrame =
-    qDedupSemanticFrom(s, Tables.embeddings(s, dir))
+    qDedupSemanticFrom(Tables.embeddings(s, dir))
 
   /** [[qDedupSemantic]] over an arbitrary (vec_id, embedding, …) frame —
     * what SimilaritySpec runs against constructed clone-group corpora. */
-  private[graft] def qDedupSemanticFrom(s: SparkSession, vectors: DataFrame): DataFrame = {
-    val e = withNorm(s, vectors)
+  private[graft] def qDedupSemanticFrom(vectors: DataFrame): DataFrame = {
+    val e = withNorm(vectors)
     val cents = trainQuantizer(e)
     val assigned = e.select(col("vec_id"), col("embedding"), col("nrm"),
-        ivfListId(s, cents)(col("embedding"), col("nrm")).as("list_id"))
+        ivfListId(cents)(col("embedding"), col("nrm")).as("list_id"))
       .withColumn("blk", pmod(xxhash64(col("vec_id")), lit(SemBlocks)).cast("int"))
     val a = assigned.select(col("list_id"), col("blk").as("b_lo"),
       explode(sequence(col("blk"), lit(SemBlocks - 1))).as("b_hi"),
@@ -959,7 +914,7 @@ object Similarity {
     a.join(b.hint("shuffle_hash"), Seq("list_id", "b_lo", "b_hi"))
       .filter(col("id_a") =!= col("id_b"))
       .withColumn("cosine",
-        round(dotCol(s, col("emb_a"), col("emb_b")) / (col("nrm_a") * col("nrm_b")), 6))
+        round(dotCol(col("emb_a"), col("emb_b")) / (col("nrm_a") * col("nrm_b")), 6))
       // Spark double comparison: NaN qualifies (NaN > any value) — the
       // twin replays that explicitly for degenerate zero-norm vectors
       .filter(col("cosine") >= SemDedupTau)
@@ -1002,7 +957,7 @@ object Similarity {
   /** Train the IVF quantizer over a dataset's embedding corpus — the
     * train-ONCE entry point for the stored flow. */
   def trainIvf(s: SparkSession, dir: String): Array[(Int, Array[Double], Double)] =
-    trainQuantizer(withNorm(s, Tables.embeddings(s, dir)))
+    trainQuantizer(withNorm(Tables.embeddings(s, dir)))
 
   /** Materialize the inverted file: train the quantizer, assign every
     * corpus vector to its nearest list in ONE scan, and write the corpus
@@ -1027,11 +982,11 @@ object Similarity {
     * dataset (StreamingSpec's vector-ingest spec bootstraps from a
     * half-corpus and grows the index per micro-batch). */
   def writeIvfIndexFrom(s: SparkSession, vectors: DataFrame, path: String): Unit = {
-    val e = withNorm(s, vectors)
+    val e = withNorm(vectors)
     val cents = trainQuantizer(e)
     graft.sources.Stores.overwriteAside(s, path) { tmp =>
       graft.sources.Sinks.overwritePartitioned(
-        e.withColumn("list_id", ivfListId(s, cents)(col("embedding"), col("nrm")))
+        e.withColumn("list_id", ivfListId(cents)(col("embedding"), col("nrm")))
           .withColumn("batch_id", lit(-1L))
           .repartition(col("list_id")),
         tmp, Seq("list_id", "batch_id"))
@@ -1054,8 +1009,8 @@ object Similarity {
     // (no-op while absent — see graft.sources.IdBloom)
     graft.sources.IdBloom.absorb(s, path, newVectors.select("vec_id"))
     graft.sources.Sinks.appendPartitioned(
-      withNorm(s, newVectors)
-        .withColumn("list_id", ivfListId(s, cents)(col("embedding"), col("nrm")))
+      withNorm(newVectors)
+        .withColumn("list_id", ivfListId(cents)(col("embedding"), col("nrm")))
         .withColumn("batch_id", lit(-2L)),
       path, Seq("list_id", "batch_id"))
   }
@@ -1070,8 +1025,8 @@ object Similarity {
     val cents = readCentroids(s, path)
     graft.sources.IdBloom.absorb(s, path, newVectors.select("vec_id"))
     graft.sources.Sinks.overwritePartitionsDynamic(
-      withNorm(s, newVectors)
-        .withColumn("list_id", ivfListId(s, cents)(col("embedding"), col("nrm")))
+      withNorm(newVectors)
+        .withColumn("list_id", ivfListId(cents)(col("embedding"), col("nrm")))
         .withColumn("batch_id", lit(batchId)),
       path, Seq("list_id", "batch_id"))
   }
@@ -1160,8 +1115,8 @@ object Similarity {
     val queries = idxAsOf.filter(pmod(col("vec_id"), lit(100L)) === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"),
-        ivfProbeLists(s, cents)(col("embedding"), col("nrm")).as("bucket"))
-    annTopkFromBuckets(s,
+        ivfProbeLists(cents)(col("embedding"), col("nrm")).as("bucket"))
+    annTopkFromBuckets(
       probeIvfIndexAsOf(s, path, storedProbedLists(queries), asOf = 6L)
         .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
           col("nrm").as("n_nrm"), col("list_id").as("bucket")),
@@ -1229,7 +1184,7 @@ object Similarity {
     graft.sources.Stores.minusTombstones(s, path, "vec_id", s.read.parquet(path))
       .filter(pmod(col("vec_id"), lit(100L)) === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"),
-        ivfProbeLists(s, cents)(col("embedding"), col("nrm")).as("bucket"))
+        ivfProbeLists(cents)(col("embedding"), col("nrm")).as("bucket"))
   }
 
   /** The union of all queries' probed list ids — the ONLY thing the
@@ -1251,7 +1206,7 @@ object Similarity {
     * plan, and the derivation job prunes to the bucket column. */
   private[graft] def qIvfProbeStored(s: SparkSession, path: String): DataFrame = {
     val queries = storedProbeQueries(s, path)
-    annTopkFromBuckets(s,
+    annTopkFromBuckets(
       probeIvfIndex(s, path, storedProbedLists(queries))
         .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
           col("nrm").as("n_nrm"), col("list_id").as("bucket")),
@@ -1338,38 +1293,18 @@ object Similarity {
     cb.map(_.map(c => ddot(c, c)))
 
   /** The trained codebook as ONE nested-array literal — a single plan
-    * node, versus the ~512 per-centroid `lit()` subtrees the tree-form
-    * kernels below would otherwise inline twice per query. */
-  private def pqCbLit(cb: Array[Array[Array[Double]]]): Column =
-    typedlit(cb.map(_.map(_.toSeq).toSeq).toSeq)
+    * node, versus the ~512 per-centroid `lit()` subtrees a builtin
+    * argmax tree would inline twice per query. */
+  private def pqCbLit(cb: Array[Array[Array[Double]]]): Expression =
+    Native.expr(typedlit(cb.map(_.map(_.toSeq).toSeq).toSeq))
 
   /** Per-subspace code assignment, in-plan: argmin squared distance ==
     * argmax of (dot(x_m, c) − ‖c‖²/2) (the ‖x_m‖² term is
-    * code-independent) — ties take the larger code on both faces (the
-    * native kernel's `>=` on ascending codes; the twin's tuple max).
-    * Native [[graft.functions.PqEncode]] when the session has
-    * GraftExtensions (one expression node, tight loop); else the
-    * equivalent builtin argmax tree — correct but plan-heavy. */
-  private def pqCodeCols(s: SparkSession, cb: Array[Array[Array[Double]]])(emb: Column): Column =
-    if (s.catalog.functionExists("graft_pq_encode"))
-      call_function("graft_pq_encode", emb, pqCbLit(cb))
-    else {
-      graft.functions.FallbackWarning.note("graft_pq_encode")
-      pqCodeColsTree(s, cb)(emb)
-    }
-
-  /** The builtin-composition fallback (and the spec's cross-check twin
-    * for the native kernel — SimilaritySpec pins both paths equal). */
-  private[graft] def pqCodeColsTree(s: SparkSession, cb: Array[Array[Array[Double]]])(emb: Column): Column = {
-    val cn2 = pqCn2(cb)
-    array((0 until PqSubspaces).map { m =>
-      val sub = slice(emb, m * PqSubDim + 1, PqSubDim)
-      array_max(array(cb(m).indices.map { k =>
-        struct((dotCol(s, sub, array(cb(m)(k).map(lit): _*)) - lit(cn2(m)(k) / 2)).as("score"),
-          lit(k).as("code"))
-      }: _*)).getField("code")
-    }: _*)
-  }
+    * code-independent) — ties take the larger code (the kernel's `>=`
+    * on ascending codes). The native [[graft.functions.PqEncode]]: one
+    * expression node, tight loop. */
+  private def pqCodeCols(cb: Array[Array[Array[Double]]])(emb: Column): Column =
+    Native.col(PqEncode(Native.expr(emb), pqCbLit(cb)))
 
   /** ‖reconstruction‖ from the codes alone: √(Σ_m ‖c_{m,code_m}‖²) —
     * subspace centroids are orthogonal blocks, so the reconstruction's
@@ -1388,41 +1323,18 @@ object Similarity {
     * join: lut(m)(k) = dot(q_m, c_{m,k}). Scoring a corpus row is then M
     * two-level element_ats + adds — the asymmetric-distance trick that
     * makes a PQ scan cheap. */
-  private def pqLut(s: SparkSession, cb: Array[Array[Array[Double]]])(qEmb: Column): Column =
-    if (s.catalog.functionExists("graft_pq_lut"))
-      call_function("graft_pq_lut", qEmb, pqCbLit(cb))
-    else {
-      graft.functions.FallbackWarning.note("graft_pq_lut")
-      pqLutTree(s, cb)(qEmb)
-    }
+  private def pqLut(cb: Array[Array[Array[Double]]])(qEmb: Column): Column =
+    Native.col(PqLut(Native.expr(qEmb), pqCbLit(cb)))
 
-  /** Builtin-composition fallback / spec cross-check twin of the native
-    * LUT kernel. */
-  private[graft] def pqLutTree(s: SparkSession, cb: Array[Array[Array[Double]]])(qEmb: Column): Column =
-    array((0 until PqSubspaces).map { m =>
-      val sub = slice(qEmb, m * PqSubDim + 1, PqSubDim)
-      array(cb(m).indices.map(k => dotCol(s, sub, array(cb(m)(k).map(lit): _*))): _*)
-    }: _*)
-
-  /** ADC approximate dot: Σ_m lut(m)(code_m), summed in subspace order so
-    * the twin's left fold reproduces it bit-for-bit. The expression-tree
-    * fallback, package-private so SimilaritySpec pins THIS expression
-    * against the native kernel. */
-  private[graft] def pqAdcTree(lut: Column, codes: Column): Column =
-    (0 until PqSubspaces).map(m =>
-      element_at(element_at(lut, m + 1), codes.getItem(m) + 1)).reduce[Column](_ + _)
-
-  /** [[pqAdcTree]] as the native [[graft.functions.PqAdc]] kernel when the
-    * session has GraftExtensions (r22, guide §4 "prefer codegen-friendly
-    * expressions in the hot path"): this expression is the inner loop of
-    * every PQ serve scan — evaluated once per (corpus row × probing
-    * query) pair under the ADC cross/bucket join — and the tree form paid
-    * 16 two-level `element_at` evaluations (bounds checks + null checks +
-    * nested array derefs) per pair where the kernel runs one tight loop.
-    * Same adds in the same subspace order → bit-identical scores. */
-  private def pqAdc(s: SparkSession, lut: Column, codes: Column): Column =
-    if (s.catalog.functionExists("graft_pq_adc")) call_function("graft_pq_adc", lut, codes)
-    else { graft.functions.FallbackWarning.note("graft_pq_adc"); pqAdcTree(lut, codes) }
+  /** ADC approximate dot: Σ_m lut(m)(code_m), summed in subspace order —
+    * the native [[graft.functions.PqAdc]] kernel (r22, guide §4 "prefer
+    * codegen-friendly expressions in the hot path"): this expression is
+    * the inner loop of every PQ serve scan, evaluated once per (corpus
+    * row × probing query) pair under the ADC cross/bucket join, where an
+    * element_at tree would pay 16 two-level lookups (bounds checks + null
+    * checks + nested array derefs) per pair. */
+  private def pqAdc(lut: Column, codes: Column): Column =
+    Native.col(PqAdc(Native.expr(lut), Native.expr(codes)))
 
   /** ANN top-5 via product quantization: the brute-force scan shape of
     * [[qAnnTopkAgg]], but the corpus side the join streams is 16 code
@@ -1453,11 +1365,11 @@ object Similarity {
     * under the lazy-result contract). Join strategies cannot drift: the
     * query/shortlist sides all carry explicit broadcast() hints, so the
     * LogicalRDD's missing size estimate decides nothing. */
-  private def pqSharedNorm(s: SparkSession, vectors: DataFrame): DataFrame =
+  private def pqSharedNorm(vectors: DataFrame): DataFrame =
     // projected to what the PQ faces read (guide §2.3 "project before
     // you materialize"): none of them touches `label`, and a checkpoint
     // is opaque to downstream column pruning
-    withNorm(s, vectors.select("vec_id", "embedding")).localCheckpoint(eager = false)
+    withNorm(vectors.select("vec_id", "embedding")).localCheckpoint(eager = false)
 
   /** The flat PQ ADC scan aggregated to top-`k` per query — ONE body
     * for the served top-5 face ([[qAnnPq]], k=5) and the refinement
@@ -1467,28 +1379,28 @@ object Similarity {
     * 16-byte codes, broadcast query LUTs, partial-aggregate top-k —
     * k before the shuffle. */
   private def pqAdcTop(s: SparkSession, vectors: DataFrame, k: Int): DataFrame = {
-    val e = pqSharedNorm(s, vectors)
-    pqAdcTopOver(s, e, trainPqOnSample(pqSample(e)), k)
+    val e = pqSharedNorm(vectors)
+    pqAdcTopOver(e, trainPqOnSample(pqSample(e)), k)
   }
 
   /** [[pqAdcTop]] over an already-materialized normalized frame and an
     * already-trained codebook — the seam that lets [[qPqRefine]] share
     * one corpus materialization between the ADC shortlist scan and the
     * exact re-rank (and [[pqAdcTop]] share it with the sample collect). */
-  private def pqAdcTopOver(s: SparkSession, e: DataFrame,
+  private def pqAdcTopOver(e: DataFrame,
       cb: Array[Array[Array[Double]]], k: Int): DataFrame = {
     val corpus = e.select(col("vec_id").as("n_id"),
-        pqCodeCols(s, cb)(col("embedding")).as("codes"))
+        pqCodeCols(cb)(col("embedding")).as("codes"))
       .withColumn("recon_nrm", pqReconNorm(cb)(col("codes")))
     val queries = e.filter(pmod(col("vec_id"), lit(100L)) === 0)
       .select(col("vec_id").as("q_id"), col("nrm").as("q_nrm"),
-        pqLut(s, cb)(col("embedding")).as("lut"))
+        pqLut(cb)(col("embedding")).as("lut"))
     corpus.crossJoin(broadcast(queries))
       .filter(col("n_id") =!= col("q_id"))
       .withColumn("cosine",
-        round(pqAdc(s, col("lut"), col("codes")) / (col("q_nrm") * col("recon_nrm")), 6))
+        round(pqAdc(col("lut"), col("codes")) / (col("q_nrm") * col("recon_nrm")), 6))
       .groupBy("q_id")
-      .agg(topkCol(s, col("cosine"), col("n_id"), k).as("top"))
+      .agg(topkCol(col("cosine"), col("n_id"), k).as("top"))
   }
 
   // ---- PQ + exact re-rank (the standard refinement stage) ----------------
@@ -1510,7 +1422,7 @@ object Similarity {
     * scale: a pruned point-read face of the vector store — the bounded
     * "extra reads" of the refine stage), so full-precision vectors are
     * never scanned, only fetched for the shortlist. */
-  private def exactRerank(s: SparkSession, e: DataFrame, shortlist: DataFrame): DataFrame = {
+  private def exactRerank(e: DataFrame, shortlist: DataFrame): DataFrame = {
     val exactQ = e.filter(pmod(col("vec_id"), lit(100L)) === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
     val exactC = e.select(col("vec_id").as("n_id"),
@@ -1518,9 +1430,9 @@ object Similarity {
     explodeRanks(exactC.join(broadcast(shortlist), Seq("n_id"))
       .join(broadcast(exactQ), Seq("q_id"))
       .withColumn("cosine",
-        round(dotCol(s, col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")), 6))
+        round(dotCol(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")), 6))
       .groupBy("q_id")
-      .agg(topkCol(s, col("cosine"), col("n_id"), 5).as("top")))
+      .agg(topkCol(col("cosine"), col("n_id"), 5).as("top")))
   }
 
   /** The PQ tier's REFINEMENT stage (r17 verdict item 6): ADC over the
@@ -1536,9 +1448,9 @@ object Similarity {
     // the ADC shortlist scan, AND both exact re-rank sides — the r21
     // shape re-normalized the corpus separately for each (8 scans in
     // plans/r22/q_pq_refine_before.txt)
-    val e = pqSharedNorm(s, Tables.embeddings(s, dir))
+    val e = pqSharedNorm(Tables.embeddings(s, dir))
     val cb = trainPqOnSample(pqSample(e))
-    exactRerank(s, e, shortlistIds(pqAdcTopOver(s, e, cb, PqRefineR)))
+    exactRerank(e, shortlistIds(pqAdcTopOver(e, cb, PqRefineR)))
   }
 
   // ---- IVF-PQ (the production pairing of the two tiers) ------------------
@@ -1565,13 +1477,13 @@ object Similarity {
     * complete serve path's shortlist ([[qIvfPqRefine]],
     * k=[[PqRefineR]]). */
   private def ivfPqTop(s: SparkSession, vectors: DataFrame, k: Int): DataFrame =
-    ivfPqTopOver(s, pqSharedNorm(s, vectors), k)
+    ivfPqTopOver(pqSharedNorm(vectors), k)
 
   /** [[ivfPqTop]] over an already-materialized normalized frame — the
     * [[pqAdcTopOver]] seam for the composed serve path, so
     * [[qIvfPqRefine]]'s re-rank reads the same stored blocks as its
     * shortlist scan. */
-  private def ivfPqTopOver(s: SparkSession, e: DataFrame, k: Int): DataFrame = {
+  private def ivfPqTopOver(e: DataFrame, k: Int): DataFrame = {
     // ONE seed-sample collect serves BOTH trainers: trainQuantizer and
     // pqSample would otherwise each run a byte-identical corpus-wide
     // top-|sample| sort-limit job selecting the same rows — at 100 TB, a
@@ -1586,21 +1498,21 @@ object Similarity {
     val cb = trainPqOnSample(raw.map { case (v, _) => v.map(_.toDouble).toArray })
     // one scan: coarse list assignment + PQ encoding side by side
     val corpus = e.select(col("vec_id").as("n_id"),
-        ivfListId(s, cents)(col("embedding"), col("nrm")).as("bucket"),
-        pqCodeCols(s, cb)(col("embedding")).as("codes"))
+        ivfListId(cents)(col("embedding"), col("nrm")).as("bucket"),
+        pqCodeCols(cb)(col("embedding")).as("codes"))
       .withColumn("recon_nrm", pqReconNorm(cb)(col("codes")))
     val queries = e.filter(pmod(col("vec_id"), lit(100L)) === 0)
       .select(col("vec_id").as("q_id"), col("nrm").as("q_nrm"),
-        pqLut(s, cb)(col("embedding")).as("lut"),
-        ivfProbeLists(s, cents)(col("embedding"), col("nrm")).as("bucket"))
+        pqLut(cb)(col("embedding")).as("lut"),
+        ivfProbeLists(cents)(col("embedding"), col("nrm")).as("bucket"))
     // a corpus vector lives in exactly one list, so a (query, neighbor)
     // pair can match at most one probed bucket — no dedup needed
     corpus.join(broadcast(queries), "bucket")
       .filter(col("n_id") =!= col("q_id"))
       .withColumn("cosine",
-        round(pqAdc(s, col("lut"), col("codes")) / (col("q_nrm") * col("recon_nrm")), 6))
+        round(pqAdc(col("lut"), col("codes")) / (col("q_nrm") * col("recon_nrm")), 6))
       .groupBy("q_id")
-      .agg(topkCol(s, col("cosine"), col("n_id"), k).as("top"))
+      .agg(topkCol(col("cosine"), col("n_id"), k).as("top"))
   }
 
   /** The COMPLETE production serve path (r18, completing the triple):
@@ -1620,8 +1532,8 @@ object Similarity {
   def qIvfPqRefine(s: SparkSession, dir: String): DataFrame = {
     // one shared corpus materialization across shortlist scan + re-rank
     // (qPqRefine's argument; 8 scans in the committed before-plan)
-    val e = pqSharedNorm(s, Tables.embeddings(s, dir))
-    exactRerank(s, e, shortlistIds(ivfPqTopOver(s, e, PqRefineR)))
+    val e = pqSharedNorm(Tables.embeddings(s, dir))
+    exactRerank(e, shortlistIds(ivfPqTopOver(e, PqRefineR)))
   }
 
   // ---- int8 embedding quantization (storage path for 100 TB ANN) --------
@@ -1707,7 +1619,7 @@ object Similarity {
       // bucket directory — buckets × partitions small files, the
       // object-store listing killer compaction exists to fix
       graft.sources.Sinks.overwritePartitioned(
-        bucketed(s, vectors).withColumn("batch_id", lit(-1L))
+        bucketed(vectors).withColumn("batch_id", lit(-1L))
           .repartition(col("bucket")),
         tmp, Seq("bucket", "batch_id"))
     }
@@ -1715,9 +1627,9 @@ object Similarity {
   /** The index row shape: vector + norm + sign bucket under the index's
     * plane family (bucket stays the FIRST partition level, so probe
     * pruning is unaffected by the batch sub-partitioning). */
-  private def bucketed(s: SparkSession, vectors: DataFrame): DataFrame =
-    withNorm(s, vectors)
-      .withColumn("bucket", lshBucket(s, col("embedding"), 0 until AnnPlanes))
+  private def bucketed(vectors: DataFrame): DataFrame =
+    withNorm(vectors)
+      .withColumn("bucket", lshBucket(col("embedding"), 0 until AnnPlanes))
 
   /** Incrementally grow the index: bucket-assign a batch of new vectors
     * under the SAME plane family the index was written with and append
@@ -1734,7 +1646,7 @@ object Similarity {
     graft.sources.Stores.recover(s, path)
     graft.sources.IdBloom.absorb(s, path, newVectors.select("vec_id"))
     graft.sources.Sinks.appendPartitioned(
-      bucketed(s, newVectors).withColumn("batch_id", lit(-2L)),
+      bucketed(newVectors).withColumn("batch_id", lit(-2L)),
       path, Seq("bucket", "batch_id"))
   }
 
@@ -1750,7 +1662,7 @@ object Similarity {
     graft.sources.Stores.recover(s, path)
     graft.sources.IdBloom.absorb(s, path, newVectors.select("vec_id"))
     graft.sources.Sinks.overwritePartitionsDynamic(
-      bucketed(s, newVectors).withColumn("batch_id", lit(batchId)),
+      bucketed(newVectors).withColumn("batch_id", lit(batchId)),
       path, Seq("bucket", "batch_id"))
   }
 
@@ -1863,7 +1775,7 @@ object Similarity {
     val probed = idxAsOf.filter(pmod(col("vec_id"), lit(100L)) === 0)
       .select("bucket").distinct().collect()
       .flatMap(r => probeBuckets(r.getAs[Number](0).longValue)).distinct.toSeq
-    annTopkFromBuckets(s,
+    annTopkFromBuckets(
       probeAnnIndexAsOf(s, path, probed, asOf = 6L)
         .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
           col("nrm").as("n_nrm"), col("bucket")),

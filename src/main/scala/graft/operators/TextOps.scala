@@ -1,10 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.LongType
 
+import graft.functions.{BigramArray, BpeEncode, DeflateLen, MgFrequentItems, NormTextExpr, TopWordCount}
 import graft.sources.Tables
 
 /** Text-analysis operators for a training-data pipeline over `documents`:
@@ -19,25 +22,12 @@ import graft.sources.Tables
 object TextOps {
 
   /** lowercase, strip non [a-z ], collapse runs of spaces, trim — the
-    * builtin tree, package-private so TextOpsSpec pins it against the
-    * native kernel. */
-  private[graft] def normTextTree(c: Column): Column =
-    trim(regexp_replace(regexp_replace(lower(c), "[^a-z ]", ""), " +", " "))
-
-  /** [[normTextTree]] as the native [[graft.functions.NormTextExpr]]
-    * kernel when the constructing session has GraftExtensions (r22,
-    * guide §4): this is the FIRST projection of every tokenizing corpus
-    * scan in the file, and the tree materializes four intermediate
-    * strings per document with two regex passes. Dispatch keys on the
-    * ACTIVE session (queries are constructed on the thread of the
-    * session that runs them — Verify/Bench/Explain/tests all construct
-    * via `fn(spark, dir)`), which keeps the 20-odd call sites'
-    * one-argument shape; a thread with no active session conservatively
-    * takes the tree form. */
-  private def normText(c: Column): Column =
-    if (SparkSession.getActiveSession.exists(_.catalog.functionExists("graft_norm_text")))
-      call_function("graft_norm_text", c)
-    else normTextTree(c)
+    * native [[graft.functions.NormTextExpr]] kernel (r22, guide §4).
+    * This is the FIRST projection of every tokenizing corpus scan in
+    * TextOps, Dedup and Search — one definition for all three, pinned
+    * against the builtin regexp_replace tree by TextOpsSpec. */
+  private[graft] def normText(c: Column): Column =
+    Native.col(NormTextExpr(Native.expr(c)))
 
   /** Whitespace word count. */
   private def wordCount(c: Column): Column =
@@ -330,22 +320,16 @@ object TextOps {
   /** The flat BPE token array of a words column — the native
     * `graft_bpe` expression with the merge table riding as a literal
     * (per-row merge loop where the document lives; no shuffle, no
-    * driver loop) when the session has GraftExtensions, else a UDF over
-    * the same shared encoder (TextOpsSpec proves the two faces equal). */
-  private[graft] def bpeTokensCol(s: SparkSession, words: Column,
+    * driver loop). TextOpsSpec proves it equal to a UDF over the shared
+    * encoder. */
+  private[graft] def bpeTokensCol(words: Column,
       merges: IndexedSeq[(String, String)]): Column =
-    if (s.catalog.functionExists("graft_bpe"))
-      // typedLit, not array(array(..)): it ships the table as ONE literal
-      // and keeps the array<array<string>> type when the trained table is
-      // EMPTY (array() of zero elements types as array<null>, which the
-      // expression's type check rightly rejects).
-      call_function("graft_bpe", words,
-        typedLit(merges.map { case (l, r) => Seq(l, r) }))
-    else {
-      graft.functions.FallbackWarning.note("graft_bpe")
-      val table = new graft.functions.Bpe.MergeTable(merges)
-      udf((ws: Seq[String]) => graft.functions.Bpe.encodeWords(ws, table)).apply(words)
-    }
+    // typedLit, not array(array(..)): it ships the table as ONE literal
+    // and keeps the array<array<string>> type when the trained table is
+    // EMPTY (array() of zero elements types as array<null>, which the
+    // expression's type check rightly rejects).
+    Native.col(BpeEncode(Native.expr(words),
+      Native.expr(typedLit(merges.map { case (l, r) => Seq(l, r) }))))
 
   /** Per-document REAL subword token counts: train the corpus' merge
     * table ([[bpeMergesOf]]), encode every document where it lives, and
@@ -472,7 +456,7 @@ object TextOps {
     * identical output by construction (same encoder, same merge table). */
   private[graft] def tokenBpeStoredOf(s: SparkSession, docs: DataFrame,
       modelPath: String): DataFrame =
-    tokenBpeWith(s, docs, loadBpeModel(s, modelPath))
+    tokenBpeWith(docs, loadBpeModel(s, modelPath))
 
   /** Tmp-scoped model path per dataset ([[graft.sources.TmpStores]]). */
   private def modelPath(kind: String, dir: String): String =
@@ -506,15 +490,15 @@ object TextOps {
       writeBpeModel(s, docs.filter(!late), path)
       appendBpeVersion(s, docs, path, version = 1L)
     }
-    tokenBpeWith(s, docs, loadBpeModelAt(s, path, 0L))
+    tokenBpeWith(docs, loadBpeModelAt(s, path, 0L))
   }
 
   /** [[qTokenBpe]] over an arbitrary (doc_id, text) frame — the seam
     * TextOpsSpec drives constructed corpora through. */
   private[graft] def tokenBpeOf(s: SparkSession, docs: DataFrame): DataFrame =
-    tokenBpeWith(s, docs, bpeMergesOf(docs))
+    tokenBpeWith(docs, bpeMergesOf(docs))
 
-  private def tokenBpeWith(s: SparkSession, docs: DataFrame,
+  private def tokenBpeWith(docs: DataFrame,
       merges: IndexedSeq[(String, String)]): DataFrame = {
     docs
       .select(col("doc_id"),
@@ -522,7 +506,7 @@ object TextOps {
       .select(col("doc_id"),
         size(col("words")).cast(LongType).as("n_words"),
         length(array_join(col("words"), "")).cast(LongType).as("n_chars"),
-        bpeTokensCol(s, col("words"), merges).as("toks"))
+        bpeTokensCol(col("words"), merges).as("toks"))
       .select(col("doc_id"), col("n_words"), col("n_chars"),
         size(col("toks")).cast(LongType).as("n_bpe_tokens"),
         when(size(col("toks")) > 0,
@@ -854,18 +838,11 @@ object TextOps {
     * cheapest possible distribution shape for a per-document rule set.
     */
   private[graft] def repetitionStats(docs: DataFrame, ordered: Boolean = true): DataFrame = {
-    val s = docs.sparkSession
-    val topCnt =
-      if (s.catalog.functionExists("graft_topcount"))
-        call_function("graft_topcount", col("words"))
-      else {
-        graft.functions.FallbackWarning.note("graft_topcount")
-        udf((w: Seq[String]) => graft.functions.DocHashes.topCountSeq(w)).apply(col("words"))
-      }
+    val topCnt = Native.col(TopWordCount(Native.expr(col("words"))))
     val base = docs
       .select(col("doc_id"), col("text"), split(normText(col("text")), " ").as("words"))
       .filter(size(col("words")) >= 2)
-    val bigrams = bigramsOfWords(s)
+    val bigrams = bigramsOfWords
     val lines = split(col("text"), "\n")
     val rowStats = base.select(col("doc_id"),
       size(col("words")).cast(LongType).as("n_words"),
@@ -934,22 +911,14 @@ object TextOps {
   /** THE bigram projection over a `words` array column — one definition
     * for the Gopher repetition stats and the bigram LM (the lmGrams
     * "can never tokenize differently" contract applied to the gram
-    * construction itself). The builtin tree, package-private so
-    * TextOpsSpec pins it against the native kernel. */
-  private[graft] def bigramsOfWordsTree: Column =
-    expr("transform(sequence(1, size(words) - 1), i -> concat(words[i-1], ' ', words[i]))")
-
-  /** [[bigramsOfWordsTree]] as the native [[graft.functions.BigramArray]]
-    * kernel when the session has GraftExtensions (r22, guide §4): the
-    * bigram construction fronts every LM/DSIR gram explode — the
-    * corpus-scale projection of the whole text-model family — and the
-    * tree pays a sequence alloc plus lambda dispatch and two GetArrayItem
-    * evaluations per gram where the kernel runs one loop. Same strings,
-    * same concat null-propagation. */
-  private def bigramsOfWords(s: SparkSession): Column =
-    if (s.catalog.functionExists("graft_bigrams"))
-      call_function("graft_bigrams", col("words"))
-    else { graft.functions.FallbackWarning.note("graft_bigrams"); bigramsOfWordsTree }
+    * construction itself). The native [[graft.functions.BigramArray]]
+    * kernel (r22, guide §4): the bigram construction fronts every
+    * LM/DSIR gram explode — the corpus-scale projection of the whole
+    * text-model family. TextOpsSpec pins it against the builtin
+    * transform(sequence(...)) tree: same strings, same concat
+    * null-propagation. */
+  private def bigramsOfWords: Column =
+    Native.col(BigramArray(Native.expr(col("words"))))
 
   /** Explicit store schemas for the model-plane counts reads: a corpus
     * that never produced a count row (every doc < 2 words for the LM,
@@ -964,7 +933,7 @@ object TextOps {
   private def lmGrams(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), split(normText(col("text")), " ").as("words"))
       .filter(size(col("words")) >= 2)
-      .select(col("doc_id"), explode(bigramsOfWords(docs.sparkSession)).as("bg"))
+      .select(col("doc_id"), explode(bigramsOfWords).as("bg"))
       .withColumn("w1", substring_index(col("bg"), " ", 1))
 
   /** The 1-row vocabulary-size frame of a corpus (add-one smoothing's
@@ -2521,23 +2490,18 @@ object TextOps {
   private[graft] val HhPctDenom = 100L
 
   def qHeavyHitters(s: SparkSession, dir: String): DataFrame =
-    heavyHittersOf(s, Tables.documents(s, dir))
+    heavyHittersOf(Tables.documents(s, dir))
 
-  private[graft] def heavyHittersOf(s: SparkSession, docs: DataFrame): DataFrame = {
+  private[graft] def heavyHittersOf(docs: DataFrame): DataFrame = {
     val words = docs
       .filter(col("lang").isNotNull)
       .select(col("lang"), explode(split(normText(col("text")), " ")).as("word"))
       .filter(col("word") =!= "")
     val totals = words.groupBy("lang").agg(count(lit(1)).as("n_lang"))
-    val cands =
-      if (s.catalog.functionExists("graft_mg"))
-        words.groupBy("lang")
-          .agg(call_function("graft_mg", col("word"), lit(HhCapacity)).as("sk"))
-          .select(col("lang"), explode(col("sk.word")).as("word"))
-      else { // extension absent: every distinct term is a candidate (exact, unbounded)
-        graft.functions.FallbackWarning.note("graft_mg")
-        words.select("lang", "word").distinct()
-      }
+    val cands = words.groupBy("lang")
+      .agg(Native.col(MgFrequentItems(Native.expr(col("word")), Literal(HhCapacity))
+        .toAggregateExpression()).as("sk"))
+      .select(col("lang"), explode(col("sk.word")).as("word"))
     words.join(broadcast(cands), Seq("lang", "word"))
       .groupBy("lang", "word").agg(count(lit(1)).as("cnt"))
       .join(broadcast(totals), "lang")
@@ -2565,24 +2529,17 @@ object TextOps {
   private[graft] val CompressRatioMin = 0.30
   private[graft] val CompressRatioMax = 0.75
 
-  private def deflateLenCol(s: SparkSession, c: Column): Column =
-    if (s.catalog.functionExists("graft_deflate_len"))
-      call_function("graft_deflate_len", c)
-    else {
-      graft.functions.FallbackWarning.note("graft_deflate_len")
-      udf((t: String) =>
-        graft.functions.Zlib.deflateLen(t.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-        .apply(c)
-    }
+  private def deflateLenCol(c: Column): Column =
+    Native.col(DeflateLen(Native.expr(c)))
 
   def qCompressRatio(s: SparkSession, dir: String): DataFrame =
-    compressRatioOf(s, Tables.documents(s, dir))
+    compressRatioOf(Tables.documents(s, dir))
 
-  private[graft] def compressRatioOf(s: SparkSession, docs: DataFrame): DataFrame =
+  private[graft] def compressRatioOf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"),
         octet_length(col("text")).cast("long").as("n_bytes"),
-        deflateLenCol(s, col("text")).as("deflate_len"))
+        deflateLenCol(col("text")).as("deflate_len"))
       // guard the ANSI division: an empty doc has no ratio and is junk
       .withColumn("compress_ratio",
         when(col("n_bytes") > 0,
@@ -2613,7 +2570,7 @@ object TextOps {
       .filter(col("lang").isNotNull)
       .select(col("lang"), col("doc_id"), pri.as("pri"))
       .groupBy("lang")
-      .agg(Similarity.topkCol(s, col("pri"), col("doc_id"), SamplePerGroupK).as("top"))
+      .agg(Similarity.topkCol(col("pri"), col("doc_id"), SamplePerGroupK).as("top"))
       .select(col("lang"), explode(col("top.neighbor_id")).as("doc_id"))
       .orderBy("lang", "doc_id")
   }

@@ -1,30 +1,30 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Native
+
+import graft.functions.{BloomAgg, BloomMightContain}
 
 /** ONE implementation of the stores' Bloom-filter sidecar protocol —
   * the machinery the bucket pre-gate (`_bloom.bin`,
   * [[graft.operators.Dedup]]) and the id-membership ingest guard
   * (`_idbloom.bin`, [[IdBloom]]) share: build from a key column
-  * (native `graft_bloom` partial aggregate when the extensions are
-  * installed — map tasks carry bit arrays, never the key stream — else
-  * the same filter folded per partition and OR-merged on the driver,
-  * identical bits either way since OR is associative), atomic
+  * (the native `graft_bloom` partial aggregate — map tasks carry bit
+  * arrays, never the key stream), atomic
   * write-aside-and-rename replace with LOUD delete/rename failures
   * (Hadoop FS reports them by returning false; an unchecked failure
   * leaves a STALE sidecar missing newly absorbed keys, silently
   * breaking the no-false-negative soundness both probes rest on),
   * lazy [[ensureFrom]] backfill, superset-before-append [[absorb]],
-  * and the map-side [[mightContain]] probe (native expression with the
-  * filter riding as a literal, else a null-safe UDF over the same
-  * [[graft.functions.GBloom]] bits).
+  * and the map-side [[mightContain]] probe (the native expression with
+  * the filter riding as a literal).
   *
   * Keys are STRINGS: each caller owns its canonical key encoding
   * (the dedup gate's bucket strings, the ingest guard's decimal id
   * strings) and passes a one-string-column frame / a string-typed
-  * Column, so the filter bits are layout-independent and the native
-  * and fallback paths agree byte-for-byte.
+  * Column, so the filter bits are layout-independent.
   */
 final class BloomSidecar(sidecarName: String, val bits: Int, val hashes: Int) {
 
@@ -60,23 +60,10 @@ final class BloomSidecar(sidecarName: String, val bits: Int, val hashes: Int) {
   }
 
   /** Build the filter of a one-string-column key frame. */
-  def buildOf(s: SparkSession, keys: DataFrame): Array[Byte] = {
-    val k = keys.select(col(keys.columns.head).cast("string").as("k"))
-    if (s.catalog.functionExists("graft_bloom"))
-      k.agg(call_function("graft_bloom", col("k"), lit(bits), lit(hashes)).as("f"))
-        .head().getAs[Array[Byte]]("f")
-    else {
-      graft.functions.FallbackWarning.note("graft_bloom")
-      k.rdd.mapPartitions { it =>
-        val b = new Array[Long](bits / 64)
-        it.foreach(r => if (!r.isNullAt(0))
-          graft.functions.GBloom.add(b, hashes,
-            r.getString(0).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-        Iterator.single(graft.functions.GBloom.encode(b, hashes))
-      }.fold(graft.functions.GBloom.encode(new Array[Long](bits / 64), hashes))(
-        graft.functions.GBloom.union)
-    }
-  }
+  def buildOf(keys: DataFrame): Array[Byte] =
+    keys.agg(Native.col(BloomAgg(Native.expr(col(keys.columns.head).cast("string")),
+        Literal(bits), Literal(hashes)).toAggregateExpression()).as("f"))
+      .head().getAs[Array[Byte]]("f")
 
   /** Union a batch's keys into the sidecar BEFORE its rows land — no-op
     * while the sidecar is absent (only [[ensureFrom]] creates it, and
@@ -86,7 +73,7 @@ final class BloomSidecar(sidecarName: String, val bits: Int, val hashes: Int) {
     * serializes callers. */
   def absorb(s: SparkSession, store: String, keys: DataFrame): Unit =
     read(s, store).foreach { cur =>
-      write(s, store, graft.functions.GBloom.union(cur, buildOf(s, keys)))
+      write(s, store, graft.functions.GBloom.union(cur, buildOf(keys)))
     }
 
   /** The store's filter, built from `keys` (one column-pruned store
@@ -117,7 +104,7 @@ final class BloomSidecar(sidecarName: String, val bits: Int, val hashes: Int) {
       // silent-degradation mode this file's header forbids.
       StoreLock.withLockIfAvailable(store, s"$sidecarName-backfill") {
         read(s, store).getOrElse {
-          val bytes = buildOf(s, keys)
+          val bytes = buildOf(keys)
           write(s, store, bytes)
           bytes
         }
@@ -125,20 +112,13 @@ final class BloomSidecar(sidecarName: String, val bits: Int, val hashes: Int) {
         System.err.println(s"[bloom-sidecar] backfill of ${path(store)} could not " +
           "claim the store (writer contention or an unbound remote store); " +
           "built for this use only, not persisted")
-        buildOf(s, keys)
+        buildOf(keys)
       }
     }
 
   /** Map-side membership probe of a string-typed key column against an
-    * encoded filter. Null-safe either way (null in, null out) so
-    * callers can route null probes to their conservative branch. */
-  def mightContain(s: SparkSession, key: Column, bytes: Array[Byte]): Column =
-    if (s.catalog.functionExists("graft_bloom_contains"))
-      call_function("graft_bloom_contains", key, lit(bytes))
-    else {
-      graft.functions.FallbackWarning.note("graft_bloom_contains")
-      val (k, b) = graft.functions.GBloom.decode(bytes)
-      udf((v: String) => Option(v).map(x => graft.functions.GBloom.contains(b, k,
-        x.getBytes(java.nio.charset.StandardCharsets.UTF_8)))).apply(key)
-    }
+    * encoded filter. Null-safe (null in, null out) so callers can route
+    * null probes to their conservative branch. */
+  def mightContain(key: Column, bytes: Array[Byte]): Column =
+    Native.col(BloomMightContain(Native.expr(key), Literal(bytes)))
 }

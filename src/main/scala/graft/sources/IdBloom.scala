@@ -73,7 +73,7 @@ object IdBloom {
       s.read.parquet(store).select(keyCol(col(idCol)).as("k")))
 
   /** Map-side membership probe of an id column against an encoded
-    * filter (the native expression when installed, a UDF otherwise). */
-  def mightContain(s: SparkSession, id: Column, bytes: Array[Byte]): Column =
-    sidecar.mightContain(s, keyCol(id), bytes)
+    * filter. */
+  def mightContain(id: Column, bytes: Array[Byte]): Column =
+    sidecar.mightContain(keyCol(id), bytes)
 }

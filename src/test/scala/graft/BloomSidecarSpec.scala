@@ -79,7 +79,7 @@ class BloomSidecarSpec extends AnyFunSuite {
     // nulls (whichever of the native expression / UDF paths is active)
     val probes = keysDf(a.take(3) ++ b.take(3) ++ Seq("novel-1", "novel-2"))
       .union(keysDf(Seq("x")).select(lit(null).cast("string").as("k")))
-    val got = probes.select(col("k"), sc.mightContain(s, col("k"), bytes1).as("m"))
+    val got = probes.select(col("k"), sc.mightContain(col("k"), bytes1).as("m"))
       .collect().map(r => (Option(r.getString(0)), if (r.isNullAt(1)) None else Some(r.getBoolean(1))))
     got.foreach {
       case (None, m) => assert(m.isEmpty, "null key must probe null, not a verdict")
@@ -109,8 +109,8 @@ class BloomSidecarSpec extends AnyFunSuite {
   test("bits are partitioning-invariant: 1-partition and 8-partition builds agree byte for byte") {
     val sc = new BloomSidecar("_t3.bin", 1 << 12, 5)
     val ks = (0 until 1000).map(i => s"part-$i")
-    val one = sc.buildOf(s, keysDf(ks).coalesce(1))
-    val eight = sc.buildOf(s, keysDf(ks).repartition(8))
+    val one = sc.buildOf(keysDf(ks).coalesce(1))
+    val eight = sc.buildOf(keysDf(ks).repartition(8))
     assert(one.toSeq == eight.toSeq,
       "OR-merge associativity is what lets the build distribute")
   }

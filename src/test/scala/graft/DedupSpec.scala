@@ -103,12 +103,12 @@ class DedupSpec extends AnyFunSuite {
     val all = corpus.unionByName(adversarial)
     val d3 = all.select(
         call_function("graft_gramset", col("words"), lit(3)).as("n"),
-        Dedup.gramSetTree.as("t"))
+        TreeForms.gramSetTree.as("t"))
       .filter(not(col("n") <=> col("t"))).count()
     assert(d3 === 0, "3-gram kernel must equal the concat_ws tree exactly")
     val d8 = all.select(col("words").as("w")).select(
         call_function("graft_gramset", col("w"), lit(8)).as("n"),
-        Dedup.decontamGramSetTree.as("t"))
+        TreeForms.decontamGramSetTree.as("t"))
       .filter(not(col("n") <=> col("t"))).count()
     assert(d8 === 0, "8-gram kernel must equal the array_join/slice tree exactly")
   }
@@ -647,7 +647,7 @@ class DedupSpec extends AnyFunSuite {
     import graft.functions.GBloom
     assert(spark.catalog.functionExists("graft_bloom"))
     val buckets = (0 until 1000).map(i => s"bk-$i").toDF("bucket")
-    val native = Dedup.bloomOfBuckets(spark, buckets)
+    val native = Dedup.bloomOfBuckets(buckets)
     val bits = new Array[Long](Dedup.BloomBits / 64)
     (0 until 1000).foreach(i => GBloom.add(bits, Dedup.BloomHashes,
       s"bk-$i".getBytes(java.nio.charset.StandardCharsets.UTF_8)))

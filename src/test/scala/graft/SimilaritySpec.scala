@@ -199,7 +199,7 @@ class SimilaritySpec extends AnyFunSuite {
     val agg = collect(Similarity.qAnnTopkAgg(spark, dir))
     assert(agg.nonEmpty)
     assert(agg === exact, "aggregate and window top-k must be bit-identical")
-    // the collect+sort fallback implements the same total order,
+    // the collect+sort reference form implements the same total order,
     // including ties (duplicate scores), the id tie-break, and the
     // null contract (a null score never ranks on either face)
     val rows = Seq(
@@ -212,9 +212,8 @@ class SimilaritySpec extends AnyFunSuite {
         (r.getLong(0), r.getSeq[org.apache.spark.sql.Row](1)
           .map(x => (x.getLong(0), x.getDouble(1))))
       }.toSeq
-    val native = top(Similarity.topkCol(spark, col("score"), col("id"), 3))
-    // mirrors topkCol's fallback branch verbatim (the session has the
-    // extension, so topkCol itself would take the native path here)
+    val native = top(Similarity.topkCol(col("score"), col("id"), 3))
+    // the collect+sort reference form of the native heap
     val fallback = top(
       transform(
         slice(array_sort(collect_list(
@@ -239,9 +238,9 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("native graft_dot equals the interpreted HOF fallback bit-for-bit") {
-    // Both paths must fold sequentially in double — the property that
-    // makes float results comparable across the native/fallback split
-    // and against the DuckDB oracle.
+    // Both forms must fold sequentially in double — the property that
+    // makes float results comparable against the builtin tree form and
+    // the DuckDB oracle.
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(11)
@@ -250,7 +249,7 @@ class SimilaritySpec extends AnyFunSuite {
       Seq.fill(64)((rnd.nextDouble() - 0.5).toFloat)))
     val df = rows.toDF("a", "b")
     val diffs = df.select(call_function("graft_dot", col("a"), col("b")).as("native"),
-        Similarity.interpretedDot(col("a"), col("b")).as("interp"))
+        TreeForms.interpretedDot(col("a"), col("b")).as("interp"))
       .filter(col("native") =!= col("interp")).count()
     assert(diffs === 0, "native and interpreted dot products must be identical")
   }
@@ -280,9 +279,9 @@ class SimilaritySpec extends AnyFunSuite {
     val cbLit = typedlit(cb.map(_.map(_.toSeq).toSeq).toSeq)
     val diffs = e.select(
         call_function("graft_pq_encode", col("embedding"), cbLit).as("nc"),
-        Similarity.pqCodeColsTree(spark, cb)(col("embedding")).as("tc"),
+        TreeForms.pqCodeColsTree(cb)(col("embedding")).as("tc"),
         call_function("graft_pq_lut", col("embedding"), cbLit).as("nl"),
-        Similarity.pqLutTree(spark, cb)(col("embedding")).as("tl"))
+        TreeForms.pqLutTree(cb)(col("embedding")).as("tl"))
       .filter(col("nc") =!= col("tc") || col("nl") =!= col("tl")).count()
     assert(diffs === 0, "native and tree-form PQ kernels must be identical")
   }
@@ -293,7 +292,7 @@ class SimilaritySpec extends AnyFunSuite {
     // the kernel exists for per-pair cost, NOT different arithmetic:
     // the same 16 doubles must add in the same subspace order, so every
     // score (and therefore every rounded cosine and top-k set) is
-    // bit-identical with and without the extension.
+    // bit-identical to the tree form's.
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val e = Tables.embeddings(spark, dir)
@@ -307,7 +306,7 @@ class SimilaritySpec extends AnyFunSuite {
       call_function("graft_pq_encode", col("embedding"), cbLit).as("codes"))
     val diffs = luts.crossJoin(codes)
       .select(call_function("graft_pq_adc", col("lut"), col("codes")).as("native"),
-        Similarity.pqAdcTree(col("lut"), col("codes")).as("tree"))
+        TreeForms.pqAdcTree(col("lut"), col("codes")).as("tree"))
       .filter(col("native") =!= col("tree")).count()
     assert(diffs === 0, "native and tree-form ADC sums must be identical")
   }
@@ -327,7 +326,7 @@ class SimilaritySpec extends AnyFunSuite {
       .toDF("embedding")
     val rows = bad.select(
         call_function("graft_pq_encode", col("embedding"), cbLit).as("nc"),
-        Similarity.pqCodeColsTree(spark, cb)(col("embedding")).as("tc"))
+        TreeForms.pqCodeColsTree(cb)(col("embedding")).as("tc"))
       .collect()
     rows.foreach { r =>
       assert(r.getSeq[Int](0) === r.getSeq[Int](1),
@@ -360,7 +359,7 @@ class SimilaritySpec extends AnyFunSuite {
     val packed = typedlit(cents.map { case (i, c, cn) => (i, c.toSeq, cn) }.toSeq)
     val diffs = withN.select(
         call_function("graft_ivf_scores", col("embedding"), col("nrm"), packed).as("n"),
-        Similarity.ivfScoresTree(spark, cents)(col("embedding"), col("nrm")).as("t"))
+        TreeForms.ivfScoresTree(cents)(col("embedding"), col("nrm")).as("t"))
       .filter(col("n") =!= col("t")).count()
     assert(diffs === 0, "native and tree-form IVF scores must be identical")
     // zero-norm vector: builtin-Divide parity. ANSI → BOTH forms throw
@@ -369,7 +368,7 @@ class SimilaritySpec extends AnyFunSuite {
       .withColumn("nrm", lit(0.0))
     Seq(
       zero.select(call_function("graft_ivf_scores", col("embedding"), col("nrm"), packed)),
-      zero.select(Similarity.ivfScoresTree(spark, cents)(col("embedding"), col("nrm")))
+      zero.select(TreeForms.ivfScoresTree(cents)(col("embedding"), col("nrm")))
     ).foreach { df =>
       val e = intercept[Throwable](df.collect())
       val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(5).toSeq
@@ -389,7 +388,7 @@ class SimilaritySpec extends AnyFunSuite {
       Seq(Tuple1(Array.fill(64)(0.0f))).toDF("embedding").withColumn("nrm", lit(0.0)) }
     val pair = zero2.select(
         call_function("graft_ivf_scores", col("embedding"), col("nrm"), packed).as("n"),
-        Similarity.ivfScoresTree(s2, cents)(col("embedding"), col("nrm")).as("t"))
+        TreeForms.ivfScoresTree(cents)(col("embedding"), col("nrm")).as("t"))
       .collect().head
     assert(pair.getSeq[org.apache.spark.sql.Row](0) === pair.getSeq[org.apache.spark.sql.Row](1),
       "non-ANSI zero-divisor must yield identical null-scored structs on both forms")
@@ -548,7 +547,7 @@ class SimilaritySpec extends AnyFunSuite {
     val base = (0 until 24).map(i => (i.toLong, unitVec(i)))
     val copies = Seq(100L -> unitVec(0), 101L -> unitVec(0), 102L -> unitVec(0),
       200L -> unitVec(1), 201L -> unitVec(1))
-    val out = Similarity.qDedupSemanticFrom(spark, (base ++ copies).toDF("vec_id", "embedding"))
+    val out = Similarity.qDedupSemanticFrom((base ++ copies).toDF("vec_id", "embedding"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSeq
     // every non-minimal member of a copy group drops; its keeper is the
     // group minimum (all qualifying cosines tie at exactly 1.0, so the
@@ -755,42 +754,6 @@ class SimilaritySpec extends AnyFunSuite {
       uniformCosts(n), 0.9) === "lsh")
     intercept[IllegalArgumentException] {
       Similarity.chooseAnnTier(measured, costs, 1.5)
-    }
-  }
-
-  test("extension-less fallback warns LOUDLY exactly once per JVM, naming the kernel and the tax") {
-    // an isolated session whose registry lacks the native kernel — the
-    // forgot-GraftExtensions deployment, scoped to this test
-    val s2 = spark.newSession()
-    s2.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"))
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    val prev = graft.functions.FallbackWarning.sink
-    graft.functions.FallbackWarning.resetForSpec()
-    graft.functions.FallbackWarning.sink = m => buf.synchronized { buf += m }
-    import org.apache.spark.sql.functions.lit
-    try {
-      assert(!graft.functions.FallbackWarning.hasFired)
-      Similarity.dotCol(s2, lit(null), lit(null)) // first fallback: warns
-      Similarity.dotCol(s2, lit(null), lit(null)) // second: silent
-      graft.functions.FallbackWarning.note("graft_topk") // other kernels: silent too
-      assert(graft.functions.FallbackWarning.hasFired)
-      assert(buf.size === 1,
-        s"the warning must fire exactly once per JVM, got ${buf.size}: $buf")
-      assert(buf.head.contains("graft_dot") && buf.head.contains("GraftExtensions")
-        && buf.head.contains("+79%"),
-        s"the warning must name the kernel, the fix, and the measured tax: ${buf.head}")
-      // the extension-equipped session still dispatches natively: no warn
-      graft.functions.FallbackWarning.resetForSpec()
-      Similarity.dotCol(spark, lit(null), lit(null))
-      assert(!graft.functions.FallbackWarning.hasFired,
-        "a session WITH the extension must never warn")
-    } finally {
-      // leave the flag FIRED (absorbed by the buffer, not stderr) for
-      // the rest of the suite run: other specs construct fallback twins
-      // deliberately and must stay silent
-      graft.functions.FallbackWarning.note("graft_dot")
-      graft.functions.FallbackWarning.sink = prev
     }
   }
 

@@ -142,21 +142,21 @@ class SkewJoinSpec extends AnyFunSuite {
     val premium = Tables.customer(s, TestSpark.sfDir)
       .filter(col("c_acctbal") > 9000).select("c_custkey")
     val plain = orders.join(premium, col("o_custkey") === col("c_custkey"), "left_semi")
-    val viaBloom = BloomJoin.bloomSemiJoin(s, orders, premium, "o_custkey", "c_custkey")
+    val viaBloom = BloomJoin.bloomSemiJoin(orders, premium, "o_custkey", "c_custkey")
     // exactness: the Bloom pre-filter must be answer-invisible
     assert(viaBloom.exceptAll(plain).count() === 0)
     assert(plain.exceptAll(viaBloom).count() === 0)
     // the pre-filter predicate sits on the fact side BEFORE the join (the
-    // whole point: only candidates reach the exchange) — with the
-    // extension registered it shows as the native expression
+    // whole point: only candidates reach the exchange) as the native
+    // expression
     val p = viaBloom.queryExecution.executedPlan.toString
-    assert(p.contains("graft_bloom_contains") || p.contains("UDF"),
+    assert(p.contains("graft_bloom_contains"),
       s"the bloom predicate must appear in the physical plan:\n$p")
     // ...and it genuinely shrinks the fact stream: the premium-customer
     // selectivity is far below 1, so candidates << orders
-    val candidates = orders.filter(graft.operators.Dedup.bloomContainsCol(s,
+    val candidates = orders.filter(graft.operators.Dedup.bloomContainsCol(
       col("o_custkey").cast("string"),
-      graft.operators.Dedup.bloomOfBuckets(s,
+      graft.operators.Dedup.bloomOfBuckets(
         premium.select(col("c_custkey").cast("string").as("bucket"))))).count()
     assert(candidates < orders.count() / 2,
       s"pre-filter kept $candidates of ${orders.count()} fact rows — no shuffle reduction")
@@ -171,16 +171,16 @@ class SkewJoinSpec extends AnyFunSuite {
     val fact = Seq((1L, "x"), (2L, "y"), (5L, "z")).toDF("k", "payload")
     // same key name on both sides (the stored-index round-trip case) plus
     // a null dim key: must resolve unambiguously, drop the null, and
-    // match the plain join — on BOTH the native and fallback bloom paths
+    // match the plain join
     val dimSame = Seq(Option(1L), Option(5L), Option.empty[Long]).toDF("k")
-    val got = BloomJoin.bloomSemiJoin(s, fact, dimSame, "k", "k")
+    val got = BloomJoin.bloomSemiJoin(fact, dimSame, "k", "k")
       .select("k").collect().map(_.getLong(0)).sorted.toSeq
     assert(got === Seq(1L, 5L))
     // a coercible-but-different key type would false-negative in the
     // string-form filter (5 vs 5.0) — refused loudly instead
     val dimDouble = Seq(1.0, 5.0).toDF("kd")
     val e = intercept[IllegalArgumentException](
-      BloomJoin.bloomSemiJoin(s, fact, dimDouble, "k", "kd"))
+      BloomJoin.bloomSemiJoin(fact, dimDouble, "k", "kd"))
     assert(e.getMessage.contains("identical types"))
   }
 }

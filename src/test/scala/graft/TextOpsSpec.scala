@@ -100,7 +100,7 @@ class TextOpsSpec extends AnyFunSuite {
     val table = new Bpe.MergeTable(merges)
     val viaUdf = udf((ws: Seq[String]) => Bpe.encodeWords(ws, table))
     val native = base.select(col("doc_id"),
-        TextOps.bpeTokensCol(spark, col("words"), merges).as("toks"))
+        TextOps.bpeTokensCol(col("words"), merges).as("toks"))
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getSeq[String](1)))
     assert(spark.catalog.functionExists("graft_bpe"),
       "the test session must exercise the NATIVE face")
@@ -440,7 +440,7 @@ class TextOpsSpec extends AnyFunSuite {
       .unionByName(adversarial)
     val diffs = all.select(
         call_function("graft_norm_text", col("text")).as("n"),
-        graft.operators.TextOps.normTextTree(col("text")).as("t"))
+        TreeForms.normTextTree(col("text")).as("t"))
       .filter(not(col("n") <=> col("t"))).count()
     assert(diffs === 0, "native and regex-tree normText must be identical")
   }
@@ -461,7 +461,7 @@ class TextOpsSpec extends AnyFunSuite {
       Seq[String]("left", null, "right", null, null)).toDF("words")
     val diffs = corpus.unionByName(adversarial).select(
         call_function("graft_bigrams", col("words")).as("n"),
-        graft.operators.TextOps.bigramsOfWordsTree.as("t"))
+        TreeForms.bigramsOfWordsTree.as("t"))
       .filter(not(col("n") <=> col("t"))).count()
     assert(diffs === 0, "native and tree bigram arrays must be identical")
   }
@@ -641,7 +641,7 @@ class TextOpsSpec extends AnyFunSuite {
       val suffix = s"${('a' + i / 26).toChar}${('a' + i % 26).toChar}"
       (i.toLong, s"pad filler$suffix", "en")
     } :+ (999L, "unico dos", "es")).toDF("doc_id", "text", "lang")
-    val got = graft.operators.TextOps.heavyHittersOf(spark, docs).collect()
+    val got = graft.operators.TextOps.heavyHittersOf(docs).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     assert(got.toSeq === Seq(("en", "pad", 150L), ("es", "dos", 1L), ("es", "unico", 1L)))
 
@@ -709,7 +709,7 @@ class TextOpsSpec extends AnyFunSuite {
         "wanders far away to sleep under an old oak tree until dawn " +
         "breaks and the farm slowly wakes to another quiet morning") * 2,
       4L -> "").toDF("doc_id", "text")
-    val got = graft.operators.TextOps.compressRatioOf(spark, docs).collect()
+    val got = graft.operators.TextOps.compressRatioOf(docs).collect()
       .map(r => (r.getLong(0), (r.getLong(1),
         if (r.isNullAt(3)) None else Some(r.getDouble(3)), r.getInt(4)))).toMap
     assert(got(1L)._2.get < 0.30 && got(1L)._3 === 1, s"repetition must flag low: ${got(1L)}")

@@ -1,6 +1,6 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -58,21 +58,21 @@ object GBloom {
     true
   }
 
-  /** Self-describing wire form: [k][nlongs][bits…] — the sidecar file
-    * and the aggregate's result share it, so a stored filter decodes
-    * without out-of-band metadata. */
+  /** Self-describing wire form: [k][nlongs][bits…], all big-endian —
+    * the sidecar file and the aggregate's result share it, so a stored
+    * filter decodes without out-of-band metadata. The bit array moves in
+    * one bulk copy (a stored id filter is 2 MiB). */
   def encode(bits: Array[Long], k: Int): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(k); out.writeInt(bits.length)
-    bits.foreach(out.writeLong)
-    out.flush(); bos.toByteArray
+    val buf = ByteBuffer.allocate(8 + 8 * bits.length)
+    buf.putInt(k).putInt(bits.length).asLongBuffer().put(bits)
+    buf.array()
   }
 
   def decode(bytes: Array[Byte]): (Int, Array[Long]) = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val k = in.readInt()
-    val bits = Array.fill(in.readInt())(in.readLong())
+    val buf = ByteBuffer.wrap(bytes)
+    val k = buf.getInt()
+    val bits = new Array[Long](buf.getInt())
+    buf.asLongBuffer().get(bits)
     (k, bits)
   }
 

@@ -1073,7 +1073,7 @@ object Dedup {
     * ignore them (job end releases Local blocks; Reliable dirs are the
     * deployment's retention decision). */
   private def clusterPairsRetained(pairs: DataFrame, maxIter: Int = 25,
-      ckpt: Checkpointer = Checkpointer.Local): (DataFrame, Int, Seq[DataFrame]) = {
+      ckpt: Checkpointer): (DataFrame, Int, Seq[DataFrame]) = {
     // Canonicalize + checkpoint the edge list once: without this, every
     // round would recompute the whole upstream candidate pipeline
     // (measured 4x the candidate-generation cost at sf0.1). Self-pairs

@@ -149,9 +149,15 @@ object Pipeline {
     * each component retraction is atomic and replay-idempotent, so a
     * crash mid-call leaves some stores retracted and some not, and
     * re-running the same call converges (ForgetSpec drives exactly that
-    * partial-crash-then-rerun path). Stores are processed in a fixed
-    * order so two racing forget calls for different doc sets cannot
-    * deadlock on writer locks.
+    * partial-crash-then-rerun path).
+    *
+    * The stores' retractions run CONCURRENTLY, one driver thread per
+    * routed store ([[perStore]]), each under its own store's writer
+    * claim. A worker holds one claim and waits for no other, so two
+    * racing forget or ingest calls cannot deadlock. The call returns
+    * only after every retraction has finished; a failed store does not
+    * stop the others, and the first failure in [[DocStores]] field order
+    * is rethrown (the rest ride along as suppressed).
     *
     * The id set is collected once (doc ids of a deletion request —
     * control-plane volume by nature, the same bound every tombstone
@@ -161,16 +167,54 @@ object Pipeline {
       .collect().map(_.getLong(0)).toSeq.sorted
     require(ids.nonEmpty, "forgetDocs: empty deletion request")
     // each family's whole retraction runs under its store's writer claim
-    // (graft.sources.StoreLock) — one store at a time, in the fixed
-    // order, so a racing multi-store ingest cannot deadlock against us
-    def locked(p: String)(body: => Unit): Unit =
-      graft.sources.StoreLock.withLock(p, "forget")(body)
-    stores.signatures.foreach(p => locked(p)(Dedup.retractSignatures(s, p, ids)))
-    stores.vectors.foreach(p => locked(p)(Similarity.retractVectors(s, p, ids)))
-    stores.postings.foreach(p => locked(p)(Search.retractSearchDocs(s, p, ids)))
-    stores.lmModel.foreach(p => locked(p)(TextOps.retractLmDocs(s, p, docs)))
-    stores.nbModel.foreach(p => locked(p)(TextOps.retractNbDocs(s, p, docs)))
+    // (graft.sources.StoreLock)
+    def locked(p: String)(body: => Unit): () => Unit =
+      () => graft.sources.StoreLock.withLock(p, "forget")(body)
+    perStore(s,
+      stores.signatures.toSeq.map(p => locked(p)(Dedup.retractSignatures(s, p, ids))) ++
+        stores.vectors.map(p => locked(p)(Similarity.retractVectors(s, p, ids))) ++
+        stores.postings.toSeq.map(p => locked(p)(Search.retractSearchDocs(s, p, ids))) ++
+        stores.lmModel.toSeq.map(p => locked(p)(TextOps.retractLmDocs(s, p, docs))) ++
+        stores.nbModel.toSeq.map(p => locked(p)(TextOps.retractNbDocs(s, p, docs))))
   }
+
+  /** Most worker threads one [[perStore]] call starts: one per routed
+    * store of a [[DocStores]] with one vector store. */
+  private val MaxStoreWorkers = 5
+
+  /** Run one task per routed store concurrently and wait for ALL of them
+    * before returning or throwing — the callers' writer claims are
+    * released only after this returns, so no claim is released while a
+    * store's work is still running under it. Each worker runs under the
+    * caller's claims and lock-wait floor (a [[graft.sources.StoreLock]]
+    * hand-off) and the caller's Spark thread locals (active session, job
+    * group, job tags, streaming properties — so its jobs cancel with the
+    * caller's job group and listeners attribute them to the caller). A
+    * failure does not stop the other tasks; the first in task order is
+    * rethrown with the others suppressed. One task runs inline. */
+  private def perStore(s: SparkSession, tasks: Seq[() => Unit]): Unit =
+    if (tasks.size <= 1) tasks.foreach(_())
+    else graft.sources.StoreLock.handingOff { claims =>
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(tasks.size, MaxStoreWorkers), (r: Runnable) => {
+          val t = new Thread(r, s"graft-store-worker-${n.incrementAndGet()}")
+          t.setDaemon(true)
+          t
+        })
+      try {
+        val failures = tasks
+          .map(t => org.apache.spark.sql.graftshim.Captured.submit(s, pool)(claims(t())))
+          .flatMap { f =>
+            try { f.join(); None }
+            catch { case e: java.util.concurrent.CompletionException => Some(e.getCause) }
+          }
+        failures.headOption.foreach { first =>
+          failures.tail.foreach(first.addSuppressed)
+          throw first
+        }
+      } finally pool.shutdown()
+    }
 
   /** A routed store holds a PENDING retraction of an incoming doc →
     * refuse before anything lands. The posting store's re-ingest rule
@@ -295,10 +339,10 @@ object Pipeline {
     * already decided to admit), vector-index growth under the STORED
     * quantizer/bucketer ([[Similarity.appendIvfIndexBatch]] /
     * [[Similarity.appendAnnIndexBatch]], routed by the `_centroids`
-    * sidecar that defines an IVF store), posting growth with the
-    * cross-batch doc-disjointness guard ON
-    * ([[Search.appendSearchIndexBatch]] `assertNewDocs`), and exact
-    * additive LM growth ([[TextOps.appendLmBatch]]). Cross-batch
+    * sidecar that defines an IVF store), posting growth
+    * ([[Search.appendSearchIndexBatch]], its cross-batch
+    * doc-disjointness check run up front as [[Search.requireNewDocs]]),
+    * and exact additive LM growth ([[TextOps.appendLmBatch]]). Cross-batch
     * doc-disjointness is every store's exactness precondition, as each
     * append face documents.
     *
@@ -316,88 +360,93 @@ object Pipeline {
     * partitions) and the Bloom absorb re-ORs the same bits, so a crash
     * mid-call leaves some stores grown and some not, and re-running
     * the same call converges (IngestSpec drives exactly that path).
-    * Stores are processed in [[forgetDocs]]' fixed order.
     *
-    * Pending retractions refuse loudly BEFORE anything lands
-    * ([[requireNoPendingRetraction]] — the re-ingest rule); the
-    * forget → compact → re-ingest round trip is the sanctioned
-    * re-admission path, proven by IngestSpec. The guard-to-append
-    * window is NOT locked against a concurrently racing forgetDocs on
-    * the same store — every store family already documents a
-    * single-writer mutation protocol, and ingest/forget are both
-    * mutations: callers serialize them per store, exactly as they
-    * serialize two appends. */
+    * The call takes every routed store's writer claim up front, in the
+    * fixed [[DocStores]] field order (so racing multi-store writers
+    * cannot deadlock), and holds them until it returns. Inside, the
+    * per-store work runs in two CONCURRENT phases, one driver thread
+    * per routed store ([[perStore]]), with a barrier between them:
+    *
+    *  1. GUARDS — every store's admission guards at once: pending
+    *     retractions ([[requireNoPendingRetraction]] — the re-ingest
+    *     rule), cross-batch doc-disjointness (the index stores' id-Bloom
+    *     probe, the posting store's `_docs` membership via
+    *     [[Search.requireNewDocs]], the model stores' `_docs` sidecars).
+    *  2. Barrier: if any guard refused, the call throws here, before any
+    *     store has been mutated.
+    *  3. APPENDS — every store's append at once. A failed append does
+    *     not stop the others; the first failure in field order is
+    *     rethrown once all have finished.
+    *
+    * The forget → compact → re-ingest round trip is the sanctioned
+    * re-admission path, proven by IngestSpec. */
   def ingestDocs(s: SparkSession, stores: DocStores, docs: DataFrame,
       batchId: Long, vectors: Option[DataFrame] = None): Unit = {
     require(batchId >= 0, "scoped batch ids are non-negative (negatives are store-internal)")
     require(stores.vectors.isEmpty || vectors.nonEmpty,
       "ingestDocs: DocStores routes vector stores but no vectors frame was supplied")
     // ONE continuous writer claim per routed store for the WHOLE call
-    // (guards + appends), acquired in the fixed DocStores order — this
-    // closes the guard-to-append window the single-writer convention
-    // used to leave open: a forgetDocs or compaction racing this call
-    // now waits (or fails loudly) instead of mutating between our
-    // admission guards and our appends. The per-store append faces we
-    // call re-enter these claims for free (StoreLock is reentrant).
+    // (guards + appends): a forgetDocs or compaction racing this call
+    // waits (or fails loudly) instead of mutating between our admission
+    // guards and our appends. The per-store workers re-enter these
+    // claims through the StoreLock hand-off.
     graft.sources.StoreLock.withLocks(
       stores.signatures.toSeq ++ stores.vectors ++ stores.postings.toSeq ++
         stores.lmModel.toSeq ++ stores.nbModel.toSeq, "ingest") {
-    ingestDocsBody(s, stores, docs, batchId, vectors)
+      // forgetDocs' empty-request rule, mirrored: an empty batch would
+      // still stamp phantom batch partitions (a 0-doc _meta row) that
+      // advance the stores' replay bookkeeping for no content — the
+      // streaming twin (ingestBatch) already no-ops quiet feed ticks
+      require(!docs.isEmpty, "ingestDocs: empty ingest batch")
+      // (guard, append) per routed store, in DocStores field order
+      val work: Seq[(() => Unit, () => Unit)] =
+        stores.signatures.toSeq.map(p => (() => {
+          requireNoPendingRetraction(s, p, "doc_id", docs, "signature")
+          requireNewDocsInIndex(s, p, "doc_id", docs, batchId, "signature")
+        }, () => appendSignatures(s, p, docs, batchId))) ++
+        stores.vectors.map(p => (() => {
+          requireNoPendingRetraction(s, p, "vec_id", vectors.get, "vector")
+          requireNewDocsInIndex(s, p, "vec_id", vectors.get, batchId, "vector")
+        }, () =>
+          if (isIvfStore(s, p)) Similarity.appendIvfIndexBatch(s, vectors.get, p, batchId)
+          else Similarity.appendAnnIndexBatch(s, vectors.get, p, batchId))) ++
+        stores.postings.toSeq.map(p => (() => {
+          requireNoPendingRetraction(s, p, "doc_id", docs, "posting")
+          Search.requireNewDocs(s, p, docs, batchId)
+        }, () => Search.appendSearchIndexBatch(s, docs.select("doc_id", "text"), p, batchId))) ++
+        stores.lmModel.toSeq.map(p => (() => {
+          requireNoPendingRetraction(s, p, "doc_id", docs, "LM model")
+          requireNewDocsInModel(s, p, docs, batchId, "LM model")
+        }, () => TextOps.appendLmBatch(s, docs, p, batchId))) ++
+        stores.nbModel.toSeq.map(p => (() => {
+          requireNoPendingRetraction(s, p, "doc_id", docs, "NB model")
+          requireNewDocsInModel(s, p, docs, batchId, "NB model")
+        }, () => TextOps.appendNbBatch(s, docs, p, batchId)))
+      // a refusal throws out of the guard phase: nothing has landed yet
+      perStore(s, work.map(_._1))
+      perStore(s, work.map(_._2))
     }
   }
 
-  private def ingestDocsBody(s: SparkSession, stores: DocStores, docs: DataFrame,
-      batchId: Long, vectors: Option[DataFrame]): Unit = {
-    // forgetDocs' empty-request rule, mirrored: an empty batch would
-    // still stamp phantom batch partitions (a 0-doc _meta row) that
-    // advance the stores' replay bookkeeping for no content — the
-    // streaming twin (ingestBatch) already no-ops quiet feed ticks
-    require(!docs.isEmpty, "ingestDocs: empty ingest batch")
-    // all admission guards run before the first mutation, so a refusal
-    // leaves every store untouched
-    stores.signatures.foreach(p =>
-      requireNoPendingRetraction(s, p, "doc_id", docs, "signature"))
-    stores.vectors.foreach(p =>
-      requireNoPendingRetraction(s, p, "vec_id", vectors.get, "vector"))
-    stores.postings.foreach(p =>
-      requireNoPendingRetraction(s, p, "doc_id", docs, "posting"))
-    stores.lmModel.foreach(p =>
-      requireNoPendingRetraction(s, p, "doc_id", docs, "LM model"))
-    stores.nbModel.foreach(p =>
-      requireNoPendingRetraction(s, p, "doc_id", docs, "NB model"))
-    stores.signatures.foreach(p =>
-      requireNewDocsInIndex(s, p, "doc_id", docs, batchId, "signature"))
-    stores.vectors.foreach(p =>
-      requireNewDocsInIndex(s, p, "vec_id", vectors.get, batchId, "vector"))
-    stores.lmModel.foreach(p =>
-      requireNewDocsInModel(s, p, docs, batchId, "LM model"))
-    stores.nbModel.foreach(p =>
-      requireNewDocsInModel(s, p, docs, batchId, "NB model"))
-    stores.signatures.foreach { p =>
-      graft.sources.Stores.recover(s, p)
-      // persisted for its two consumers (Bloom absorb + the partition
-      // write) — gateBatch's discipline; signature derivation is the
-      // expensive half of the admission
-      val sig = Dedup.signaturesOf(docs.select("doc_id", "text"))
-        .withColumn("batch_id", lit(batchId)).persist()
-      try {
-        // superset-before-admission (the Bloom soundness ordering),
-        // for both sidecars: the gate's bucket filter and the ingest
-        // guard's id-membership filter
-        Dedup.absorbIntoBloom(s, p, sig.select("bucket"))
-        graft.sources.IdBloom.absorb(s, p, sig.select("doc_id"))
-        graft.sources.Sinks.overwritePartitionsDynamic(sig, p, Seq("shard", "batch_id"))
-      } finally sig.unpersist()
-    }
-    stores.vectors.foreach { p =>
-      if (isIvfStore(s, p)) Similarity.appendIvfIndexBatch(s, vectors.get, p, batchId)
-      else Similarity.appendAnnIndexBatch(s, vectors.get, p, batchId)
-    }
-    stores.postings.foreach(p =>
-      Search.appendSearchIndexBatch(s, docs.select("doc_id", "text"), p, batchId,
-        assertNewDocs = true))
-    stores.lmModel.foreach(p => TextOps.appendLmBatch(s, docs, p, batchId))
-    stores.nbModel.foreach(p => TextOps.appendNbBatch(s, docs, p, batchId))
+  /** Batch-scoped signature admission — the streaming gate's replay-safe
+    * write shape ([[graft.streaming.EventStreams.gateBatch]] minus the
+    * gate verdict). */
+  private def appendSignatures(s: SparkSession, p: String, docs: DataFrame,
+      batchId: Long): Unit = {
+    graft.sources.Stores.recover(s, p)
+    // persisted for its two consumers (Bloom absorb + the partition
+    // write) — gateBatch's discipline; signature derivation is the
+    // expensive half of the admission
+    val sig = Dedup.signaturesOf(docs.select("doc_id", "text"))
+      .withColumn("batch_id", lit(batchId)).persist()
+    try {
+      // superset-before-admission (the Bloom soundness ordering),
+      // for both sidecars: the gate's bucket filter and the ingest
+      // guard's id-membership filter
+      Dedup.absorbIntoBloom(s, p, sig.select("bucket"))
+      graft.sources.IdBloom.absorb(s, p, sig.select("doc_id"))
+      graft.sources.Sinks.overwritePartitionsDynamic(sig, p, Seq("shard", "batch_id"))
+    } finally sig.unpersist()
   }
 
   /** Per-document storage PROVENANCE across a deployment's store

@@ -251,25 +251,10 @@ object Search {
       batchId: Long, assertNewDocs: Boolean = false): Unit =
       graft.sources.StoreLock.withLock(path, "append") {
     require(batchId >= 0, "scoped batch ids are non-negative (negatives are store-internal)")
-    graft.sources.Stores.recover(s, path)
-    ensureDocsSidecar(s, path)
-    if (assertNewDocs) {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      val incoming = newDocs.select("doc_id").distinct()
-      if (fs.exists(new org.apache.hadoop.fs.Path(path + "/_docs"))) {
-        // prune the membership read to the incoming docs' shards
-        // (bounded collect: ≤ PostingShards distinct values)
-        val shards = incoming.select(docShard(col("doc_id")).as("dshard"))
-          .distinct().collect().map(_.getLong(0)).toSeq
-        val clash = s.read.parquet(path + "/_docs")
-          .filter(col("dshard").isin(shards: _*) && col("batch_id") =!= batchId)
-          .join(incoming, Seq("doc_id"), "left_semi")
-          .limit(1).count()
-        require(clash == 0L,
-          s"batch $batchId re-ingests doc_ids already stored under another batch id " +
-            "(cross-batch doc-disjointness is the store's exactness precondition)")
-      } // else: fresh path — vacuously disjoint, the bootstrap-from-batch-0 case
+    if (assertNewDocs) requireNewDocs(s, path, newDocs, batchId)
+    else {
+      graft.sources.Stores.recover(s, path)
+      ensureDocsSidecar(s, path)
     }
     graft.sources.Sinks.overwritePartitionsDynamic(
       docsRowsOf(newDocs, batchId).repartition(col("dshard")),
@@ -279,6 +264,36 @@ object Search {
       path, Seq("shard", "batch_id"))
     graft.sources.Sinks.overwritePartitionsDynamic(
       statsRowOf(newDocs, batchId).coalesce(1), path + "/_stats", Seq("batch_id"))
+  }
+
+  /** The `assertNewDocs` check of [[appendSearchIndexBatch]] on its own,
+    * for callers that must refuse before mutating OTHER stores
+    * (`Pipeline.ingestDocs` runs it in its guard phase): refuses when an
+    * incoming doc_id is already a member under another batch id.
+    * Recovers the store and backfills a pre-sidecar store's `_docs`
+    * membership first, under the store's writer claim; a fresh path
+    * passes vacuously. */
+  def requireNewDocs(s: SparkSession, path: String, newDocs: DataFrame,
+      batchId: Long): Unit =
+      graft.sources.StoreLock.withLock(path, "guard") {
+    graft.sources.Stores.recover(s, path)
+    ensureDocsSidecar(s, path)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(path), s.sparkContext.hadoopConfiguration)
+    val incoming = newDocs.select("doc_id").distinct()
+    if (fs.exists(new org.apache.hadoop.fs.Path(path + "/_docs"))) {
+      // prune the membership read to the incoming docs' shards
+      // (bounded collect: ≤ PostingShards distinct values)
+      val shards = incoming.select(docShard(col("doc_id")).as("dshard"))
+        .distinct().collect().map(_.getLong(0)).toSeq
+      val clash = s.read.parquet(path + "/_docs")
+        .filter(col("dshard").isin(shards: _*) && col("batch_id") =!= batchId)
+        .join(incoming, Seq("doc_id"), "left_semi")
+        .limit(1).count()
+      require(clash == 0L,
+        s"batch $batchId re-ingests doc_ids already stored under another batch id " +
+          "(cross-batch doc-disjointness is the store's exactness precondition)")
+    } // else: fresh path — vacuously disjoint, the bootstrap-from-batch-0 case
   }
 
   /** Retract documents from the posting store — the search-index half

@@ -1354,7 +1354,7 @@ object TextOps {
     * The three scalars collect driver-side (model-plane, ≤ B rows) and
     * fold into the scan projection as literals; the count frames
     * broadcast. */
-  private def scoreUnderDsirModel(s: SparkSession, docs: DataFrame,
+  private def scoreUnderDsirModel(docs: DataFrame,
       cs: DataFrame, ct: DataFrame, path: String): DataFrame = {
     val row = cs.agg(coalesce(sum("c"), lit(0L)).as("ns"), count(lit(1)).as("v2"))
       .crossJoin(ct.agg(coalesce(sum("c"), lit(0L)).as("nt"))).collect()(0)
@@ -1379,7 +1379,7 @@ object TextOps {
   def dsirScoreStored(s: SparkSession, docs: DataFrame, path: String): DataFrame = {
     graft.sources.Stores.recover(s, path)
     val (cs, ct) = dsirModelFrames(s, path, None)
-    scoreUnderDsirModel(s, docs, cs, ct, path).orderBy("doc_id")
+    scoreUnderDsirModel(docs, cs, ct, path).orderBy("doc_id")
   }
 
   /** Top-K selection under the stored model — [[dsirScoreStored]]
@@ -1390,7 +1390,7 @@ object TextOps {
       k: Int): DataFrame = {
     graft.sources.Stores.recover(s, path)
     val (cs, ct) = dsirModelFrames(s, path, None)
-    dsirRank(scoreUnderDsirModel(s, docs, cs, ct, path), k)
+    dsirRank(scoreUnderDsirModel(docs, cs, ct, path), k)
   }
 
   /** [[dsirScoreStored]] AS OF admission batch `asOf` — the mixture
@@ -1407,7 +1407,7 @@ object TextOps {
     graft.sources.Stores.recover(s, path)
     graft.sources.Stores.requireAsOfReconstructable(s, path, asOf)
     val (cs, ct) = dsirModelFrames(s, path, Some(asOf))
-    scoreUnderDsirModel(s, docs, cs, ct, path).orderBy("doc_id")
+    scoreUnderDsirModel(docs, cs, ct, path).orderBy("doc_id")
   }
 
   /** Compact the stored model: batch partitions below the watermark

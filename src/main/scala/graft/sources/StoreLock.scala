@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Path, Paths}
 
 import graft.state.TxnLog
 
@@ -36,13 +36,19 @@ import graft.state.TxnLog
   * (pid, op, timestamp) so contention errors are actionable.
   *
   * Semantics:
-  *  - REENTRANT per thread: the composition entry points
-  *    (`ingestDocs`) claim their routed stores up front and the
-  *    per-store append/retract faces they call re-enter for free, so
-  *    the guard-to-append window is closed under ONE continuous claim.
+  *  - REENTRANT per claimant: the claiming thread, plus the worker
+  *    threads it hands its claims to through an explicit [[handingOff]]
+  *    scope. The composition entry points (`ingestDocs`) claim their
+  *    routed stores up front, fan the per-store work out one worker per
+  *    store, and the append/retract faces the workers call re-enter the
+  *    caller's claims, so the guard-to-append window is closed under ONE
+  *    continuous claim. Any other thread still contends. The scope
+  *    returns only after every worker has left it, so no claim is
+  *    released while a worker runs under it.
   *  - Multi-store claims are acquired in the caller's FIXED order
-  *    (`DocStores` field order, the `forgetDocs` processing order), so
-  *    two racing multi-store writers cannot deadlock.
+  *    (`DocStores` field order), so two racing multi-store writers
+  *    cannot deadlock; a `forgetDocs` worker holds one claim and waits
+  *    for no other.
   *  - Contention waits up to `-Dgraft.store.lock.waitMs` (default 0 =
   *    fail fast) polling the claim, then fails loudly.
   *  - A CLEAN exit releases (finally + a JVM shutdown hook, the
@@ -131,9 +137,17 @@ object StoreLock {
     * LOUD caller bug. */
   final class AddressingRefused(msg: String) extends IllegalArgumentException(msg)
 
-  // reentrancy bookkeeping: normalized store path -> (holder thread, depth)
-  private val held =
-    new java.util.concurrent.ConcurrentHashMap[String, (Thread, Int)]()
+  // reentrancy bookkeeping: normalized store path -> (holder thread,
+  // depth); depth changes through compute, so workers re-entering one
+  // claim at once never lose an update
+  private final case class Held(holder: Thread, depth: Int)
+  private val held = new java.util.concurrent.ConcurrentHashMap[String, Held]()
+
+  // the threads whose claims this thread may re-enter besides its own:
+  // set for the duration of a HandOff.apply, empty elsewhere
+  private val actingFor = new ThreadLocal[List[Thread]] {
+    override def initialValue(): List[Thread] = Nil
+  }
 
   // a kill -9 cannot run this (that is the stale-lock story); a clean
   // exit between a crash-interrupted `finally` and JVM death can
@@ -153,7 +167,8 @@ object StoreLock {
     catch { case _: Throwable => "unknown" }
 
   /** Run `body` holding the store's exclusive writer claim. Reentrant on
-    * the claiming thread; contended acquisition polls up to
+    * the claiming thread and on the workers it hands its claims to
+    * ([[handingOff]]); contended acquisition polls up to
     * `graft.store.lock.waitMs` then throws naming the holder. */
   def withLock[T](store: String, op: String)(body: => T): T =
     withLockWaiting(store, op, 0L)(body)
@@ -192,16 +207,18 @@ object StoreLock {
     }
   }
 
-  // Thread-scoped wait floor (see withWaitFloor): foreachBatch bodies
-  // run their whole micro-batch on one thread, so a scope around the
-  // body floors EVERY claim the batch's store mutations take — including
-  // the ones buried inside Pipeline.ingestDocs/forgetDocs and the append
-  // faces, which a per-call-site floor could never reach.
+  // Thread-scoped wait floor (see withWaitFloor): a scope around a
+  // foreachBatch body floors EVERY claim the batch's store mutations
+  // take — including the ones buried inside Pipeline.ingestDocs/
+  // forgetDocs and the append faces, which a per-call-site floor could
+  // never reach. Those entry points run their per-store work on worker
+  // threads; the floor reaches them through the HandOff (handingOff).
   private val waitFloorMs = new ThreadLocal[Long] { override def initialValue(): Long = 0L }
 
-  /** Run `body` with every [[withLock]] acquisition ON THIS THREAD
-    * flooring its contention wait at `minWaitMs` (nested scopes keep the
-    * larger floor). The streaming admission plane wraps each micro-batch
+  /** Run `body` with every [[withLock]] acquisition ON THIS THREAD, and
+    * on the workers it hands its claims to ([[handingOff]]), flooring
+    * its contention wait at `minWaitMs` (nested scopes keep the larger
+    * floor). The streaming admission plane wraps each micro-batch
     * in this: a maintenance sweep holding a store for seconds must DELAY
     * the batch, not kill the streaming query — and the property still
     * only raises waits, never lowers the deployment-wide setting. */
@@ -223,14 +240,13 @@ object StoreLock {
   def withLockWaiting[T](store: String, op: String, minWaitMs: Long)(body: => T): T = {
     val key = normalize(store)
     val me = Thread.currentThread()
-    val cur = held.get(key)
-    if (cur != null && (cur._1 eq me)) {
-      held.put(key, (me, cur._2 + 1))
+    val mine = me :: actingFor.get()
+    def ours(h: Held) = h != null && mine.exists(_ eq h.holder)
+    // one atomic step decides and records the re-entry: the remapping
+    // returns a deeper Held exactly when the claim is ours
+    if (ours(held.computeIfPresent(key, (_, h) => if (ours(h)) h.copy(depth = h.depth + 1) else h))) {
       try body
-      finally {
-        val d = held.get(key)
-        held.put(key, (d._1, d._2 - 1))
-      }
+      finally held.computeIfPresent(key, (_, h) => h.copy(depth = h.depth - 1))
     } else {
       val lock = Paths.get(key + ".lock")
       // no local mkdir here: FsObjectStore.putIfAbsent creates parents
@@ -288,7 +304,7 @@ object StoreLock {
           "concurrent mutations would interleave appends and compaction swaps — " +
           "wait for it (or raise -Dgraft.store.lock.waitMs), or " +
           "StoreLock.forceBreak the stale claim if that driver crashed")
-      held.put(key, (me, 1))
+      held.put(key, Held(me, 1))
       try body
       finally {
         held.remove(key)
@@ -299,6 +315,57 @@ object StoreLock {
       }
     }
   }
+
+  /** The calling thread's claims and wait floor, as handed to worker
+    * threads inside a [[handingOff]] scope. */
+  final class HandOff private[StoreLock] (claimants: List[Thread], floorMs: Long) {
+    private var active = 0
+    private var closed = false
+
+    /** Run `body` on THIS (worker) thread as the handing thread's
+      * claimant: [[withLock]] re-enters every claim it holds, and its
+      * wait floor applies. Refused once the scope has closed — a late
+      * task must not act under claims that may be released. */
+    def apply[T](body: => T): T = {
+      synchronized {
+        if (closed) throw new IllegalStateException(
+          "StoreLock hand-off used after its scope closed")
+        active += 1
+      }
+      val (prevActing, prevFloor) = (actingFor.get(), waitFloorMs.get())
+      actingFor.set(claimants ++ prevActing)
+      waitFloorMs.set(math.max(prevFloor, floorMs))
+      try body
+      finally {
+        actingFor.set(prevActing)
+        waitFloorMs.set(prevFloor)
+        synchronized { active -= 1; notifyAll() }
+      }
+    }
+
+    private[StoreLock] def close(): Unit = synchronized {
+      closed = true
+      // uninterruptible: leaving early would let the caller release a
+      // claim a worker still mutates under
+      var interrupted = false
+      while (active > 0)
+        try wait() catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
+  }
+
+  /** Run `body` with a [[HandOff]] of this thread's claims for worker
+    * threads to run under. Returns (or rethrows) only once every worker
+    * that entered the hand-off has left it, so the claims this thread
+    * holds around the scope cannot be released while a worker runs. */
+  def handingOff[T](body: HandOff => T): T = {
+    val h = new HandOff(Thread.currentThread() :: actingFor.get(), waitFloorMs.get())
+    try body(h) finally h.close()
+  }
+
+  /** Claim depth of `store` in this JVM — 0 when unclaimed (specs). */
+  private[graft] def depth(store: String): Int =
+    Option(held.get(normalize(store))).fold(0)(_.depth)
 
   /** Acquire the stores' claims in the given FIXED order, run `body`,
     * release in reverse — the multi-store entry points' shape

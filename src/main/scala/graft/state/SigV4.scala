@@ -58,12 +58,6 @@ object SigV4 {
     hmac(hmac(hmac(hmac(("AWS4" + secret).getBytes("UTF-8"), date),
       region), service), "aws4_request")
 
-  /** AWS URI-encode (unreserved = A-Za-z0-9 - . _ ~; space = %20).
-    * Defined THROUGH [[awsEncodeBytes]] so the client has exactly one
-    * byte-level encoder — a future tweak to the unreserved set cannot
-    * desynchronize path-encoding from query-encoding (r19 review). */
-  private def awsEncode(s: String): String = awsEncodeBytes(s.getBytes("UTF-8"))
-
   /** Strict RFC 3986 percent-decode to RAW BYTES (client side). Unlike
     * `URLDecoder.decode` (form decoding), '+' stays a literal plus —
     * AWS query canonicalization percent-encodes it as %2B, it is never
@@ -109,9 +103,9 @@ object SigV4 {
   private[state] def pctDecode(s: String): String =
     new String(pctDecodeBytes(s), "UTF-8")
 
-  /** AWS URI-encode straight from raw bytes — the byte-exact twin of
-    * [[awsEncode]] used where the input came off the wire already
-    * percent-encoded. */
+  /** AWS URI-encode (unreserved = A-Za-z0-9 - . _ ~; space = %20)
+    * straight from raw bytes — the client's one byte-level encoder,
+    * used where the input came off the wire already percent-encoded. */
   private def awsEncodeBytes(bytes: Array[Byte]): String = {
     val sb = new StringBuilder
     bytes.foreach { b =>
@@ -181,7 +175,7 @@ object SigV4 {
 
   // ------------------------------------------------------------------
   // Server-side canonicalization — an INDEPENDENT implementation.
-  // Deliberately does not call awsEncode/pctDecode/canonicalQuery/
+  // Deliberately does not call awsEncodeBytes/pctDecode/canonicalQuery/
   // canonicalRequest above: the validator exists to catch the client's
   // canonicalization bugs, which it can only do if a defect cannot be
   // shared. Mechanics differ on purpose (byte-array walks and manual

@@ -36,8 +36,9 @@ class BloomSidecarSpec extends AnyFunSuite {
     Files.createDirectories(java.nio.file.Paths.get(store))
     val ks = (0 until 50).map(i => s"k-$i")
     graft.sources.StoreLock.withLock(store, "append-in-flight") {
-      // run ensureFrom from ANOTHER thread (the lock is reentrant per
-      // thread, so the race only exists across threads/processes)
+      // run ensureFrom from ANOTHER thread (the lock is reentrant only
+      // for its claimant and the workers it hands its claims to, so the
+      // race exists across any other threads or processes)
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       implicit val ec: scala.concurrent.ExecutionContext =

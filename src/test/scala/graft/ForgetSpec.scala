@@ -90,4 +90,49 @@ class ForgetSpec extends AnyFunSuite {
       Pipeline.DocStores(signatures = Some(base + "/sig")), gone)
     checkAllForgotten()
   }
+
+  test("forgetDocs: one store's failing retraction does not stop the others; a re-run converges; every job carries the caller's group") {
+    val docs = Tables.documents(spark, dir)
+    val gonePred = pmod(col("doc_id"), lit(9L)) === 4
+    val gone = docs.filter(gonePred)
+    val surv = docs.filter(!gonePred)
+    val ids = gone.select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
+    val base = Files.createTempDirectory("graft-forget-fail").toString
+    val stores = Pipeline.DocStores(
+      signatures = Some(base + "/sig"),
+      vectors = Seq(base + "/ivf"),
+      postings = Some(base + "/postings"),
+      lmModel = Some(base + "/lm"))
+    Dedup.writeSignatures(Dedup.signaturesOf(docs.select("doc_id", "text")), base + "/sig")
+    Similarity.writeIvfIndexFrom(spark, Tables.embeddings(spark, dir), base + "/ivf")
+    Search.writeSearchIndexFrom(spark, docs.select("doc_id", "text"), base + "/postings")
+    TextOps.writeLmModel(spark, docs, base + "/lm")
+    def tombstoned(p: String, idCol: String): Seq[Long] =
+      if (!Stores.hasTombstones(spark, p)) Nil
+      else spark.read.parquet(Stores.tombstonePath(p)).select(idCol).distinct()
+        .collect().map(_.getLong(0)).sorted.toSeq
+    // a plain file where the IVF store's tombstone directory goes: its
+    // retraction cannot land, every other store's can
+    val blocker = java.nio.file.Paths.get(base, "ivf", "_tombstones")
+    Files.write(blocker, Array[Byte](1))
+    intercept[Exception](Pipeline.forgetDocs(spark, stores, gone))
+    assert(tombstoned(base + "/sig", "doc_id") === ids, "the signature retraction completed")
+    assert(SearchProbe.scores(spark, base + "/postings") ===
+      Search.bm25(surv.select("doc_id", "text")).collect()
+        .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq,
+      "the posting retraction completed")
+    assert(TextOps.lmScoreStored(spark, surv, base + "/lm").collect().toSeq ===
+      TextOps.lmScore(surv).collect().toSeq, "the LM retraction completed")
+    // mend the store and re-run the same call under a job group
+    Files.delete(blocker)
+    val (group, jobs) = JobProbe.jobsOf(spark)(Pipeline.forgetDocs(spark, stores, gone))
+    assert(jobs.nonEmpty && jobs.forall { case (g, tags) =>
+      g == group && tags != null && tags.split(",").contains(group) },
+      s"every job must carry the caller's group and tag: $jobs")
+    assert(tombstoned(base + "/ivf", "vec_id") === ids,
+      "the re-run must retract the mended store")
+    assert(Stores.minusTombstones(spark, base + "/ivf", "vec_id",
+        spark.read.parquet(base + "/ivf"))
+      .filter(col("vec_id").isin(ids: _*)).count() === 0L)
+  }
 }

@@ -146,6 +146,95 @@ class IngestSpec extends AnyFunSuite {
     checkAllIngested()
   }
 
+  /** Signature, IVF and posting stores over the corpus minus `late`;
+    * the posting store also holds `late` when `postingsHoldLate`. */
+  private def bootstrap(base: String,
+      latePred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+      postingsHoldLate: Boolean = false): Pipeline.DocStores = {
+    val docs = Tables.documents(spark, dir).select("doc_id", "text")
+    val vecs = Tables.embeddings(spark, dir)
+    val early = docs.filter(!latePred(col("doc_id")))
+    Dedup.writeSignatures(Dedup.signaturesOf(early), base + "/sig")
+    Similarity.writeIvfIndexFrom(spark, vecs.filter(!latePred(col("vec_id"))), base + "/ivf")
+    Search.writeSearchIndexFrom(spark, if (postingsHoldLate) docs else early,
+      base + "/postings")
+    Pipeline.DocStores(signatures = Some(base + "/sig"), vectors = Seq(base + "/ivf"),
+      postings = Some(base + "/postings"))
+  }
+
+  private def rows(p: String) =
+    spark.read.parquet(p).collect().map(_.toString).sorted.toSeq
+
+  test("ingestDocs: a batch clashing only in the posting store refuses before any store changes") {
+    // the posting store's disjointness check is a guard like the others:
+    // it must refuse before the signature and vector appends can land
+    val latePred = (c: org.apache.spark.sql.Column) => pmod(c, lit(5L)) === 2
+    val base = Files.createTempDirectory("graft-ingest-pclash").toString
+    val stores = bootstrap(base, latePred, postingsHoldLate = true)
+    val late = Tables.documents(spark, dir).filter(latePred(col("doc_id")))
+      .select("doc_id", "text")
+    val lateVecs = Tables.embeddings(spark, dir).filter(latePred(col("vec_id")))
+    val (sigBefore, ivfBefore) = (rows(base + "/sig"), rows(base + "/ivf"))
+    val e = intercept[IllegalArgumentException] {
+      Pipeline.ingestDocs(spark, stores, late, batchId = 7L, vectors = Some(lateVecs))
+    }
+    assert(e.getMessage.contains("another batch id"), e.getMessage)
+    assert(rows(base + "/sig") === sigBefore, "the signature store must be unchanged")
+    assert(rows(base + "/ivf") === ivfBefore, "the IVF store must be unchanged")
+  }
+
+  test("ingestDocs: one store's failing append does not stop the others; a re-run converges; every job carries the caller's group") {
+    val latePred = (c: org.apache.spark.sql.Column) => pmod(c, lit(4L)) === 1
+    val base = Files.createTempDirectory("graft-ingest-fail").toString
+    val stores = bootstrap(base, latePred)
+      .copy(lmModel = Some(base + "/lm"))
+    val docs = Tables.documents(spark, dir)
+    TextOps.writeLmModel(spark, docs.filter(!latePred(col("doc_id"))), base + "/lm")
+    val late = docs.filter(latePred(col("doc_id")))
+    val vecs = Tables.embeddings(spark, dir)
+    val lateVecs = vecs.filter(latePred(col("vec_id")))
+    // the IVF append cannot read its quantizer; its guards still pass
+    val cents = java.nio.file.Paths.get(base, "ivf", "_centroids")
+    val held = java.nio.file.Paths.get(base, "ivf", "_centroids.held")
+    Files.move(cents, held)
+    Files.createDirectory(cents)
+    val ivfBefore = rows(base + "/ivf")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Pipeline.ingestDocs(spark, stores, late, batchId = 7L, vectors = Some(lateVecs))
+    }
+    assert(rows(base + "/ivf") === ivfBefore, "the failed store is unchanged")
+    // the other stores' appends ran to completion
+    val lateIds = late.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    def batch7(p: String) = spark.read.parquet(p).filter(col("batch_id") === 7L)
+      .select("doc_id").distinct().collect().map(_.getLong(0)).sorted.toSeq
+    assert(batch7(base + "/postings/_docs") === lateIds, "the posting append completed")
+    assert(batch7(base + "/lm/_docs") === lateIds, "the LM append completed")
+    assert(batch7(base + "/sig") ===
+      Dedup.signaturesOf(late.select("doc_id", "text")).select("doc_id").distinct()
+        .collect().map(_.getLong(0)).sorted.toSeq, "the signature append completed")
+    // mend the store and re-run the same call under a job group
+    Files.delete(cents)
+    Files.move(held, cents)
+    val (group, jobs) = JobProbe.jobsOf(spark) {
+      Pipeline.ingestDocs(spark, stores, late, batchId = 7L, vectors = Some(lateVecs))
+    }
+    assert(jobs.nonEmpty && jobs.forall { case (g, tags) =>
+      g == group && tags != null && tags.split(",").contains(group) },
+      s"every job must carry the caller's group and tag: $jobs")
+    val stored = spark.read.parquet(base + "/sig").drop("batch_id")
+    val oneShot = Dedup.signaturesOf(docs.select("doc_id", "text"))
+    assert(stored.count() === oneShot.count() && stored.exceptAll(oneShot).count() === 0L)
+    assert(spark.read.parquet(base + "/ivf").select("vec_id").collect()
+      .map(_.getLong(0)).sorted.toSeq ===
+      vecs.select("vec_id").collect().map(_.getLong(0)).sorted.toSeq,
+      "the re-run must land the batch in the mended store exactly once")
+    assert(SearchProbe.scores(spark, base + "/postings") ===
+      Search.bm25(docs.select("doc_id", "text")).collect()
+        .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq)
+    assert(lmScores(TextOps.lmScoreStored(spark, docs, base + "/lm")) ===
+      lmScores(TextOps.lmScore(docs)))
+  }
+
   test("ingestDocs: a URI-addressed store under the local lock binding refuses BEFORE any mutation") {
     // the StoreLock path contract must surface through the composition
     // entry point, not just the unit: a remote-addressed store with the

@@ -148,6 +148,90 @@ class StoreLockSpec extends AnyFunSuite {
     assert(!StoreLock.isHeld(store))
   }
 
+  private def onPool[T](pool: java.util.concurrent.ExecutorService)(body: => T) =
+    pool.submit(new java.util.concurrent.Callable[T] { def call(): T = body })
+
+  test("hand-off: workers re-enter the caller's claim, a foreign thread is still refused, concurrent re-entries net out") {
+    val store = Files.createTempDirectory("graft-lock-handoff").toString + "/s"
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      StoreLock.withLock(store, "caller") {
+        assert(StoreLock.depth(store) === 1)
+        StoreLock.handingOff { claims =>
+          // four workers re-enter the one claim at once, many times over:
+          // a lost depth update would leave the count off by the race
+          val workers = (1 to 4).map(_ => onPool(pool)(claims {
+            (1 to 2000).foreach { _ =>
+              StoreLock.withLock(store, "worker") {
+                assert(StoreLock.depth(store) >= 2, "a worker runs inside the caller's claim")
+              }
+            }
+            StoreLock.isHeld(store)
+          }))
+          assert(workers.forall(_.get()), "every worker re-entered the held claim")
+        }
+        assert(StoreLock.depth(store) === 1,
+          "concurrent re-entries must leave the caller's depth as they found it")
+        // a thread the claims were not handed to still contends and,
+        // under the fail-fast default, is refused naming the holder
+        val e = intercept[java.util.concurrent.ExecutionException] {
+          onPool(pool)(StoreLock.withLock(store, "intruder")(())).get()
+        }
+        assert(e.getCause.isInstanceOf[IllegalStateException] &&
+          e.getCause.getMessage.contains("op=caller"), e.getCause.toString)
+      }
+      assert(StoreLock.depth(store) === 0 && !StoreLock.isHeld(store),
+        "the caller's exit releases the claim")
+      // a hand-off outlives nothing: used after its scope it refuses
+      val leaked = StoreLock.handingOff(identity)
+      intercept[IllegalStateException](leaked(()))
+    } finally pool.shutdown()
+  }
+
+  test("hand-off: the wait floor reaches the workers; no claim is released while a worker runs") {
+    val base = Files.createTempDirectory("graft-lock-handoff-floor").toString
+    val (mine, busy) = (base + "/mine", base + "/busy")
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      // a sweep holds `busy` briefly; under the fail-fast default only a
+      // floor the worker inherited can make its claim wait instead of die
+      val release = new java.util.concurrent.CountDownLatch(1)
+      val holderIn = new java.util.concurrent.CountDownLatch(1)
+      val holder = Future {
+        StoreLock.withLock(busy, "sweep") { holderIn.countDown(); release.await() }
+      }
+      holderIn.await()
+      val workerDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val heldThroughout = new java.util.concurrent.atomic.AtomicBoolean(true)
+      StoreLock.withWaitFloor(30000L) {
+        StoreLock.withLock(mine, "caller") {
+          StoreLock.handingOff { claims =>
+            val started = new java.util.concurrent.CountDownLatch(1)
+            onPool(pool)(claims {
+              started.countDown()
+              StoreLock.withLock(busy, "worker") {
+                heldThroughout.compareAndSet(true, StoreLock.isHeld(mine))
+              }
+              Thread.sleep(300)
+              heldThroughout.compareAndSet(true, StoreLock.isHeld(mine))
+              workerDone.set(true)
+            })
+            started.await()
+            Thread.sleep(200) // the worker now polls inside its floor
+            release.countDown()
+            // the body returns without waiting for its worker
+          }
+          assert(workerDone.get(),
+            "the hand-off scope must not return while a worker runs under it")
+        }
+      }
+      Await.result(holder, Duration.Inf)
+      assert(heldThroughout.get(), "the caller's claim must be held for the worker's whole run")
+      assert(!StoreLock.isHeld(mine) && !StoreLock.isHeld(busy))
+    } finally pool.shutdown()
+  }
+
   test("isHeld answers for a URI store directly under the authority root") {
     // r16 advice: the lock key's PARENT for "scheme://auth/x" is the
     // 2-segment "/scheme/auth", which HadoopObjectStore's key decoder

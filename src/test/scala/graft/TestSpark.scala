@@ -36,3 +36,47 @@ object SearchProbe {
       .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
   }
 }
+
+/** Which job group and job tags the Spark jobs of a call carry. */
+object JobProbe {
+  /** Run `body` under a fresh job group and job tag; returns the group
+    * and the (group, tags) local properties of every job that started
+    * while it ran. Marker jobs in their own groups bracket the window:
+    * the listener bus delivers in order, so every event between the two
+    * markers is one of `body`'s jobs, and none of an earlier call's. */
+  def jobsOf(spark: SparkSession)(body: => Unit): (String, Seq[(String, String)]) = {
+    val sc = spark.sparkContext
+    val stamp = System.nanoTime()
+    val (group, open, close) = (s"probe-$stamp", s"open-$stamp", s"close-$stamp")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val (opened, closed) =
+      (new java.util.concurrent.CountDownLatch(1), new java.util.concurrent.CountDownLatch(1))
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        val g = p.map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == open) opened.countDown()
+        else if (g == close) closed.countDown()
+        else if (opened.getCount == 0 && closed.getCount == 1)
+          jobs.add((g, p.map(_.getProperty("spark.job.tags")).orNull))
+      }
+    }
+    def marker(g: String): Unit = {
+      sc.setJobGroup(g, g)
+      try spark.range(1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(l)
+    try {
+      marker(open)
+      assert(opened.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      sc.setJobGroup(group, group)
+      sc.addJobTag(group)
+      try body
+      finally { sc.removeJobTag(group); sc.clearJobGroup() }
+      marker(close)
+      assert(closed.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    (group, jobs.asScala.toSeq)
+  }
+}

@@ -397,10 +397,11 @@ object ScaleCheck {
     //    SIG→AUDIT leg with the compaction module killed at the worst
     //    store moment — after the backup-move, before the swap-in (the
     //    exact on-disk state a kill -9 leaves; LifecycleBehaviors runs
-    //    the same scenario at spec scale on both control stores). The
-    //    MANDATORY dependent must route to DEPENDENCY FAILURE through
-    //    the DECODE matrix, and the RESTARTED nightly must recover the
-    //    sf1-sized store and complete with the read faces unchanged.
+    //    the same scenario at spec scale on every commit publisher).
+    //    The MANDATORY dependent must route to DEPENDENCY FAILURE
+    //    through the DECODE matrix, and the RESTARTED nightly must
+    //    recover the sf1-sized store and complete with the read faces
+    //    unchanged.
     locally {
       val killed: (SparkSession, String) => DataFrame = (s, _) => {
         val fs = new org.apache.hadoop.fs.Path(sig)

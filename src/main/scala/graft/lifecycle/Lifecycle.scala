@@ -132,8 +132,9 @@ object DependencyMatrix {
 }
 
 /** The batch lifecycle layer (E1–E3, T1–T3, X1–X5): startup / endup /
-  * continue / dependency wait / daily gate over the event-sourced
-  * [[StateStore]] or the multi-writer [[graft.state.MwStateStore]] (the [[graft.state.ControlStore]] seam), with injectable clock + sleeper.
+  * continue / dependency wait / daily gate over the [[graft.state.ControlStore]]
+  * seam (the multi-writer [[graft.state.MwStateStore]]), with injectable
+  * clock + sleeper.
   *
   * Control-flow fidelity is to `func_batch_startup` (body:472-627),
   * `proc_batch_endup` (body:671-692), `proc_batch_continue` (body:632-645),
@@ -345,14 +346,13 @@ class Lifecycle(
             // read-assign-append through the store's transaction seam:
             // two concurrent startups of one module (distinct params
             // pass the duplicate check) must not both read max=N and
-            // claim run_id N+1 — in-JVM monitor for the single-writer
-            // store, optimistic commit for the multi-writer one. The
-            // duplicate gate rides INSIDE the same transaction: the
-            // pre-check above is only the cheap fast path, and a racing
-            // same-params startup that went RUNNING during our
-            // dependency wait must abort this transition (our own
-            // WAITING event never trips the gate — it matches RUNNING
-            // only).
+            // claim run_id N+1 — the store makes it one optimistic
+            // commit. The duplicate gate rides INSIDE the same
+            // transaction: the pre-check above is only the cheap fast
+            // path, and a racing same-params startup that went RUNNING
+            // during our dependency wait must abort this transition (our
+            // own WAITING event never trips the gate — it matches
+            // RUNNING only).
             store.transactRunIdGuarded(master.module_id, start, (rid, s) =>
               mkEvent(key, s, master.module_id, ts(now), rid, params,
                 RunStatus.Running, master.sub_system, exclusiveRun, controlDate),

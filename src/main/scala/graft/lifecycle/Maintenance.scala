@@ -5,7 +5,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
-import graft.state.{BatchLogRec, ControlStore, MwStateStore, StateStore}
+import graft.state.{BatchLogRec, ControlStore, MwStateStore}
 
 /** The reference's batch-BODY shape as a reusable runner: `startup` →
   * work with a WHEN-OTHERS handler per step → `endup` with counts
@@ -89,9 +89,8 @@ object Maintenance {
       retractionFoldBelow: Long = 0L)
 
   /** The standard sweep: every data-plane store the engine can
-    * materialize, plus the control store's own upkeep (event-log
-    * compaction for the single-writer store; checkpoint + vacuum for
-    * the multi-writer one). */
+    * materialize, plus the control store's own upkeep (checkpoint +
+    * vacuum of its commit log). */
   def standardTasks(s: SparkSession, store: ControlStore, layout: StoreLayout): Seq[Task] = {
     val data = Seq(
       layout.searchIndex.map { case (p, w) =>
@@ -111,10 +110,6 @@ object Maintenance {
           graft.operators.Similarity.compactIvfIndex(s, p, layout.retractionFoldBelow)))
     ).flatten
     val control = store match {
-      case sw: StateStore => Seq(
-        Task("compact-monitor-log", () => sw.compactLog("batch_monitor_events")),
-        Task("compact-envvar-log", () => sw.compactLog("envvar_events")),
-        Task("compact-batch-log", () => sw.compactLog("batch_log")))
       case mw: MwStateStore => Seq(
         Task("checkpoint-control-log", () => { mw.checkpoint(); () }),
         Task("vacuum-control-log", () => mw.vacuum()))

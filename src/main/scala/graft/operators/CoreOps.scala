@@ -117,7 +117,7 @@ object CoreOps {
     * ROWNUM-before-ORDER-BY bug; we implement the intent: latest).
     */
   private def latestOrderPerCustomer(s: SparkSession, dir: String): DataFrame =
-    graft.state.StateStore.latestState(
+    EventOps.latestState(
       Tables.orders(s, dir).select("o_custkey", "o_orderkey", "o_orderdate"),
       Seq("o_custkey"), Seq(col("o_orderdate").desc, col("o_orderkey").desc))
 

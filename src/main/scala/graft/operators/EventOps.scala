@@ -1,12 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.sources.Tables
-import graft.state.StateStore
 
 /** Event-stream batch operators over `events` (SURVEY §2.10 T4): gap-based
   * sessionization and time-bucketed aggregation. These are the batch twins
@@ -78,13 +77,23 @@ object EventOps {
         sum(col("value").cast("decimal(18,6)")).cast(DoubleType).as("sum_value"))
       .orderBy("hour_ts", "event_type")
 
+  /** W1 latest-row-per-group view (body:158-165 intent — see SURVEY §2.5):
+    * one window pass partitioned by the key; at scale this shuffles once on
+    * the key and never collects a group to the driver. */
+  def latestState(events: DataFrame, keyCols: Seq[String], orderCols: Seq[Column]): DataFrame = {
+    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(orderCols: _*)
+    events.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
+  }
+
   // S5/X2 state view — the event-sourced batch_monitor "current state"
-  // (StateStore.latestState, the W1 window) demonstrated on the events
-  // table: treat each user's event stream as a status log and read the
-  // latest event per user. This is the exact code path Lifecycle reads
-  // for duplicate-run checks, dependency status, and resumption.
+  // (the W1 window above) demonstrated on the events table: treat each
+  // user's event stream as a status log and read the latest event per
+  // user. The control store itself answers the same question from its
+  // driver-side snapshot (MwStateStore.monitorState); ControlReadParitySpec
+  // pins the two equal.
   def qStateLatest(s: SparkSession, dir: String): DataFrame =
-    StateStore.latestState(Tables.events(s, dir),
+    latestState(Tables.events(s, dir),
         Seq("user_id"), Seq(col("ts").desc, col("event_id").desc))
       .select("user_id", "event_id", "ts", "event_type")
       .orderBy("user_id")

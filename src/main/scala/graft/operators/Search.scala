@@ -326,11 +326,16 @@ object Search {
     // compaction purged everything must be a no-op — a blind tombstone
     // there would silently hide (while the stats still count) a doc
     // later legitimately admitted under the same id, the
-    // admission-then-invisibility failure this store refuses everywhere
-    val dls = s.read.parquet(path)
+    // admission-then-invisibility failure this store refuses everywhere.
+    // ONE scan: the live (doc_id, dl) rows are at most |docIds| (a doc's
+    // posting rows all carry its one dl), so they are collected and the
+    // sidecar is written from that local frame, not a re-run of the join
+    val live = s.read.parquet(path)
       .join(broadcast(ids), Seq("doc_id"), "left_semi")
       .select("doc_id", "dl").distinct()
-    if (!dls.isEmpty) graft.sources.Stores.retractRows(s, path, dls)
+    val dls = live.collect()
+    if (dls.nonEmpty) graft.sources.Stores.retractRows(s, path,
+      s.createDataFrame(java.util.Arrays.asList(dls: _*), live.schema))
   }
 
   /** The pending-retraction stats correction, derived from the sidecar:

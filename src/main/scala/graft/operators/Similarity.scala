@@ -147,9 +147,9 @@ object Similarity {
   }
 
   def qAnnTopk(s: SparkSession, dir: String): DataFrame =
-    qAnnTopkOver(s, withNorm(Tables.embeddings(s, dir)))
+    qAnnTopkOver(withNorm(Tables.embeddings(s, dir)))
 
-  private def qAnnTopkOver(s: SparkSession, e: DataFrame): DataFrame = {
+  private def qAnnTopkOver(e: DataFrame): DataFrame = {
     val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("n_id"))
     bruteScoredOver(e)
       // null cosines never rank — [[topkCol]]'s contract, carried here
@@ -262,7 +262,7 @@ object Similarity {
     * HISTOGRAMS are ≤ 2^[[AnnPlanes]] / [[IvfLists]] rows, the query
     * probe sets are |queries| rows of ≤ [[IvfProbes]] ints — nothing
     * corpus-sized crosses the driver. */
-  private[graft] def measuredCandidatesFrom(s: SparkSession,
+  private[graft] def measuredCandidatesFrom(
       vectors: DataFrame): (Long, Double, Double) = {
     // one materialization serves the bucket histogram, the quantizer's
     // training sample, the list histogram and both probe-set jobs —
@@ -304,7 +304,7 @@ object Similarity {
   /** Measured cost-bytes per tier on this dataset — the cost column of
     * the recall store. */
   def measuredTierCost(s: SparkSession, dir: String): Map[String, Double] = {
-    val (n, lshC, ivfC) = measuredCandidatesFrom(s, Tables.embeddings(s, dir))
+    val (n, lshC, ivfC) = measuredCandidatesFrom(Tables.embeddings(s, dir))
     (annTierFaces.keySet + "brute").map(t =>
       t -> annTierCostMeasured(t, n, lshC, ivfC)).toMap
   }
@@ -378,7 +378,7 @@ object Similarity {
     // which SimilaritySpec pins.
     val e = withNorm(Tables.embeddings(s, dir)).persist()
     val (recalls, costs) = try {
-      val exact = qAnnTopkOver(s, e).persist()
+      val exact = qAnnTopkOver(e).persist()
       val rec = try {
         annTierFaces.keys.filter(_ != "brute").map { t =>
           val m = recallOf(exact, annTierFaces(t)(s, dir))
@@ -791,9 +791,9 @@ object Similarity {
     * [[trainQuantizerOnSample]] and [[ddot]], with assignment and the
     * mean re-derived sequentially. */
   def qKmeans(s: SparkSession, dir: String): DataFrame =
-    kmeansFrom(s, Tables.embeddings(s, dir))
+    kmeansFrom(Tables.embeddings(s, dir))
 
-  private[graft] def kmeansFrom(s: SparkSession, vectors: DataFrame): DataFrame =
+  private[graft] def kmeansFrom(vectors: DataFrame): DataFrame =
     assignedClusters(vectors)
       .withColumn("fp", round(col("sim") * lit(1e6)).cast(org.apache.spark.sql.types.LongType))
       .groupBy("cluster_id")
@@ -811,9 +811,9 @@ object Similarity {
     * [[assignedClusters]]' one-scan assignment. RNG-free and keyed on
     * the stable vec_id, so any rerun draws the same panel. */
   def qClusterSample(s: SparkSession, dir: String): DataFrame =
-    clusterSampleFrom(s, Tables.embeddings(s, dir))
+    clusterSampleFrom(Tables.embeddings(s, dir))
 
-  private[graft] def clusterSampleFrom(s: SparkSession, vectors: DataFrame): DataFrame = {
+  private[graft] def clusterSampleFrom(vectors: DataFrame): DataFrame = {
     val pri = conv(substring(md5(col("vec_id").cast("string").cast("binary")), 1, 8), 16, 10)
       .cast("double")
     assignedClusters(vectors)
@@ -834,12 +834,12 @@ object Similarity {
     * assignment, and SimilaritySpec proves the stored probe returns
     * these results verbatim. */
   def qAnnIvf(s: SparkSession, dir: String): DataFrame =
-    qAnnIvfFrom(s, Tables.embeddings(s, dir))
+    qAnnIvfFrom(Tables.embeddings(s, dir))
 
   /** [[qAnnIvf]] over an arbitrary (vec_id, embedding[, …]) frame — the
     * in-query IVF face SimilaritySpec runs against constructed corpora
     * (e.g. the zero-norm NaN-query equivalence case). */
-  private[graft] def qAnnIvfFrom(s: SparkSession, vectors: DataFrame): DataFrame = {
+  private[graft] def qAnnIvfFrom(vectors: DataFrame): DataFrame = {
     val e = withNorm(vectors)
     val centroids = trainQuantizer(e)
     val corpus = e.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
@@ -1347,10 +1347,10 @@ object Similarity {
     * correctness of the machinery rides a differential Expected twin
     * (DuckDB cannot replay codebook training). */
   def qAnnPq(s: SparkSession, dir: String): DataFrame =
-    qAnnPqFrom(s, Tables.embeddings(s, dir))
+    qAnnPqFrom(Tables.embeddings(s, dir))
 
-  private[graft] def qAnnPqFrom(s: SparkSession, vectors: DataFrame): DataFrame =
-    explodeRanks(pqAdcTop(s, vectors, 5))
+  private[graft] def qAnnPqFrom(vectors: DataFrame): DataFrame =
+    explodeRanks(pqAdcTop(vectors, 5))
 
   /** ONE materialized normalized-corpus frame per PQ-family query (r22,
     * the r21 verdict's prescribed writeAnnRecallStore treatment, guide
@@ -1378,7 +1378,7 @@ object Similarity {
     * their shared Expected twin machinery. One corpus scan over
     * 16-byte codes, broadcast query LUTs, partial-aggregate top-k —
     * k before the shuffle. */
-  private def pqAdcTop(s: SparkSession, vectors: DataFrame, k: Int): DataFrame = {
+  private def pqAdcTop(vectors: DataFrame, k: Int): DataFrame = {
     val e = pqSharedNorm(vectors)
     pqAdcTopOver(e, trainPqOnSample(pqSample(e)), k)
   }
@@ -1467,16 +1467,16 @@ object Similarity {
     * pipeline sequentially, and SimilaritySpec measures recall against
     * brute force. */
   def qIvfPq(s: SparkSession, dir: String): DataFrame =
-    qIvfPqFrom(s, Tables.embeddings(s, dir))
+    qIvfPqFrom(Tables.embeddings(s, dir))
 
-  private[graft] def qIvfPqFrom(s: SparkSession, vectors: DataFrame): DataFrame =
-    explodeRanks(ivfPqTop(s, vectors, 5))
+  private[graft] def qIvfPqFrom(vectors: DataFrame): DataFrame =
+    explodeRanks(ivfPqTop(vectors, 5))
 
   /** The IVF-pruned ADC scan aggregated to top-`k` per query — ONE
     * body for the composed top-5 face ([[qIvfPq]], k=5) and the
     * complete serve path's shortlist ([[qIvfPqRefine]],
     * k=[[PqRefineR]]). */
-  private def ivfPqTop(s: SparkSession, vectors: DataFrame, k: Int): DataFrame =
+  private def ivfPqTop(vectors: DataFrame, k: Int): DataFrame =
     ivfPqTopOver(pqSharedNorm(vectors), k)
 
   /** [[ivfPqTop]] over an already-materialized normalized frame — the

@@ -342,7 +342,7 @@ object TextOps {
     * ([[graft.verify.Expected.bpeRows]]) — shared trainer and per-word
     * encoder, independently re-derived word counts and aggregation. */
   def qTokenBpe(s: SparkSession, dir: String): DataFrame =
-    tokenBpeOf(s, Tables.documents(s, dir))
+    tokenBpeOf(Tables.documents(s, dir))
 
   /** Materialize a trained BPE merge table as a stored MODEL — the
     * "train once, encode forever" artifact a deployment actually ships
@@ -495,7 +495,7 @@ object TextOps {
 
   /** [[qTokenBpe]] over an arbitrary (doc_id, text) frame — the seam
     * TextOpsSpec drives constructed corpora through. */
-  private[graft] def tokenBpeOf(s: SparkSession, docs: DataFrame): DataFrame =
+  private[graft] def tokenBpeOf(docs: DataFrame): DataFrame =
     tokenBpeWith(docs, bpeMergesOf(docs))
 
   private def tokenBpeWith(docs: DataFrame,

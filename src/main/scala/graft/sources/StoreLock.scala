@@ -51,14 +51,14 @@ import graft.state.TxnLog
   *    for no other.
   *  - Contention waits up to `-Dgraft.store.lock.waitMs` (default 0 =
   *    fail fast) polling the claim, then fails loudly.
-  *  - A CLEAN exit releases (finally + a JVM shutdown hook, the
-  *    [[graft.state.StateStore]] discipline); a kill -9 leaves a stale
-  *    lock whose payload says who died — the next writer refuses loudly
-  *    and an operator (or an orchestrator restart policy that has
-  *    verified the holder is gone) clears it with [[forceBreak]]. No
-  *    lease auto-expiry: takeover without fencing would let a stalled—
-  *    not dead—holder resume mid-swap into a store another writer now
-  *    owns, the exact silent interleaving this class exists to prevent.
+  *  - A CLEAN exit releases (finally + a JVM shutdown hook); a kill -9
+  *    leaves a stale lock whose payload says who died — the next writer
+  *    refuses loudly and an operator (or an orchestrator restart policy
+  *    that has verified the holder is gone) clears it with
+  *    [[forceBreak]]. No lease auto-expiry: takeover without fencing
+  *    would let a stalled—not dead—holder resume mid-swap into a store
+  *    another writer now owns, the exact silent interleaving this class
+  *    exists to prevent.
   *  - READERS never lock: every read face is crash-consistent through
   *    `recover()` + atomic directory swaps and tombstone subtraction;
   *    the lock serializes MUTATIONS only.

@@ -6,23 +6,19 @@ import java.time.Instant
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The control-plane surface [[graft.lifecycle.Lifecycle]] runs against —
-  * the seam between ONE batch-orchestration semantics and TWO storage
-  * disciplines:
-  *
-  *  - [[StateStore]]: single-writer parquet event logs, cross-process
-  *    exclusion by lock file, in-JVM atomicity by monitor — the
-  *    one-driver deployment.
-  *  - [[MwStateStore]]: optimistic [[TxnLog]] commits, version-as-seq,
-  *    serializable read-modify-write — any number of concurrent
-  *    drivers.
+/** The control-plane surface [[graft.lifecycle.Lifecycle]] runs against.
+  * [[MwStateStore]] implements it — optimistic [[TxnLog]] commits,
+  * version-as-seq, serializable read-modify-write, any number of
+  * concurrent drivers — and forwarding decorators wrap it (a timing
+  * wrapper that measures each call, say) without touching the
+  * lifecycle.
   *
   * The two seq-sensitive operations are deliberately TRANSACTION-shaped
-  * rather than lock-shaped (`nextSeq` + raw append would bake the
+  * rather than lock-shaped (`nextSeq` + raw append would bake a
   * single-writer design into every caller): the store is handed a
   * constructor function and decides itself how to make the
   * read-assign-append atomic. Constructor functions must be pure — the
-  * multi-writer store re-invokes them on every commit retry.
+  * store re-invokes them on every commit retry.
   */
 trait ControlStore extends AutoCloseable {
   def spark: SparkSession
@@ -89,8 +85,8 @@ trait ControlStore extends AutoCloseable {
   def updEnv(name: String, value: String): Unit
 
   /** func_get_run_command (body:994-1009): lookup; ANY failure → "0"
-    * (the reference's WHEN OTHERS contract, body:1006-1008). Shared
-    * default — both stores serve it from [[runCommands]]. */
+    * (the reference's WHEN OTHERS contract, body:1006-1008), served
+    * from [[runCommands]]. */
   def getRunCommand(batchName: String): String =
     try {
       val rows = runCommands.filter(col("batch_name") === batchName)
@@ -108,7 +104,7 @@ trait ControlStore extends AutoCloseable {
 
 object ControlStore {
   /** `NVL(MAX(run_id), 0)` for (module, UTC day of `at`) — THE run-id
-    * scope both stores share. Epoch-day compare, NOT `date_trunc`
+    * scope. Epoch-day compare, NOT `date_trunc`
     * (which truncates in the session time zone and would never match the
     * UTC literal on a non-UTC session — see Lifecycle.getRunId's
     * original derivation). Filter → collect → driver max, so no

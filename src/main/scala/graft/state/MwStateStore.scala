@@ -20,17 +20,17 @@ private[state] final case class LogPurge(horizon: java.sql.Timestamp)
 
 /** Multi-writer [[ControlStore]]: the full control plane (monitor
   * events, envvar config, dimension tables, batch log, mail audit)
-  * under TRUE concurrent drivers — the transactional swap the
-  * single-writer [[StateStore]]'s scaladoc promises.
+  * under TRUE concurrent drivers — the engine's one control plane, in
+  * place of the reference's Oracle control tables.
   *
   * Design (reference semantics: pkg_batch_util_body.sql:170-182 run-id
   * assignment, 192-214 autonomous status writes, 861-875 envvar reads):
   *
   *  - Every mutation is one [[TxnLog]] commit; **the commit version IS
   *    the event's `event_seq`**. Versions are dense and totally ordered
-  *    across writers, so the single-assigner AtomicLong of the
-  *    single-writer store is replaced by the log's own serialization —
-  *    no lock file, no writer role, no handover.
+  *    across writers, so the log's own serialization replaces a
+  *    single-assigner counter — no lock file, no writer role, no
+  *    handover.
   *  - Rows ride INSIDE the commit payload (a kind tag + one JSON line
   *    per row): control-plane rows are a few hundred bytes, so the
   *    payload-as-data design makes an append one tmp-write + one atomic
@@ -53,7 +53,7 @@ private[state] final case class LogPurge(horizon: java.sql.Timestamp)
   *    commit. Readers filter `run_date >= max(horizon)`; the next
   *    checkpoint materializes the filtered rows and folds markers to
   *    their max — immutable history, same observable semantics as the
-  *    single-writer rewrite-in-place.
+  *    reference's chunked DELETE (body:926-939).
   *  - Every K commits the committer writes a consolidated parquet
   *    CHECKPOINT (all kinds, seqs baked in) and publishes it by atomic
   *    directory rename; a cold reader loads the newest checkpoint plus
@@ -395,8 +395,9 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
   def monitorEvents: DataFrame = kindFrame("monitor")
   def envvarEvents: DataFrame = kindFrame("envvar")
 
-  /** Current batch_monitor state — the W1 view of the single-writer
-    * store (latest event per run_key), kept up to date in the snapshot. */
+  /** Current batch_monitor state — the W1 view (latest event per
+    * run_key, `EventOps.latestState`'s window form), kept up to date in
+    * the snapshot. */
   def monitorState: DataFrame = frame("monitor", current().runs.values)
 
   /** Append a monitor event; the caller's `event_seq` is IGNORED — the
@@ -501,8 +502,8 @@ final class MwStateStore(val spark: SparkSession, val dir: String,
 
   /** S6 retention as an EVENT: immutable commits can't rewrite history,
     * so the purge appends a horizon marker; reads filter, the next
-    * checkpoint materializes (same observable rows as the single-writer
-    * rewrite, no 5000-row delete loop, no backup/swap window). */
+    * checkpoint materializes (same observable rows as a rewrite, no
+    * 5000-row delete loop, no backup/swap window). */
   def purgeBatchLog(horizon: java.sql.Timestamp): Unit =
     putKind("logpurge", Seq(LogPurge(horizon)))
 

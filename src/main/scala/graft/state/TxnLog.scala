@@ -4,9 +4,9 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-/** Optimistic-concurrency commit log — the multi-writer seam the
-  * single-writer [[StateStore]] documents (its `_writer.lock` forbids
-  * concurrent drivers; this log welcomes them).
+/** Optimistic-concurrency commit log — the multi-writer seam under
+  * [[MwStateStore]]: any number of concurrent drivers commit to one
+  * log, with no lock file and no writer role.
   *
   * Protocol (the public Delta-protocol shape, re-expressed on plain
   * java.nio for the driver-local control plane):
@@ -32,8 +32,8 @@ import scala.jdk.CollectionConverters._
   * fully-written payload, failing if the version exists — is the ONE
   * filesystem-specific piece, factored behind [[CommitPublisher]];
   * versioning, retry, floor, checkpointing and vacuum semantics are
-  * publisher-independent. In-repo implementations (both torture-proven
-  * by the same suites):
+  * publisher-independent. In-repo implementations (each torture-proven
+  * by the same `TxnLogBehaviors` suite):
   *
   *  - [[TxnLog.HardLink]] (default): `Files.createLink` — POSIX link(2)
   *    is atomic and fails EEXIST. Plain-file rename alternatives were
@@ -42,19 +42,16 @@ import scala.jdk.CollectionConverters._
   *    on a FILE maps to rename(2), which silently REPLACES an existing
   *    target — either would let two writers both believe they own a
   *    version.
-  *  - [[TxnLog.DirRename]]: the atomic NO-OVERWRITE rename that rename(2)
-  *    does provide — for DIRECTORIES: renaming a staging dir (payload
-  *    fully written inside) onto an existing non-empty directory fails
-  *    ENOTEMPTY atomically, so exactly one writer's staging becomes the
-  *    commit dir. For filesystems without link(2) (or where hard links
-  *    are administratively disabled).
+  *  - [[TxnLog.ConditionalPut]]: one object-store PUT with
+  *    `If-None-Match: *`, bound to a filesystem emulation
+  *    ([[TxnLog.FsObjectStore]]) or to a bucket over HTTP, plain or
+  *    SigV4-signed ([[graft.state.HttpBucket.HttpObjectStore]]).
   *
   * Deployment scope: writers must share storage where the chosen
-  * publisher's primitive is atomic — POSIX mounts for the two
-  * filesystem publishers (NFS implements LINK and RENAME atomically
-  * server-side; publish-after-full-write keeps torn reads impossible
-  * even under client caching), or an object store with conditional PUT
-  * for [[TxnLog.ConditionalPut]] (S3 `If-None-Match: *` / GCS
+  * publisher's primitive is atomic — POSIX mounts for the hard link
+  * (NFS implements LINK atomically server-side; publish-after-full-write
+  * keeps torn reads impossible even under client caching), or an
+  * object store with conditional PUT for [[TxnLog.ConditionalPut]] (S3 `If-None-Match: *` / GCS
   * `ifGenerationMatch=0`), shipped here against the injectable
   * [[TxnLog.ObjectStore]] seam with a filesystem-backed emulation and
   * torture-proven like the rest. The remaining storage family, HDFS,
@@ -74,7 +71,7 @@ import scala.jdk.CollectionConverters._
 /** The filesystem-specific third of the commit protocol: how a version
   * is durably REPRESENTED under `_txn/` and atomically CLAIMED. The
   * contract every implementation must honor (the torture suites drive
-  * it for both in-repo publishers):
+  * it for every in-repo publisher):
   *
   *  - [[publish]] returns true iff THIS caller made `v` exist, and a
   *    published version is complete — no reader may ever observe a
@@ -115,8 +112,9 @@ trait CommitPublisher {
 final class TxnLog(val dir: String,
     val publisher: CommitPublisher = TxnLog.HardLink) {
 
-  // same driver-local contract (and reason) as StateStore: java.nio on a
-  // remote URI silently resolves a literal local path — fail construction
+  // the control plane is driver-local: java.nio on a remote URI
+  // ("s3a://…", "hdfs://…") silently resolves a literal local path, so
+  // the log would read as empty — fail construction instead
   require(!dir.matches("^[A-Za-z][A-Za-z0-9+.-]*://.*") && !dir.startsWith("file:"),
     s"TxnLog requires a driver-local filesystem path, got '$dir'")
 
@@ -262,97 +260,6 @@ object TxnLog {
           catch { case _: java.io.IOException => false } // already gone
         }
         .foreach(p => Files.deleteIfExists(p))
-      finally s.close()
-    }
-  }
-
-  /** Atomic DIRECTORY-rename publisher — for filesystems without usable
-    * hard links. rename(2) silently replaces an existing FILE target
-    * (which is why a plain-file move can't claim a version) but fails
-    * ENOTEMPTY on an existing NON-EMPTY DIRECTORY target, atomically —
-    * so staging the payload INSIDE a directory and renaming the
-    * directory is an atomic fail-if-exists claim with the same
-    * no-torn-reads property as the link (the payload is fully on disk
-    * before the rename makes the directory appear; our protocol never
-    * creates an empty commit dir, so the replaced-if-empty edge cannot
-    * arise from a protocol participant). A commit is a DIRECTORY
-    * `<v>.commit/` containing one `payload` file. Same POSIX/NFS scope
-    * as the hard link; the kill -9 torture suite drives this publisher
-    * through the same density audit. */
-  object DirRename extends CommitPublisher {
-    def publish(txnDir: Path, v: Long, payload: Array[Byte]): Boolean = {
-      val tmp = Files.createTempDirectory(txnDir, ".stage-")
-      try {
-        Files.write(tmp.resolve("payload"), payload)
-        try {
-          Files.move(tmp, txnDir.resolve(commitName(v)),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-          case _: java.nio.file.DirectoryNotEmptyException => false
-          // staging swept by a racing vacuum (the HardLink case): lost
-          // this attempt honestly; the commit loop re-stages
-          case _: java.nio.file.NoSuchFileException => false
-          case e: java.nio.file.FileSystemException
-            // ENOTEMPTY surfaces as the generic FileSystemException on
-            // some providers; only a taken version reads as a loss —
-            // anything else (EXDEV, EIO) stays loudly fatal
-            if Files.exists(txnDir.resolve(commitName(v))) => false
-        }
-      } finally {
-        // failed attempt: remove staging (payload file first, then dir)
-        if (Files.isDirectory(tmp)) {
-          Files.deleteIfExists(tmp.resolve("payload"))
-          Files.deleteIfExists(tmp)
-        }
-      }
-    }
-
-    def read(txnDir: Path, v: Long): Array[Byte] =
-      Files.readAllBytes(txnDir.resolve(commitName(v)).resolve("payload"))
-
-    def commitVersion(name: String): Option[Long] = parseCommitName(name)
-
-    /** Atomic delete: rename the commit dir OUT of the commit namespace
-      * first (`.trash-` prefix — a rename is atomic), THEN remove its
-      * contents. The naive payload-first delete had a crash window that
-      * left a payload-less `<v>.commit/` directory, which
-      * [[commitVersion]] still parses as a commit (so reads throw until
-      * a re-vacuum) AND — worse — voids the publish premise, because
-      * rename(2) silently REPLACES an EMPTY directory target, letting a
-      * later writer re-claim the vacuumed version. Renaming first means
-      * at every instant `<v>.commit/` either exists complete or is gone;
-      * a crash mid-delete leaves only `.trash-` residue for
-      * [[sweepStaging]]. The trash name is uniqued so concurrent
-      * vacuums of the same version cannot collide. */
-    def delete(txnDir: Path, v: Long): Unit = {
-      val d = txnDir.resolve(commitName(v))
-      val trash = txnDir.resolve(
-        s".trash-$v-${java.util.UUID.randomUUID().toString.take(8)}")
-      try Files.move(d, trash, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.NoSuchFileException => return } // idempotent
-      Files.deleteIfExists(trash.resolve("payload"))
-      Files.deleteIfExists(trash)
-    }
-
-    def sweepStaging(txnDir: Path, cutoffMs: Long): Unit = {
-      val s = Files.list(txnDir)
-      try s.iterator().asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          // .trash- residue is a crashed vacuum's already-logically-
-          // deleted commit — safe to remove at ANY age (the age guard
-          // protects only live writers' in-flight STAGING)
-          n.startsWith(".trash-") || (n.startsWith(".stage-") && {
-            try Files.getLastModifiedTime(p).toMillis < cutoffMs
-            catch { case _: java.io.IOException => false } // already gone
-          })
-        }
-        .foreach { p =>
-          Files.deleteIfExists(p.resolve("payload"))
-          Files.deleteIfExists(p)
-        }
       finally s.close()
     }
   }
@@ -555,14 +462,15 @@ object TxnLog {
 
   /** S3/GCS-style conditional-put publisher: a commit is one OBJECT
     * `<v>.commit` whose existence is claimed by a single put-if-absent
-    * call on the injected [[ObjectStore]]. Contrast with the POSIX
-    * publishers: there is no publisher-level staging at all — stage
+    * call on the injected [[ObjectStore]]. Contrast with the hard-link
+    * publisher: there is no publisher-level staging at all — stage
     * residue, sweep ordering and rename/link races are filesystem
     * problems the object-store contract erases. A deployment binds the
     * seam to its SDK (S3 `PutObject` + `If-None-Match: *`, GCS insert
     * with `ifGenerationMatch=0`); in-repo it binds to
-    * [[FsObjectStore]], which is what the kill -9 torture and the full
-    * lifecycle matrix run against. */
+    * [[FsObjectStore]] (the `StoreLock` default) and to the HTTP bucket,
+    * plain and signed; the signed binding also carries the full
+    * lifecycle matrix. */
   final class ConditionalPut(store: ObjectStore) extends CommitPublisher {
     def publish(txnDir: Path, v: Long, payload: Array[Byte]): Boolean =
       store.putIfAbsent(txnDir.resolve(commitName(v)), payload)
@@ -593,7 +501,6 @@ object TxnLog {
     * cross-process tortures race real network PUTs against one bucket. */
   def publisherNamed(name: String): CommitPublisher = name match {
     case "hardlink" => HardLink
-    case "dirrename" => DirRename
     case "conditionalput" => ConditionalPutFs
     case http if http.startsWith("http=") =>
       new ConditionalPut(new graft.state.HttpBucket.HttpObjectStore(
@@ -614,6 +521,6 @@ object TxnLog {
           s"malformed sigv4 publisher token '$signed'")
       }
     case other => throw new IllegalArgumentException(
-      s"unknown commit publisher '$other' (hardlink | dirrename | conditionalput | http=<uri> | sigv4=<uri>;ak;sk[;region;service])")
+      s"unknown commit publisher '$other' (hardlink | conditionalput | http=<uri> | sigv4=<uri>;ak;sk[;region;service])")
   }
 }

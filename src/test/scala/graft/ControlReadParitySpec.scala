@@ -12,12 +12,13 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lifecycle.Lifecycle
-import graft.state.{ControlStore, MonitorEvent, MwStateStore, StateStore}
+import graft.operators.EventOps
+import graft.state.{ControlStore, MonitorEvent, MwStateStore}
 
 /** The multi-writer store's driver-side control reads against the
   * window/aggregate forms they replace, on generated monitor event sets
   * appended through a real [[MwStateStore]]:
-  *  - the snapshot's latest state equals `StateStore.latestState` (the
+  *  - the snapshot's latest state equals `EventOps.latestState` (the
   *    W1 window, highest event_seq per run_key);
   *  - [[ControlStore.maxRunId]] equals `coalesce(max(run_id), 0)` over
   *    the window view;
@@ -114,7 +115,7 @@ class ControlReadParitySpec extends AnyFunSuite {
 
         // ---- reference side: the window forms ------------------------------
         import spark.implicits._
-        val window = StateStore.latestState(events.toDF(), Seq("run_key"),
+        val window = EventOps.latestState(events.toDF(), Seq("run_key"),
           Seq(col("event_seq").desc)).cache()
         val refLatest = window.collect().map(_.toSeq).toSet
         val queries = cases.zipWithIndex.map { case (c, i) =>

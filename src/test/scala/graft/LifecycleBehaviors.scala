@@ -11,14 +11,17 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.lifecycle._
 import graft.state._
 
-/** Store-GENERIC lifecycle semantics (SURVEY §5.3): every behavior here
-  * runs against BOTH control stores — [[LifecycleSpec]] binds the
-  * single-writer StateStore, [[MwLifecycleFullSpec]] the multi-writer
-  * MwStateStore (with a small checkpoint interval, so checkpoints fire
-  * MID-scenario and the read paths cross checkpoint boundaries). A
-  * behavior that passes on one store and fails on the other is a
-  * ControlStore seam violation by definition. Store-SPECIFIC semantics
-  * (writer locks, takeover, compaction) live in the concrete suites. */
+/** Store-GENERIC lifecycle semantics (SURVEY §5.3), written once over
+  * the [[ControlStore]] seam and run once per commit publisher:
+  * [[MwLifecycleFullSpec]] (local hard link),
+  * [[ConditionalPutMwLifecycleSpec]] (conditional put over the
+  * filesystem emulation), [[HttpPutMwLifecycleSpec]] (unsigned HTTP
+  * bucket) and [[SignedHttpPutMwLifecycleSpec]] (SigV4-signed HTTP
+  * bucket). Each binds the multi-writer MwStateStore with a small
+  * checkpoint interval, so checkpoints fire MID-scenario and the read
+  * paths cross checkpoint boundaries. Store-SPECIFIC semantics (racing
+  * drivers, checkpoint/vacuum, time travel) live in [[MwLifecycleSpec]]
+  * and [[MwStateStoreSpec]]. */
 trait LifecycleBehaviors extends AnyFunSuite {
 
   protected lazy val spark = TestSpark.spark
@@ -425,7 +428,7 @@ trait LifecycleBehaviors extends AnyFunSuite {
     // the DECODE matrix, and the restarted DAG's compaction RECOVERS
     // the store and completes with the read face intact — the
     // crash-consistency contract and the dependency matrix proven as
-    // one scenario, on both control stores.
+    // one scenario, on every commit publisher.
     val (store, _, _, lc) = fixture()
     val sig = Files.createTempDirectory("graft-orch-kill").toString + "/sig"
     val docs = graft.sources.Tables.documents(spark, TestSpark.sfDir)

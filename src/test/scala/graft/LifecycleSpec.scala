@@ -2,77 +2,31 @@ package graft
 
 import java.nio.file.Files
 
+import org.scalatest.funsuite.AnyFunSuite
+
 import graft.lifecycle._
 import graft.state._
 
-/** The full [[LifecycleBehaviors]] matrix on the single-writer
-  * StateStore, plus the semantics that ONLY exist there: the writer
-  * lock (reject/takeover), cross-restart seq re-sync, and event-log
-  * compaction. */
-class LifecycleSpec extends LifecycleBehaviors {
+/** Lifecycle-adjacent semantics that need no concurrent drivers: the
+  * envvar store across a restart, and the Spark progress listener. The
+  * store-generic matrix lives in [[LifecycleBehaviors]]; racing drivers
+  * in [[MwLifecycleSpec]]. */
+class LifecycleSpec extends AnyFunSuite {
 
-  def makeStore(dir: String): ControlStore = new StateStore(spark, dir)
+  private val spark = TestSpark.spark
 
   test("envvar latest-value survives a store restart (seq spans all logs)") {
     val dir = Files.createTempDirectory("graft-restart").toString
-    val s1 = new StateStore(spark, dir)
+    val s1 = new MwStateStore(spark, dir)
     s1.updEnv("BATCH_CONTROL_DATE", "12-Aug-2026")
     s1.updEnv("BATCH_CONTROL_DATE", "13-Aug-2026")
     s1.close()
     // restart: a fresh store over the same dir must continue ABOVE the
     // existing envvar seqs even with zero monitor events written
-    val s2 = new StateStore(spark, dir)
+    val s2 = new MwStateStore(spark, dir)
     s2.updEnv("BATCH_CONTROL_DATE", "14-Aug-2026")
     assert(s2.getEnv("BATCH_CONTROL_DATE") === Some("14-Aug-2026"))
     s2.close()
-  }
-
-  test("a second concurrent writer fails loudly instead of interleaving") {
-    val dir = Files.createTempDirectory("graft-writers").toString
-    val s1 = new StateStore(spark, dir)
-    s1.updEnv("BATCH_FLG_DBG", "Y") // s1 now holds the writer lock
-    val s2 = new StateStore(spark, dir)
-    assert(s2.getEnv("BATCH_FLG_DBG") === Some("Y"), "reads need no lock")
-    val ex = intercept[IllegalStateException] { s2.updEnv("BATCH_FLG_DBG", "N") }
-    assert(ex.getMessage.contains("another writer"))
-    assert(s1.getEnv("BATCH_FLG_DBG") === Some("Y"), "failed writer changed nothing")
-    s1.close() // release → s2 may now take over as the single writer
-    s2.updEnv("BATCH_FLG_DBG", "N")
-    assert(s2.getEnv("BATCH_FLG_DBG") === Some("N"))
-    s2.close()
-  }
-
-  test("writer takeover re-syncs the event sequence above the prior writer") {
-    // The interleaving the lock exists to prevent: a store that lost the
-    // writer race must not assign seqs at or below events the winner
-    // appended while it waited.
-    val dir = Files.createTempDirectory("graft-takeover").toString
-    val s1 = new StateStore(spark, dir)
-    s1.updEnv("BATCH_CONTROL_DATE", "01-Aug-2026") // seq 1
-    val s2 = new StateStore(spark, dir)
-    intercept[IllegalStateException] { s2.updEnv("BATCH_CONTROL_DATE", "02-Aug-2026") }
-    s1.updEnv("BATCH_CONTROL_DATE", "03-Aug-2026") // seq 2 while s2 waits
-    s1.close()
-    s2.updEnv("BATCH_CONTROL_DATE", "04-Aug-2026") // must land ABOVE seq 2
-    assert(s2.getEnv("BATCH_CONTROL_DATE") === Some("04-Aug-2026"),
-      "the takeover writer's event must win the latest-value view")
-    val seqs = s2.envvarEvents.select("event_seq").collect().map(_.getLong(0)).sorted
-    // exact sequence: the takeover writer must land ABOVE seq 2 (a
-    // `last === max` check on a sorted array would be a tautology)
-    assert(seqs.toSeq === Seq(1L, 2L, 3L),
-      s"takeover must continue the sequence as 1,2,3 — got ${seqs.mkString(",")}")
-    s2.close()
-  }
-
-  test("event-log compaction preserves content and seq continuity") {
-    val store = new StateStore(spark, Files.createTempDirectory("graft-compact").toString)
-    (1 to 5).foreach(i => store.updEnv("K", s"v$i")) // 5 small append files
-    val before = store.envvarEvents.orderBy("event_seq").collect().toSeq
-    store.compactLog("envvar_events")
-    assert(store.envvarEvents.orderBy("event_seq").collect().toSeq === before)
-    assert(store.getEnv("K") === Some("v5"))
-    intercept[IllegalArgumentException](store.compactLog("batch_master"))
-    store.close()
   }
 
   test("progress listener reports completed stages") {

@@ -10,7 +10,8 @@ import graft.state._
 
 /** S7 loader-file manifest + S8 notifier/mail-audit semantics —
   * store-generic (the Mailer and loader lookups run against the
-  * ControlStore seam), so the matrix binds to BOTH stores below. */
+  * ControlStore seam), bound below to the control store with and
+  * without checkpoints firing mid-test. */
 trait MailerLoaderBehaviors extends AnyFunSuite {
   protected lazy val spark = TestSpark.spark
 
@@ -134,12 +135,13 @@ trait MailerLoaderBehaviors extends AnyFunSuite {
   }
 }
 
+/** The matrix with the default checkpoint interval: every read is
+  * answered from the commit tail alone. */
 class MailerLoaderSpec extends MailerLoaderBehaviors {
-  def makeStore(dir: String): ControlStore = new StateStore(spark, dir)
+  def makeStore(dir: String): ControlStore = new MwStateStore(spark, dir)
 }
 
-/** Same matrix over the multi-writer store (small K → checkpoints fire
-  * mid-test). */
+/** Same matrix with a small K, so checkpoints fire mid-test. */
 class MwMailerLoaderSpec extends MailerLoaderBehaviors {
   def makeStore(dir: String): ControlStore = new MwStateStore(spark, dir, checkpointEvery = 3)
 }

@@ -10,8 +10,8 @@ import graft.state._
 
 /** The maintenance batch (lifecycle/Maintenance): the reference's
   * startup → catch-log-continue → endup shape over real store upkeep,
-  * proven on both control stores with REAL data-plane stores being
-  * compacted mid-batch. */
+  * proven over the control store on local and object storage, with REAL
+  * data-plane stores being compacted mid-batch. */
 class MaintenanceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -130,21 +130,6 @@ class MaintenanceSpec extends AnyFunSuite {
       logged(0).getAs[String]("message") === "boom failed: store is on fire")
   }
 
-  test("single-writer store upkeep tasks compact its event logs in-batch") {
-    val store = new StateStore(spark, Files.createTempDirectory("graft-maint3").toString)
-    val lc = fixture(store)
-    (1 to 4).foreach(i => store.updEnv("K", s"v$i"))
-    val before = store.envvarEvents.orderBy("event_seq").collect().toSeq
-    val tasks = Maintenance.standardTasks(spark, store, Maintenance.StoreLayout())
-    assert(tasks.map(_.name) === Seq("compact-monitor-log", "compact-envvar-log",
-      "compact-batch-log"))
-    val report = Maintenance.runBatch(lc, "MAINT", tasks).toOption.get
-    assert(report.healthy)
-    assert(store.envvarEvents.orderBy("event_seq").collect().toSeq === before,
-      "compaction preserves events exactly")
-    store.close()
-  }
-
   test("startup failures surface as Left, not as a task failure") {
     val store = new MwStateStore(spark, Files.createTempDirectory("graft-maint4").toString)
     val lc = fixture(store)
@@ -214,13 +199,15 @@ class MaintenanceSpec extends AnyFunSuite {
       assert(state(1)._3 === spark.read.parquet(sig).count() &&
         state(2)._3 === spark.read.parquet(idx).count(),
         "endup must record each store's surviving rows")
-      store match { case sw: StateStore => sw.close(); case _ => () }
     }
+    // the control store on local storage (hard-link commits) and on an
+    // object store (conditional-put commits)
     drive(new MwStateStore(spark, Files.createTempDirectory("graft-maint5").toString))
-    drive(new StateStore(spark, Files.createTempDirectory("graft-maint6").toString))
+    drive(new MwStateStore(spark, Files.createTempDirectory("graft-maint6").toString,
+      publisher = TxnLog.ConditionalPutFs))
   }
 
-  /** Tiny helper: land a scoped batch in both stores the way the ingest
+  /** Tiny helper: land a scoped batch in both data stores the way the ingest
     * stream does (batch-scoped partitions under one id). */
   private object Pipeline2 {
     def ingest(s: org.apache.spark.sql.SparkSession, sig: String, idx: String,

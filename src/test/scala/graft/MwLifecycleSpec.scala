@@ -22,11 +22,10 @@ class MwLifecycleFullSpec extends LifecycleBehaviors {
     new MwStateStore(spark, dir, checkpointEvery = 7)
 }
 
-/** The batch lifecycle over the MULTI-WRITER store: the same E1/E2/X1-X3
-  * semantics LifecycleSpec proves on the single-writer store, running as
+/** The batch lifecycle over the MULTI-WRITER store: the E1/E2/X1-X3
+  * semantics [[LifecycleBehaviors]] proves for one driver, running as
   * genuinely concurrent drivers — each its own Lifecycle over its own
-  * MwStateStore instance on one shared directory. The single-writer spec
-  * proves a second writer FAILS; this spec proves a second writer
+  * MwStateStore instance on one shared directory. A second writer
   * WORKS, with run ids, seqs, duplicate gates, and status transitions
   * staying correct under the race. */
 class MwLifecycleSpec extends AnyFunSuite {

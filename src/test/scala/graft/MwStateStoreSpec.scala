@@ -12,8 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.state.{EnvVarEvent, MonitorEvent, MwStateStore, TxnLog}
 
-/** Multi-writer control plane (state/TxnLog + state/MwStateStore): the
-  * transactional swap the single-writer StateStore documents. The specs
+/** The control plane (state/TxnLog + state/MwStateStore). The specs
   * here are the concurrency claims themselves — dense version-as-seq
   * under racing writers, serializable run-id assignment, crash-invisible
   * staging, checkpoint/vacuum equivalence — run with each "driver" as
@@ -23,7 +22,7 @@ class MwStateStoreSpec extends TxnLogBehaviors {
   protected lazy val spark = TestSpark.spark
 
   // the default publisher's binding of the protocol behaviors; the
-  // directory-rename publisher runs the same matrix in TxnLogDirRenameSpec
+  // conditional-put bindings run the same matrix in TxnLogBehaviors.scala
   def publisher: graft.state.CommitPublisher = TxnLog.HardLink
   def publisherName: String = "hardlink"
   def plantCrashedStaging(txnDir: java.nio.file.Path): java.nio.file.Path =

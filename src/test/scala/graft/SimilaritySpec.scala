@@ -444,7 +444,7 @@ class SimilaritySpec extends AnyFunSuite {
     val path = java.nio.file.Files.createTempDirectory("graft-ivfnan").toString + "/idx"
     val ansiErr = intercept[Throwable] {
       val ansiVecs = { import spark.implicits._; rows.toDF("vec_id", "embedding") }
-      Similarity.qAnnIvfFrom(spark, ansiVecs).collect()
+      Similarity.qAnnIvfFrom(ansiVecs).collect()
     }
     assert(Iterator.iterate(ansiErr)(_.getCause).takeWhile(_ != null).take(5)
       .exists(t => String.valueOf(t.getMessage).contains("DIVIDE_BY_ZERO")),
@@ -460,7 +460,7 @@ class SimilaritySpec extends AnyFunSuite {
         if (r.isNullAt(3)) None
         else Some(java.lang.Double.doubleToLongBits(r.getDouble(3))))).toSeq
     val stored = bits(Similarity.qIvfProbeStored(s2, path))
-    val inQuery = bits(Similarity.qAnnIvfFrom(s2, vecs))
+    val inQuery = bits(Similarity.qAnnIvfFrom(vecs))
     Seq(100L, 200L, 300L).foreach { q =>
       assert(stored.count(_._1 == q) === 5, s"real query $q must rank 5 neighbors")
     }
@@ -775,7 +775,7 @@ class SimilaritySpec extends AnyFunSuite {
       }
       (i.toLong, v.map(_.toFloat))
     }.toDF("vec_id", "embedding")
-    val (n, lshCandPerQ, ivfCandPerQ) = Similarity.measuredCandidatesFrom(spark, vecs)
+    val (n, lshCandPerQ, ivfCandPerQ) = Similarity.measuredCandidatesFrom(vecs)
     assert(n === 400L)
     assert(lshCandPerQ === (n - 1).toDouble,
       s"the collapsed corpus must measure LSH candidates = the full corpus, got $lshCandPerQ")

@@ -9,13 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.lifecycle._
 import graft.state._
 
-/** Differential twin for the control plane: ONE scripted lifecycle
-  * scenario executed against the single-writer StateStore and the
-  * multi-writer MwStateStore must produce IDENTICAL observable state —
-  * same events, same seqs (a sequential op stream assigns 1,2,3,… in
-  * both disciplines), same latest-state views, same purge results. Any
-  * divergence means one store implements different control semantics
-  * than the other, which the ControlStore seam exists to forbid. */
+/** Checkpoint/vacuum equivalence for the control plane: ONE scripted
+  * lifecycle scenario runs against an [[MwStateStore]]; a fresh store
+  * opened over the same directory after `checkpoint()` + `vacuum()` —
+  * its reads served from the consolidated parquet checkpoint instead of
+  * the commit tail — must observe exactly the state the scenario left:
+  * the same monitor and envvar events (same seqs, same seq-derived run
+  * keys), the same surviving batch_log rows after the retention purge,
+  * the same latest-state view and the same env values. */
 class StoreEquivalenceSpec extends AnyFunSuite {
 
   private val spark = TestSpark.spark
@@ -57,7 +58,7 @@ class StoreEquivalenceSpec extends AnyFunSuite {
     val c = lc.startup("etl_report", exclusiveRun = true).toOption.get
     clock.advance(30)
     assert(lc.endup(c, RunStatus.Failure, Some(5L), Some(2L)))
-    assert(!lc.endup(b), "re-endup is a no-op in both stores")
+    assert(!lc.endup(b), "re-endup is a no-op")
 
     (1 to 6).foreach { d =>
       store.appendLog(BatchLogRec(
@@ -68,81 +69,33 @@ class StoreEquivalenceSpec extends AnyFunSuite {
     store.updEnv("BATCH_FLG_DBG", "N")
   }
 
-  /** The honest equivalence relation: the two stores assign DIFFERENT
-    * literal seq numbers (the multi-writer store's versions are commits,
-    * and dimension puts are commits too, so monitor seqs sit higher) —
-    * but the seq-bearing event stream must be the SAME EVENTS in the
-    * SAME ORDER with consistently-derived run keys. Normalize by
-    * re-ranking the combined (monitor ∪ envvar) seq space to 1..N and
-    * rewriting the seq-derived run_key suffixes through the same map. */
-  private def normalized(monitorEvents: Seq[MonitorEvent],
-      envvarEvents: Seq[EnvVarEvent]): (Seq[String], Seq[String]) = {
-    val rank = (monitorEvents.map(_.event_seq) ++ envvarEvents.map(_.event_seq))
-      .sorted.zipWithIndex.map { case (s, i) => s -> (i + 1L) }.toMap
-    def normKey(k: String): String = k.split("-", 2) match {
-      case Array(m, s) if s.nonEmpty && s.forall(_.isDigit) =>
-        s"$m-${rank.getOrElse(s.toLong, -1L)}"
-      case _ => k
-    }
-    (monitorEvents.sortBy(_.event_seq)
-      .map(e => e.copy(event_seq = rank(e.event_seq), run_key = normKey(e.run_key)).toString),
-     envvarEvents.sortBy(_.event_seq)
-      .map(e => e.copy(event_seq = rank(e.event_seq)).toString))
-  }
+  private def rows(df: org.apache.spark.sql.DataFrame, order: String*): Seq[String] =
+    df.orderBy(order.head, order.tail: _*).collect().map(_.toString).toSeq
 
-  private def collectEvents(store: ControlStore): (Seq[MonitorEvent], Seq[EnvVarEvent]) = {
-    import org.apache.spark.sql.Encoders
-    val env = store match {
-      case s: StateStore => s.envvarEvents
-      case s: MwStateStore => s.envvarEvents
-      case other => fail(s"unexpected store $other")
-    }
-    (store.monitorEvents.as(Encoders.product[MonitorEvent]).collect().toSeq,
-      env.as(Encoders.product[EnvVarEvent]).collect().toSeq)
-  }
-
-  test("single-writer and multi-writer stores produce identical control state") {
-    val swDir = Files.createTempDirectory("graft-eq-sw").toString
-    val mwDir = Files.createTempDirectory("graft-eq-mw").toString
-    val sw = new StateStore(spark, swDir)
-    val mw = new MwStateStore(spark, mwDir)
-    runScenario(sw)
-    runScenario(mw)
-    sw.close()
-
-    val (swMon, swEnv) = (normalized _).tupled(collectEvents(sw))
-    val (mwMon, mwEnv) = (normalized _).tupled(collectEvents(mw))
-    assert(swMon === mwMon,
-      "monitor event streams must match field-for-field under seq re-ranking")
-    assert(swMon.length >= 10, "scenario must exercise a real stream")
-    assert(swEnv === mwEnv)
-
-    def rows(df: org.apache.spark.sql.DataFrame, order: String*): Seq[String] =
-      df.orderBy(order.head, order.tail: _*).collect().map(_.toString).toSeq
-    assert(rows(sw.batchLog, "statement_num") === rows(mw.batchLog, "statement_num"),
-      "purge-as-rewrite and purge-as-marker must yield the same surviving rows")
-    // latest-state view: identical modulo the surrogate key/seq columns
-    def state(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      rows(df.drop("run_key", "event_seq"), "module_id", "run_id")
-    assert(state(sw.monitorState) === state(mw.monitorState))
-    assert(sw.getEnvs(Seq("BATCH_FLG_DBG", "BATCH_CONTROL_DATE")) ===
-      mw.getEnvs(Seq("BATCH_FLG_DBG", "BATCH_CONTROL_DATE")))
-  }
+  /** Everything a reader of the control plane can observe after the
+    * scenario. */
+  private def observed(store: MwStateStore): Seq[Seq[String]] = Seq(
+    rows(store.monitorEvents, "event_seq"),
+    rows(store.envvarEvents, "event_seq"),
+    rows(store.batchLog, "statement_num"),
+    rows(store.monitorState, "run_key"),
+    store.getEnvs(Seq("BATCH_FLG_DBG", "BATCH_CONTROL_DATE")).toSeq.sorted.map(_.toString))
 
   test("equivalence survives the multi-writer checkpoint/vacuum cycle") {
-    val swDir = Files.createTempDirectory("graft-eq2-sw").toString
-    val mwDir = Files.createTempDirectory("graft-eq2-mw").toString
-    val sw = new StateStore(spark, swDir)
-    val mw = new MwStateStore(spark, mwDir, checkpointEvery = 5)
-    runScenario(sw)
-    runScenario(mw)
-    sw.close()
-    mw.checkpoint(); mw.vacuum()
-    val fresh = new MwStateStore(spark, mwDir, checkpointEvery = 5)
-    val (swMon, swEnv) = (normalized _).tupled(collectEvents(sw))
-    val (mwMon, mwEnv) = (normalized _).tupled(collectEvents(fresh))
-    assert(swMon === mwMon,
-      "checkpointed+vacuumed multi-writer state must still equal the single-writer twin")
-    assert(swEnv === mwEnv)
+    val dir = Files.createTempDirectory("graft-eq").toString
+    val store = new MwStateStore(spark, dir, checkpointEvery = 5)
+    runScenario(store)
+    val before = observed(store)
+    assert(before.head.length >= 10, "scenario must exercise a real stream")
+    assert(store.batchLog.select("statement_num").collect().map(_.getLong(0)).sorted
+      .toSeq === Seq(4L, 5L, 6L), "the purge must leave days 4..6")
+    store.checkpoint(); store.vacuum()
+    val fresh = new MwStateStore(spark, dir, checkpointEvery = 5)
+    val after = observed(fresh)
+    Seq("monitor events", "envvar events", "batch_log", "monitor state", "env values")
+      .zipWithIndex.foreach { case (what, i) =>
+        assert(after(i) === before(i),
+          s"$what after checkpoint + vacuum must equal the state before it")
+      }
   }
 }

@@ -261,7 +261,7 @@ class TextOpsSpec extends AnyFunSuite {
     // and the stored-model face is bit-identical to retraining in-query
     val fromStore = TextOps.tokenBpeStoredOf(spark, docs, path).collect()
       .map(r => (r.getLong(0), r.getLong(3))).toSeq
-    val inQuery = TextOps.tokenBpeOf(spark, docs).collect()
+    val inQuery = TextOps.tokenBpeOf(docs).collect()
       .map(r => (r.getLong(0), r.getLong(3))).toSeq
     assert(fromStore === inQuery,
       "a frozen stored tokenizer must encode exactly like the training run that built it")
@@ -315,7 +315,7 @@ class TextOpsSpec extends AnyFunSuite {
     assert(spark.catalog.functionExists("graft_bpe"),
       "the test session must exercise the NATIVE face")
     val docs = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("doc_id", "text")
-    val rows = TextOps.tokenBpeOf(spark, docs).collect()
+    val rows = TextOps.tokenBpeOf(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
     assert(rows.toSeq === Seq((1L, 1L, 1L), (2L, 1L, 1L), (3L, 1L, 1L)),
       "an empty merge table must tokenize per character, not crash")

@@ -15,8 +15,11 @@ import graft.state.{CommitPublisher, MonitorEvent, MwStateStore, TxnLog}
   * read-modify-write, crash-invisible staging, floor-guarded version
   * reuse, dense seqs under racing driver THREADS, and a dense log under
   * racing driver PROCESSES dying to real kill -9. Concrete suites bind
-  * a publisher ([[graft.MwStateStoreSpec]] = the POSIX hard link,
-  * [[graft.TxnLogDirRenameSpec]] = the atomic directory rename), the
+  * a publisher, one suite per binding — [[graft.MwStateStoreSpec]] (the
+  * POSIX hard link), [[TxnLogConditionalPutSpec]] (conditional put over
+  * the filesystem emulation, the `StoreLock` default),
+  * [[TxnLogHttpPutSpec]] (unsigned HTTP bucket) and
+  * [[TxnLogSignedHttpPutSpec]] (SigV4-signed HTTP bucket) — the
   * [[LifecycleBehaviors]] pattern: protocol semantics are written once,
   * so a publisher cannot pass with weaker guarantees than the default. */
 trait TxnLogBehaviors extends AnyFunSuite {
@@ -167,64 +170,6 @@ trait TxnLogBehaviors extends AnyFunSuite {
   }
 }
 
-/** [[TxnLogBehaviors]] on the atomic DIRECTORY-rename publisher — the
-  * no-hard-links commit primitive, plus the full multi-writer lifecycle
-  * matrix over it ([[DirRenameMwLifecycleSpec]]). */
-class TxnLogDirRenameSpec extends TxnLogBehaviors {
-  protected lazy val spark = TestSpark.spark
-  def publisher: CommitPublisher = TxnLog.DirRename
-  def publisherName: String = "dirrename"
-  def plantCrashedStaging(txnDir: Path): Path = {
-    val d = Files.createDirectory(txnDir.resolve(".stage-crashed"))
-    Files.write(d.resolve("payload"), "k\nghost".getBytes)
-    d
-  }
-
-  test("[dirrename] delete is atomic: no payload-less commit dir ever exists, trash is cleaned") {
-    val dir = Files.createTempDirectory("graft-txn-dirrename-del").toString
-    val log = new TxnLog(dir, TxnLog.DirRename)
-    (1 to 3).foreach(i => log.commit(_ => s"k\n$i"))
-    val txnDir = Paths.get(dir, "_txn")
-    TxnLog.DirRename.delete(txnDir, 1L)
-    TxnLog.DirRename.delete(txnDir, 1L) // idempotent
-    // the deleted version is gone from the commit namespace entirely —
-    // the old payload-first delete could leave an empty <v>.commit/ that
-    // commitVersion still parsed, bricking reads until a re-vacuum
-    import scala.jdk.CollectionConverters._
-    val entries = { val s = Files.list(txnDir)
-      try s.iterator().asScala.map(_.getFileName.toString).toList finally s.close() }
-    assert(!entries.exists(_.contains("1.commit")), s"v1 must be fully gone, got $entries")
-    assert(!entries.exists(_.startsWith(".trash-")), s"completed delete leaves no trash, got $entries")
-    assert(log.commitsAfter(0L).map(_._1) === Seq(2L, 3L), "surviving commits readable")
-  }
-
-  test("[dirrename] crashed-vacuum trash residue is invisible and swept at any age") {
-    val dir = Files.createTempDirectory("graft-txn-dirrename-trash").toString
-    val log = new TxnLog(dir, TxnLog.DirRename)
-    log.commit(_ => "k\nreal")
-    // a vacuum killed between the trash rename and the content removal
-    val txnDir = Paths.get(dir, "_txn")
-    val wreck = Files.createDirectory(txnDir.resolve(".trash-9-dead"))
-    Files.write(wreck.resolve("payload"), "k\nghost".getBytes)
-    assert(log.latestVersion() === 1L, "trash is not a commit")
-    assert(log.commitsAfter(0L).map(_._2) === Seq("k\nreal"))
-    log.vacuum(0L) // default staleness — trash needs NO age guard:
-    // its contents are already logically deleted, unlike live staging
-    assert(!Files.exists(wreck), "fresh trash must be swept immediately")
-    assert(log.commitsAfter(0L).map(_._2) === Seq("k\nreal"))
-  }
-}
-
-/** The full [[LifecycleBehaviors]] matrix with the control plane's
-  * commits published by directory rename instead of hard link — the
-  * proof that the publisher seam is answer-invisible to every
-  * store-generic lifecycle semantic. */
-class DirRenameMwLifecycleSpec extends LifecycleBehaviors {
-  def makeStore(dir: String): graft.state.ControlStore =
-    new MwStateStore(spark, dir, checkpointEvery = 7,
-      publisher = TxnLog.DirRename)
-}
-
 /** [[TxnLogBehaviors]] on the S3/GCS-style conditional-put publisher
   * (over the filesystem [[TxnLog.FsObjectStore]] emulation), plus the
   * seam-contract tests that prove the publisher is genuinely injectable:
@@ -310,7 +255,7 @@ class TxnLogConditionalPutSpec extends TxnLogBehaviors {
 }
 
 /** The full [[LifecycleBehaviors]] matrix with commits published by
-  * object-store conditional put — the third green publisher column. */
+  * object-store conditional put over the filesystem emulation. */
 class ConditionalPutMwLifecycleSpec extends LifecycleBehaviors {
   def makeStore(dir: String): graft.state.ControlStore =
     new MwStateStore(spark, dir, checkpointEvery = 7,
@@ -384,7 +329,7 @@ class TxnLogHttpPutSpec extends TxnLogBehaviors
 }
 
 /** The full [[LifecycleBehaviors]] matrix with commits crossing the
-  * HTTP bucket binding — the fourth green publisher column. */
+  * unsigned HTTP bucket binding. */
 class HttpPutMwLifecycleSpec extends LifecycleBehaviors
     with org.scalatest.BeforeAndAfterAll {
   private lazy val staging = Files.createTempDirectory("graft-bucket-mw")
@@ -533,7 +478,7 @@ class TxnLogSignedHttpPutSpec extends TxnLogBehaviors
 }
 
 /** The full [[LifecycleBehaviors]] matrix with commits crossing the
-  * SIGNED bucket binding — the fifth green publisher column. */
+  * SIGNED bucket binding. */
 class SignedHttpPutMwLifecycleSpec extends LifecycleBehaviors
     with org.scalatest.BeforeAndAfterAll {
   private val creds = graft.state.SigV4.Credentials("GRAFTKEY", "graft-secret-7")

@@ -13,8 +13,10 @@ import graft.state.TxnLog
   *
   * Usage: `TxnTortureMain <dir> [maxCommits] [publisher]` — loops up to
   * maxCommits (default unbounded) or until killed; `publisher` picks the
-  * commit primitive (`hardlink` default | `dirrename`), so the same
-  * process-level torture drives every [[graft.state.CommitPublisher]].
+  * commit primitive by its `TxnLog.publisherNamed` token (`hardlink`
+  * default | `conditionalput` | `http=<uri>` | `sigv4=<uri>;ak;sk`), so
+  * the same process-level torture drives every
+  * [[graft.state.CommitPublisher]] binding.
   */
 object TxnTortureMain {
   def main(args: Array[String]): Unit = {

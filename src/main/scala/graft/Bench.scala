@@ -1,13 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
-  /** The per-query floor table (BASELINE.md's regression-gate baseline),
-    * from the classpath resource. ONE parser for every consumer (the
-    * gate here, ClusterCheck's timed tier) so a format change cannot
-    * leave a second copy silently mis-reading it (r19 review). None =
-    * resource missing; the caller decides whether that skips a gate or
-    * fails a tier. */
   /** Regression-gate predicate: above 2x the recorded floor AND by more
     * than an absolute 0.5 s (the jitter guard — see the gate comment in
     * [[main]]). Extracted so BenchMetricsSpec pins both bars. */
@@ -20,6 +13,12 @@ object Bench {
   private[graft] def ratioOutlier(floor: Option[Double], sec: Double): Boolean =
     floor.exists(f => f > 0 && sec > 2 * f)
 
+  /** The per-query floor table (BASELINE.md's regression-gate baseline),
+    * from the classpath resource. ONE parser for every consumer (the
+    * gate here, ClusterCheck's timed tier) so a format change cannot
+    * leave a second copy silently mis-reading it (r19 review). None =
+    * resource missing; the caller decides whether that skips a gate or
+    * fails a tier. */
   private[graft] def loadFloors(): Option[Map[String, Double]] =
     Option(getClass.getResourceAsStream("/bench_floors.json")).map { in =>
       val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
@@ -30,50 +29,25 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC is the precondition of Tables.events' NTZ→TIMESTAMP cast
-      // being wall-clock-preserving; every other session builder
-      // (Verify/Explain/TestSpark) already pins it
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session(s"local[$cpus]", cpus)
     // X5 observability: per-run plan metrics via SparkListener (the
     // engine analogue of DBMS_APPLICATION_INFO session longops,
     // body:1253-1266) — stage/task counts AND shuffle bytes per query,
     // so a regression flag adjudicates from data: metrics flat + wall
     // up = host smear; metrics moved = the plan drifted (r18 item 2).
     val meter = new graft.lifecycle.Observability.PlanMeter().attach(spark)
-    // Untimed warmup at the smallest SF available: touches the parquet
-    // reader, whole-stage codegen, and window paths once so the first
-    // measured query reports its own work instead of JVM/JIT start-up.
-    // Falls back to the bench dir itself when no sf0.001 sibling exists;
-    // failures are reported, not swallowed (a silent skip would push the
-    // start-up cost back into the first measured query).
-    locally {
-      val sibling = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
-      val w = if (sibling.isDirectory) sibling.getPath else sfDir
-      // Covers the heavy evaluation paths (window, codegen'd dot product,
-      // the 16-centroid score array, star-contraction rounds) so the
-      // sorted measurement order — which puts q_ann_ivf and
-      // q_dedup_clusters near the front — doesn't charge JIT compilation
-      // of those paths to the first heavy query. q_dedup_clusters is
-      // memoized per (session, dir): warming it is only honest when the
-      // warmup dir differs from the measured dir, else the timed run
-      // would report a cache hit.
-      (Seq("q_check_date", "q_topn_pergroup", "q_ann_topk", "q_ann_ivf",
-        "q_dedup_simhash") ++
-        (if (w != sfDir) Seq("q_dedup_clusters") else Nil)).foreach { n =>
-        try SparkEntry.queries.get(n).foreach(f => f(spark, w).count())
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] warmup $n failed on $w: ${e.getMessage}")
-        }
-      }
-    }
+    // Covers the heavy evaluation paths (window, codegen'd dot product,
+    // the 16-centroid score array, star-contraction rounds) so the
+    // sorted measurement order — which puts q_ann_ivf and
+    // q_dedup_clusters near the front — doesn't charge JIT compilation
+    // of those paths to the first heavy query. q_dedup_clusters is
+    // memoized per (session, dir): warming it is only honest when the
+    // warmup dir differs from the measured dir, else the timed run
+    // would report a cache hit. count(), like the timed region below:
+    // both are compared against the count-based bench_floors.json.
+    Runner.warmup(spark, sfDir, Seq("q_check_date", "q_topn_pergroup", "q_ann_topk",
+      "q_ann_ivf", "q_dedup_simhash") ++
+      (if (Runner.warmDir(sfDir) != sfDir) Seq("q_dedup_clusters") else Nil), "bench")(_.count())
     // Deterministic name order: hash-map order would let a memoized
     // stage (q_dedup_clusters' cluster labels) land on a different
     // query between runs, silently shifting which consumer reports the
@@ -83,18 +57,9 @@ object Bench {
     // fixed measurement order.)
     // Dev loop: SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts the sweep (the
     // driver never sets it, so round benches always measure everything).
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = Runner.only("SPARK_GRAFT_BENCH_ONLY")
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // One honest measurement: wall seconds + whether the query SUCCEEDED.
-    // clearCache() first — an operator that persist()s internally
-    // (q_pagerank's edge frame) registers its plan in the CacheManager,
-    // which (a) would let rep 2 plan-match the cache and skip the work
-    // being measured, and (b) pins the blocks in executor storage for
-    // every LATER query in the sweep. Failures report their wall time
-    // but are flagged so a fast failure can never masquerade as a fast
-    // success in the min().
     // Host-load telemetry (round-17, verdict item 6): three r16 sweeps
     // within an hour disagreed by 6 s and 3 flags with no uniform smear
     // signature, and the adjudication had to argue from inference. The
@@ -115,24 +80,14 @@ object Bench {
     // the max is the adjudication-relevant figure — one contended rep is
     // enough to poison a min-of-k when ALL reps share the window.
     val queryLoad = scala.collection.mutable.Map.empty[String, Double]
-    def measureOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        label: String): (Double, Boolean) = {
-      spark.catalog.clearCache()
+    def measureOnce(name: String, fn: Runner.Query, label: String): Runner.Run = {
       val l0 = loadavg()
-      val t0 = System.nanoTime()
-      val ok = graft.lifecycle.Observability.withJobGroup(spark, name, label) {
-        // NonFatal only: after an OutOfMemoryError or other fatal JVM
-        // error every later measurement runs on a half-dead JVM and
-        // reports garbage timings — let those abort the sweep.
-        try { fn(spark, sfDir).count(); true }
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
-        }
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val l = math.max(l0, loadavg())
-      queryLoad(name) = math.max(queryLoad.getOrElse(name, -1.0), l)
-      (sec, ok)
+      // count(), not a drain: the figure is compared against the
+      // count-based bench_floors.json
+      val r = Runner.timed(spark, name, label)(fn(spark, sfDir).count())
+      if (!r.ok) System.err.println(s"[bench] $name FAILED: ${r.error}")
+      queryLoad(name) = math.max(queryLoad.getOrElse(name, -1.0), math.max(l0, loadavg()))
+      r
     }
     // The plan meter feeds from an ASYNC listener: drain before every
     // snapshot or a fast query's events get attributed to the NEXT one
@@ -151,7 +106,7 @@ object Bench {
       // memoized per (session, dir), so a repeat would measure the
       // cache, not the operator.
       val reps = if (name == "q_dedup_clusters") 1 else 2
-      def measure(): (Double, Boolean) = measureOnce(name, fn, s"graft bench: $name")
+      def measure(): Runner.Run = measureOnce(name, fn, s"graft bench: $name")
       // the plan-metrics column covers the FIRST run only: it reports
       // the query's plan footprint, which must stay comparable across
       // rounds regardless of how many jitter-damping reps this takes
@@ -161,11 +116,8 @@ object Bench {
       drainListenerBus()
       val plan = meter.snapshot - s0
       var ms = Vector(first) ++ (2 to reps).map(_ => measure())
-      if (reps > 1 && ms.map(_._1).min < 1.0) ms ++= Seq(measure(), measure())
-      // min over SUCCESSFUL reps; a query that never succeeded reports
-      // its (visibly flagged) failure wall time rather than vanishing
-      val succ = ms.filter(_._2)
-      val sec = (if (succ.nonEmpty) succ else ms).map(_._1).min
+      if (reps > 1 && ms.map(_.sec).min < 1.0) ms ++= Seq(measure(), measure())
+      val sec = Runner.best(ms).sec
       System.err.println(f"[bench] $name%-22s $sec%8.3f s  ${plan.stages}%3d stages ${plan.tasks}%5d tasks shr=${plan.shuffleRead}%d shw=${plan.shuffleWrite}%d")
       (name, fn, sec, plan)
     }
@@ -212,12 +164,12 @@ object Bench {
       if ((sec <= 0.75 && !gateFlags(name, sec) && !ratioOutlier(name, sec))
           || name == "q_dedup_clusters") (name, sec, plan)
       else {
-        val (again, ok) = measureOnce(name, fn, s"graft bench re-measure: $name")
-        if (ok && again < sec)
-          System.err.println(f"[bench] $name%-22s $again%8.3f s  (re-measure; first pass $sec%.3f)")
+        val again = measureOnce(name, fn, s"graft bench re-measure: $name")
+        if (again.ok && again.sec < sec)
+          System.err.println(f"[bench] $name%-22s ${again.sec}%8.3f s  (re-measure; first pass $sec%.3f)")
         // a FAILED re-measure (fast crash) must never replace an honest
         // first-pass success
-        (name, if (ok) math.min(sec, again) else sec, plan)
+        (name, if (again.ok) math.min(sec, again.sec) else sec, plan)
       }
     }
     val results = resultsWithPlan.map { case (n, s, _) => n -> s }

@@ -26,10 +26,12 @@ import org.apache.spark.sql.SparkSession
   *
   * What runs, in three phases:
   *  1. the FULL oracle-gated registry ([[SparkEntry.queries]]) at
-  *     sf0.01 — every operator's plan executes on out-of-process
-  *     executors; completion + nonzero rows per query is the gate
-  *     (value-correctness is the driver's DuckDB differential; THIS
-  *     gate is "the plan ships");
+  *     sf0.01, each query drained in full ([[Runner.drain]]: every row
+  *     and column, so no closure is pruned before it ships) — every
+  *     operator's plan executes on out-of-process executors; completion
+  *     + nonzero rows per query is the gate (value-correctness is the
+  *     DuckDB differential over Verify's dump; THIS gate is "the plan
+  *     ships");
   *  2. the stateful streaming twins (sessionizer, MG heavy hitters,
   *     anomaly, SCD2) over MemoryStream micro-batches — HDFS-backed
   *     state store providers live on the executors, so state class
@@ -37,7 +39,7 @@ import org.apache.spark.sql.SparkSession
   *     boundary; the sessionizer additionally proves CHECKPOINT
   *     RESTART (kill the query, deliver more data, resume from the
   *     same checkpoint — the counter must continue, not reset);
-  *  3. the six-store ingest estate: [[graft.streaming.EventStreams
+  *  3. the five-store ingest estate: [[graft.streaming.EventStreams
   *     .ingestDocStream]] from a durable file source, stopped after
   *     batch 1 (the "crash") and RESUMED from its checkpoint for
   *     batch 2 — foreachBatch writer protocols, store swaps and the
@@ -86,24 +88,15 @@ object ClusterCheck {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       if (timed) "/root/testdata/sf0.1" else "/root/testdata/sf0.01")
     val master = sys.env.getOrElse("SPARK_GRAFT_CLUSTER_MASTER", "local-cluster[2,2,2048]")
-    val only = sys.env.get("SPARK_GRAFT_CLUSTER_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(master)
-      // the forked runMain JVM's classpath = engine classes + Spark
-      // jars; executors are separate processes and see ONLY what this
-      // hands them — which is the point
-      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions", jdk17AddOpens)
-      // 4 total executor cores: 200 (or 32) shuffle partitions would be
-      // pure task-launch overhead across a real RPC boundary
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = Runner.only("SPARK_GRAFT_CLUSTER_ONLY")
+    // 8 shuffle partitions for 4 total executor cores: 200 (or 32) would
+    // be pure task-launch overhead across a real RPC boundary. The forked
+    // runMain JVM's classpath = engine classes + Spark jars; executors
+    // are separate processes and see ONLY what this hands them — which
+    // is the point.
+    val spark = Runner.session(master, "8",
+      "spark.executor.extraClassPath" -> sys.props("java.class.path"),
+      "spark.executor.extraJavaOptions" -> jdk17AddOpens)
     require(spark.sparkContext.master == master, s"not on $master")
 
     if (timed) { timedTier(spark, sfDir, master); spark.stop(); return }
@@ -112,27 +105,21 @@ object ClusterCheck {
     val names = SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
     val t0 = System.nanoTime()
     val results = names.map { n =>
-      val t = System.nanoTime()
-      val r =
-        try Right(SparkEntry.queries(n)(spark, sfDir).count())
-        catch { case scala.util.control.NonFatal(e) =>
-          Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-        }
-      val sec = (System.nanoTime() - t) / 1e9
-      r match {
-        case Right(c) => System.err.println(f"[cluster] $n%-24s $c%8d rows $sec%7.2f s")
-        case Left(m) => System.err.println(f"[cluster] $n%-24s FAILED: $m")
+      val r = Runner.timed(spark, n, s"graft cluster: $n")(Runner.drain(SparkEntry.queries(n)(spark, sfDir)))
+      r.rows match {
+        case Right(c) => System.err.println(f"[cluster] $n%-24s $c%8d rows ${r.sec}%7.2f s")
+        case Left(_) => System.err.println(f"[cluster] $n%-24s FAILED: ${r.error}")
       }
-      (n, r, sec)
+      n -> r
     }
     val registrySec = (System.nanoTime() - t0) / 1e9
-    val failed = results.collect { case (n, Left(m), _) => (n, m) }
+    val failed = results.collect { case (n, r) if !r.ok => (n, r.error) }
     // q_anti is genuinely empty at sf0.01 — the DuckDB oracle returns 0
     // rows too (CORRECTNESS_r17: spark_rows=0, oracle_rows=0, hashes
     // match), so an empty anti join is the CORRECT answer, not a
     // missing-input symptom; its plan still executed on the executors.
     val knownZero = Set("q_anti")
-    val zeroRows = results.collect { case (n, Right(0L), _) if !knownZero(n) => n }
+    val zeroRows = results.collect { case (n, Runner.Run(_, Right(0L))) if !knownZero(n) => n }
 
     // ---- phases 2+3 (skipped under a dev-subset ONLY, like Bench) ---
     val streaming: Map[String, String] =
@@ -180,34 +167,19 @@ object ClusterCheck {
     val top = floors.filter { case (n, _) => SparkEntry.queries.contains(n) }
       .toSeq.sortBy(-_._2).take(10).map(_._1).sorted
     System.err.println(s"[cluster-timed] top-10 by floor: ${top.mkString(", ")}")
-    locally {
-      val sibling = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
-      val w = if (sibling.isDirectory) sibling.getPath else sfDir
-      top.foreach { n =>
-        try SparkEntry.queries(n)(spark, w).count()
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[cluster-timed] warmup $n failed on $w: ${e.getMessage}")
-        }
-      }
-    }
-    def measureOnce(n: String): (Double, Boolean) = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      val ok =
-        try { SparkEntry.queries(n)(spark, sfDir).count(); true }
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[cluster-timed] $n FAILED: ${e.getMessage}"); false
-        }
-      ((System.nanoTime() - t0) / 1e9, ok)
+    // count(), warm-up and timed runs alike: the figures are compared
+    // against the count-based floor table
+    Runner.warmup(spark, sfDir, top, "cluster-timed")(_.count())
+    def measureOnce(n: String): Runner.Run = {
+      val r = Runner.timed(spark, n, s"graft cluster timed: $n")(SparkEntry.queries(n)(spark, sfDir).count())
+      if (!r.ok) System.err.println(s"[cluster-timed] $n FAILED: ${r.error}")
+      r
     }
     val results = top.map { n =>
-      val reps = if (n == "q_dedup_clusters") 1 else 2
-      val ms = (1 to reps).map(_ => measureOnce(n))
-      val succ = ms.filter(_._2)
-      val sec = (if (succ.nonEmpty) succ else ms).map(_._1).min
-      val ratio = sec / floors(n)
-      System.err.println(f"[cluster-timed] $n%-24s $sec%8.3f s  floor ${floors(n)}%6.3f s  x$ratio%5.2f")
-      (n, sec, ratio, succ.nonEmpty)
+      val r = Runner.best(Seq.fill(if (n == "q_dedup_clusters") 1 else 2)(measureOnce(n)))
+      val ratio = r.sec / floors(n)
+      System.err.println(f"[cluster-timed] $n%-24s ${r.sec}%8.3f s  floor ${floors(n)}%6.3f s  x$ratio%5.2f")
+      (n, r.sec, ratio, r.ok)
     }
     val ok = results.forall(_._4)
     def jm(f: ((String, Double, Double, Boolean)) => Double) =
@@ -336,7 +308,7 @@ object ClusterCheck {
     }
   }
 
-  /** Phase 3: the six-store ingest estate from a durable file source,
+  /** Phase 3: the five-store ingest estate from a durable file source,
     * killed after batch 1 and resumed from its checkpoint — the
     * foreachBatch writer protocols under a real executor boundary. */
   private def runIngestEstate(spark: SparkSession, sfDir: String,

@@ -121,6 +121,16 @@ object ScaleCheck {
     // bounded groups, plus the broadcast reputation join)
     "q_dsir_bucket", "q_dsir_probe", "q_url_dedup")
 
+  /** A run's seconds and rows; a failed run aborts the check. */
+  private def secOf(r: Runner.Run): (Double, Long) = (r.sec, r.rows.fold(e => throw e, identity))
+
+  /** Min-of-2 drained runs of `q(dir)` — the standing sweep's
+    * convention, so recorded points stay comparable across rounds. */
+  private def minOf2(spark: SparkSession, name: String, dir: String)(
+      q: String => DataFrame): (Double, Long) =
+    secOf(Runner.best(Seq.fill(2)(
+      Runner.timed(spark, name, s"graft scale: $name on $dir")(Runner.drain(q(dir))))))
+
   def buildSf1(spark: SparkSession, baseDir: String, outDir: String, copies: Int): Unit = {
     val done = new java.io.File(outDir, "_SCALE_OK")
     if (done.isFile) { System.err.println(s"[scale] reusing $outDir"); return }
@@ -173,16 +183,10 @@ object ScaleCheck {
   private def ccRows(spark: SparkSession, baseDir: String, sf1Dir: String,
       only: Option[Set[String]]): Seq[(String, Double, Double, Boolean)] = {
     if (!only.forall(_.contains("q_dedup_clusters_unmemoized"))) return Seq.empty
-    def measureCc(dir: String): Double = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
+    def measureCc(dir: String): Double = minOf2(spark, "q_dedup_clusters_unmemoized", dir)(d =>
       graft.operators.Dedup.clusterPairs(
-        graft.operators.Dedup.qDedupNgram(spark, dir).select("doc_a", "doc_b"))
-        .count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val tSmall = Seq(measureCc(baseDir), measureCc(baseDir)).min
-    val tBig = Seq(measureCc(sf1Dir), measureCc(sf1Dir)).min
+        graft.operators.Dedup.qDedupNgram(spark, d).select("doc_a", "doc_b")))._1
+    val (tSmall, tBig) = (measureCc(baseDir), measureCc(sf1Dir))
     System.err.println(f"[scale] q_dedup_clusters_unmemoized sf0.1 $tSmall%7.2f s   sf1 $tBig%7.2f s   ratio ${tBig / tSmall}%5.2f")
     Seq(("q_dedup_clusters_unmemoized", tSmall, tBig, false))
   }
@@ -196,19 +200,16 @@ object ScaleCheck {
   private def annPlanBuildRows(spark: SparkSession, baseDir: String, sf1Dir: String,
       only: Option[Set[String]]): Seq[(String, Double, Double, Boolean)] = {
     if (!only.forall(_.contains("q_ann_plan_build"))) return Seq.empty
-    def measureBuild(dir: String): Double = {
-      spark.catalog.clearCache()
+    def measureBuild(dir: String): Runner.Run = {
       val tmp = java.nio.file.Files.createTempDirectory("graft-scale-annplan")
-      val t0 = System.nanoTime()
-      graft.operators.Similarity.writeAnnRecallStore(spark, dir, tmp.toString + "/store")
-      val sec = (System.nanoTime() - t0) / 1e9
-      // the store only exists to be timed — delete it, don't accumulate
-      // orphaned /tmp trees across ScaleCheck runs
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
-      sec
+      // the build has no output rows; the store only exists to be timed —
+      // delete it, don't accumulate orphaned /tmp trees across runs
+      try Runner.timed(spark, "q_ann_plan_build", s"graft scale: q_ann_plan_build on $dir") {
+        graft.operators.Similarity.writeAnnRecallStore(spark, dir, tmp.toString + "/store"); 0L
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
     }
-    val tSmall = Seq(measureBuild(baseDir), measureBuild(baseDir)).min
-    val tBig = Seq(measureBuild(sf1Dir), measureBuild(sf1Dir)).min
+    def best(dir: String): Double = secOf(Runner.best(Seq.fill(2)(measureBuild(dir))))._1
+    val (tSmall, tBig) = (best(baseDir), best(sf1Dir))
     System.err.println(f"[scale] q_ann_plan_build sf0.1 $tSmall%7.2f s   sf1 $tBig%7.2f s   ratio ${tBig / tSmall}%5.2f")
     Seq(("q_ann_plan_build", tSmall, tBig, false))
   }
@@ -504,19 +505,12 @@ object ScaleCheck {
       sf3Dir: String): String = {
     buildSf1(spark, baseDir, sf3Dir, copies = 30)
     val qs = Seq("q_ivf_pq", "q_fuzzy_join", "q_embed_pipeline")
-    def m(n: String, dir: String): (Double, Long) = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      val rows = SparkEntry.queries(n)(spark, dir).count()
-      ((System.nanoTime() - t0) / 1e9, rows)
-    }
     def ms3(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val frags = qs.map { n =>
       // min-of-2 per scale, the standing sweep's convention, so the
       // recorded sf0.1/sf1 points stay comparable with prior rounds
-      val (aT, aR) = Seq(m(n, baseDir), m(n, baseDir)).minBy(_._1)
-      val (bT, bR) = Seq(m(n, sf1Dir), m(n, sf1Dir)).minBy(_._1)
-      val (cT, cR) = Seq(m(n, sf3Dir), m(n, sf3Dir)).minBy(_._1)
+      def m(dir: String) = minOf2(spark, n, dir)(SparkEntry.queries(n)(spark, _))
+      val ((aT, aR), (bT, bR), (cT, cR)) = (m(baseDir), m(sf1Dir), m(sf3Dir))
       val wall31 = cT / bT
       val out31 = if (bR > 0) cR.toDouble / bR else Double.NaN
       System.err.println(f"[scale] sf3 $n%-18s sf0.1 $aT%7.2f s/$aR%8d r   sf1 $bT%7.2f s/$bR%9d r   sf3 $cT%7.2f s/$cR%9d r   wall3:1 $wall31%5.2f  out3:1 $out31%5.2f")
@@ -530,71 +524,29 @@ object ScaleCheck {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/root/repo/tmp/sf1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session(s"local[$cpus]", cpus)
     buildSf1(spark, baseDir, sf1Dir, copies = 10)
 
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = Runner.only("SPARK_GRAFT_SCALE_ONLY")
     val names = defaultQueries.filter(n => only.forall(_.contains(n)))
 
-    def measure(name: String, dir: String): Double = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).count()
-      (System.nanoTime() - t0) / 1e9
-    }
     // JIT/alloc warmup on the small side so sf0.1 numbers aren't charged
-    // with first-touch compilation the sf1 run then gets for free
-    names.take(3).foreach(n => try measure(n, baseDir) catch { case scala.util.control.NonFatal(_) => () })
+    // with first-touch compilation the sf1 run then gets for free (a
+    // failure here is the sweep's to report)
+    names.take(3).foreach(n => Runner.timed(spark, n, s"graft scale warmup: $n")(
+      Runner.drain(SparkEntry.queries(n)(spark, baseDir))))
 
     val rows = names.map { n =>
       val shapeSmall = planShape(SparkEntry.queries(n)(spark, baseDir))
       val shapeBig = planShape(SparkEntry.queries(n)(spark, sf1Dir))
-      val tSmall = Seq(measure(n, baseDir), measure(n, baseDir)).min
-      val tBig = Seq(measure(n, sf1Dir), measure(n, sf1Dir)).min
+      def m(dir: String) = minOf2(spark, n, dir)(SparkEntry.queries(n)(spark, _))._1
+      val (tSmall, tBig) = (m(baseDir), m(sf1Dir))
       val flip = shapeSmall != shapeBig
       System.err.println(f"[scale] $n%-22s sf0.1 $tSmall%7.2f s   sf1 $tBig%7.2f s   ratio ${tBig / tSmall}%5.2f"
         + (if (flip) s"   PLAN FLIP $shapeSmall -> $shapeBig" else ""))
       (n, tSmall, tBig, flip)
     } ++ ccRows(spark, baseDir, sf1Dir, only) ++
       annPlanBuildRows(spark, baseDir, sf1Dir, only)
-    // The ORCHESTRATOR path at sf1 (the one driver-side composition with
-    // no bench query): a 2-module MANDATORY chain whose run commands are
-    // registered queries, driven against the sf1 dataset under a real
-    // control store — records wall time and that both modules complete
-    // with nonzero counts. Control-plane cost is scale-independent by
-    // design; this is the off-paper record of that claim. A
-    // SCALE_ONLY dev subset skips it (the Bench only-gating shape) —
-    // a one-query iteration loop must not pay the full chain — and the
-    // record says null, so a skipped measurement can never read as a
-    // measured ~0 s.
-    val orchSecs: Option[Double] = if (only.nonEmpty) None else Some {
-      val dir = java.nio.file.Files.createTempDirectory("graft-scale-orch").toString
-      val store = new graft.state.MwStateStore(spark, dir)
-      store.putBatchMaster(Seq(graft.state.BatchMaster(300, "SCALE_A", 1, Some("OPS"), None),
-        graft.state.BatchMaster(301, "SCALE_B", 1, Some("OPS"), None)))
-      store.putDependencies(Seq(graft.state.BatchDependency(300, 301, "MANDATORY")))
-      store.putRunCommands(Seq(graft.state.RunCommand("SCALE_A", "graft.query q_count"),
-        graft.state.RunCommand("SCALE_B", "graft.query q_tpch_q9")))
-      val lc = new graft.lifecycle.Lifecycle(store, graft.lifecycle.SystemClock,
-        graft.lifecycle.SystemSleeper)
-      val orch = new graft.lifecycle.Orchestrator(spark, lc, sf1Dir, SparkEntry.queries)
-      val t0 = System.nanoTime()
-      val outcomes = orch.runChain(Seq("SCALE_A", "SCALE_B"), runLevel = Some(1))
-      val sec = (System.nanoTime() - t0) / 1e9
-      val ok = outcomes.forall(_._2.isInstanceOf[graft.lifecycle.Orchestrator.Completed])
-      System.err.println(f"[scale] orchestrator 2-module chain at sf1: $sec%7.2f s  allCompleted=$ok")
-      require(ok, s"orchestrated chain must complete at sf1, got $outcomes")
-      sec
-    }
     // The full nightly maintenance DAG over a really-grown 6-store estate
     // (dev loops opt in with SCALE_ONLY=maint_dag_full; full sweeps run it)
     val dagSecs: Option[Double] =
@@ -611,10 +563,9 @@ object ScaleCheck {
     val qs = rows.map { case (n, a, b, f) =>
       s""""$n":{"sf01":${ms3(a)},"sf1":${ms3(b)},"ratio":${ms3(b / a)},"plan_flip":$f}"""
     }.mkString("{", ",", "}")
-    val orchJson = orchSecs.map(ms3).getOrElse("null")
     val dagJson = dagSecs.map(ms3).getOrElse("null")
     val sf3Field = sf3Json.getOrElse("null")
-    println(s"""{"metric":"scale_check","copies":10,"queries":$qs,"orchestrator_sf1_sec":$orchJson,"maintenance_dag_sf1_sec":$dagJson,"sf3_tier":$sf3Field,"flips":${rows.count(_._4)}}""")
+    println(s"""{"metric":"scale_check","copies":10,"queries":$qs,"maintenance_dag_sf1_sec":$dagJson,"sf3_tier":$sf3Field,"flips":${rows.count(_._4)}}""")
     spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,34 +6,19 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session(s"local[$cpus]", cpus)
     new java.io.File(outDir).mkdirs()
     // Dev-only subsetting for local iteration (tools/selfcheck.py): the
     // driver never sets this, so its runs always dump every query.
-    val only = sys.env.get("GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = Runner.only("GRAFT_VERIFY_ONLY")
     val selected = only.fold(SparkEntry.queries)(ks => SparkEntry.queries.filter(kv => ks(kv._1)))
     selected.foreach { case (name, fn) =>
-      // X5 observability (body:486-487, 1253-1266): tag every job with the
-      // query it belongs to, so the Spark UI / event log attributes stages.
-      graft.lifecycle.Observability.withJobGroup(spark, name, s"graft verify: $name") {
-        // NonFatal only (same rationale as Bench/Lifecycle): a fatal JVM
-        // error would leave every later query running on a broken JVM —
-        // better to abort the dump than record garbage for the round.
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+      // X5 observability (body:486-487, 1253-1266): every job carries the
+      // query it belongs to as job group; the dump has no row count to report
+      val r = Runner.timed(spark, name, s"graft verify: $name") {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"); 0L
       }
+      if (!r.ok) System.err.println(s"[verify] $name failed: ${r.error}")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

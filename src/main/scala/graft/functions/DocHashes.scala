@@ -181,10 +181,6 @@ object DocHashes {
 
   // Seq[String] twins for the differential generator and the specs
   // (bit-identical: same bytes hashed with the same seeds).
-  def shingleHashesSeq(words: Seq[String], shingle: Int): Array[Long] = {
-    val arr = new GenericArrayData(words.map(w => UTF8String.fromString(w)).toArray[Any])
-    shingleHashes(arr, shingle)
-  }
   def simhashSeq(words: Seq[String], shingle: Int): Long = {
     val arr = new GenericArrayData(words.map(w => UTF8String.fromString(w)).toArray[Any])
     simhash(arr, shingle)

@@ -1,11 +1,12 @@
 package graft.lifecycle
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** The orchestration capstone: batch MODULES whose run commands ARE the
   * engine's registered queries, executed under the full control-plane
   * lifecycle — startup (duplicate gate, dependency DECODE matrix,
-  * WAITING → RUNNING transition) → the query → endup with the record
+  * WAITING → RUNNING transition) → the query, drained in full under a
+  * job group named by the run's `run_key` → endup with the drained row
   * count — so the monitor store is the single pane of glass the
   * reference package was built to provide, now fronting the engine this
   * repo built around it. This is the composition the control plane
@@ -42,7 +43,7 @@ final class Orchestrator(
     spark: SparkSession,
     lc: Lifecycle,
     dataDir: String,
-    registry: Map[String, (SparkSession, String) => DataFrame]) {
+    registry: Map[String, graft.Runner.Query]) {
 
   import Orchestrator._
 
@@ -67,7 +68,10 @@ final class Orchestrator(
             Failed(batchName, s"unresolvable run command '$cmd'")
           case Some((name, fn)) =>
             try {
-              val records = fn(spark, dataDir).count()
+              // a full drain, not a count(): a count lets Catalyst prune the
+              // output columns, so a failure in one would close SUCCESS
+              val records = Observability.withJobGroup(spark, ctx.runKey,
+                s"graft module $batchName: $name")(graft.Runner.drain(fn(spark, dataDir)))
               lc.endup(ctx, RunStatus.Success, Some(records), Some(0L))
               Completed(batchName, name, records)
             } catch {
@@ -118,7 +122,8 @@ final class Orchestrator(
 
 object Orchestrator {
   sealed trait Outcome
-  /** The module ran its query to SUCCESS; `records` is the endup count. */
+  /** The module ran its query to SUCCESS; `records` is the drained row
+    * count endup recorded. */
   final case class Completed(batchName: String, query: String, records: Long) extends Outcome
   /** Startup refused — the store carries the refusal event. */
   final case class NotRun(err: BatchError) extends Outcome

@@ -954,11 +954,6 @@ object Similarity {
       .sortBy(_._1)
   }
 
-  /** Train the IVF quantizer over a dataset's embedding corpus — the
-    * train-ONCE entry point for the stored flow. */
-  def trainIvf(s: SparkSession, dir: String): Array[(Int, Array[Double], Double)] =
-    trainQuantizer(withNorm(Tables.embeddings(s, dir)))
-
   /** Materialize the inverted file: train the quantizer, assign every
     * corpus vector to its nearest list in ONE scan, and write the corpus
     * partitioned by (list_id, batch_id) with the trained centroids as a

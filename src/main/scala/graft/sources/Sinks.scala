@@ -12,14 +12,6 @@ import org.apache.spark.sql.DataFrame
   */
 object Sinks {
 
-  /** S4 append sink (body:194-214 shape): durable batch append. */
-  def appendParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("append").parquet(path)
-
-  /** Retention-style overwrite (S6 rewrite-retain target). */
-  def overwriteParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
   /** Partitioned-by-column layout — the scan side prunes partitions on
     * the filter key (e.g. daily run_date directories). */
   def overwritePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =

@@ -26,6 +26,25 @@ object Bench {
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
     }
 
+  /** Why this run cannot be compared with the recorded floors and plan
+    * record, or None when it can. `bench_floors.json` and
+    * `bench_last_run.json` (`record`) were taken at one scale and CPU
+    * count, which only the record states (`sf`, `loadavg.cpus`): wall
+    * times follow the scale and stage/task counts follow the shuffle
+    * partition count, so a run at another `sfDir` or `cpus` — or with no
+    * record to tell — carries no floor, watch or plan signal. */
+  private[graft] def recordMismatch(record: Option[String], sfDir: String,
+      cpus: String): Option[String] = {
+    def field(re: String): Option[String] =
+      record.flatMap(re.r.findFirstMatchIn(_)).map(_.group(1))
+    (field("\"sf\":\"([^\"]*)\""), field("\"cpus\":\"?([^\",}]+)")) match {
+      case (Some(sf), Some(c)) if sf.stripSuffix("/") == sfDir.stripSuffix("/") && c == cpus => None
+      case (Some(sf), Some(c)) =>
+        Some(s"this run (sf $sfDir, cpus $cpus) is not the recorded one (sf $sf, cpus $c)")
+      case _ => Some("no bench_last_run.json record of the floors' sf and cpus")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -124,11 +143,20 @@ object Bench {
     // Per-query floor table, loaded BEFORE the re-measure pass so the
     // gate's verdict can feed it (see below). Semantics documented at the
     // gate itself.
-    val floors: Map[String, Double] =
-      loadFloors().getOrElse {
-        System.err.println("[bench] no bench_floors.json resource; regression gate skipped")
-        Map.empty
+    val lastRun: Option[String] =
+      Option(getClass.getResourceAsStream("/bench_last_run.json")).map { in =>
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
       }
+    val floors: Map[String, Double] = recordMismatch(lastRun, sfDir, cpus) match {
+      case Some(why) =>
+        System.err.println(s"[bench] floor gate, watch list and plan verdicts skipped: $why")
+        Map.empty
+      case None =>
+        loadFloors().getOrElse {
+          System.err.println("[bench] no bench_floors.json resource; regression gate skipped")
+          Map.empty
+        }
+    }
     def gateFlags(n: String, sec: Double): Boolean = gateFlag(floors.get(n), sec)
     // Ratio-only outlier: >2x floor but under the gate's 0.5 s absolute
     // guard. The guard exists so sub-second scheduling jitter doesn't cry
@@ -194,8 +222,7 @@ object Bench {
     // SAME physical plan — the wall-time delta is host smear; moved
     // metrics mean the plan genuinely drifted and the flag is real.
     val priorPlan: Map[String, graft.lifecycle.Observability.PlanSnap] =
-      Option(getClass.getResourceAsStream("/bench_last_run.json")).map { in =>
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      lastRun.map { txt =>
         ("\"([^\"]+)\":\\{\"stages\":(\\d+),\"tasks\":(\\d+),\"shr\":(\\d+),\"shw\":(\\d+)\\}").r
           .findAllMatchIn(txt).map { m =>
             m.group(1) -> graft.lifecycle.Observability.PlanSnap(

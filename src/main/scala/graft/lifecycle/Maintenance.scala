@@ -1,72 +1,30 @@
 package graft.lifecycle
 
-import scala.collection.mutable.ArrayBuffer
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.SparkSession
 
-import graft.state.{BatchLogRec, ControlStore, MwStateStore}
-
-/** The reference's batch-BODY shape as a reusable runner: `startup` →
-  * work with a WHEN-OTHERS handler per step → `endup` with counts
-  * (pkg_batch_util_body.sql:472-627 envelope + the X4
-  * catch-log-continue discipline its callers wrap every step in),
-  * applied to the engine's own upkeep — the nightly maintenance batch a
-  * deployment schedules behind [[Lifecycle.dailyGate]].
+/** The engine's own upkeep as a nightly maintenance DAG: each data
+  * store's compaction is an [[Orchestrator]] module, so it runs inside
+  * the reference's batch-BODY envelope (`startup` → work → `endup` with
+  * counts, pkg_batch_util_body.sql:472-627) behind the dependency DECODE
+  * matrix like any other batch estate a deployment schedules behind
+  * [[Lifecycle.dailyGate]].
   *
-  * One failing store must not abort the sweep: a task failure is caught
-  * (NonFatal only — a dying JVM aborts, as everywhere else), logged to
-  * batch_log with the task named, counted into `records_in_error`, and
-  * the remaining tasks still run. The batch ends SUCCESS only when
-  * every task succeeded, with (ok, failed) as the record counts — so
-  * the monitor view alone says whether maintenance is healthy, and
-  * batch_log says which store is not.
+  * One failing store does not abort the sweep: its module closes
+  * FAILURE in the monitor view, only its MANDATORY dependents are held
+  * back, and the Orchestrator carries on with the rest of the chain —
+  * so the monitor view alone says which store is not healthy. The
+  * control store's own upkeep is not a module here: `MwStateStore`
+  * checkpoints itself every `checkpointEvery` commits, and its
+  * `checkpoint()` / `vacuum()` run from the caller's schedule.
   *
-  * Scale: each task is one of the stores' own maintenance entry points
-  * (watermark-driven compactions, bounded checkpoint/vacuum) — all
-  * designed for their 100 TB layouts; the runner adds only
+  * Scale: each module is one of the stores' own maintenance entry
+  * points (watermark-driven, crash-safe, replay-idempotent compactions,
+  * all designed for their 100 TB layouts); the envelope adds only
   * control-plane work.
   */
 object Maintenance {
 
-  /** One maintenance step. `run` must be idempotent — a re-run after a
-    * crash replays the whole batch (every store compaction here is
-    * crash-safe and replay-idempotent by design). */
-  final case class Task(name: String, run: () => Unit)
-
-  /** What happened: task names that succeeded, (name, error) for
-    * failures, and the lifecycle run id the batch ran under. */
-  final case class Report(runId: Long, succeeded: Seq[String], failed: Seq[(String, String)]) {
-    def healthy: Boolean = failed.isEmpty
-  }
-
-  /** Run `tasks` under the lifecycle envelope. Startup failures (batch
-    * not registered, duplicate run, …) surface as Left exactly like any
-    * batch; task failures do NOT — they are the Report's `failed`. */
-  def runBatch(lc: Lifecycle, batchName: String, tasks: Seq[Task]): Either[BatchError, Report] =
-    lc.startup(batchName).map { ctx =>
-      val ok = ArrayBuffer.empty[String]
-      val bad = ArrayBuffer.empty[(String, String)]
-      tasks.zipWithIndex.foreach { case (t, i) =>
-        ctx.capture(Some(t.name))
-        try { t.run(); ok += t.name }
-        catch {
-          case NonFatal(e) =>
-            bad += t.name -> String.valueOf(e.getMessage)
-            // the X4 discipline: log-and-continue, with the step named
-            // (proc_reclog shape: batch_log row per handled failure)
-            lc.store.appendLog(BatchLogRec(ctx.runDate, "maintenance", i + 1L,
-              "graft.lifecycle", Some(batchName),
-              Some(s"${t.name} failed: ${String.valueOf(e.getMessage).take(2000)}")))
-        }
-      }
-      lc.endup(ctx,
-        if (bad.isEmpty) RunStatus.Success else RunStatus.Failure,
-        recordsProcessed = Some(ok.size.toLong), recordsInError = Some(bad.size.toLong))
-      Report(ctx.runId, ok.toSeq, bad.toSeq)
-    }
-
-  /** Where a deployment's stores live; `None` skips the task. Fold
+  /** Where a deployment's stores live; `None` skips the module. Fold
     * watermarks follow each store's replay contract (batches strictly
     * below the id are safe to fold — the caller's checkpoint/commit
     * bookkeeping decides the value). */
@@ -88,38 +46,8 @@ object Maintenance {
       // scoped (always safe).
       retractionFoldBelow: Long = 0L)
 
-  /** The standard sweep: every data-plane store the engine can
-    * materialize, plus the control store's own upkeep (checkpoint +
-    * vacuum of its commit log). */
-  def standardTasks(s: SparkSession, store: ControlStore, layout: StoreLayout): Seq[Task] = {
-    val data = Seq(
-      layout.searchIndex.map { case (p, w) =>
-        Task("compact-search-index", () => graft.operators.Search.compactSearchIndex(s, p, w)) },
-      layout.lmModel.map { case (p, w) =>
-        Task("compact-lm-model", () => graft.operators.TextOps.compactLmModel(s, p, w)) },
-      layout.nbModel.map { case (p, w) =>
-        Task("compact-nb-model", () => graft.operators.TextOps.compactNbModel(s, p, w)) },
-      layout.signatureStore.map(p =>
-        Task("compact-signatures", () =>
-          graft.operators.Dedup.compactSignatures(s, p, layout.retractionFoldBelow))),
-      layout.annIndex.map(p =>
-        Task("compact-ann-index", () =>
-          graft.operators.Similarity.compactAnnIndex(s, p, layout.retractionFoldBelow))),
-      layout.ivfIndex.map(p =>
-        Task("compact-ivf-index", () =>
-          graft.operators.Similarity.compactIvfIndex(s, p, layout.retractionFoldBelow)))
-    ).flatten
-    val control = store match {
-      case mw: MwStateStore => Seq(
-        Task("checkpoint-control-log", () => { mw.checkpoint(); () }),
-        Task("vacuum-control-log", () => mw.vacuum()))
-      case _ => Seq.empty
-    }
-    data ++ control
-  }
-
-  /** The maintenance sweep as ORCHESTRATOR MODULES — the DAG face of
-    * [[standardTasks]]: one registry entry per data store, so
+  /** The maintenance sweep as ORCHESTRATOR MODULES: one registry entry
+    * per data store, so
     * operations point each module's run command at
     * `graft.query maint_compact_<store>` and sequence the DAG through
     * the dependency DECODE matrix (compactions behind the ingest
@@ -150,8 +78,7 @@ object Maintenance {
     // schemas: an absent store or an all-rows-folded fileless layout is
     // a SUCCESSFUL compaction with 0 survivors — report a 0-row frame,
     // never die on schema inference and fail the module (which would
-    // cascade FAILURE into every MANDATORY dependent of the DAG while
-    // standardTasks over the identical layout succeeds).
+    // cascade FAILURE into every MANDATORY dependent of the DAG).
     // two layers: hasVisibleData rules out absent/residue-only dirs
     // cheaply, and the catch covers layouts the top-level listing
     // cannot see through (a visible shard dir whose every batch dir

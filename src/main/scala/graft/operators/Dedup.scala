@@ -505,36 +505,33 @@ object Dedup {
   private[graft] def absorbIntoBloom(s: SparkSession, path: String, buckets: DataFrame): Unit =
     bucketBloom.absorb(s, path, buckets)
 
-  /** Grow the store in place: append a gated batch's ACCEPTED signatures
-    * so the next batch is gated against everything admitted before it —
-    * the write half of the ingest loop (gate → admit → append). Append
-    * is per-batch metadata-only on object stores; no existing shard file
-    * rewrites. A retried append duplicates its rows (at-least-once);
-    * replay-safe admission goes through
-    * [[graft.sources.Sinks.overwritePartitionsDynamic]] with an explicit
-    * batch_id, as the streaming gate does. Unscoped appends land under
-    * batch_id = -2, so a store that was ever appended is distinguishable
-    * from a pristine bootstrap write (-1) — the gate's re-cap triggers
-    * off exactly that distinction. */
-  def appendSignatures(sig: DataFrame, path: String): Unit =
+  /** Grow the store in place: admit a signature frame as admission
+    * batch `batchId` so the next batch is gated against everything
+    * admitted before it — the write half of the ingest loop (gate →
+    * admit → append), shared by [[graft.operators.Pipeline.ingestDocs]],
+    * the streaming gate ([[graft.streaming.EventStreams.gateBatch]]) and
+    * [[qDedupAsof]]. Under the store's writer claim: recover, absorb the
+    * batch into BOTH Bloom sidecars (`_bloom.bin` by bucket, `_idbloom.bin`
+    * by doc id) BEFORE its rows land — the superset ordering both
+    * pre-filters' no-false-negative soundness rests on — then write the
+    * rows as a dynamic overwrite of their (shard, batch_id) partitions.
+    * A replay of the same batch id rewrites its own partitions and
+    * re-ORs the same bits, so an at-least-once caller converges
+    * (the [[graft.operators.Similarity.appendAnnIndexBatch]] contract).
+    * Any `batch_id` column on `sig` is replaced by `batchId`. */
+  def appendSignaturesBatch(s: SparkSession, sig: DataFrame, path: String,
+      batchId: Long): Unit =
       graft.sources.StoreLock.withLock(path, "append") {
-    graft.sources.Stores.recover(sig.sparkSession, path)
-    absorbIntoBloom(sig.sparkSession, path, sig.select("bucket"))
-    // the ingest guard's id-membership sidecar keeps its superset
-    // invariant through every append face (no-op while absent)
-    graft.sources.IdBloom.absorb(sig.sparkSession, path, sig.select("doc_id"))
-    // -1 is reserved for one-shot deduped bootstrap writes: a caller
-    // frame carrying batch_id = -1 would append duplicate rows into the
-    // bootstrap partition while the layout still lists as pristine, so
-    // the gate's re-cap and compaction would both skip healing it.
-    // Normalize every negative caller id to the unscoped -2 (mirroring
-    // appendAnnIndexBatch's require(batchId >= 0) on the scoped path).
-    graft.sources.Sinks.appendPartitioned(
-      if (sig.columns.contains("batch_id"))
-        sig.withColumn("batch_id",
-          when(col("batch_id") < 0, lit(-2L)).otherwise(col("batch_id").cast("long")))
-      else sig.withColumn("batch_id", lit(-2L)),
-      path, Seq("shard", "batch_id"))
+    require(batchId >= 0, "scoped batch ids are non-negative (negatives are store-internal)")
+    graft.sources.Stores.recover(s, path)
+    // persisted for its three consumers (two sidecar absorbs + the
+    // partition write): signature derivation is the expensive half
+    val scoped = sig.withColumn("batch_id", lit(batchId)).persist()
+    try {
+      absorbIntoBloom(s, path, scoped.select("bucket"))
+      graft.sources.IdBloom.absorb(s, path, scoped.select("doc_id"))
+      graft.sources.Sinks.overwritePartitionsDynamic(scoped, path, Seq("shard", "batch_id"))
+    } finally scoped.unpersist()
   }
 
   /** The store's batch partitions, from a directory listing alone (no
@@ -660,7 +657,7 @@ object Dedup {
       .filter(col("shard").isin(shards: _*) && corpusFilter))
     // A pristine bootstrap store (one write, capped, no duplicate rows)
     // skips both maintenance steps; a grown store pays them: drop exact
-    // retried-append copies — keyed on the full signature row, so two
+    // duplicate rows — keyed on the full signature row, so two
     // DISTINCT docs with identical text still count separately, and an
     // edited re-ingest keeps both versions deterministically — then
     // re-cap per bucket. compactSignatures bakes both in, restoring the
@@ -690,15 +687,16 @@ object Dedup {
       capped.select(col("bucket"), col("grams").as("grams_b")), ordered, prefilter)
   }
 
-  /** Compact the signature store: fold the per-batch append partitions
-    * back into one bootstrap layout (batch_id = -1), dropping exact
-    * duplicate rows (retried plain appends) and applying the per-bucket
-    * cap PERMANENTLY — what [[gateAgainstStored]] re-derives on every
-    * read becomes the stored form, so the store stops accumulating rows
-    * a gate can never use. The small-files maintenance op every
-    * object-store deployment needs: run it from a maintenance batch
-    * while no gate stream is active (collapsing batch partitions would
-    * confuse an in-flight stream's `batch_id < id` replay filter).
+  /** Compact the signature store: fold the admission batches below
+    * the caller's replay watermark `foldBelow` back into one bootstrap
+    * layout (batch_id = -1), dropping exact duplicate rows and applying
+    * the per-bucket cap PERMANENTLY — what [[gateAgainstStored]]
+    * re-derives on every read becomes the stored form, so the store
+    * stops accumulating rows a gate can never use. The small-files
+    * maintenance op every object-store deployment needs: run it from a
+    * maintenance batch while no gate stream is active (collapsing batch
+    * partitions would confuse an in-flight stream's `batch_id < id`
+    * replay filter).
     *
     * Crash-safe via the state layer's temp-write → backup-move → swap
     * pattern: a crash leaves either the original store or the `.bak`
@@ -740,16 +738,16 @@ object Dedup {
     // batch ids under it can still arrive (compactSearchIndex's
     // watermark contract — without it a store that ever saw a scoped
     // admission could NEVER complete a physical delete); the default 0
-    // folds only unscoped partitions. Once nothing replayable remains
+    // folds no admitted batch. Once nothing replayable remains
     // the sidecar is omitted and the swap clears it atomically.
     val scopedRemain = graft.sources.Stores.replayProtectedRemain(s, path, foldBelow)
     graft.sources.Stores.compactInPlace(s, path) { df0 =>
       val df = minusTombstones(s, path, df0)
-      // UNSCOPED batches (ids < 0) fold into the bootstrap partition
+      // batches below the watermark fold into the bootstrap partition
       // with the same dedup key + cap order the gate's grown-store path
       // uses, so compaction bakes in exactly what the gate would
-      // re-derive. Batch-SCOPED partitions (ids >= 0) pass through
-      // UNTOUCHED — not even capped: they are what keeps a streaming
+      // re-derive. Replay-protected partitions (ids >= foldBelow) pass
+      // through UNTOUCHED — not even capped: they are what keeps a streaming
       // replay a pure overwrite of its own partitions and what the
       // `batch_id < id` replay filter excludes, so folding them would
       // resurrect duplicates and a cross-batch cap here would evaluate
@@ -887,8 +885,7 @@ object Dedup {
     graft.sources.TmpStores.buildOnce(path) {
       writeSignatures(sig.filter(
         pmod(col("doc_id"), lit(10L)) =!= 0 && pmod(col("doc_id"), lit(10L)) =!= 5), path)
-      appendSignatures(sig.filter(pmod(col("doc_id"), lit(10L)) === 5)
-        .withColumn("batch_id", lit(5L)), path)
+      appendSignaturesBatch(s, sig.filter(pmod(col("doc_id"), lit(10L)) === 5), path, 5L)
     }
     gateAgainstStoredAsOf(s, path, sig.filter(pmod(col("doc_id"), lit(10L)) === 0),
       asOf = 4L)

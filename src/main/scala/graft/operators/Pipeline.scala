@@ -333,10 +333,11 @@ object Pipeline {
   /** THE ingest entry point — [[forgetDocs]]' admission twin: land one
     * corpus batch in every store of `stores` under ONE batch id,
     * instead of five append APIs with five batch-id conventions.
-    * Routes: batch-scoped signature admission (the streaming gate's
-    * replay-safe write shape — [[graft.streaming.EventStreams.gateBatch]]
-    * minus the gate verdict, because ingest admits what the caller
-    * already decided to admit), vector-index growth under the STORED
+    * Routes: batch-scoped signature admission
+    * ([[Dedup.appendSignaturesBatch]], the write the streaming gate
+    * [[graft.streaming.EventStreams.gateBatch]] admits through — minus
+    * the gate verdict, because ingest admits what the caller already
+    * decided to admit), vector-index growth under the STORED
     * quantizer/bucketer ([[Similarity.appendIvfIndexBatch]] /
     * [[Similarity.appendAnnIndexBatch]], routed by the `_centroids`
     * sidecar that defines an IVF store), posting growth
@@ -403,7 +404,8 @@ object Pipeline {
         stores.signatures.toSeq.map(p => (() => {
           requireNoPendingRetraction(s, p, "doc_id", docs, "signature")
           requireNewDocsInIndex(s, p, "doc_id", docs, batchId, "signature")
-        }, () => appendSignatures(s, p, docs, batchId))) ++
+        }, () => Dedup.appendSignaturesBatch(s,
+          Dedup.signaturesOf(docs.select("doc_id", "text")), p, batchId))) ++
         stores.vectors.map(p => (() => {
           requireNoPendingRetraction(s, p, "vec_id", vectors.get, "vector")
           requireNewDocsInIndex(s, p, "vec_id", vectors.get, batchId, "vector")
@@ -426,27 +428,6 @@ object Pipeline {
       perStore(s, work.map(_._1))
       perStore(s, work.map(_._2))
     }
-  }
-
-  /** Batch-scoped signature admission — the streaming gate's replay-safe
-    * write shape ([[graft.streaming.EventStreams.gateBatch]] minus the
-    * gate verdict). */
-  private def appendSignatures(s: SparkSession, p: String, docs: DataFrame,
-      batchId: Long): Unit = {
-    graft.sources.Stores.recover(s, p)
-    // persisted for its two consumers (Bloom absorb + the partition
-    // write) — gateBatch's discipline; signature derivation is the
-    // expensive half of the admission
-    val sig = Dedup.signaturesOf(docs.select("doc_id", "text"))
-      .withColumn("batch_id", lit(batchId)).persist()
-    try {
-      // superset-before-admission (the Bloom soundness ordering),
-      // for both sidecars: the gate's bucket filter and the ingest
-      // guard's id-membership filter
-      Dedup.absorbIntoBloom(s, p, sig.select("bucket"))
-      graft.sources.IdBloom.absorb(s, p, sig.select("doc_id"))
-      graft.sources.Sinks.overwritePartitionsDynamic(sig, p, Seq("shard", "batch_id"))
-    } finally sig.unpersist()
   }
 
   /** Per-document storage PROVENANCE across a deployment's store

@@ -445,7 +445,7 @@ object Search {
           .select("n_docs", "sum_dl", "batch_id")).coalesce(1),
         tmp + "/_stats", Seq("batch_id"))
       // membership sidecar folds the same way: folded batches' rows move
-      // to batch_id=-1 (distinct absorbs a retried append's duplicates —
+      // to batch_id=-1 (distinct keeps the fold's output duplicate-free —
       // under the doc-disjointness precondition nothing else can collide).
       // Tombstoned membership drops ONLY at the final fold: while the
       // sidecar survives, a dropped membership row would let a re-ingest

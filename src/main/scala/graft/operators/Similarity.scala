@@ -994,25 +994,10 @@ object Similarity {
   /** Grow the IVF index with the STORED quantizer — new vectors are
     * assigned against the centroids trained at write time (production
     * IVF semantics: the quantizer is fixed until a rebuild; re-training
-    * per batch would silently shift every list boundary). At-least-once:
-    * a retried append duplicates its vectors under batch_id = -2;
-    * replay-safe growth goes through [[appendIvfIndexBatch]]. */
-  def appendIvfIndex(s: SparkSession, newVectors: DataFrame, path: String): Unit =
-      graft.sources.StoreLock.withLock(path, "append") {
-    val cents = readCentroids(s, path)
-    // ingest-guard id-membership sidecar: superset-before-admission
-    // (no-op while absent — see graft.sources.IdBloom)
-    graft.sources.IdBloom.absorb(s, path, newVectors.select("vec_id"))
-    graft.sources.Sinks.appendPartitioned(
-      withNorm(newVectors)
-        .withColumn("list_id", ivfListId(cents)(col("embedding"), col("nrm")))
-        .withColumn("batch_id", lit(-2L)),
-      path, Seq("list_id", "batch_id"))
-  }
-
-  /** Replay-idempotent IVF growth: the batch's rows land as a dynamic
-    * overwrite of their (list_id, batch_id) partitions — the same
-    * contract [[appendAnnIndexBatch]] carries for the LSH index. */
+    * per batch would silently shift every list boundary). Replay-
+    * idempotent: the batch's rows land as a dynamic overwrite of their
+    * (list_id, batch_id) partitions — the same contract
+    * [[appendAnnIndexBatch]] carries for the LSH index. */
   def appendIvfIndexBatch(s: SparkSession, newVectors: DataFrame, path: String,
       batchId: Long): Unit =
       graft.sources.StoreLock.withLock(path, "append") {
@@ -1027,8 +1012,8 @@ object Similarity {
   }
 
   /** Compact the IVF index — [[compactAnnIndex]]'s contract on the list
-    * layout (fold unscoped appends, preserve scoped partitions verbatim,
-    * crash-safe swap), with one extra obligation: the quantizer sidecar
+    * layout (fold the batches below the replay watermark, preserve the
+    * rest verbatim, crash-safe swap), with one extra obligation: the quantizer sidecar
     * must ride through the swap, because the lists are only meaningful
     * under the centroids that assigned them. */
   def compactIvfIndex(s: SparkSession, path: String, foldBelow: Long = 0L): Unit =
@@ -1074,7 +1059,7 @@ object Similarity {
     * shared semantics: partition-filtered read, retractions erase
     * history, compaction bounds the horizon with a loud refusal). The
     * centroid sidecar needs no slicing: the quantizer is frozen at
-    * write time (see [[appendIvfIndex]]), so every historical state
+    * write time (see [[appendIvfIndexBatch]]), so every historical state
     * probed under today's centroids IS what a reader probed then. */
   def probeIvfIndexAsOf(s: SparkSession, path: String, lists: Seq[Int],
       asOf: Long): DataFrame = {
@@ -1627,29 +1612,18 @@ object Similarity {
       .withColumn("bucket", lshBucket(col("embedding"), 0 until AnnPlanes))
 
   /** Incrementally grow the index: bucket-assign a batch of new vectors
-    * under the SAME plane family the index was written with and append
-    * them into the matching bucket directories — probes see the new
+    * under the SAME plane family the index was written with and land
+    * them in the matching bucket directories — probes see the new
     * vectors immediately through the same partition pruning, no rebuild.
-    * The embedding-side twin of the dedup signature store's ingest
-    * append: at 100 TB the index is written once and then only ever
-    * appended, because re-bucketing the corpus for each arriving batch
-    * would re-pay the full projection scan. At-least-once: a retried
-    * append duplicates its vectors (they land under batch_id = -2) —
-    * replay-safe growth goes through [[appendAnnIndexBatch]]. */
-  def appendAnnIndex(s: SparkSession, newVectors: DataFrame, path: String): Unit =
-      graft.sources.StoreLock.withLock(path, "append") {
-    graft.sources.Stores.recover(s, path)
-    graft.sources.IdBloom.absorb(s, path, newVectors.select("vec_id"))
-    graft.sources.Sinks.appendPartitioned(
-      bucketed(newVectors).withColumn("batch_id", lit(-2L)),
-      path, Seq("bucket", "batch_id"))
-  }
-
-  /** Replay-idempotent growth for at-least-once drivers (foreachBatch,
-    * retried jobs): the batch's rows land as a dynamic overwrite of
-    * their (bucket, batch_id) partitions, so a replay rewrites its own
-    * partitions instead of duplicating vectors — the same contract the
-    * dedup signature store's streaming admissions carry. */
+    * At 100 TB the index is written once and then only ever grown,
+    * because re-bucketing the corpus for each arriving batch would
+    * re-pay the full projection scan. Replay-idempotent for
+    * at-least-once callers (foreachBatch, retried jobs): the batch's
+    * rows land as a dynamic overwrite of their (bucket, batch_id)
+    * partitions, so a replay rewrites its own partitions instead of
+    * duplicating vectors — the contract
+    * [[graft.operators.Dedup.appendSignaturesBatch]] carries for the
+    * signature store. */
   def appendAnnIndexBatch(s: SparkSession, newVectors: DataFrame, path: String,
       batchId: Long): Unit =
       graft.sources.StoreLock.withLock(path, "append") {
@@ -1661,16 +1635,15 @@ object Similarity {
       path, Seq("bucket", "batch_id"))
   }
 
-  /** Compact the ANN index: fold the UNSCOPED append partitions
-    * (batch_id < 0) into the bootstrap layout and drop the exact
-    * duplicates retried [[appendAnnIndex]] calls leave behind — the
-    * maintenance heal for the at-least-once path (duplicated vectors
-    * would occupy duplicate top-k ranks at probe time), and the same
-    * small-files fix the signature store's compaction provides.
-    * Batch-SCOPED partitions (ids ≥ 0) are preserved verbatim: they are
-    * what makes an [[appendAnnIndexBatch]] replay a pure overwrite of
-    * its own still-existing partitions — folding them would turn a
-    * post-compaction replay into an insert of rows already absorbed.
+  /** Compact the ANN index: fold the admission batches below the
+    * caller's replay watermark `foldBelow` into the bootstrap layout
+    * (batch_id = -1), dropping exact duplicate rows and purging
+    * retracted vectors — the same small-files fix the signature store's
+    * compaction provides. Partitions at or above the watermark are
+    * preserved verbatim: they are what makes an [[appendAnnIndexBatch]]
+    * replay a pure overwrite of its own still-existing partitions —
+    * folding them would turn a post-compaction replay into an insert of
+    * rows already absorbed.
     * Crash-safe via [[graft.sources.Stores.compactInPlace]]; run while
     * no writer is active. */
   def compactAnnIndex(s: SparkSession, path: String, foldBelow: Long = 0L): Unit =
@@ -1691,8 +1664,8 @@ object Similarity {
     val scopedRemain = graft.sources.Stores.replayProtectedRemain(s, path, foldBelow)
     graft.sources.Stores.compactInPlace(s, path)( df0 => {
       val df = graft.sources.Stores.minusTombstones(s, path, "vec_id", df0)
-      // full-row dedup over the FOLDED rows only, so only true
-      // retried-append copies collapse — a re-ingested vector with
+      // full-row dedup over the FOLDED rows only, so only exact
+      // copies collapse — a re-ingested vector with
       // changed embedding keeps both versions deterministically.
       // Batch-SCOPED partitions at/above the watermark pass through
       // untouched AND unpurged (the replay contract: an

@@ -1570,8 +1570,9 @@ object TextOps {
     * because counts and dfs sum at load. Batches must be DOC-disjoint
     * (the posting store's precondition): a doc ingested under two batch
     * ids counts twice, and [[retractLmDocs]] of that doc would subtract
-    * only one copy. The one-shot bootstrap id -1 is reserved
-    * ([[graft.operators.Dedup.appendSignatures]]' convention). */
+    * only one copy. The one-shot bootstrap id -1 is reserved (every
+    * store's convention, [[graft.operators.Dedup.appendSignaturesBatch]]
+    * included: scoped ids are non-negative). */
   def appendLmBatch(s: SparkSession, docs: DataFrame, path: String, batchId: Long): Unit =
       graft.sources.StoreLock.withLock(path, "append") {
     require(batchId >= 0, "scoped batch ids are non-negative (negatives are store-internal)")

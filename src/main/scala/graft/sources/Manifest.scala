@@ -98,9 +98,9 @@ object Manifest {
   }
 
   /** Grow a clustered layout by one batch and extend the manifest with
-    * stats for ONLY the new files — the incremental half of the store
-    * (the appendSignatures discipline applied to data skipping): the
-    * existing files and their stats rows are never re-read or rewritten.
+    * stats for ONLY the new files — the incremental half of the store:
+    * the existing files and their stats rows are never re-read or
+    * rewritten. At-least-once: a retried call appends its rows again.
     * New-file identification is a listing diff around the append, so the
     * stats scan touches exactly the batch just written.
     *

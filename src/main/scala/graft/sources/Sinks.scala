@@ -17,15 +17,6 @@ object Sinks {
   def overwritePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 
-  /** Partitioned append — grows an [[overwritePartitioned]] layout batch
-    * by batch (new files land inside the matching partition dirs; nothing
-    * existing is rewritten). The incremental half of e.g. the dedup
-    * signature store's ingest loop. At-least-once: a retried append
-    * duplicates its rows — idempotent writers use
-    * [[overwritePartitionsDynamic]] with a batch-scoped partition key. */
-  def appendPartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode("append").partitionBy(partitionCols: _*).parquet(path)
-
   /** Dynamic partition overwrite: replaces ONLY the partition directories
     * present in `df`, leaving every other partition untouched — the
     * idempotent write for at-least-once replays (foreachBatch's contract):
@@ -47,31 +38,6 @@ object Sinks {
       .mode("overwrite")
       .format("parquet")
       .saveAsTable(table)
-
-  // ---- interchange formats ------------------------------------------------
-  /** JSON-lines sink — the interchange format most external corpus
-    * tooling speaks. Row-columnar trade: no column pruning or predicate
-    * pushdown on read, so JSONL is a boundary format, not a working
-    * format (land it, convert to parquet, process the parquet). */
-  def overwriteJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-
-  /** JSONL source. The schema is REQUIRED, never inferred: inference
-    * costs a full extra scan before the first real one — at 100 TB that
-    * doubles ingest cost — and can silently widen types between runs,
-    * breaking schema-pinned downstream operators. */
-  def readJsonl(s: org.apache.spark.sql.SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    s.read.schema(schema).json(path)
-
-  /** ORC sink/source — the second columnar working format (column
-    * pruning + predicate pushdown, like parquet; schema rides in the
-    * file footer). */
-  def overwriteOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
-
-  def readOrc(s: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    s.read.orc(path)
 
   /** JSONL ingest with the same reject contract as
     * [[readCsvWithRejects]] — the format the contract matters MOST for:
@@ -100,7 +66,9 @@ object Sinks {
   /** CSV ingest with SQL*Loader reject semantics (the reference's
     * loader writes rejected rows to a BAD file rather than failing the
     * load, `pkg_batch_util` body's sqlldr contract): the file parses
-    * under an EXPLICIT schema (the [[readJsonl]] no-inference rule) in
+    * under an EXPLICIT schema (never inferred: inference costs a full
+    * extra scan before the first real one and can silently widen types
+    * between runs) in
     * PERMISSIVE mode, and each malformed line rides along in a corrupt-
     * record column instead of poisoning the load or being silently
     * dropped. Returns (good rows, rejected rows) — the rejected frame

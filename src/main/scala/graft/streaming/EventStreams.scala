@@ -113,7 +113,7 @@ object EventStreams {
 
   /** Streaming ingest gate over the dedup signature store — the stream
     * twin of the batch gate→admit→append loop (`Dedup.qDedupGate` +
-    * `appendSignatures`): each micro-batch of (doc_id, text) documents is
+    * `Dedup.appendSignaturesBatch`): each micro-batch of (doc_id, text) documents is
     * gated against the STORED corpus signatures with the batch gate
     * (foreachBatch is the standard shape for running batch-only logic —
     * the capping window, the shard-collect — per micro-batch), the gate
@@ -157,9 +157,7 @@ object EventStreams {
   def gateBatch(batch: DataFrame, id: Long, storePath: String, outPath: String): Unit =
       flooredBatch {
     import graft.operators.Dedup
-    import graft.sources.Sinks
-    val sig = Dedup.signaturesOf(batch)
-      .withColumn("batch_id", lit(id)).persist()
+    val sig = Dedup.signaturesOf(batch).persist()
     try {
       val gated = Dedup.gateAgainstStored(batch.sparkSession, storePath, sig,
         corpusFilter = col("batch_id") < id, ordered = false).persist()
@@ -171,87 +169,19 @@ object EventStreams {
             coalesce(col("n_dup_matches"), lit(0L)).as("n_dup_matches"),
             coalesce(col("is_duplicate"), lit(0)).as("is_duplicate"),
             lit(id).as("batch_id"))
-        Sinks.overwritePartitionsDynamic(verdicts, outPath, Seq("batch_id"))
-        val accepted = gated.filter(col("is_duplicate") === 0).select("doc_id")
-        // the store mutation section runs under the store's writer
-        // claim (StoreLock) — the stream is the one writer by protocol,
-        // but a concurrently-launched compaction or forget serializes
-        // against the micro-batch instead of racing its swap; the
-        // enclosing flooredBatch scope gives this claim (like every
-        // streaming admit claim) the 30 s contention-wait floor.
-        graft.sources.StoreLock.withLock(storePath, "gate-admit") {
-          // keep the Bloom sidecar a superset of stored buckets BEFORE
-          // the admission lands (Dedup.absorbIntoBloom's soundness
-          // ordering); the whole batch's buckets over-approximate the
-          // accepted set, which only costs false-positive bits
-          Dedup.absorbIntoBloom(batch.sparkSession, storePath, sig.select("bucket"))
-          // same superset ordering for the ingest guard's id-membership
-          // sidecar (no-op while absent)
-          graft.sources.IdBloom.absorb(batch.sparkSession, storePath,
-            sig.select("doc_id"))
-          Sinks.overwritePartitionsDynamic(sig.join(accepted, "doc_id"),
-            storePath, Seq("shard", "batch_id"))
-        }
+        graft.sources.Sinks.overwritePartitionsDynamic(verdicts, outPath, Seq("batch_id"))
+        // the accepted rows enter through the store's one scoped
+        // admission: under its writer claim (a concurrently-launched
+        // compaction or forget serializes against the micro-batch; the
+        // enclosing flooredBatch scope gives the claim the 30 s
+        // contention-wait floor), both Bloom sidecars absorbed before
+        // the rows land
+        Dedup.appendSignaturesBatch(batch.sparkSession,
+          sig.join(gated.filter(col("is_duplicate") === 0).select("doc_id"), "doc_id"),
+          storePath, id)
       } finally gated.unpersist()
     } finally sig.unpersist()
   }
-
-  /** Streaming vector ingest into a stored IVF index — the stream twin
-    * of the batch bootstrap→append flow
-    * ([[graft.operators.Similarity.writeIvfIndexFrom]] +
-    * [[graft.operators.Similarity.appendIvfIndexBatch]]): bootstrap the
-    * index over the existing corpus first (the quantizer is trained
-    * there and stays FIXED through every streamed append — production
-    * IVF semantics), then each arriving micro-batch of
-    * (vec_id, embedding) vectors is assigned under the stored quantizer
-    * and lands as a dynamic overwrite of its (list_id, batch_id)
-    * partitions. Probes see new vectors immediately through the same
-    * partition pruning — no rebuild, no retrain.
-    *
-    * Replay-safe by construction (foreachBatch is at-least-once): a
-    * replayed batch rewrites its own still-identical partitions, leaving
-    * the index bit-identical (StreamingSpec replays a batch literally
-    * and diffs the index). */
-  def ingestVectorStream(vectors: DataFrame, indexPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        ingestVectorBatch(batch.toDF(), id, indexPath)
-      }
-      .start()
-
-  /** One micro-batch of the vector ingest — the foreachBatch body,
-    * exposed so the replay contract is testable the way [[gateBatch]]'s
-    * is: running it twice with the same id must leave the index
-    * bit-identical to running it once. */
-  def ingestVectorBatch(batch: DataFrame, id: Long, indexPath: String): Unit =
-    flooredBatch(
-      graft.operators.Similarity.appendIvfIndexBatch(batch.sparkSession, batch, indexPath, id))
-
-  /** Stream (doc_id, text) documents into a STORED search index
-    * (bootstrap via [[graft.operators.Search.writeSearchIndex]]): each
-    * micro-batch's postings land as a dynamic overwrite of their
-    * (shard, batch_id) partitions and its stats row overwrites its own
-    * sidecar partition, so an at-least-once replay rewrites itself —
-    * the [[ingestVectorStream]] contract, applied to the lexical index.
-    * BM25 probes see streamed documents immediately (df and global
-    * stats derive from what the probe reads; nothing is cached at
-    * write time), asserted in StreamingSpec. */
-  def ingestPostingsStream(docs: DataFrame, indexPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        ingestPostingsBatch(batch.toDF(), id, indexPath)
-      }
-      .start()
-
-  /** One micro-batch of the posting ingest — exposed for the replay
-    * contract, like [[ingestVectorBatch]]. */
-  def ingestPostingsBatch(batch: DataFrame, id: Long, indexPath: String): Unit =
-    flooredBatch(
-      graft.operators.Search.appendSearchIndexBatch(batch.sparkSession, batch, indexPath, id))
 
   /** Highest micro-batch id the streaming checkpoint's commit log
     * records as COMMITTED, or -1 when none have. This is the fact a
@@ -260,12 +190,16 @@ object EventStreams {
     * whose offsets were planned but whose commit never landed), so
     * `committedWatermark + 1` is exactly the largest safe `foldBelow`
     * for the batch-scoped stores — asserted by the caller no longer,
-    * derived from the engine's own ledger. Reads
+    * derived from the engine's own ledger
+    * ([[graft.lifecycle.Maintenance.moduleRegistry]]'s compaction
+    * modules fold below it when given the ingest checkpoint). Reads
     * `checkpointDir/commits` through the Hadoop FS API; the listing is
-    * control-plane-sized (one entry per committed micro-batch, and
-    * [[compactPostingsFromCheckpoint]] folds store partitions at the
-    * same cadence, so neither grows unboundedly). Metadata-log temp
-    * files (`.<id>.tmp`) are non-numeric and skipped. */
+    * control-plane-sized (one entry per committed micro-batch, and the
+    * compactions fold store partitions at the same cadence, so neither
+    * grows unboundedly). Metadata-log temp files (`.<id>.tmp`) are
+    * non-numeric and skipped. A planned-but-uncommitted batch stays
+    * above the watermark, so its restart replay still rewrites its own
+    * scoped partitions (StreamingSpec stages that crash window). */
   def committedWatermark(s: SparkSession, checkpointDir: String): Long = {
     val commits = new org.apache.hadoop.fs.Path(checkpointDir, "commits")
     val fs = commits.getFileSystem(s.sessionState.newHadoopConf())
@@ -274,48 +208,6 @@ object EventStreams {
       .filter(n => n.nonEmpty && n.forall(_.isDigit))
       .foldLeft(-1L)((m, n) => math.max(m, n.toLong))
   }
-
-  /** [[graft.operators.Search.compactSearchIndex]] with the watermark
-    * DERIVED from the ingest stream's checkpoint instead of asserted by
-    * the caller: folds exactly the batches the commit log proves can
-    * never be replayed (ids ≤ [[committedWatermark]]), and leaves any
-    * planned-but-uncommitted batch scoped so the restart's replay
-    * rewrites it idempotently (StreamingSpec stages that crash window
-    * literally). Run between micro-batches / while the stream is
-    * stopped, like every store compaction here. */
-  def compactPostingsFromCheckpoint(s: SparkSession, indexPath: String,
-      checkpointDir: String): Unit =
-    graft.operators.Search.compactSearchIndex(s, indexPath,
-      foldBelow = committedWatermark(s, checkpointDir) + 1)
-
-  /** Streaming LM ingest: each micro-batch of (doc_id, text) documents
-    * lands its bigram counts and word set as the batch's partitions of
-    * the stored LM ([[graft.operators.TextOps.appendLmBatch]] — additive
-    * counts, vocab union at load), so the quality gate's model tracks
-    * the corpus continuously. Replay-idempotent like every batch-scoped
-    * store here (a re-executed micro-batch overwrites its own
-    * partitions); compaction derives its watermark from the SAME
-    * checkpoint via [[compactLmFromCheckpoint]]. Bootstrap the model
-    * with `writeLmModel` over the existing corpus before starting. */
-  def ingestLmStream(docs: DataFrame, modelPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        ingestLmBatch(batch.toDF(), id, modelPath)
-      }
-      .start()
-
-  /** One micro-batch of the LM ingest — the replay-contract seam. */
-  def ingestLmBatch(batch: DataFrame, id: Long, modelPath: String): Unit =
-    flooredBatch(
-      graft.operators.TextOps.appendLmBatch(batch.sparkSession, batch, modelPath, id))
-
-  /** [[compactPostingsFromCheckpoint]] for the stored LM. */
-  def compactLmFromCheckpoint(s: SparkSession, modelPath: String,
-      checkpointDir: String): Unit =
-    graft.operators.TextOps.compactLmModel(s, modelPath,
-      foldBelow = committedWatermark(s, checkpointDir) + 1)
 
   /** Streaming DELETION — the ingest loops' inverse, closing the
     * continuous lifecycle: each micro-batch of (doc_id, text) deletion
@@ -360,7 +252,12 @@ object EventStreams {
     * component write is a dynamic overwrite of the batch's own
     * partitions). `vectorsFor` derives a batch's embedding frame when
     * vector stores are routed (compute-or-join is the caller's
-    * pipeline; the engine only demands vec_id ≡ doc_id).
+    * pipeline; the engine only demands vec_id ≡ doc_id). The one
+    * streaming ingest: a single store streams through a `DocStores`
+    * naming only it, and its compaction derives the fold watermark
+    * from this stream's checkpoint through
+    * [[graft.lifecycle.Maintenance.moduleRegistry]]'s
+    * `ingestCheckpoint`.
     *
     * One checkpointed stream per store lineage: a FRESH checkpoint
     * restarts micro-batch ids at 0, and re-using a batch-id space

@@ -55,4 +55,26 @@ class BenchMetricsSpec extends AnyFunSuite {
       "a query with no recorded floor is never flagged or watched")
     assert(!Bench.ratioOutlier(Some(0.0), 1.0), "a zero floor must not divide-flag everything")
   }
+
+  test("floor gate, watch list and plan verdicts compare only a run at the record's sf and cpus") {
+    val rec = Some("""{"metric":"total","queries":{"q_a":0.100},""" +
+      """"loadavg":{"cpus":32,"start":1.00,"end":2.00,"queries":{"q_a":1.00}},""" +
+      """"sf":"/data/sf0.1","total_sec":0.100}""")
+    assert(Bench.recordMismatch(rec, "/data/sf0.1", "32").isEmpty,
+      "the recorded scale and CPU count compare")
+    assert(Bench.recordMismatch(rec, "/data/sf0.1/", "32").isEmpty,
+      "a trailing slash names the same dir")
+    assert(Bench.recordMismatch(rec, "/data/sf0.01", "32").nonEmpty, "another scale never compares")
+    assert(Bench.recordMismatch(rec, "/data/sf0.1", "4").nonEmpty, "another CPU count never compares")
+    assert(Bench.recordMismatch(None, "/data/sf0.1", "32").nonEmpty,
+      "no record: nothing says where the floors were taken")
+    val star = Some(""""loadavg":{"cpus":"*","start":1.00},"sf":"/data/sf0.1"""")
+    assert(Bench.recordMismatch(star, "/data/sf0.1", "*").isEmpty, "a quoted cpus value parses")
+    // the committed record states both fields (it was taken on 32 CPUs)
+    val committed = Option(getClass.getResourceAsStream("/bench_last_run.json")).map { in =>
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    }
+    val why = Bench.recordMismatch(committed, "/nowhere", "32")
+    assert(why.exists(_.endsWith(", cpus 32)")), s"the committed record must parse, got $why")
+  }
 }

@@ -309,8 +309,8 @@ class DedupSpec extends AnyFunSuite {
       (11L, "a brand new document with fresh unique wording entirely")).toDF("doc_id", "text")
     assert(gate(batch1) === Map(10L -> 1, 11L -> 0))
     // admit the accepted doc: its signatures join the store in place
-    Dedup.appendSignatures(
-      Dedup.signaturesOf(batch1.filter(col("doc_id") === 11L)), store)
+    Dedup.appendSignaturesBatch(spark,
+      Dedup.signaturesOf(batch1.filter(col("doc_id") === 11L)), store, 1L)
     // batch 2: a copy of the admitted doc must be caught by the GROWN
     // store — the property the whole loop exists for
     val batch2 = Seq(
@@ -354,8 +354,9 @@ class DedupSpec extends AnyFunSuite {
     assert(gate(useBloom = true) === Map(10L -> 0, 11L -> 1))
     // retracting and re-admitting the same content must work (tombstones
     // are gone, so a re-ingested copy is a fresh row, not auto-hidden)
-    Dedup.appendSignatures(Dedup.signaturesOf(
-      Seq((30L, "the quick brown fox jumps over the lazy dog today")).toDF("doc_id", "text")), store)
+    Dedup.appendSignaturesBatch(spark, Dedup.signaturesOf(
+      Seq((30L, "the quick brown fox jumps over the lazy dog today")).toDF("doc_id", "text")),
+      store, 1L)
     assert(gate(useBloom = false) === Map(10L -> 1, 11L -> 1))
   }
 
@@ -364,12 +365,11 @@ class DedupSpec extends AnyFunSuite {
     val store = java.nio.file.Files.createTempDirectory("graft-retractreplay").toString + "/store"
     Dedup.writeSignatures(Dedup.signaturesOf(Seq(
       (1L, "completely different text about spark engines and scala")).toDF("doc_id", "text")), store)
-    // a batch-SCOPED admission (the streaming gate's layout: dynamic
-    // overwrite keyed by batch_id) — replayable by contract
+    // a batch-SCOPED admission (dynamic overwrite keyed by batch_id) —
+    // replayable by contract
     val b3 = Dedup.signaturesOf(Seq(
       (2L, "the quick brown fox jumps over the lazy dog today")).toDF("doc_id", "text"))
-      .withColumn("batch_id", lit(3L))
-    graft.sources.Sinks.overwritePartitionsDynamic(b3, store, Seq("shard", "batch_id"))
+    Dedup.appendSignaturesBatch(spark, b3, store, 3L)
     def verdict(): Int = Dedup.gateAgainstStored(spark, store, Dedup.signaturesOf(Seq(
         (10L, "the quick brown fox jumps over the lazy dog today")).toDF("doc_id", "text")))
       .collect()(0).getInt(3)
@@ -383,7 +383,7 @@ class DedupSpec extends AnyFunSuite {
     assert(verdict() === 0)
     // the resurrection case: batch 3 replays verbatim — the retained
     // tombstone must keep doc 2 invisible
-    graft.sources.Sinks.overwritePartitionsDynamic(b3, store, Seq("shard", "batch_id"))
+    Dedup.appendSignaturesBatch(spark, b3, store, 3L)
     assert(verdict() === 0, "a replayed batch must not resurrect a retracted doc")
     // the watermark completes the delete: once the caller declares no
     // replay below 4 can arrive, batch 3 folds, rows purge, sidecar clears
@@ -454,24 +454,24 @@ class DedupSpec extends AnyFunSuite {
     Dedup.writeSignatures(Dedup.signaturesOf(Seq(
       (1L, "the quick brown fox jumps over the lazy dog today"),
       (2L, "completely different text about spark engines and scala")).toDF("doc_id", "text")), store)
-    // several admitted batches, one of them a retried (duplicated) append
+    // several admitted batches, one of them replayed
     val admitted = Seq(
       (11L, "a brand new document with fresh unique wording entirely"),
       (12L, "yet another set of words nobody wrote before now"),
       (13L, "the final admitted batch carries this exact sentence")).toDF("doc_id", "text")
     admitted.collect().zipWithIndex.foreach { case (r, i) =>
       val one = Seq((r.getLong(0), r.getString(1))).toDF("doc_id", "text")
-      Dedup.appendSignatures(Dedup.signaturesOf(one), store)
-      if (i == 1) Dedup.appendSignatures(Dedup.signaturesOf(one), store) // retry dup
+      Dedup.appendSignaturesBatch(spark, Dedup.signaturesOf(one), store, i + 1L)
+      if (i == 1) Dedup.appendSignaturesBatch(spark, Dedup.signaturesOf(one), store, i + 1L) // replay
     }
     def parquetFiles: Long = {
       val s = java.nio.file.Files.walk(java.nio.file.Paths.get(store))
       try s.filter(_.getFileName.toString.endsWith(".parquet")).count()
       finally s.close()
     }
-    // probe 23 targets the RETRIED (duplicated) append: the gate must
-    // count the admitted doc once, not once per physical copy — and
-    // compaction collapsing the copy must therefore not change anything
+    // probe 23 targets the REPLAYED admission: the gate must count the
+    // admitted doc once — and compaction must therefore not change
+    // anything
     val probe = Seq(
       (20L, "a brand new document with fresh unique wording entirely"),
       (21L, "the quick brown fox jumps over the lazy dog today"),
@@ -484,13 +484,13 @@ class DedupSpec extends AnyFunSuite {
     assert(before.map(v => v._1 -> v._4).toMap ===
       Map(20L -> 1, 21L -> 1, 22L -> 0, 23L -> 1))
     assert(before.find(_._1 == 23L).get._3 === 1L,
-      "a retried append must not double-count its doc in n_dup_matches")
+      "a replayed admission must not double-count its doc in n_dup_matches")
     val filesBefore = parquetFiles
-    Dedup.compactSignatures(spark, store)
+    Dedup.compactSignatures(spark, store, foldBelow = 4L) // all three batches replay-safe
     assert(parquetFiles < filesBefore,
       s"compaction must shrink the file count ($filesBefore -> $parquetFiles)")
     assert(gate() === before, "compaction must not change gate verdicts")
-    // every surviving row is bootstrap-labeled; the retried dup is gone
+    // every surviving row is bootstrap-labeled, each exactly once
     val rows = spark.read.parquet(store)
     assert(rows.select(col("batch_id").cast("long")).distinct()
       .collect().map(_.getLong(0)).toSeq === Seq(-1L))
@@ -503,8 +503,9 @@ class DedupSpec extends AnyFunSuite {
     val store = java.nio.file.Files.createTempDirectory("graft-noopc").toString + "/store"
     Dedup.writeSignatures(Dedup.signaturesOf(Seq(
       (1L, "the quick brown fox jumps over the lazy dog today")).toDF("doc_id", "text")), store)
-    Dedup.appendSignatures(Dedup.signaturesOf(Seq(
-      (2L, "completely different text about spark engines and scala")).toDF("doc_id", "text")), store)
+    Dedup.appendSignaturesBatch(spark, Dedup.signaturesOf(Seq(
+      (2L, "completely different text about spark engines and scala")).toDF("doc_id", "text")),
+      store, 1L)
     def mtimes(path: String): Map[String, Long] = {
       val s = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
       try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
@@ -513,7 +514,7 @@ class DedupSpec extends AnyFunSuite {
         .toMap
       finally s.close()
     }
-    Dedup.compactSignatures(spark, store) // folds the unscoped append into -1
+    Dedup.compactSignatures(spark, store, foldBelow = 2L) // folds batch 1 into -1
     val after = mtimes(store)
     assert(after.nonEmpty)
     Dedup.compactSignatures(spark, store) // pristine layout → detected, skipped
@@ -562,30 +563,6 @@ class DedupSpec extends AnyFunSuite {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(idx + ".bak")))
   }
 
-  test("appendSignatures normalizes caller-supplied negative batch ids to -2") {
-    import spark.implicits._
-    val store = java.nio.file.Files.createTempDirectory("graft-negid").toString + "/store"
-    val doc = Seq((1L, "the quick brown fox jumps over the lazy dog today"))
-      .toDF("doc_id", "text")
-    Dedup.writeSignatures(Dedup.signaturesOf(doc), store)
-    // a hostile/buggy caller hands the append a frame claiming the
-    // bootstrap id: passed through, it would duplicate rows under
-    // batch_id=-1 while the layout still lists as pristine, so the
-    // gate's re-cap AND compaction would both skip healing
-    Dedup.appendSignatures(
-      Dedup.signaturesOf(doc).withColumn("batch_id", lit(-1L)), store)
-    val dirs = graft.sources.Stores.subPartitionDirs(spark, store)
-      .filter(_.startsWith("batch_id="))
-    assert(dirs === Set("batch_id=-1", "batch_id=-2"),
-      "negative caller ids must land in the unscoped -2 partition")
-    // the store now correctly lists as grown → compaction folds the
-    // duplicate away instead of fast-pathing past it
-    Dedup.compactSignatures(spark, store)
-    val rows = spark.read.parquet(store)
-    assert(rows.groupBy("doc_id", "bucket").count()
-      .filter(col("count") > 1).count() === 0L)
-  }
-
   test("a crashed compaction recovers on the next store access, not just the next compaction") {
     import spark.implicits._
     val store = java.nio.file.Files.createTempDirectory("graft-crash").toString + "/store"
@@ -612,8 +589,9 @@ class DedupSpec extends AnyFunSuite {
     // so the pre-crash corpus is preserved alongside the new rows
     assert(fs.rename(new org.apache.hadoop.fs.Path(store),
       new org.apache.hadoop.fs.Path(store + ".bak")))
-    Dedup.appendSignatures(Dedup.signaturesOf(Seq(
-      (2L, "completely different text about spark engines and scala")).toDF("doc_id", "text")), store)
+    Dedup.appendSignaturesBatch(spark, Dedup.signaturesOf(Seq(
+      (2L, "completely different text about spark engines and scala")).toDF("doc_id", "text")),
+      store, 1L)
     assert(gate() === Map(10L -> 1), "the pre-crash corpus must survive the append")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(store + ".bak")))
   }
@@ -674,7 +652,7 @@ class DedupSpec extends AnyFunSuite {
       (11L, "a freshly appended document with its own unique wording"),
       (12L, "another appended piece of text nobody bootstrapped with")).toDF("doc_id", "text")
     Dedup.writeSignatures(Dedup.signaturesOf(a), store)
-    Dedup.appendSignatures(Dedup.signaturesOf(bNew), store)
+    Dedup.appendSignaturesBatch(spark, Dedup.signaturesOf(bNew), store, 1L)
     // re-ingesting the appended docs must report duplicates THROUGH the
     // bloom path: if the append had not absorbed its buckets into the
     // sidecar, the pre-filter would wrongly drop them as novel
@@ -780,8 +758,7 @@ class DedupSpec extends AnyFunSuite {
     val path = java.nio.file.Files.createTempDirectory("graft-sigasof").toString + "/store"
     val boot = sig.filter(pmod(col("doc_id"), lit(10L)) =!= 0 && pmod(col("doc_id"), lit(10L)) =!= 5)
     Dedup.writeSignatures(boot, path)
-    Dedup.appendSignatures(sig.filter(pmod(col("doc_id"), lit(10L)) === 5)
-      .withColumn("batch_id", lit(5L)), path)
+    Dedup.appendSignaturesBatch(spark, sig.filter(pmod(col("doc_id"), lit(10L)) === 5), path, 5L)
     val incoming = sig.filter(pmod(col("doc_id"), lit(10L)) === 0)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), Option(r.get(1)).map(_.toString), r.getLong(2))).toSeq

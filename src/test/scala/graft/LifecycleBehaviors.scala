@@ -12,12 +12,13 @@ import graft.lifecycle._
 import graft.state._
 
 /** Store-GENERIC lifecycle semantics (SURVEY §5.3), written once over
-  * the [[ControlStore]] seam and run once per commit publisher:
-  * [[MwLifecycleFullSpec]] (local hard link),
-  * [[ConditionalPutMwLifecycleSpec]] (conditional put over the
-  * filesystem emulation), [[HttpPutMwLifecycleSpec]] (unsigned HTTP
-  * bucket) and [[SignedHttpPutMwLifecycleSpec]] (SigV4-signed HTTP
-  * bucket). Each binds the multi-writer MwStateStore with a small
+  * the [[ControlStore]] seam and run on two commit publishers:
+  * [[MwLifecycleFullSpec]] (local hard link) and
+  * [[SignedHttpPutMwLifecycleSpec]] (SigV4-signed HTTP bucket, the
+  * conditional-put path end to end). The other conditional-put bindings
+  * reach MwStateStore only through TxnLog, and each passes its own
+  * [[TxnLogBehaviors]] suite with the kill -9 torture
+  * ([[TxnLogConditionalPutSpec]], [[TxnLogHttpPutSpec]]). Each binds the multi-writer MwStateStore with a small
   * checkpoint interval, so checkpoints fire MID-scenario and the read
   * paths cross checkpoint boundaries. Store-SPECIFIC semantics (racing
   * drivers, checkpoint/vacuum, time travel) live in [[MwLifecycleSpec]]

@@ -8,20 +8,18 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.lifecycle._
 import graft.state._
 
-/** The maintenance batch (lifecycle/Maintenance): the reference's
-  * startup → catch-log-continue → endup shape over real store upkeep,
-  * proven over the control store on local and object storage, with REAL
-  * data-plane stores being compacted mid-batch. */
+/** The maintenance DAG (lifecycle/Maintenance): each store's compaction
+  * as an Orchestrator module inside the reference's startup → work →
+  * endup envelope, proven over the control store on local and object
+  * storage, with REAL data-plane stores being compacted mid-run. */
 class MaintenanceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private class FixedClock(t: Instant) extends Clock { def now(): Instant = t }
 
-  private def fixture(store: ControlStore): Lifecycle = {
-    store.putBatchMaster(Seq(BatchMaster(100, "MAINT", 1, Some("OPS"), None)))
+  private def fixture(store: ControlStore): Lifecycle =
     new Lifecycle(store, new FixedClock(Instant.parse("2026-08-12T02:00:00Z")), SystemSleeper)
-  }
 
   private def corpus = Seq(
     (1L, "the quick brown fox jumps over the lazy dog again and again"),
@@ -34,8 +32,7 @@ class MaintenanceSpec extends AnyFunSuite {
     // store that was never written) is a SUCCESSFUL sweep with 0
     // survivors — the module's record count must say so, not die on
     // parquet schema inference and cascade FAILURE into every MANDATORY
-    // dependent of the DAG (standardTasks over the identical layout
-    // succeeds)
+    // dependent of the DAG
     val base = Files.createTempDirectory("graft-maint-empty").toString
     val layout = Maintenance.StoreLayout(
       signatureStore = Some(base + "/never-written"),
@@ -69,71 +66,6 @@ class MaintenanceSpec extends AnyFunSuite {
       Maintenance.StoreLayout(signatureStore = Some(base + "/hollow")))
     assert(hollow("maint_compact_signatures")(spark, "").count() === 0L,
       "an all-folded hollow layout must read back as 0 survivors")
-  }
-
-  test("healthy sweep: every store compacts, batch ends SUCCESS with counts") {
-    val store = new MwStateStore(spark, Files.createTempDirectory("graft-maint").toString)
-    val lc = fixture(store)
-    val idx = Files.createTempDirectory("graft-maint-idx").toString + "/postings"
-    val sig = Files.createTempDirectory("graft-maint-sig").toString + "/signatures"
-    graft.operators.Search.writeSearchIndexFrom(spark, corpus, idx)
-    graft.operators.Search.appendSearchIndexBatch(spark, Seq(
-      (4L, "a second batch of text rides in as its own posting partition"))
-      .toDF("doc_id", "text"), idx, batchId = 1L)
-    graft.operators.Dedup.writeSignatures(graft.operators.Dedup.signaturesOf(corpus), sig)
-    val probeBefore = SearchProbe.scores(spark, idx)
-    // an NB model with a PENDING retraction: the sweep's new
-    // compact-nb-model task is its absorption path
-    val nb = Files.createTempDirectory("graft-maint-nb").toString + "/nbmodel"
-    graft.operators.TextOps.writeNbModel(spark, corpus, nb)
-    graft.operators.TextOps.retractNbDocs(spark, nb, corpus.filter(
-      org.apache.spark.sql.functions.col("doc_id") === 1L))
-    assert(graft.sources.Stores.hasTombstones(spark, nb))
-
-    val tasks = Maintenance.standardTasks(spark, store, Maintenance.StoreLayout(
-      searchIndex = Some((idx, 2L)), nbModel = Some((nb, 100L)), signatureStore = Some(sig)))
-    assert(tasks.map(_.name) === Seq("compact-search-index", "compact-nb-model",
-      "compact-signatures", "checkpoint-control-log", "vacuum-control-log"))
-    val report = Maintenance.runBatch(lc, "MAINT", tasks).toOption.get
-    assert(report.healthy && report.succeeded.length === 5 && report.runId === 1L)
-    assert(!graft.sources.Stores.hasTombstones(spark, nb),
-      "the sweep must absorb the NB store's pending retraction")
-
-    // the batch is VISIBLE in the monitor with its counts
-    val st = store.monitorState.filter(
-      org.apache.spark.sql.functions.col("module_id") === 100L).head()
-    assert(st.getAs[String]("run_status") === RunStatus.Success)
-    assert(st.getAs[Long]("records_processed") === 5L)
-    assert(st.getAs[Long]("records_in_error") === 0L)
-    // and the compaction preserved search semantics (batch partitions folded)
-    assert(SearchProbe.scores(spark, idx) === probeBefore,
-      "compaction must be score-preserving")
-  }
-
-  test("a failing task logs, counts, and does NOT stop the sweep (X4)") {
-    val store = new MwStateStore(spark, Files.createTempDirectory("graft-maint2").toString)
-    val lc = fixture(store)
-    var ranAfter = false
-    val tasks = Seq(
-      Maintenance.Task("boom", () => sys.error("store is on fire")),
-      Maintenance.Task("after", () => { ranAfter = true }))
-    val report = Maintenance.runBatch(lc, "MAINT", tasks).toOption.get
-    assert(!report.healthy && ranAfter, "tasks after the failure must still run")
-    assert(report.failed === Seq("boom" -> "store is on fire"))
-    val st = store.monitorState.filter(
-      org.apache.spark.sql.functions.col("module_id") === 100L).head()
-    assert(st.getAs[String]("run_status") === RunStatus.Failure)
-    assert(st.getAs[Long]("records_processed") === 1L)
-    assert(st.getAs[Long]("records_in_error") === 1L)
-    val logged = store.batchLog.collect()
-    assert(logged.length === 1 &&
-      logged(0).getAs[String]("message") === "boom failed: store is on fire")
-  }
-
-  test("startup failures surface as Left, not as a task failure") {
-    val store = new MwStateStore(spark, Files.createTempDirectory("graft-maint4").toString)
-    val lc = fixture(store)
-    assert(Maintenance.runBatch(lc, "UNREGISTERED", Seq.empty) === Left(NoRecordBatchMaster))
   }
 
   test("orchestrated maintenance DAG: compaction modules behind the DECODE matrix, watermark from the checkpoint, both control stores") {
@@ -212,10 +144,8 @@ class MaintenanceSpec extends AnyFunSuite {
   private object Pipeline2 {
     def ingest(s: org.apache.spark.sql.SparkSession, sig: String, idx: String,
         docs: org.apache.spark.sql.DataFrame): Unit = {
-      graft.sources.Sinks.overwritePartitionsDynamic(
-        graft.operators.Dedup.signaturesOf(docs)
-          .withColumn("batch_id", org.apache.spark.sql.functions.lit(2L)),
-        sig, Seq("shard", "batch_id"))
+      graft.operators.Dedup.appendSignaturesBatch(s,
+        graft.operators.Dedup.signaturesOf(docs), sig, 2L)
       graft.operators.Search.appendSearchIndexBatch(s, docs, idx, batchId = 2L)
     }
   }

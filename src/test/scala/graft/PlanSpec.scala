@@ -292,7 +292,7 @@ class PlanSpec extends AnyFunSuite {
     assert(windows(gated) === 1,
       "gate over an un-appended store must not pay the store-side re-cap window")
     // ...and the first append must bring the re-cap back
-    Dedup.appendSignatures(incoming, path)
+    Dedup.appendSignaturesBatch(spark, incoming, path, 1L)
     val appended = Dedup.gateAgainstStored(spark, path, incoming)
     assert(windows(appended) === 2,
       "gate over an appended store must re-cap the store side per bucket")

@@ -28,8 +28,8 @@ class SimilaritySpec extends AnyFunSuite {
     // grown: bootstrap from the first half, append the second half —
     // the incremental flow a production corpus actually follows
     val grown = s"$tmp/grown"
-    Similarity.appendAnnIndex(spark, emb.filter(col("vec_id") < cut), grown)
-    Similarity.appendAnnIndex(spark, emb.filter(col("vec_id") >= cut), grown)
+    Similarity.writeAnnIndexFrom(spark, emb.filter(col("vec_id") < cut), grown)
+    Similarity.appendAnnIndexBatch(spark, emb.filter(col("vec_id") >= cut), grown, 1L)
     // full: the single-shot build over the same corpus
     val full = s"$tmp/full"
     Similarity.writeAnnIndex(spark, dir, full)
@@ -59,20 +59,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(content(replayed) === f, "post-compaction replay must not duplicate rows")
     assert(spark.read.parquet(replayed).groupBy("vec_id").count()
       .filter(col("count") > 1).count() === 0L)
-    // plain (at-least-once) appends DO duplicate on retry — compaction
-    // is the heal: dups gone, batches folded, content identical
-    val healed = s"$tmp/healed"
-    Similarity.appendAnnIndex(spark, emb.filter(col("vec_id") < cut), healed)
-    Similarity.appendAnnIndex(spark, emb.filter(col("vec_id") >= cut), healed)
-    Similarity.appendAnnIndex(spark, emb.filter(col("vec_id") >= cut), healed) // retry
-    assert(spark.read.parquet(healed).groupBy("vec_id").count()
-      .filter(col("count") > 1).count() > 0L, "the retry must plant duplicates")
-    Similarity.compactAnnIndex(spark, healed)
-    assert(content(healed) === f, "compaction must restore the single-shot content")
-    assert(spark.read.parquet(healed).groupBy("vec_id").count()
-      .filter(col("count") > 1).count() === 0L)
-    assert(spark.read.parquet(healed).select(col("batch_id").cast("long"))
-      .distinct().collect().map(_.getLong(0)).toSeq === Seq(-1L))
   }
 
   test("brute force returns exactly 5 ranked neighbors per query") {

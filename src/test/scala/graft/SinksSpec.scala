@@ -49,23 +49,6 @@ class SinksSpec extends AnyFunSuite {
     assert(filtered.count() > 0 && filtered.count() < all)
   }
 
-  test("JSONL and ORC round-trip the corpus losslessly") {
-    // documents (strings + ints) and embeddings (float arrays) cover the
-    // type surface the interchange formats must preserve
-    import graft.sources.{Sinks, Tables}
-    val tmp = java.nio.file.Files.createTempDirectory("graft-fmt").toString
-    val docs = Tables.documents(spark, TestSpark.sfDir)
-    Sinks.overwriteJsonl(docs, s"$tmp/docs.jsonl")
-    val viaJson = Sinks.readJsonl(spark, s"$tmp/docs.jsonl", docs.schema)
-    assert(viaJson.schema === docs.schema, "explicit schema pins types — no inference drift")
-    assert(viaJson.exceptAll(docs).isEmpty && docs.exceptAll(viaJson).isEmpty)
-    val emb = Tables.embeddings(spark, TestSpark.sfDir)
-    Sinks.overwriteOrc(emb, s"$tmp/emb.orc")
-    val viaOrc = Sinks.readOrc(spark, s"$tmp/emb.orc")
-    assert(viaOrc.schema.fieldNames.toSeq === emb.schema.fieldNames.toSeq)
-    assert(viaOrc.exceptAll(emb).isEmpty && emb.exceptAll(viaOrc).isEmpty)
-  }
-
   test("SQL-callable scalar surface matches the library semantics") {
     ScalarLib.registerAll(spark)
     val r = spark.sql(

@@ -6,7 +6,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.lifecycle.Maintenance
 import graft.operators.EventOps
+import graft.operators.Pipeline.DocStores
 import graft.sources.Tables
 import graft.streaming.EventStreams
 
@@ -31,6 +33,11 @@ class StreamingSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.from(java.time.Instant.parse(s))
+
+  /** A vector micro-batch is its own vectors frame (vec_id ≡ doc_id):
+    * the `vectorsFor` of a vector-only [[DocStores]] ingest. */
+  private val vectorsOf: org.apache.spark.sql.DataFrame => Option[org.apache.spark.sql.DataFrame] =
+    Some(_)
 
   test("batch hourlyAgg equals the oracle-verified qWindowHourly") {
     val viaStream = EventStreams.hourlyAgg(Tables.events(spark, TestSpark.sfDir))
@@ -430,14 +437,14 @@ class StreamingSpec extends AnyFunSuite {
     Similarity.writeIvfIndexFrom(spark, half, crashIdx)
     val rest = emb.filter(col("vec_id") >= 250)
       .select("vec_id", "embedding").as[VecRow].collect().toSeq
-    EventStreams.ingestVectorBatch(rest.toDF(), 1L, refIdx)
+    EventStreams.ingestBatch(rest.toDF(), 1L, DocStores(vectors = Seq(refIdx)), vectorsOf)
     // kill state: half the batch's (list_id, batch_id) partitions
     // committed, claim held by the dead pid
     Similarity.appendIvfIndexBatch(spark, rest.take(rest.length / 2).toDF(), crashIdx, 1L)
     assert(StoreLock.objectStore.putIfAbsent(Paths.get(StoreLock.lockPath(crashIdx)),
       "pid=99999999 op=ivf-append thread=dead ts=1970-01-01T00:00:00Z".getBytes("UTF-8")))
     StoreLock.forceBreak(crashIdx)
-    EventStreams.ingestVectorBatch(rest.toDF(), 1L, crashIdx)
+    EventStreams.ingestBatch(rest.toDF(), 1L, DocStores(vectors = Seq(crashIdx)), vectorsOf)
     def content(path: String): Set[(Long, Int, Long)] =
       spark.read.parquet(path).select("vec_id", "list_id", "batch_id").collect()
         .map(r => (r.getLong(0), r.getAs[Number](1).intValue, r.getAs[Number](2).longValue)).toSet
@@ -516,7 +523,8 @@ class StreamingSpec extends AnyFunSuite {
       .select("vec_id", "embedding").as[VecRow].collect().toSeq
     val (b0, b1) = rest.splitAt(rest.length / 2)
     val input = MemoryStream[VecRow]
-    val q = EventStreams.ingestVectorStream(input.toDF(), idx, ckpt)
+    val q = EventStreams.ingestDocStream(input.toDF(), DocStores(vectors = Seq(idx)), ckpt,
+      vectorsOf)
     try {
       input.addData(b0: _*); q.processAllAvailable()
       input.addData(b1: _*); q.processAllAvailable()
@@ -540,7 +548,7 @@ class StreamingSpec extends AnyFunSuite {
       "streamed ingest must assign exactly what the batch flow assigns")
     // the at-least-once replay, literally: rerun batch 1 — bit-identical
     val before = content(idx)
-    EventStreams.ingestVectorBatch(b1.toDF(), 1L, idx)
+    EventStreams.ingestBatch(b1.toDF(), 1L, DocStores(vectors = Seq(idx)), vectorsOf)
     assert(content(idx) === before, "a replayed vector batch must leave the index bit-identical")
     // probes see streamed vectors through the stored quantizer's pruning
     val (vid, lst, _) = before.find(t => t._1 >= 250 && t._3 == 1L).get
@@ -560,7 +568,7 @@ class StreamingSpec extends AnyFunSuite {
       .as[(Long, String)].collect().toSeq.map(t => DocText(t._1, t._2))
     val (b0, b1) = rest.splitAt(rest.length / 2)
     val input = MemoryStream[DocText]
-    val q = EventStreams.ingestLmStream(input.toDF(), model, ckpt)
+    val q = EventStreams.ingestDocStream(input.toDF(), DocStores(lmModel = Some(model)), ckpt)
     try {
       input.addData(b0: _*); q.processAllAvailable()
       input.addData(b1: _*); q.processAllAvailable()
@@ -577,11 +585,12 @@ class StreamingSpec extends AnyFunSuite {
         java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSeq,
       "the streamed LM must equal single-shot training on the full corpus")
     // replay of a committed batch overwrites itself
-    EventStreams.ingestLmBatch(b1.toDF(), 1L, model)
+    EventStreams.ingestBatch(b1.toDF(), 1L, DocStores(lmModel = Some(model)))
     assert(scores() === streamed, "a replayed LM batch must change nothing")
     // the checkpoint knows batches 0..1 committed: auto-compaction folds
     // exactly them and moves no score
-    EventStreams.compactLmFromCheckpoint(spark, model, ckpt)
+    Maintenance.moduleRegistry(Maintenance.StoreLayout(lmModel = Some((model, 0L))),
+      ingestCheckpoint = Some(ckpt))("maint_compact_lm")(spark, TestSpark.sfDir)
     val remaining = spark.read.parquet(model)
       .select(col("batch_id").cast("long")).distinct()
       .collect().map(_.getLong(0)).toSet
@@ -603,7 +612,7 @@ class StreamingSpec extends AnyFunSuite {
       .as[(Long, String)].collect().toSeq.map(t => DocText(t._1, t._2))
     val (b0, b1) = rest.splitAt(rest.length / 2)
     val input = MemoryStream[DocText]
-    val q = EventStreams.ingestPostingsStream(input.toDF(), idx, ckpt)
+    val q = EventStreams.ingestDocStream(input.toDF(), DocStores(postings = Some(idx)), ckpt)
     try {
       input.addData(b0: _*); q.processAllAvailable()
       input.addData(b1: _*); q.processAllAvailable()
@@ -614,7 +623,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(probeScores() === want,
       "the streamed index must score exactly like the full corpus in-query")
     // the at-least-once replay, literally (MemoryStream batch ids 0, 1)
-    EventStreams.ingestPostingsBatch(b1.toDF(), 1L, idx)
+    EventStreams.ingestBatch(b1.toDF(), 1L, DocStores(postings = Some(idx)))
     assert(probeScores() === want,
       "a replayed posting batch must leave BM25 scores bit-identical")
   }
@@ -631,8 +640,9 @@ class StreamingSpec extends AnyFunSuite {
     val schema = Seq.empty[VecRow].toDF().schema
     def run(vecs: Seq[VecRow]): Unit = {
       vecs.toDF().write.mode("append").parquet(src)
-      val q = EventStreams.ingestVectorStream(
-        spark.readStream.schema(schema).parquet(src), idx, ckpt)
+      val q = EventStreams.ingestDocStream(
+        spark.readStream.schema(schema).parquet(src), DocStores(vectors = Seq(idx)), ckpt,
+        vectorsOf)
       try q.processAllAvailable() finally q.stop()
     }
     run(r1)
@@ -663,8 +673,8 @@ class StreamingSpec extends AnyFunSuite {
     val schema = Seq.empty[DocText].toDF().schema
     def run(batch: Seq[DocText]): Unit = {
       batch.toDF().write.mode("append").parquet(src)
-      val q = EventStreams.ingestPostingsStream(
-        spark.readStream.schema(schema).parquet(src), idx, ckpt)
+      val q = EventStreams.ingestDocStream(
+        spark.readStream.schema(schema).parquet(src), DocStores(postings = Some(idx)), ckpt)
       try q.processAllAvailable() finally q.stop()
     }
     run(r1)
@@ -697,10 +707,15 @@ class StreamingSpec extends AnyFunSuite {
     val (r1, r2) = rest.splitAt(rest.length / 2)
     val schema = Seq.empty[DocText].toDF().schema
     def run(): Unit = {
-      val q = EventStreams.ingestPostingsStream(
-        spark.readStream.schema(schema).parquet(src), idx, ckpt)
+      val q = EventStreams.ingestDocStream(
+        spark.readStream.schema(schema).parquet(src), DocStores(postings = Some(idx)), ckpt)
       try q.processAllAvailable() finally q.stop()
     }
+    // the search store's compaction module, its fold watermark derived
+    // from the ingest stream's checkpoint
+    def compact(): Unit =
+      Maintenance.moduleRegistry(Maintenance.StoreLayout(searchIndex = Some((idx, 0L))),
+        ingestCheckpoint = Some(ckpt))("maint_compact_search")(spark, TestSpark.sfDir)
     r1.toDF().write.mode("append").parquet(src)
     run() // batch 0: planned, executed, COMMITTED
     assert(EventStreams.committedWatermark(spark, ckpt) === 0L)
@@ -708,10 +723,10 @@ class StreamingSpec extends AnyFunSuite {
     // body runs (the store IS written), but the commit never lands — the
     // exact at-least-once window the replay contract exists for
     r2.toDF().write.mode("append").parquet(src)
-    EventStreams.ingestPostingsBatch(r2.toDF(), 1L, idx)
+    EventStreams.ingestBatch(r2.toDF(), 1L, DocStores(postings = Some(idx)))
     assert(EventStreams.committedWatermark(spark, ckpt) === 0L,
       "a batch whose commit never landed must not advance the watermark")
-    EventStreams.compactPostingsFromCheckpoint(spark, idx, ckpt)
+    compact()
     def batchDirs() = Stores.subPartitionDirs(spark, idx)
       .filter(_.startsWith("batch_id=")).map(_.stripPrefix("batch_id=").toLong)
     assert(batchDirs() === Set(-1L, 1L),
@@ -732,7 +747,7 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
     assert(got === want)
     // now that batch 1 IS committed, the next auto-compact folds it too
-    EventStreams.compactPostingsFromCheckpoint(spark, idx, ckpt)
+    compact()
     assert(batchDirs() === Set(-1L))
     val stats2 = spark.read.parquet(idx + "/_stats") // re-list: compaction swapped the files
       .agg(sum("n_docs").as("n_docs"), (sum("sum_dl") / sum("n_docs")).as("avgdl"))

@@ -254,14 +254,6 @@ class TxnLogConditionalPutSpec extends TxnLogBehaviors {
   }
 }
 
-/** The full [[LifecycleBehaviors]] matrix with commits published by
-  * object-store conditional put over the filesystem emulation. */
-class ConditionalPutMwLifecycleSpec extends LifecycleBehaviors {
-  def makeStore(dir: String): graft.state.ControlStore =
-    new MwStateStore(spark, dir, checkpointEvery = 7,
-      publisher = TxnLog.ConditionalPutFs)
-}
-
 /** [[TxnLogBehaviors]] over the CLOUD-shape binding (r16 verdict item
   * 2): commits published through [[graft.state.HttpBucket
   * .HttpObjectStore]] — a real REST client doing `If-None-Match: *`
@@ -325,21 +317,6 @@ class TxnLogHttpPutSpec extends TxnLogBehaviors
       assert(!c.putIfAbsent(key, "k\nother-pid-9".getBytes("UTF-8")),
         "a genuinely different writer still reads the 412 as a loss")
     } finally lossy.stop()
-  }
-}
-
-/** The full [[LifecycleBehaviors]] matrix with commits crossing the
-  * unsigned HTTP bucket binding. */
-class HttpPutMwLifecycleSpec extends LifecycleBehaviors
-    with org.scalatest.BeforeAndAfterAll {
-  private lazy val staging = Files.createTempDirectory("graft-bucket-mw")
-  private lazy val server = new graft.state.HttpBucket.Server(staging, latencyMs = 1)
-  def makeStore(dir: String): graft.state.ControlStore =
-    new MwStateStore(spark, dir, checkpointEvery = 7,
-      publisher = new TxnLog.ConditionalPut(
-        new graft.state.HttpBucket.HttpObjectStore(java.net.URI.create(server.uri))))
-  override def afterAll(): Unit = {
-    try server.stop() finally super.afterAll()
   }
 }
 

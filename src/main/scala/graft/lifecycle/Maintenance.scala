@@ -31,9 +31,9 @@ object Maintenance {
   final case class StoreLayout(
       searchIndex: Option[(String, Long)] = None,   // (path, foldBelow)
       lmModel: Option[(String, Long)] = None,       // (path, foldBelow)
-      // batch-scoped since round 14 (appendNbBatch): same watermark
-      // contract as the LM — retraction absorption waits for the fold
-      // that covers every replay-protected batch
+      // a count store like the LM (graft.sources.CountStore): retraction
+      // absorption waits for the fold that covers every replay-protected
+      // batch
       nbModel: Option[(String, Long)] = None,       // (path, foldBelow)
       signatureStore: Option[String] = None,
       annIndex: Option[String] = None,
@@ -65,9 +65,10 @@ object Maintenance {
     * with a durable commit can never be replayed), so the orchestrated
     * sweep needs no human in the watermark loop; without one, the
     * layout's asserted values hold (0 = fold nothing scoped, always
-    * safe). Model stores read back under their pinned count schemas —
-    * a legitimately-empty fileless layout must report 0, not die on
-    * schema inference. */
+    * safe). Model stores read back through
+    * [[graft.sources.CountStore.storedCounts]]: a fileless or
+    * never-written layout reports 0 rows instead of failing the module
+    * and cascading FAILURE through its dependents. */
   def moduleRegistry(layout: StoreLayout, ingestCheckpoint: Option[String] = None)
       : Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = {
     import graft.operators.{Dedup, Search, Similarity, TextOps}
@@ -94,14 +95,6 @@ object Maintenance {
                 .contains("unable to infer schema") =>
           s.range(0).toDF("rows")
       }
-    // Model stores carry pinned count schemas, so an EXISTING-but-
-    // fileless layout already reads as 0 rows — but a NEVER-written
-    // path (configured before the first train) must too, not die on
-    // PATH_NOT_FOUND and cascade FAILURE through the DAG's dependents.
-    def schemaFrame(s: SparkSession, p: String,
-        schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
-      if (graft.sources.Stores.pathExists(s, p)) s.read.schema(schema).parquet(p)
-      else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     Seq(
       layout.searchIndex.map { case (p, w) => "maint_compact_search" ->
         ((s: SparkSession, _: String) => {
@@ -109,11 +102,11 @@ object Maintenance {
       layout.lmModel.map { case (p, w) => "maint_compact_lm" ->
         ((s: SparkSession, _: String) => {
           TextOps.compactLmModel(s, p, wm(s, w))
-          schemaFrame(s, p, TextOps.lmCountsSchema) }) },
+          TextOps.lmStore.storedCounts(s, p) }) },
       layout.nbModel.map { case (p, w) => "maint_compact_nb" ->
         ((s: SparkSession, _: String) => {
           TextOps.compactNbModel(s, p, wm(s, w))
-          schemaFrame(s, p, TextOps.nbCountsSchema) }) },
+          TextOps.nbStore.storedCounts(s, p) }) },
       layout.signatureStore.map(p => "maint_compact_signatures" ->
         ((s: SparkSession, _: String) => {
           Dedup.compactSignatures(s, p, wm(s, layout.retractionFoldBelow))

@@ -136,7 +136,8 @@ object Pipeline {
     * vector-index tombstones ([[Similarity.retractVectors]], IVF and
     * LSH), posting tombstones with the BM25 stats correction
     * ([[Search.retractSearchDocs]]), and the trained-model negative
-    * corrections ([[TextOps.retractLmDocs]]/[[TextOps.retractNbDocs]],
+    * corrections of the count stores ([[graft.sources.CountStore.retract]]
+    * through [[TextOps.retractLmDocs]]/[[TextOps.retractNbDocs]],
     * which need the doc TEXT — the reason this takes the docs frame,
     * not bare ids). After it returns, every read face answers as if the
     * docs were never ingested; the physical purge completes at each
@@ -343,14 +344,15 @@ object Pipeline {
     * sidecar that defines an IVF store), posting growth
     * ([[Search.appendSearchIndexBatch]], its cross-batch
     * doc-disjointness check run up front as [[Search.requireNewDocs]]),
-    * and exact additive LM growth ([[TextOps.appendLmBatch]]). Cross-batch
-    * doc-disjointness is every store's exactness precondition, as each
-    * append face documents.
+    * and exact additive LM and NB growth
+    * ([[graft.sources.CountStore.append]]). Cross-batch doc-disjointness
+    * is every store's exactness precondition, as each append face
+    * documents.
     *
     * Both trained models grow exactly: the LM and (since the NB store
     * went batch-scoped additive) the classifier are corpus statistics
     * whose batch counts sum to one-shot training on the union
-    * ([[TextOps.appendLmBatch]]/[[TextOps.appendNbBatch]]), so every
+    * (both count stores, [[graft.sources.CountStore.append]]), so every
     * scoring face immediately reflects the ingested batch — the full
     * symmetry with [[forgetDocs]], which retracts from the same five
     * families.
@@ -453,10 +455,6 @@ object Pipeline {
     * deletion-request-sized, the tombstone sidecars' own bound. */
   def docProvenance(s: SparkSession, stores: DocStores, docs: DataFrame): DataFrame = {
     val ids = docs.select(col("doc_id").cast(LongType).as("doc_id")).distinct()
-    def exists(p: String): Boolean =
-      org.apache.hadoop.fs.FileSystem.get(new java.net.URI(p),
-          s.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(p))
     def face(family: String, path: String, idCol: String,
         membership: DataFrame): DataFrame = {
       val present = membership
@@ -483,22 +481,14 @@ object Pipeline {
         face("vector", p, "vec_id", s.read.parquet(p))) ++
       stores.postings.toSeq.map { p =>
         val membership =
-          if (exists(p + "/_docs")) s.read.parquet(p + "/_docs")
+          if (graft.sources.Stores.pathExists(s, p + "/_docs")) s.read.parquet(p + "/_docs")
           else s.read.parquet(p).select("doc_id", "batch_id")
         face("posting", p, "doc_id", membership)
       } ++
-      stores.lmModel.toSeq.map { p =>
-        require(exists(p + "/_docs"),
-          s"LM store $p predates the _docs admission sidecar — provenance " +
-            "needs membership; re-train with writeLmModel")
-        face("lm_model", p, "doc_id", s.read.parquet(p + "/_docs"))
-      } ++
-      stores.nbModel.toSeq.map { p =>
-        require(exists(p + "/_docs"),
-          s"NB store $p predates the _docs admission sidecar — provenance " +
-            "needs membership; re-train with writeNbModel")
-        face("nb_model", p, "doc_id", s.read.parquet(p + "/_docs"))
-      }
+      stores.lmModel.toSeq.map(p =>
+        face("lm_model", p, "doc_id", TextOps.lmStore.members(s, p))) ++
+      stores.nbModel.toSeq.map(p =>
+        face("nb_model", p, "doc_id", TextOps.nbStore.members(s, p)))
     require(faces.nonEmpty, "docProvenance: no stores routed")
     faces.reduce(_ unionByName _).orderBy("family", "doc_id")
   }

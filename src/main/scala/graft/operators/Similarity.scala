@@ -301,14 +301,6 @@ object Similarity {
     (n, lshCand.toDouble / nQ, ivfCand.toDouble / nQ)
   }
 
-  /** Measured cost-bytes per tier on this dataset — the cost column of
-    * the recall store. */
-  def measuredTierCost(s: SparkSession, dir: String): Map[String, Double] = {
-    val (n, lshC, ivfC) = measuredCandidatesFrom(Tables.embeddings(s, dir))
-    (annTierFaces.keySet + "brute").map(t =>
-      t -> annTierCostMeasured(t, n, lshC, ivfC)).toMap
-  }
-
   /** THE planner decision: cheapest tier whose MEASURED mean recall@5
     * meets the target, priced by its MEASURED cost-bytes (the store's
     * cost column on the engine side; the sequential twin's re-derived
@@ -369,9 +361,9 @@ object Similarity {
   def writeAnnRecallStore(s: SparkSession, dir: String, path: String): Unit = {
     import s.implicits._
     // ONE shared normalized-corpus pass for recalls AND costs (r21, the
-    // r20 advice item): calling [[measuredTierRecall]] and
-    // [[measuredTierCost]] back to back re-scanned and re-normalized the
-    // corpus once each — here the withNorm frame persists once and
+    // r20 advice item): measuring recalls ([[measuredTierRecall]]) and
+    // costs ([[measuredCandidatesFrom]]) separately re-scanned and
+    // re-normalized the corpus once each — here the withNorm frame persists once and
     // serves the exact brute-force side, the quantizer's seed sample,
     // and all four candidate-volume aggregates. Values are identical to
     // the two standalone entry points' (same frames, same arithmetic),
@@ -701,7 +693,7 @@ object Similarity {
   private[graft] def trainQuantizerOnSample(
       sample: Array[Array[Double]]): Array[(Int, Array[Double], Double)] = {
     // fail HERE with the cause, not as a NoSuchElementException deep in
-    // seeding (the lmScoreStored empty-vocabulary convention)
+    // seeding (the stored count models' empty-model refusal convention)
     require(sample.nonEmpty,
       "cannot train an IVF quantizer on an empty embedding sample — the corpus is empty or fully filtered")
     // 2. farthest-point seeding over unit vectors (deterministic: sample

@@ -1159,21 +1159,19 @@ object TextOps {
     dsirSelect(Tables.documents(s, dir), col("lang") === "en", k = 100,
       featureOf = dsirBucket(DsirBuckets))
 
-  // ---- stored DSIR model (the LM-store discipline) -------------------------
+  // ---- stored DSIR model (a [[graft.sources.CountStore]]) ------------------
   //
   // The pass a pretraining mixture runs REPEATEDLY is "score a new crawl
   // batch against the frozen target model" — retraining both
   // distributions per query (the in-query faces above) is a one-shot
-  // shape. The store materializes the two bucket-count frames the same
-  // way writeLmModel materializes the bigram LM: batch-scoped additive
-  // counts (bootstrap = -1), grown by dynamic partition overwrites
-  // (replay-idempotent), folded by compaction, sliced by as-of partition
-  // filters. Counts are ADDITIVE in both frames, so the stored model is
-  // exact at any append depth; the shared smoothing base v2
-  // (pool-distinct features) is derived from the SUMMED pool frame at
-  // load, which keeps it exact too (distinct-of-union ≡ nonzero rows of
-  // the summed counts). Both frames are ≤ [[DsirBuckets]] rows —
-  // model-plane constants a scorer broadcasts.
+  // shape. The store materializes the two bucket-count frames: pool
+  // counts at the store path and target counts in `_target`, both
+  // additive, so the stored model is exact at any append depth; the
+  // shared smoothing base v2 (pool-distinct features) is derived from
+  // the SUMMED pool frame at load, which keeps it exact too
+  // (distinct-of-union ≡ nonzero rows of the summed counts). Both frames
+  // are ≤ [[DsirBuckets]] rows — model-plane constants a scorer
+  // broadcasts.
 
   private[graft] val dsirCountsSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "f BIGINT, c BIGINT, batch_id BIGINT")
@@ -1183,167 +1181,45 @@ object TextOps {
   private def dsirFeats(docs: DataFrame): DataFrame =
     lmGrams(docs).select(col("doc_id"), dsirBucket(DsirBuckets)(col("bg")).as("f"))
 
-  /** Bucket-count frames of one batch: (pool counts, target counts).
-    * ONE gram pass for both (r21): a target flag + conditional sum in a
-    * single aggregate, materialized lazily once (≤ [[DsirBuckets]] rows)
-    * so the two store writes don't each re-run the corpus explode. The
-    * target frame keeps its sparse shape (features with no target grams
-    * are absent, as the semi-join formulation produced). */
-  private def dsirCounts(docs: DataFrame, targetPred: Column): (DataFrame, DataFrame) = {
-    val tgt = docs.filter(targetPred).select(col("doc_id"), lit(1L).as("__t"))
-    val both = dsirFeats(docs).join(tgt, Seq("doc_id"), "left")
-      .groupBy("f").agg(count(lit(1)).as("c"),
-        coalesce(sum("__t"), lit(0L)).as("__ct"))
-      .localCheckpoint(eager = false)
-    (both.select(col("f"), col("c")),
-      both.filter(col("__ct") > 0).select(col("f"), col("__ct").as("c")))
-  }
+  /** The stored DSIR model: per doc, one pool row per gram, and one
+    * target row per gram of a target doc (the `__dsir_target` flag
+    * [[dsirTargeted]] sets). The target frame stays sparse: features
+    * with no target grams are absent. Membership is every doc. */
+  private[graft] val dsirStore = new graft.sources.CountStore("DSIR model", "writeDsirModel",
+    Seq(
+      graft.sources.CountStore.Frame("", Some("f"), Seq("c"), dsirCountsSchema),
+      graft.sources.CountStore.Frame("_target", Some("f"), Seq("c"), dsirCountsSchema)),
+    docs => graft.sources.CountStore.Contributions(
+      Seq(dsirFeats(docs).withColumn("c", lit(1L)),
+        dsirFeats(docs.filter(col("__dsir_target"))).withColumn("c", lit(1L))),
+      docs.select(col("doc_id")).distinct()))
 
-  /** Train-once bootstrap: pool counts at `path`, target counts at
-    * `path/_target`, both batch -1. Crash-safe via
-    * [[graft.sources.Stores.overwriteAside]]. An empty target slice is
-    * legal (a zero-row `_target` → nt = 0 → every gram takes the
-    * Laplace floor, the dsirSelect domain edge DsirSpec pins). */
+  /** `docs` with the target predicate the model is trained with, as the
+    * flag column [[dsirStore]]'s derivation reads. */
+  private def dsirTargeted(docs: DataFrame, targetPred: Column): DataFrame =
+    docs.withColumn("__dsir_target", targetPred)
+
+  /** Train-once bootstrap ([[graft.sources.CountStore.write]]). An empty
+    * target slice is legal (a zero-row `_target` → nt = 0 → every gram
+    * takes the Laplace floor, the dsirSelect domain edge DsirSpec pins). */
   def writeDsirModel(s: SparkSession, docs: DataFrame, targetPred: Column,
       path: String): Unit =
-    graft.sources.Stores.overwriteAside(s, path) { tmp =>
-      val (cs, ct) = dsirCounts(docs, targetPred)
-      cs.withColumn("batch_id", lit(-1L))
-        .coalesce(1).write.partitionBy("batch_id").parquet(tmp)
-      ct.withColumn("batch_id", lit(-1L))
-        .coalesce(1).write.partitionBy("batch_id").parquet(tmp + "/_target")
-      // admission membership (doc_id, batch_id) — the LM's `_docs`
-      // discipline: the as-of face applies only those retraction
-      // corrections whose doc was a member at the queried state
-      docs.select(col("doc_id")).distinct().withColumn("batch_id", lit(-1L))
-        .coalesce(1).write.partitionBy("batch_id").parquet(tmp + "/_docs")
-    }
+    dsirStore.write(s, dsirTargeted(docs, targetPred), path)
 
-  /** Grow the stored model: the batch's bucket counts land as dynamic
-    * overwrites of their batch_id partition in BOTH frames —
-    * replay-idempotent (a retried batch rewrites itself) and exact at
-    * any depth, because counts sum at load. Batches must be
-    * doc-disjoint (the [[appendLmBatch]] precondition). */
+  /** Grow the stored model by one scoped batch
+    * ([[graft.sources.CountStore.append]]). */
   def appendDsirBatch(s: SparkSession, docs: DataFrame, targetPred: Column,
       path: String, batchId: Long): Unit =
-      graft.sources.StoreLock.withLock(path, "append") {
-    require(batchId >= 0, "scoped batch ids are non-negative (negatives are store-internal)")
-    graft.sources.Stores.recover(s, path)
-    val (cs, ct) = dsirCounts(docs, targetPred)
-    graft.sources.Sinks.overwritePartitionsDynamic(
-      cs.withColumn("batch_id", lit(batchId)).coalesce(1), path, Seq("batch_id"))
-    graft.sources.Sinks.overwritePartitionsDynamic(
-      ct.withColumn("batch_id", lit(batchId)).coalesce(1),
-      path + "/_target", Seq("batch_id"))
-    graft.sources.Sinks.overwritePartitionsDynamic(
-      docs.select(col("doc_id")).distinct()
-        .withColumn("batch_id", lit(batchId)).coalesce(1),
-      path + "/_docs", Seq("batch_id"))
-  }
+    dsirStore.append(s, dsirTargeted(docs, targetPred), path, batchId)
 
-  /** The DSIR store's pending-retraction corrections: negative bucket
-    * counts per frame, keyed ready to subtract from the stored sums.
-    * The sidecar's `distinct()` is the replay-idempotency mechanism
-    * (the [[lmCorrections]] argument verbatim). */
-  private def dsirCorrections(s: SparkSession, path: String): (DataFrame, DataFrame) = {
-    val side = s.read.parquet(graft.sources.Stores.tombstonePath(path)).distinct()
-    def neg(kind: String): DataFrame = side.filter(col("kind") === kind)
-      .groupBy(col("k").cast("long").as("f")).agg(sum("c").as("cneg"))
-    (neg("cs"), neg("ct"))
-  }
-
-  /** Retract documents from the stored DSIR model — the trained-MODEL
-    * deletion face, completing the family parity with
-    * [[retractLmDocs]]: the caller supplies the retracted docs VERBATIM
-    * plus the SAME target predicate the model was trained with (a count
-    * model aggregates identity away at training, so both frame
-    * contributions re-derive through [[dsirFeats]]/`targetPred` and
-    * land as negative corrections in the tombstone sidecar). Every
-    * reader subtracts them, so surviving weights equal a retrain on the
-    * surviving corpus IMMEDIATELY and bit-for-bit (DsirSpec pins the
-    * equality); compaction's final fold absorbs them physically.
-    * Replay-idempotent via the sidecar distinct; retracting a doc the
-    * store never trained on (or with drifted text/target membership)
-    * refuses LOUDLY via the future-set subtractability check on BOTH
-    * frames before anything is written. */
+  /** Retract documents from the stored DSIR model
+    * ([[graft.sources.CountStore.retract]]): the caller supplies the docs
+    * verbatim plus the SAME target predicate the model was trained with,
+    * and surviving weights equal a retrain on the surviving corpus
+    * bit-for-bit (DsirSpec pins the equality). */
   def retractDsirDocs(s: SparkSession, path: String, docs: DataFrame,
-      targetPred: Column): Unit = {
-    graft.sources.Stores.recover(s, path)
-    val feats = dsirFeats(docs)
-    val csRows = feats.groupBy("doc_id", "f").agg(count(lit(1)).as("c"))
-      .select(col("doc_id"), lit("cs").as("kind"), col("f").cast("string").as("k"), col("c"))
-    val ctRows = feats
-      .join(docs.filter(targetPred).select("doc_id"), Seq("doc_id"), "left_semi")
-      .groupBy("doc_id", "f").agg(count(lit(1)).as("c"))
-      .select(col("doc_id"), lit("ct").as("kind"), col("f").cast("string").as("k"), col("c"))
-    val rows = csRows.unionByName(ctRows)
-    require(!rows.isEmpty, s"retractDsirDocs($path): empty retraction set")
-    val future =
-      if (!graft.sources.Stores.hasTombstones(s, path)) rows
-      else s.read.parquet(graft.sources.Stores.tombstonePath(path)).unionByName(rows)
-    val futDistinct = future.distinct()
-    def check(kind: String, p: String, label: String): Unit = {
-      val fut = futDistinct.filter(col("kind") === kind)
-        .groupBy(col("k").cast("long").as("f")).agg(sum("c").as("cfut"))
-      val net = s.read.schema(dsirCountsSchema).parquet(p)
-        .groupBy("f").agg(sum("c").as("c"))
-      val bad = fut.join(net, Seq("f"), "left")
-        .filter(coalesce(col("c"), lit(0L)) < col("cfut"))
-        .select("f").limit(5).collect().map(_.getLong(0))
-      require(bad.isEmpty,
-        s"retractDsirDocs($path): retraction subtracts $label bucket counts the " +
-          s"stored model does not hold (e.g. ${bad.mkString(", ")}) — the docs were " +
-          "not trained into this store (or were already retracted with different " +
-          "text or target membership)")
-    }
-    check("cs", path, "pool")
-    check("ct", path + "/_target", "target")
-    graft.sources.Stores.retractRows(s, path, rows)
-  }
-
-  /** Net model frames at `asOf` (None = live): counts sum across batch
-    * partitions — the as-of slice is a PARTITION FILTER pruned before a
-    * row is read — then pending retraction corrections subtract,
-    * dropping net-zero buckets, so the model a scorer sees IS the model
-    * a retrain on the surviving corpus would produce. As-of corrections
-    * are scoped to docs that were MEMBERS at `asOf` via the `_docs`
-    * admission sidecar (retraction erases history, but a doc trained
-    * only after `asOf` must not shrink the as-of model — the
-    * [[lmScoreStoredAsOf]] membership discipline). */
-  private def dsirModelFrames(s: SparkSession, path: String,
-      asOf: Option[Long]): (DataFrame, DataFrame) = {
-    def load(p: String): DataFrame = {
-      val raw = s.read.schema(dsirCountsSchema).parquet(p)
-      asOf.fold(raw)(a => raw.filter(col("batch_id").cast("long") <= a))
-        .groupBy("f").agg(sum("c").as("c"))
-    }
-    val (csAll, ctAll) = (load(path), load(path + "/_target"))
-    if (!graft.sources.Stores.hasTombstones(s, path)) (csAll, ctAll)
-    else {
-      val (csNeg0, ctNeg0) = asOf match {
-        case None => dsirCorrections(s, path)
-        case Some(a) =>
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-          require(fs.exists(new org.apache.hadoop.fs.Path(path + "/_docs")),
-            s"stored DSIR model at $path carries retractions but predates the _docs " +
-              "admission sidecar — as-of reads cannot scope corrections to " +
-              "membership; re-train with writeDsirModel")
-          val present = s.read.parquet(path + "/_docs")
-            .filter(col("batch_id").cast("long") <= a).select("doc_id")
-          val side = s.read.parquet(graft.sources.Stores.tombstonePath(path))
-            .distinct().join(present, Seq("doc_id"), "left_semi")
-          def neg(kind: String): DataFrame = side.filter(col("kind") === kind)
-            .groupBy(col("k").cast("long").as("f")).agg(sum("c").as("cneg"))
-          (neg("cs"), neg("ct"))
-      }
-      def minus(all: DataFrame, negs: DataFrame): DataFrame =
-        all.join(negs, Seq("f"), "left")
-          .select(col("f"), (col("c") - coalesce(col("cneg"), lit(0L))).as("c"))
-          .filter(col("c") > 0)
-      (minus(csAll, csNeg0), minus(ctAll, ctNeg0))
-    }
-  }
+      targetPred: Column): Unit =
+    dsirStore.retract(s, path, dsirTargeted(docs, targetPred))
 
   /** The scoring tail every stored-DSIR face shares: per-doc summed
     * fixed-point log-ratios under the GIVEN net frames — the same
@@ -1354,8 +1230,9 @@ object TextOps {
     * The three scalars collect driver-side (model-plane, ≤ B rows) and
     * fold into the scan projection as literals; the count frames
     * broadcast. */
-  private def scoreUnderDsirModel(docs: DataFrame,
-      cs: DataFrame, ct: DataFrame, path: String): DataFrame = {
+  private def scoreUnderDsirModel(s: SparkSession, docs: DataFrame, path: String,
+      asOf: Option[Long]): DataFrame = {
+    val Seq(cs, ct) = dsirStore.netFrames(s, path, asOf)
     val row = cs.agg(coalesce(sum("c"), lit(0L)).as("ns"), count(lit(1)).as("v2"))
       .crossJoin(ct.agg(coalesce(sum("c"), lit(0L)).as("nt"))).collect()(0)
     val (ns, v2, nt) = (row.getLong(0), row.getLong(1), row.getLong(2))
@@ -1376,90 +1253,28 @@ object TextOps {
 
   /** Score a batch under the stored model — no retrain: the repeated
     * pass of a mixture pipeline. Rows ordered by doc_id. */
-  def dsirScoreStored(s: SparkSession, docs: DataFrame, path: String): DataFrame = {
-    graft.sources.Stores.recover(s, path)
-    val (cs, ct) = dsirModelFrames(s, path, None)
-    scoreUnderDsirModel(docs, cs, ct, path).orderBy("doc_id")
-  }
+  def dsirScoreStored(s: SparkSession, docs: DataFrame, path: String): DataFrame =
+    scoreUnderDsirModel(s, docs, path, None).orderBy("doc_id")
 
   /** Top-K selection under the stored model — [[dsirScoreStored]]
     * through the shared [[dsirRank]] tail. Defined to return what the
     * in-query bucketed face returns when the model was trained on the
     * scored corpus (shares q_dsir_bucket's Expected artifact). */
   def dsirSelectStored(s: SparkSession, docs: DataFrame, path: String,
-      k: Int): DataFrame = {
-    graft.sources.Stores.recover(s, path)
-    val (cs, ct) = dsirModelFrames(s, path, None)
-    dsirRank(scoreUnderDsirModel(docs, cs, ct, path), k)
-  }
+      k: Int): DataFrame =
+    dsirRank(scoreUnderDsirModel(s, docs, path, None), k)
 
   /** [[dsirScoreStored]] AS OF admission batch `asOf` — the mixture
     * pipeline's reproducibility face ("score this crawl under the
-    * selection model as the corpus stood at batch N"), the FULL
-    * [[lmScoreStoredAsOf]] semantics: a pure partition filter on both
-    * frames, horizon-guarded by the shared
-    * [[graft.sources.Stores.requireAsOfReconstructable]], with
-    * [[retractDsirDocs]] corrections applied membership-scoped via the
-    * `_docs` sidecar (see [[dsirModelFrames]] — retraction erases
-    * history, but only for docs that were members at `asOf`). */
+    * selection model as the corpus stood at batch N"), with the
+    * [[graft.sources.CountStore.netFrames]] as-of semantics. */
   def dsirScoreStoredAsOf(s: SparkSession, docs: DataFrame, path: String,
-      asOf: Long): DataFrame = {
-    graft.sources.Stores.recover(s, path)
-    graft.sources.Stores.requireAsOfReconstructable(s, path, asOf)
-    val (cs, ct) = dsirModelFrames(s, path, Some(asOf))
-    scoreUnderDsirModel(docs, cs, ct, path).orderBy("doc_id")
-  }
+      asOf: Long): DataFrame =
+    scoreUnderDsirModel(s, docs, path, Some(asOf)).orderBy("doc_id")
 
-  /** Compact the stored model: batch partitions below the watermark
-    * fold into the bootstrap in BOTH frames — counts sum, so the fold
-    * is score-preserving by construction — in one crash-safe swap, with
-    * the as-of horizon recorded atomically. Retraction interplay is
-    * [[compactLmModel]]'s rule verbatim: while replay-protected scoped
-    * batches remain the sidecar rides through the swap (a replayed
-    * append could re-insert the retracted docs' counts), and the FINAL
-    * fold subtracts the corrections from both frames, drops net-zero
-    * buckets, folds the `_docs` membership dropping tombstoned docs,
-    * and omits the sidecar — physical purge and tombstone clearance in
-    * one atomic swap. */
+  /** Compact the stored model ([[graft.sources.CountStore.compact]]). */
   def compactDsirModel(s: SparkSession, path: String, foldBelow: Long): Unit =
-      graft.sources.StoreLock.withLock(path, "compact") {
-    require(foldBelow >= 0, s"compactDsirModel($path): foldBelow must be >= 0, got $foldBelow")
-    graft.sources.Stores.recover(s, path)
-    graft.sources.Stores.clearResidue(s, path)
-    val ids = (graft.sources.Stores.batchIdDirs(s, path) ++
-        graft.sources.Stores.batchIdDirs(s, path + "/_target"))
-      .filter(b => b >= 0 && b < foldBelow)
-    if (ids.isEmpty && !graft.sources.Stores.hasTombstones(s, path)) return
-    val scopedRemain =
-      graft.sources.Stores.replayProtectedRemain(s, path, foldBelow) ||
-        graft.sources.Stores.replayProtectedRemain(s, path + "/_target", foldBelow)
-    val absorb = graft.sources.Stores.hasTombstones(s, path) && !scopedRemain
-    def foldCounts(df0: DataFrame, negs: => DataFrame): DataFrame = {
-      val df = df0.withColumn("batch_id", col("batch_id").cast("long"))
-      val folded0 = df.filter(col("batch_id") < foldBelow)
-        .groupBy("f").agg(sum("c").as("c"))
-      val folded =
-        if (!absorb) folded0
-        else folded0.join(negs, Seq("f"), "left")
-          .select(col("f"), (col("c") - coalesce(col("cneg"), lit(0L))).as("c"))
-          .filter(col("c") > 0)
-      folded.withColumn("batch_id", lit(-1L))
-        .unionByName(df.filter(col("batch_id") >= foldBelow))
-    }
-    graft.sources.Stores.compactInPlace(s, path, Some(dsirCountsSchema))(
-      df0 => foldCounts(df0, dsirCorrections(s, path)._1)) {
-      (df, tmp) =>
-        df.coalesce(1).write.partitionBy("batch_id").parquet(tmp)
-        foldCounts(s.read.schema(dsirCountsSchema).parquet(path + "/_target"),
-            dsirCorrections(s, path)._2)
-          .coalesce(1).write.partitionBy("batch_id").parquet(tmp + "/_target")
-        graft.sources.Stores.foldDocsSidecarInto(s, path, tmp, foldBelow,
-          dropTombstoned = absorb)
-        if (!absorb) graft.sources.Stores.carryTombstonesInto(s, path, tmp)
-        graft.sources.Stores.writeHorizonInto(s, path, tmp,
-          math.min(foldBelow, ids.maxOption.map(_ + 1L).getOrElse(0L)))
-    }
-  }
+    dsirStore.compact(s, path, foldBelow)
 
   /** [[qDsirBucket]] served END-TO-END from the stored model
     * ([[writeDsirModel]] once, memoized, then [[dsirSelectStored]]) —
@@ -1508,312 +1323,86 @@ object TextOps {
     dsirScoreStoredAsOf(s, docs, path, asOf = 6L)
   }
 
-  /** Materialize the corpus bigram LM as a stored MODEL: the
-    * batch-scoped (bg, c2) count table plus a `_vocab` sidecar of
-    * per-batch word sets — the train-once artifact that turns the
-    * CCNet-shape quality gate into a per-batch scoring pass, GROWN
-    * incrementally by [[appendLmBatch]] and folded by
-    * [[compactLmModel]]. Training pays its one gram-keyed shuffle here;
-    * every later batch only explodes ITS OWN grams and joins the
-    * vocab-sized stored tables (context counts re-derive from the
-    * stored bigram counts at load, the same no-second-shuffle trick as
-    * the in-query face). Crash-safe via
-    * [[graft.sources.Stores.overwriteAside]]. */
+  /** The corpus bigram LM as a stored MODEL (a
+    * [[graft.sources.CountStore]]) — the train-once artifact that turns
+    * the CCNet-shape quality gate into a per-batch scoring pass. Two
+    * additive frames, derived per doc through the SAME [[lmGrams]]
+    * tokenization the in-query face trains from:
+    *
+    *  - bigram counts (bg, c2) at the store path — context counts
+    *    re-derive from them at load ([[lmContexts]]), the in-query
+    *    face's no-second-shuffle trick;
+    *  - `_vocab`: per-word DOCUMENT FREQUENCY (w, df). The vocabulary is
+    *    not additive as a SET (|A ∪ B| ≠ |A| + |B|), but df is: the
+    *    net-df > 0 rows are exactly the distinct words, and a df can
+    *    SHRINK under [[retractLmDocs]] where a set cannot.
+    *
+    * Membership is every doc. */
+  private[graft] val lmStore = new graft.sources.CountStore("LM", "writeLmModel",
+    Seq(
+      graft.sources.CountStore.Frame("", Some("bg"), Seq("c2"), lmCountsSchema),
+      graft.sources.CountStore.Frame("_vocab", Some("w"), Seq("df"),
+        org.apache.spark.sql.types.StructType.fromDDL("w STRING, df BIGINT, batch_id BIGINT"))),
+    docs => graft.sources.CountStore.Contributions(
+      Seq(lmGrams(docs).select(col("doc_id"), col("bg"), lit(1L).as("c2")),
+        docs.select(col("doc_id"), explode(split(normText(col("text")), " ")).as("w"))
+          .distinct().withColumn("df", lit(1L))),
+      docs.select(col("doc_id")).distinct()))
+
+  /** Train-once bootstrap of the stored LM
+    * ([[graft.sources.CountStore.write]]). */
   def writeLmModel(s: SparkSession, docs: DataFrame, path: String): Unit =
-    graft.sources.Stores.overwriteAside(s, path) { tmp =>
-      // the same lmGrams/lmVocab-shape the in-query face trains from —
-      // the stored model cannot tokenize differently by construction.
-      // Counts are batch-scoped (bootstrap = -1) because they are
-      // ADDITIVE: an appended batch lands as its own partition and the
-      // loader sums per bigram, so the stored LM stays EXACT under
-      // continuous ingest — the posting store's sidecar argument.
-      lmGrams(docs).groupBy("bg").agg(count(lit(1)).as("c2"))
-        .withColumn("batch_id", lit(-1L))
-        .coalesce(1).write.partitionBy("batch_id").parquet(tmp)
-      // vocabulary is NOT additive as a SET (|A ∪ B| ≠ |A| + |B|), so
-      // the store keeps per-word DOCUMENT FREQUENCY per batch: Σ df
-      // across doc-disjoint batches is the corpus df, the loader's
-      // net-df > 0 test reproduces the distinct-word count exactly, and
-      // — the reason df rather than the round-11 word set — a count can
-      // SHRINK under [[retractLmDocs]], where a set cannot (whether a
-      // word survives a doc's removal depends on how many other docs
-      // carry it, which is exactly df). Vocab-cardinality rows, still
-      // model-plane metadata.
-      lmWordDf(docs).withColumn("batch_id", lit(-1L))
-        .coalesce(1).write.partitionBy("batch_id").parquet(tmp + "/_vocab")
-      // admission membership (doc_id, batch_id) — the `_docs` sidecar
-      // of the posting store, here serving exactly one purpose: the
-      // AS-OF face must apply only those retraction corrections whose
-      // doc was a member at the queried state (a doc retracted but only
-      // ever trained AFTER `asOf` must not shrink the as-of model).
-      // The live faces never read it — their corrections were
-      // subtractability-checked against the whole store.
-      docs.select(col("doc_id")).distinct().withColumn("batch_id", lit(-1L))
-        .coalesce(1).write.partitionBy("batch_id").parquet(tmp + "/_docs")
-    }
+    lmStore.write(s, docs, path)
 
   /** The distinct word set of a corpus. */
   private def lmWords(docs: DataFrame): DataFrame =
     docs.select(split(normText(col("text")), " ").as("words"))
       .select(explode(col("words")).as("w")).distinct()
 
-  /** Per-word document frequency — the vocabulary's stored form (same
-    * tokenization as [[lmWords]]; the lmGrams contract). */
-  private def lmWordDf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), explode(split(normText(col("text")), " ")).as("w"))
-      .distinct()
-      .groupBy("w").agg(count(lit(1)).as("df"))
-
-  /** Grow the stored LM: the batch's bigram counts and word dfs land as
-    * dynamic overwrites of their batch_id partitions — replay-idempotent
-    * (a retried batch rewrites itself) and EXACT at any append depth,
-    * because counts and dfs sum at load. Batches must be DOC-disjoint
-    * (the posting store's precondition): a doc ingested under two batch
-    * ids counts twice, and [[retractLmDocs]] of that doc would subtract
-    * only one copy. The one-shot bootstrap id -1 is reserved (every
-    * store's convention, [[graft.operators.Dedup.appendSignaturesBatch]]
-    * included: scoped ids are non-negative). */
+  /** Grow the stored LM by one scoped, doc-disjoint batch
+    * ([[graft.sources.CountStore.append]]). */
   def appendLmBatch(s: SparkSession, docs: DataFrame, path: String, batchId: Long): Unit =
-      graft.sources.StoreLock.withLock(path, "append") {
-    require(batchId >= 0, "scoped batch ids are non-negative (negatives are store-internal)")
-    graft.sources.Stores.recover(s, path)
-    graft.sources.Sinks.overwritePartitionsDynamic(
-      lmGrams(docs).groupBy("bg").agg(count(lit(1)).as("c2"))
-        .withColumn("batch_id", lit(batchId)).coalesce(1),
-      path, Seq("batch_id"))
-    graft.sources.Sinks.overwritePartitionsDynamic(
-      lmWordDf(docs).withColumn("batch_id", lit(batchId)).coalesce(1),
-      path + "/_vocab", Seq("batch_id"))
-    graft.sources.Sinks.overwritePartitionsDynamic(
-      docs.select(col("doc_id")).distinct()
-        .withColumn("batch_id", lit(batchId)).coalesce(1),
-      path + "/_docs", Seq("batch_id"))
-  }
-
-  /** The LM store's pending-retraction corrections, derived from its
-    * tombstone sidecar: (negative bigram counts, negative word dfs),
-    * each keyed ready to left-join the stored frames. The sidecar's
-    * `distinct()` is the replay-idempotency mechanism — a replayed
-    * [[retractLmDocs]] appends rows identical to the first (same doc,
-    * same text, same counts) and the distinct collapses them, so no
-    * retraction can ever subtract twice. */
-  private def lmCorrections(s: SparkSession, path: String): (DataFrame, DataFrame) = {
-    val side = s.read.parquet(graft.sources.Stores.tombstonePath(path)).distinct()
-    (side.filter(col("kind") === "bg")
-      .groupBy(col("k").as("bg")).agg(sum("c").as("cneg")),
-      side.filter(col("kind") === "w")
-        .groupBy(col("k").as("w")).agg(sum("c").as("dfneg")))
-  }
+    lmStore.append(s, docs, path, batchId)
 
   /** Retract documents from the stored LM — the trained-MODEL half of
     * the deletion story (the signature/vector/posting stores cover the
-    * index half). A count model aggregates doc identity away at
-    * training, so the caller supplies the retracted docs VERBATIM
-    * (doc_id + text — the GDPR-delete shape: the deleting party holds
-    * the doc being deleted); their bigram counts and word dfs re-derive
-    * through the SAME [[lmGrams]]/[[lmWordDf]] definitions training
-    * used, and land as negative corrections in the store's tombstone
-    * sidecar ([[graft.sources.Stores.retractRows]] — atomic, crash-safe).
-    * Every reader subtracts the corrections ([[lmScoreStored]] via
-    * [[lmCorrections]]), so surviving scores equal a retrain on the
-    * surviving corpus IMMEDIATELY and bit-for-bit (TextOpsSpec pins the
-    * equality); [[compactLmModel]]'s final fold absorbs the correction
-    * physically in the same atomic swap that clears the sidecar.
-    *
-    * Replay-idempotent: a replayed retraction appends rows identical to
-    * the first and the reader's distinct collapses them. Retracting a
-    * doc the store never trained on fails LOUDLY here — its correction
-    * would drive some net count negative, which the subtractability
-    * check below refuses before anything is written (the posting
-    * store's never-indexed-id refusal, adapted to counts). Same-text
-    * re-retraction of an already-retracted doc is the replay case
-    * (no-op); a DIFFERENT text under a retracted doc_id is a caller
-    * error the check catches whenever the new text's counts exceed what
-    * remains. */
-  def retractLmDocs(s: SparkSession, path: String, docs: DataFrame): Unit = {
-    graft.sources.Stores.recover(s, path)
-    val bgRows = lmGrams(docs).groupBy("doc_id", "bg").agg(count(lit(1)).as("c"))
-      .select(col("doc_id"), lit("bg").as("kind"), col("bg").as("k"), col("c"))
-    val wRows = docs
-      .select(col("doc_id"), explode(split(normText(col("text")), " ")).as("w"))
-      .distinct()
-      .select(col("doc_id"), lit("w").as("kind"), col("w").as("k"), lit(1L).as("c"))
-    val rows = bgRows.unionByName(wRows)
-    require(!rows.isEmpty, s"retractLmDocs($path): empty retraction set")
-    // Subtractability check on the FUTURE correction set — distinct of
-    // (already-pending sidecar rows ∪ this call's rows), exactly what
-    // readers will subtract after the append. Checking the future set
-    // rather than "net minus new" is what makes an exact REPLAY pass
-    // vacuously (its rows are already in the set, so the future equals
-    // the present, which held by induction) while a genuinely new
-    // over-subtraction still refuses. Two jobs over model-plane
-    // (vocab²-bounded) frames — the price of a rare maintenance op
-    // failing early instead of poisoning every later score.
-    val future =
-      if (!graft.sources.Stores.hasTombstones(s, path)) rows
-      else s.read.parquet(graft.sources.Stores.tombstonePath(path)).unionByName(rows)
-    val futDistinct = future.distinct()
-    val fut2 = futDistinct.filter(col("kind") === "bg")
-      .groupBy(col("k").as("bg")).agg(sum("c").as("cfut"))
-    val futW = futDistinct.filter(col("kind") === "w")
-      .groupBy(col("k").as("w")).agg(sum("c").as("dffut"))
-    val lm2 = s.read.schema(lmCountsSchema).parquet(path)
-      .groupBy("bg").agg(sum("c2").as("c2"))
-    val vw = s.read.parquet(path + "/_vocab").groupBy("w").agg(sum("df").as("df"))
-    val badBg = fut2.join(lm2, Seq("bg"), "left")
-      .filter(coalesce(col("c2"), lit(0L)) < col("cfut"))
-      .select("bg").limit(5).collect().map(_.getString(0))
-    require(badBg.isEmpty,
-      s"retractLmDocs($path): retraction subtracts bigram counts the stored LM " +
-        s"does not hold (e.g. ${badBg.mkString("'", "', '", "'")}) — the docs were " +
-        "not trained into this store (or were already retracted with different text)")
-    val badW = futW.join(vw, Seq("w"), "left")
-      .filter(coalesce(col("df"), lit(0L)) < col("dffut"))
-      .select("w").limit(5).collect().map(_.getString(0))
-    require(badW.isEmpty,
-      s"retractLmDocs($path): retraction subtracts word dfs the stored LM does " +
-        s"not hold (e.g. ${badW.mkString("'", "', '", "'")}) — the docs were not " +
-        "trained into this store (or were already retracted with different text)")
-    graft.sources.Stores.retractRows(s, path, rows)
-  }
+    * index half), [[graft.sources.CountStore.retract]]: the caller
+    * supplies the docs VERBATIM (doc_id + text — the GDPR-delete shape:
+    * the deleting party holds the doc being deleted), and surviving
+    * scores equal a retrain on the surviving corpus bit-for-bit
+    * (TextOpsSpec pins the equality). */
+  def retractLmDocs(s: SparkSession, path: String, docs: DataFrame): Unit =
+    lmStore.retract(s, path, docs)
 
-  /** Compact the stored LM: batch partitions below the caller's replay
-    * watermark fold into the bootstrap — counts and word dfs SUM —
-    * score-preserving by construction (the loader computes exactly
-    * those folds on every read) and crash-safe via
-    * [[graft.sources.Stores.compactInPlace]]. The maintenance op that
-    * bounds partition growth under continuous ingest, as for the
-    * posting store.
-    *
-    * Retraction interplay — one deliberate divergence from the posting
-    * store: corrections here are count subtractions against CORPUS
-    * TOTALS, not per-doc rows, so they cannot be attributed to the
-    * folded branch while any replay-protected batch remains (the
-    * retracted doc's grams may live in an unfolded batch a replay would
-    * rewrite). While such batches remain the sidecar rides through the
-    * swap untouched and reads keep deriving the correction; the FINAL
-    * fold (nothing replayable left, so folded = the whole store)
-    * subtracts the corrections from the folded counts/dfs, drops
-    * net-zero rows, and omits the sidecar from the temp dir — physical
-    * purge and tombstone clearance in one atomic swap. */
+  /** Compact the stored LM ([[graft.sources.CountStore.compact]]). */
   def compactLmModel(s: SparkSession, path: String, foldBelow: Long): Unit =
-      graft.sources.StoreLock.withLock(path, "compact") {
-    // negative watermarks would make the folded branch EMPTY while the
-    // absorption path still subtracted corrections from _vocab and
-    // dropped membership — a silently corrupted model; 0 = "fold
-    // nothing scoped" is the smallest meaningful value
-    require(foldBelow >= 0, s"compactLmModel($path): foldBelow must be >= 0, got $foldBelow")
-    graft.sources.Stores.recover(s, path)
-    graft.sources.Stores.clearResidue(s, path)
-    // foldable ids from DIRECTORY LISTINGS (Stores.batchIdDirs — the
-    // compactSearchIndex discipline; a missing store no-ops). BOTH
-    // stores gate the no-op: a corpus whose batches held only vocab
-    // rows (every doc < 2 words) has no counts partitions but real
-    // _vocab partitions that must still fold.
-    def batchDirs(p: String): Set[Long] = graft.sources.Stores.batchIdDirs(s, p)
-    if (batchDirs(path).isEmpty && batchDirs(path + "/_vocab").isEmpty) {
-      // a store with NO batch layout anywhere is either absent (no-op)
-      // or foreign — and silently returning on one that carries pending
-      // retractions would strand them forever (compactNbModel's rule)
-      require(!graft.sources.Stores.hasTombstones(s, path),
-        s"stored LM at $path has no batch-scoped layout but carries pending " +
-          "retractions — re-train with writeLmModel before compacting")
-      return
-    }
-    val ids = (batchDirs(path) ++ batchDirs(path + "/_vocab"))
-      .filter(b => b >= 0 && b < foldBelow)
-    // pending retractions force the rewrite even with nothing to fold:
-    // compaction is their physical-purge step (the posting-store rule)
-    if (ids.isEmpty && !graft.sources.Stores.hasTombstones(s, path)) return
-    val scopedRemain =
-      graft.sources.Stores.replayProtectedRemain(s, path, foldBelow) ||
-        graft.sources.Stores.replayProtectedRemain(s, path + "/_vocab", foldBelow)
-    val absorb = graft.sources.Stores.hasTombstones(s, path) && !scopedRemain
-    graft.sources.Stores.compactInPlace(s, path, Some(lmCountsSchema)) { df0 =>
-      val df = df0.withColumn("batch_id", col("batch_id").cast("long"))
-      val folded0 = df.filter(col("batch_id") < foldBelow)
-        .groupBy("bg").agg(sum("c2").as("c2"))
-      val folded =
-        if (!absorb) folded0
-        else folded0.join(lmCorrections(s, path)._1, Seq("bg"), "left")
-          .select(col("bg"), (col("c2") - coalesce(col("cneg"), lit(0L))).as("c2"))
-          .filter(col("c2") > 0)
-      folded.withColumn("batch_id", lit(-1L))
-        .unionByName(df.filter(col("batch_id") >= foldBelow))
-    } { (df, tmp) =>
-      df.coalesce(1).write.partitionBy("batch_id").parquet(tmp)
-      val vw = s.read.parquet(path + "/_vocab")
-        .withColumn("batch_id", col("batch_id").cast("long"))
-      val vf0 = vw.filter(col("batch_id") < foldBelow)
-        .groupBy("w").agg(sum("df").as("df"))
-      val vf =
-        if (!absorb) vf0
-        else vf0.join(lmCorrections(s, path)._2, Seq("w"), "left")
-          .select(col("w"), (col("df") - coalesce(col("dfneg"), lit(0L))).as("df"))
-          .filter(col("df") > 0)
-      vf.withColumn("batch_id", lit(-1L))
-        .unionByName(vw.filter(col("batch_id") >= foldBelow))
-        .coalesce(1).write.partitionBy("batch_id").parquet(tmp + "/_vocab")
-      // membership folds with the counts it describes; the final fold
-      // drops retracted docs' rows in the same swap that absorbs their
-      // corrections — post-absorption, a retracted doc never existed
-      graft.sources.Stores.foldDocsSidecarInto(s, path, tmp, foldBelow,
-        dropTombstoned = absorb)
-      if (!absorb) graft.sources.Stores.carryTombstonesInto(s, path, tmp)
-      // folding scoped batches bounds the as-of horizon (the posting
-      // store's vacuum rule) — recorded atomically with the layout, and
-      // capped at (highest folded batch + 1): a watermark far above the
-      // store's batches must not invalidate as-of states the fold left
-      // perfectly reconstructable (asOf ≥ maxFolded reads the folded
-      // bootstrap, which IS that state)
-      graft.sources.Stores.writeHorizonInto(s, path, tmp,
-        math.min(foldBelow, ids.maxOption.map(_ + 1L).getOrElse(0L)))
-    }
-  }
+    lmStore.compact(s, path, foldBelow)
 
   /** Score a batch under a STORED LM. For grams the model never saw,
     * add-one smoothing degrades gracefully: a missing bigram scores
     * ln(1/(c1 + v)), a fully novel context ln(1/v) — the coalesce(0)
-    * forms below, which collapse to the in-query face's inner-join
-    * values whenever the batch IS the training corpus (TextOpsSpec
-    * asserts that equality bit-for-bit, plus the OOV value by hand). */
+    * forms in [[scoreUnderLm]], which collapse to the in-query face's
+    * inner-join values whenever the batch IS the training corpus
+    * (TextOpsSpec asserts that equality bit-for-bit, plus the OOV value
+    * by hand). */
   private[graft] def lmScoreStored(s: SparkSession, docs: DataFrame,
-      path: String): DataFrame = {
-    graft.sources.Stores.recover(s, path)
-    // counts and word dfs SUM across batch partitions (additive appends)
-    // — exactly what a single-shot training run over the union computes,
-    // so the stored LM is exact at any append depth; pending retractions
-    // subtract as negative corrections ([[lmCorrections]]), dropping
-    // net-zero grams/words, so the model a scorer sees IS the model a
-    // retrain on the surviving corpus would produce
-    val lm2all = s.read.schema(lmCountsSchema).parquet(path)
-      .groupBy("bg").agg(sum("c2").as("c2"))
-    val vwAll = s.read.parquet(path + "/_vocab").groupBy("w").agg(sum("df").as("df"))
-    val (lm2, v) =
-      if (!graft.sources.Stores.hasTombstones(s, path))
-        // the vocabulary size collects as one scalar (model-plane) so a
-        // degenerate model fails LOUDLY: v = 0 (an empty training
-        // corpus) would otherwise score every gram ln(1/0) = ∞,
-        // fixed-pointed silently to Long.MaxValue
-        (lm2all, vwAll.count())
-      else {
-        val (c2n, dfn) = lmCorrections(s, path)
-        (lm2all.join(c2n, Seq("bg"), "left")
-          .select(col("bg"), (col("c2") - coalesce(col("cneg"), lit(0L))).as("c2"))
-          .filter(col("c2") > 0),
-          vwAll.join(dfn, Seq("w"), "left")
-            .filter(col("df") - coalesce(col("dfneg"), lit(0L)) > 0).count())
-      }
-    scoreUnderLm(docs, lm2, v, path)
-  }
+      path: String): DataFrame =
+    scoreUnderLm(s, docs, path, None)
 
   /** The scoring tail every stored-LM face shares (live and as-of):
-    * add-one-smoothed bigram log-probs under the GIVEN net counts and
-    * vocabulary size — one definition, so a face can only differ in
-    * WHICH model state it reconstructs, never in how it scores. */
-  private def scoreUnderLm(docs: DataFrame, lm2: DataFrame, v: Long,
-      path: String): DataFrame = {
+    * add-one-smoothed bigram log-probs under the net counts and
+    * vocabulary size of the reconstructed state — one definition, so a
+    * face can only differ in WHICH model state it reconstructs, never
+    * in how it scores. */
+  private def scoreUnderLm(s: SparkSession, docs: DataFrame, path: String,
+      asOf: Option[Long]): DataFrame = {
+    val Seq(lm2, vocab) = lmStore.netFrames(s, path, asOf)
     val lm1 = lmContexts(lm2)
+    // the vocabulary size collects as one scalar (model-plane) so a
+    // degenerate model fails LOUDLY: v = 0 (an empty or all-retracted
+    // training corpus) would otherwise score every gram ln(1/0) = ∞,
+    // fixed-pointed silently to Long.MaxValue
+    val v = vocab.count()
     require(v > 0, s"stored LM at $path has an empty vocabulary — refusing to score" +
       " (an all-retracted store has no meaningful model: compact the retraction" +
       " through or re-train)")
@@ -1830,62 +1419,16 @@ object TextOps {
   /** [[lmScoreStored]] AS OF admission batch `asOf` — the trained-MODEL
     * member of the data-plane time-travel family, answering the
     * training-data audit's reproducibility question: "score this doc
-    * under the model as the corpus stood at batch N". Semantics are the
-    * family's ([[graft.operators.Dedup.gateAgainstStoredAsOf]]):
-    *
-    *  - the model slice is a PARTITION FILTER on the already
-    *    batch-partitioned counts and `_vocab` df rows (both additive,
-    *    so the ≤ asOf sum IS the model a training run over the as-of
-    *    corpus would produce) — pruned before a row is read;
-    *  - retraction ERASES HISTORY: corrections apply at every asOf the
-    *    retracted doc was a member of, scoped by the `_docs` admission
-    *    sidecar (a doc retracted but only trained AFTER `asOf` must not
-    *    shrink the as-of model — the [[graft.operators.Search.searchStatsAsOf]]
-    *    membership discipline);
-    *  - compaction bounds the horizon: folding batches below W makes
-    *    states before W - 1 unreconstructable, and the shared
-    *    [[graft.sources.Stores.requireAsOfReconstructable]] guard
-    *    refuses LOUDLY naming the oldest reconstructable state.
-    *
-    * [[qualityClassifierStoredAsOf]] is the NB twin, with identical
-    * semantics over its batch-scoped counts and `_docs` membership. */
+    * under the model as the corpus stood at batch N". The state is
+    * [[graft.sources.CountStore.netFrames]]' as-of reconstruction: a
+    * partition filter on the additive counts and dfs, retraction
+    * corrections scoped to `_docs` membership (retraction erases
+    * history, but a doc trained only after `asOf` must not shrink the
+    * as-of model), and a loud refusal below the compaction horizon.
+    * [[qualityClassifierStoredAsOf]] is the NB twin. */
   def lmScoreStoredAsOf(s: SparkSession, docs: DataFrame, path: String,
-      asOf: Long): DataFrame = {
-    graft.sources.Stores.recover(s, path)
-    graft.sources.Stores.requireAsOfReconstructable(s, path, asOf)
-    val lm2all = s.read.schema(lmCountsSchema).parquet(path)
-      .filter(col("batch_id").cast("long") <= asOf)
-      .groupBy("bg").agg(sum("c2").as("c2"))
-    val vwAll = s.read.parquet(path + "/_vocab")
-      .filter(col("batch_id").cast("long") <= asOf)
-      .groupBy("w").agg(sum("df").as("df"))
-    val (lm2, v) =
-      if (!graft.sources.Stores.hasTombstones(s, path)) (lm2all, vwAll.count())
-      else {
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-        require(fs.exists(new org.apache.hadoop.fs.Path(path + "/_docs")),
-          s"stored LM at $path carries retractions but predates the _docs " +
-            "admission sidecar — as-of reads cannot scope corrections to " +
-            "membership; re-train with writeLmModel")
-        val present = s.read.parquet(path + "/_docs")
-          .filter(col("batch_id").cast("long") <= asOf).select("doc_id")
-        // corrections restricted to docs that were members at `asOf`:
-        // sidecar rows carry doc_id precisely for this join
-        val side = s.read.parquet(graft.sources.Stores.tombstonePath(path))
-          .distinct().join(present, Seq("doc_id"), "left_semi")
-        val c2n = side.filter(col("kind") === "bg")
-          .groupBy(col("k").as("bg")).agg(sum("c").as("cneg"))
-        val dfn = side.filter(col("kind") === "w")
-          .groupBy(col("k").as("w")).agg(sum("c").as("dfneg"))
-        (lm2all.join(c2n, Seq("bg"), "left")
-          .select(col("bg"), (col("c2") - coalesce(col("cneg"), lit(0L))).as("c2"))
-          .filter(col("c2") > 0),
-          vwAll.join(dfn, Seq("w"), "left")
-            .filter(col("df") - coalesce(col("dfneg"), lit(0L)) > 0).count())
-      }
-    scoreUnderLm(docs, lm2, v, path)
-  }
+      asOf: Long): DataFrame =
+    scoreUnderLm(s, docs, path, Some(asOf))
 
   /** The stored LM scored AS OF a pre-append, post-retraction state
     * (own store path): bootstrap without the %10 = 5 docs, append them
@@ -2036,214 +1579,84 @@ object TextOps {
   def qQualityClassifier(s: SparkSession, dir: String): DataFrame =
     qualityClassifier(Tables.documents(s, dir))
 
-  /** Materialize the trained NB quality classifier — completing the
-    * stored-model trilogy (BPE merges, bigram LM, and this). Layout is
-    * BATCH-SCOPED ADDITIVE since round 14, the LM store's exactness
-    * argument transplanted: [[nbLabels]] is a pure per-doc function of
-    * the text, so a batch's per-token class counts are independent of
-    * every other batch, and summing across doc-disjoint batches equals
-    * one-shot training on their union — which makes the classifier
-    * continuously ingestible ([[appendNbBatch]]) and time-travelable
-    * ([[qualityClassifierStoredAsOf]]). Three frames:
+  /** The trained NB quality classifier as a stored model (a
+    * [[graft.sources.CountStore]]) — completing the stored-model trilogy
+    * (BPE merges, bigram LM, and this). [[nbLabels]] is a pure per-doc
+    * function of the text, so a doc's per-token class counts are
+    * independent of every other doc, and summing across doc-disjoint
+    * batches equals one-shot training on their union. Two frames:
     *
-    *  - counts: (w, c_pos, c_neg) per admission batch (bootstrap -1);
-    *  - `_meta`: per-batch LABEL doc counts (n_docs, n_flagged) — the
-    *    only totals that cannot derive from the counts (the prior is a
-    *    LOG of doc counts, not invertible; n_pos/n_neg/v are NOT stored
-    *    — they derive from the summed counts in one vocab-sized
-    *    aggregate, and v, like the LM vocabulary, is no additive SET
-    *    but is exactly the net-count support);
-    *  - `_docs`: admission membership, serving the as-of face's
-    *    correction scoping (the LM/posting discipline). Membership is
-    *    the model's DOMAIN (docs with ≥ 2 words) — out-of-domain docs
-    *    were never trained and must not scope anything.
+    *  - counts: (w, c_pos, c_neg) — each token occurrence counts into
+    *    its doc's weak-label class;
+    *  - `_meta`: keyless LABEL doc counts (n_docs, n_flagged) — the only
+    *    totals that cannot derive from the counts (the prior is a LOG of
+    *    doc counts, not invertible; n_pos/n_neg/v derive from the summed
+    *    counts in one vocab-sized aggregate, and v, like the LM
+    *    vocabulary, is exactly the net-count support).
     *
-    * Trains through the same [[nbLabels]]/[[nbToks]]/[[nbClassCounts]]
-    * definitions as the in-query face — the stored model cannot train
-    * differently. */
-  def writeNbModel(s: SparkSession, docs: DataFrame, path: String): Unit = {
-    val labels = nbLabels(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try graft.sources.Stores.overwriteAside(s, path) { tmp =>
-      nbClassCounts(nbToks(docs).join(labels, "doc_id"))
-        .select("w", "c_pos", "c_neg").withColumn("batch_id", lit(-1L))
-        .coalesce(1).write.partitionBy("batch_id").parquet(tmp)
-      labels.agg(count(lit(1)).as("n_docs"),
-          sum("flagged").cast(LongType).as("n_flagged"))
-        .withColumn("batch_id", lit(-1L))
-        .coalesce(1).write.partitionBy("batch_id").parquet(tmp + "/_meta")
-      labels.select(col("doc_id")).withColumn("batch_id", lit(-1L))
-        .coalesce(1).write.partitionBy("batch_id").parquet(tmp + "/_docs")
-    } finally labels.unpersist()
-  }
+    * Membership is the model's DOMAIN (docs with ≥ 2 words): docs
+    * outside it were never trained and derive no rows. Trains through
+    * the same [[nbLabels]]/[[nbToks]] definitions as the in-query face —
+    * the stored model cannot train differently. */
+  private[graft] val nbStore = new graft.sources.CountStore("NB model", "writeNbModel",
+    Seq(
+      graft.sources.CountStore.Frame("", Some("w"), Seq("c_pos", "c_neg"), nbCountsSchema),
+      graft.sources.CountStore.Frame("_meta", None, Seq("n_docs", "n_flagged"),
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "n_docs BIGINT, n_flagged BIGINT, batch_id BIGINT"))),
+    { docs =>
+      // the label frame feeds both frames and the membership
+      val labels = nbLabels(docs)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val flagged = col("flagged").cast(LongType)
+      graft.sources.CountStore.Contributions(
+        Seq(nbToks(docs).join(labels, "doc_id")
+            .select(col("doc_id"), col("w"), flagged.as("c_pos"), (lit(1L) - flagged).as("c_neg")),
+          labels.select(col("doc_id"), lit(1L).as("n_docs"), flagged.as("n_flagged"))),
+        labels.select(col("doc_id")),
+        () => { labels.unpersist(); () })
+    })
 
-  /** Grow the stored classifier: the batch's class counts, label doc
-    * counts, and membership land as dynamic overwrites of their
-    * batch_id partitions — replay-idempotent and EXACT at any append
-    * depth ([[appendLmBatch]]' contract: counts and doc counts sum at
-    * load). Batches must be doc-disjoint, the store family's shared
-    * precondition. */
+  /** Train-once bootstrap of the stored classifier
+    * ([[graft.sources.CountStore.write]]). */
+  def writeNbModel(s: SparkSession, docs: DataFrame, path: String): Unit =
+    nbStore.write(s, docs, path)
+
+  /** Grow the stored classifier by one scoped, doc-disjoint batch
+    * ([[graft.sources.CountStore.append]]). */
   def appendNbBatch(s: SparkSession, docs: DataFrame, path: String, batchId: Long): Unit =
-      graft.sources.StoreLock.withLock(path, "append") {
-    require(batchId >= 0, "scoped batch ids are non-negative (negatives are store-internal)")
-    graft.sources.Stores.recover(s, path)
-    val labels = nbLabels(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      graft.sources.Sinks.overwritePartitionsDynamic(
-        nbClassCounts(nbToks(docs).join(labels, "doc_id"))
-          .select("w", "c_pos", "c_neg")
-          .withColumn("batch_id", lit(batchId)).coalesce(1),
-        path, Seq("batch_id"))
-      graft.sources.Sinks.overwritePartitionsDynamic(
-        labels.agg(count(lit(1)).as("n_docs"),
-            sum("flagged").cast(LongType).as("n_flagged"))
-          .withColumn("batch_id", lit(batchId)).coalesce(1),
-        path + "/_meta", Seq("batch_id"))
-      graft.sources.Sinks.overwritePartitionsDynamic(
-        labels.select(col("doc_id"))
-          .withColumn("batch_id", lit(batchId)).coalesce(1),
-        path + "/_docs", Seq("batch_id"))
-    } finally labels.unpersist()
-  }
+    nbStore.append(s, docs, path, batchId)
 
-  /** Retract documents from the stored NB classifier — [[retractLmDocs]]'
-    * contract transplanted (caller supplies the retracted docs verbatim;
-    * corrections re-derive through the training definitions; sidecar
-    * distinct = replay idempotency; subtractability refusal for docs the
-    * model never saw). The per-token corrections carry the doc's OWN
-    * weak label ([[nbLabels]] is a pure per-doc function of its text, so
-    * the label re-derives identically to training), routing each count
-    * to the class it was trained into; per-doc label rows shrink the
-    * doc-count prior. Docs outside the model's domain (< 2 words)
-    * produce no rows — exactly as training ignored them. */
-  def retractNbDocs(s: SparkSession, path: String, docs: DataFrame): Unit = {
-    graft.sources.Stores.recover(s, path)
-    require(s.read.parquet(path + "/_meta").columns.contains("n_docs"),
-      s"stored NB model at $path predates retraction support (its _meta lacks " +
-        "doc counts) — re-train with writeNbModel before retracting")
-    val labels = nbLabels(docs)
-    val tokRows = nbToks(docs).join(labels, "doc_id")
-      .groupBy("doc_id", "w", "flagged").agg(count(lit(1)).as("c"))
-      .select(col("doc_id"), lit("tok").as("kind"), col("w").as("k"),
-        col("c"), col("flagged").cast("int").as("flagged"))
-    val labelRows = labels
-      .select(col("doc_id"), lit("label").as("kind"), lit("").as("k"),
-        lit(1L).as("c"), col("flagged").cast("int").as("flagged"))
-    val rows = tokRows.unionByName(labelRows)
-    if (rows.isEmpty) return // out-of-domain docs: training never saw them
-    // subtractability on the FUTURE correction set (pending ∪ new,
-    // distinct) — [[retractLmDocs]]' replay-tolerant form of the guard;
-    // checked against the SUMMED (cross-batch) counts, the model a
-    // reader actually sees
-    val cls = s.read.schema(nbCountsSchema).parquet(path).groupBy("w")
-      .agg(sum("c_pos").as("c_pos"), sum("c_neg").as("c_neg"))
-    val future =
-      if (!graft.sources.Stores.hasTombstones(s, path)) rows
-      else s.read.parquet(graft.sources.Stores.tombstonePath(path)).unionByName(rows)
-    val futCorr = future.distinct().filter(col("kind") === "tok")
-      .groupBy(col("k").as("w")).agg(
-        sum(when(col("flagged") === 1, col("c")).otherwise(0L)).as("pfut"),
-        sum(when(col("flagged") === 0, col("c")).otherwise(0L)).as("nfut"))
-    val bad = futCorr.join(cls, Seq("w"), "left")
-      .filter(coalesce(col("c_pos"), lit(0L)) < col("pfut") ||
-        coalesce(col("c_neg"), lit(0L)) < col("nfut"))
-      .select("w").limit(5).collect().map(_.getString(0))
-    require(bad.isEmpty,
-      s"retractNbDocs($path): retraction subtracts class counts the stored model " +
-        s"does not hold (e.g. ${bad.mkString("'", "', '", "'")}) — the docs were " +
-        "not trained into this store (or were already retracted with different text)")
-    graft.sources.Stores.retractRows(s, path, rows)
-  }
+  /** Retract documents from the stored classifier
+    * ([[graft.sources.CountStore.retract]]): a doc's label re-derives
+    * identically to training, so each token count leaves the class it
+    * was trained into and its label row leaves the doc-count prior.
+    * Docs outside the model's domain (< 2 words) derive no rows — a
+    * no-op, exactly as training ignored them. */
+  def retractNbDocs(s: SparkSession, path: String, docs: DataFrame): Unit =
+    nbStore.retract(s, path, docs)
 
-  /** Per-token class-count corrections over a (possibly membership-
-    * scoped) sidecar frame — ONE aggregation shape for the live face,
-    * the as-of face, and the compactor, so a correction-schema change
-    * cannot make them silently compute different corrections. Callers
-    * pass an already-`distinct()` frame (replay idempotency). */
-  private def nbTokCorrectionsOf(side: DataFrame): DataFrame =
-    side.filter(col("kind") === "tok")
-      .groupBy(col("k").as("w")).agg(
-        sum(when(col("flagged") === 1, col("c")).otherwise(0L)).as("ppend"),
-        sum(when(col("flagged") === 0, col("c")).otherwise(0L)).as("npend"))
-
-  /** Pending corrections from the LIVE sidecar (the compactor's view). */
-  private def nbTokCorrections(s: SparkSession, path: String): DataFrame =
-    nbTokCorrectionsOf(
-      s.read.parquet(graft.sources.Stores.tombstonePath(path)).distinct())
-
-  /** The stored NB model reconstructed at a state: counts summed across
-    * the (optionally as-of-sliced) batch partitions, pending retraction
-    * corrections subtracted (scoped to as-of MEMBERSHIP when slicing —
-    * a doc retracted but only trained after `asOf` must not shrink the
-    * historical model, the [[lmScoreStoredAsOf]] discipline), zeroed
-    * tokens dropped, and the scalar totals recomputed from the net
-    * model: token totals and vocabulary size in one vocab-sized
-    * aggregate, doc counts from the summed `_meta` rows minus retracted
-    * labels, and the prior re-derived through the same Spark round/log
-    * expression training used, so the fixed-point value is bit-identical
-    * to a retrain. ONE definition for the live scoring face, the as-of
-    * face, and [[compactNbModel]] — a face can only differ in which
-    * state it reconstructs, never in how the model derives. */
+  /** The stored NB model reconstructed at a state
+    * ([[graft.sources.CountStore.netFrames]]), with the scalar totals
+    * recomputed from the net model: token totals and vocabulary size in
+    * one vocab-sized aggregate, the net `_meta` doc counts, and the prior
+    * re-derived through the same Spark round/log expression training
+    * used, so the fixed-point value is bit-identical to a retrain. ONE
+    * definition for the live and as-of faces. */
   private def nbModelAt(s: SparkSession, path: String, asOf: Option[Long])
-      : (DataFrame, Long, Long, Long, Long, Long, Long) = {
-    def sliced(df: DataFrame): DataFrame =
-      asOf.fold(df)(a => df.filter(col("batch_id").cast("long") <= a))
-    val cls = sliced(s.read.schema(nbCountsSchema).parquet(path)).groupBy("w")
-      .agg(sum("c_pos").as("c_pos"), sum("c_neg").as("c_neg"))
-    val side: Option[DataFrame] =
-      if (!graft.sources.Stores.hasTombstones(s, path)) None
-      else Some {
-        val all = s.read.parquet(graft.sources.Stores.tombstonePath(path)).distinct()
-        asOf match {
-          case None => all
-          case Some(_) =>
-            val fs = org.apache.hadoop.fs.FileSystem.get(
-              new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-            require(fs.exists(new org.apache.hadoop.fs.Path(path + "/_docs")),
-              s"stored NB model at $path carries retractions but predates the " +
-                "_docs admission sidecar — as-of reads cannot scope corrections " +
-                "to membership; re-train with writeNbModel")
-            all.join(sliced(s.read.parquet(path + "/_docs")).select("doc_id"),
-              Seq("doc_id"), "left_semi")
-        }
-      }
-    val clsNet = side match {
-      case None => cls
-      case Some(sd) =>
-        val corr = nbTokCorrectionsOf(sd)
-        cls.join(corr, Seq("w"), "left")
-          .select(col("w"),
-            (col("c_pos") - coalesce(col("ppend"), lit(0L))).as("c_pos"),
-            (col("c_neg") - coalesce(col("npend"), lit(0L))).as("c_neg"))
-          .filter(col("c_pos") + col("c_neg") > 0)
-    }
-    val meta = sliced(s.read.parquet(path + "/_meta"))
-    require(meta.columns.contains("n_docs"),
-      s"stored NB model at $path predates additive doc counts (its _meta lacks " +
-        "n_docs) — re-train with writeNbModel")
+      : (DataFrame, Long, Long, Long, Long) = {
+    val Seq(cls, meta) = nbStore.netFrames(s, path, asOf)
     // ALL scalars in ONE job (r22, guide §1.2): the class totals, the
-    // retraction label counts, the `_meta` doc counts, and the derived
-    // prior were four separate driver round-trips per scoring face —
-    // here they crossJoin as 1-row aggregates and collect once. The
-    // prior stays the SAME Spark round/log expression nbPrior uses
-    // (evaluated over the joined longs instead of re-literalized ones —
-    // identical arithmetic), because driver math.round differs from
-    // Spark's HALF_UP on negative halves and a half-ulp prior drift
-    // would break bit-equality with retraining.
-    val totAgg = clsNet.agg(coalesce(sum("c_pos"), lit(0L)).as("n_pos"),
-      coalesce(sum("c_neg"), lit(0L)).as("n_neg"), count(lit(1)).as("v"))
-    val retrAgg = side match {
-      case None => s.range(1).select(lit(0L).as("d_retr"), lit(0L).as("f_retr"))
-      case Some(sd) => sd.filter(col("kind") === "label")
-        .agg(count(lit(1)).as("d_retr"), coalesce(sum("flagged"), lit(0L)).as("f_retr"))
-    }
-    val metaAgg = meta.agg(coalesce(sum("n_docs"), lit(0L)).as("m_docs"),
-      coalesce(sum("n_flagged"), lit(0L)).as("m_flagged"))
-    val row = totAgg.crossJoin(retrAgg).crossJoin(metaAgg)
-      .select(col("n_pos"), col("n_neg"), col("v"),
-        (col("m_docs") - col("d_retr")).as("n_docs"),
-        (col("m_flagged") - col("f_retr")).as("n_flagged"))
+    // net `_meta` doc counts, and the derived prior crossJoin as 1-row
+    // aggregates and collect once. The prior stays the SAME Spark
+    // round/log expression nbPrior uses (evaluated over the joined longs
+    // instead of re-literalized ones — identical arithmetic), because
+    // driver math.round differs from Spark's HALF_UP on negative halves
+    // and a half-ulp prior drift would break bit-equality with retraining.
+    val row = cls.agg(coalesce(sum("c_pos"), lit(0L)).as("n_pos"),
+        coalesce(sum("c_neg"), lit(0L)).as("n_neg"), count(lit(1)).as("v"))
+      .crossJoin(meta)
+      .select(col("n_pos"), col("n_neg"), col("v"), col("n_docs"), col("n_flagged"))
       .withColumn("prior_fp",
         // guarded so the degenerate all-retracted store (n_docs = 0)
         // reaches its LOUD require below instead of dying here on an
@@ -2253,103 +1666,20 @@ object TextOps {
             * lit(1e6)).cast(LongType)).otherwise(lit(0L)))
       .collect()(0)
     val (nPos, nNeg, v) = (row.getLong(0), row.getLong(1), row.getLong(2))
-    val (nDocs, nFlagged) = (row.getLong(3), row.getLong(4))
     // vocabulary check BEFORE the doc-count one: a never-trained empty
     // domain must report "empty vocabulary", not "every doc retracted"
     require(v > 0, s"stored NB model at $path has an empty vocabulary — refusing to score")
-    require(nDocs > 0,
+    require(row.getLong(3) > 0,
       s"stored NB model at $path : every trained document has been retracted — " +
         "the prior is undefined; re-train or compact through")
-    val priorFp = row.getLong(5)
-    (clsNet, nPos, nNeg, v, priorFp, nDocs, nFlagged)
+    (cls, nPos, nNeg, v, row.getLong(5))
   }
 
-  /** Compact the stored classifier — [[compactLmModel]]'s contract on
-    * the batch-scoped layout: batch partitions below the caller's
-    * replay watermark fold into the bootstrap (counts and doc counts
-    * SUM — score-preserving by construction, the loader computes
-    * exactly those folds on every read), `_docs` membership folds with
-    * the counts it describes, and the fold horizon is recorded for the
-    * as-of face. Retraction corrections absorb physically ONLY at the
-    * final fold (the LM's rule: count corrections apply to corpus
-    * totals and cannot be attributed to the folded branch while any
-    * replay-protected batch remains); the same swap drops retracted
-    * docs' membership and omits the sidecar — purge and tombstone
-    * clearance in one atomic rename. The no-argument default folds
-    * everything, preserving the historical "absorb now" call shape the
-    * maintenance sweep uses. */
+  /** Compact the stored classifier ([[graft.sources.CountStore.compact]]).
+    * The default watermark folds everything — the final fold, which
+    * absorbs pending retractions. */
   def compactNbModel(s: SparkSession, path: String, foldBelow: Long = Long.MaxValue): Unit =
-      graft.sources.StoreLock.withLock(path, "compact") {
-    // same guard and reason as compactLmModel: a negative watermark
-    // empties the folded branch while absorption still mutates
-    // _meta/_docs — refuse rather than corrupt
-    require(foldBelow >= 0, s"compactNbModel($path): foldBelow must be >= 0, got $foldBelow")
-    graft.sources.Stores.recover(s, path)
-    graft.sources.Stores.clearResidue(s, path)
-    def batchDirs(p: String): Set[Long] = graft.sources.Stores.batchIdDirs(s, p)
-    if (batchDirs(path).isEmpty && batchDirs(path + "/_meta").isEmpty) {
-      // a PRE-batch-scoped store (flat files, no batch_id= dirs) lands
-      // here too — and silently returning would strand its pending
-      // retractions forever (the old compactor absorbed them in place;
-      // this one cannot rewrite a layout it no longer writes)
-      require(!graft.sources.Stores.hasTombstones(s, path),
-        s"stored NB model at $path predates the batch-scoped layout but carries " +
-          "pending retractions — re-train with writeNbModel (which absorbs them " +
-          "by construction) before compacting")
-      return
-    }
-    val ids = (batchDirs(path) ++ batchDirs(path + "/_meta"))
-      .filter(b => b >= 0 && b < foldBelow)
-    if (ids.isEmpty && !graft.sources.Stores.hasTombstones(s, path)) return
-    val scopedRemain =
-      graft.sources.Stores.replayProtectedRemain(s, path, foldBelow) ||
-        graft.sources.Stores.replayProtectedRemain(s, path + "/_meta", foldBelow)
-    val absorb = graft.sources.Stores.hasTombstones(s, path) && !scopedRemain
-    // corrections derived ONCE, against the live sidecar (lazy — the
-    // store and sidecar stay intact until the swap)
-    def tokCorr = nbTokCorrections(s, path)
-    def labCorr = s.read.parquet(graft.sources.Stores.tombstonePath(path)).distinct()
-      .filter(col("kind") === "label")
-      .agg(count(lit(1)).as("d"), coalesce(sum("flagged"), lit(0L)).as("f"))
-    graft.sources.Stores.compactInPlace(s, path, Some(nbCountsSchema)) { df0 =>
-      val df = df0.withColumn("batch_id", col("batch_id").cast("long"))
-      val folded0 = df.filter(col("batch_id") < foldBelow).groupBy("w")
-        .agg(sum("c_pos").as("c_pos"), sum("c_neg").as("c_neg"))
-      val folded =
-        if (!absorb) folded0
-        else folded0.join(tokCorr, Seq("w"), "left")
-          .select(col("w"),
-            (col("c_pos") - coalesce(col("ppend"), lit(0L))).as("c_pos"),
-            (col("c_neg") - coalesce(col("npend"), lit(0L))).as("c_neg"))
-          .filter(col("c_pos") + col("c_neg") > 0)
-      folded.withColumn("batch_id", lit(-1L))
-        .unionByName(df.filter(col("batch_id") >= foldBelow))
-    } { (df, tmp) =>
-      df.coalesce(1).write.partitionBy("batch_id").parquet(tmp)
-      val meta = s.read.parquet(path + "/_meta")
-        .withColumn("batch_id", col("batch_id").cast("long"))
-      val mf0 = meta.filter(col("batch_id") < foldBelow)
-        .agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
-          coalesce(sum("n_flagged"), lit(0L)).as("n_flagged"))
-      val mf =
-        if (!absorb) mf0
-        else mf0.crossJoin(broadcast(labCorr))
-          .select((col("n_docs") - col("d")).as("n_docs"),
-            (col("n_flagged") - col("f")).as("n_flagged"))
-      mf.withColumn("batch_id", lit(-1L))
-        .unionByName(meta.filter(col("batch_id") >= foldBelow))
-        .coalesce(1).write.partitionBy("batch_id").parquet(tmp + "/_meta")
-      graft.sources.Stores.foldDocsSidecarInto(s, path, tmp, foldBelow,
-        dropTombstoned = absorb)
-      if (!absorb) graft.sources.Stores.carryTombstonesInto(s, path, tmp)
-      // horizon capped at (highest folded batch + 1): folding below a
-      // watermark far above the store's batches must not invalidate
-      // as-of states the fold left perfectly reconstructable (asOf ≥
-      // maxFolded reads the folded bootstrap, which IS that state)
-      graft.sources.Stores.writeHorizonInto(s, path, tmp,
-        math.min(foldBelow, ids.maxOption.map(_ + 1L).getOrElse(0L)))
-    }
-  }
+    nbStore.compact(s, path, foldBelow)
 
   /** Score a batch under a STORED classifier. Tokens the model never
     * saw smooth add-one style — c_pos = c_neg = 0, so the llr is the
@@ -2359,35 +1689,23 @@ object TextOps {
     * OOV constant by hand). Docs with < 2 words are out of the model's
     * domain, as in training. */
   private[graft] def qualityClassifierStored(s: SparkSession, docs: DataFrame,
-      path: String): DataFrame = {
-    graft.sources.Stores.recover(s, path)
-    // [[nbModelAt]] with no slice: counts summed across batches,
-    // pending retractions subtracted, totals/vocab/prior recomputed —
-    // so scores equal one-shot training on the net ingested corpus
-    val (cls, nPos, nNeg, v, priorFp, _, _) = nbModelAt(s, path, asOf = None)
-    scoreUnderNb(docs, cls, nPos, nNeg, v, priorFp)
-  }
+      path: String): DataFrame =
+    scoreUnderNb(s, docs, path, None)
 
   /** [[qualityClassifierStored]] AS OF admission batch `asOf` — the NB
-    * member of the model-plane time-travel family, possible since the
-    * store went batch-scoped additive: the count and `_meta` slices are
-    * partition filters, retraction corrections apply scoped to the
-    * `_docs` admission membership, and compaction folds bound the
-    * horizon with the family's shared loud refusal
-    * ([[lmScoreStoredAsOf]] documents the semantics). */
+    * member of the model-plane time-travel family, with the
+    * [[graft.sources.CountStore.netFrames]] as-of semantics
+    * ([[lmScoreStoredAsOf]] is the LM twin). */
   def qualityClassifierStoredAsOf(s: SparkSession, docs: DataFrame,
-      path: String, asOf: Long): DataFrame = {
-    graft.sources.Stores.recover(s, path)
-    graft.sources.Stores.requireAsOfReconstructable(s, path, asOf)
-    val (cls, nPos, nNeg, v, priorFp, _, _) = nbModelAt(s, path, Some(asOf))
-    scoreUnderNb(docs, cls, nPos, nNeg, v, priorFp)
-  }
+      path: String, asOf: Long): DataFrame =
+    scoreUnderNb(s, docs, path, Some(asOf))
 
   /** The scoring tail every stored-classifier face shares (live and
     * as-of) — [[scoreUnderLm]]'s discipline: one definition, so a face
     * can only differ in which model state it reconstructs. */
-  private def scoreUnderNb(docs: DataFrame, cls: DataFrame,
-      nPos: Long, nNeg: Long, v: Long, priorFp: Long): DataFrame = {
+  private def scoreUnderNb(s: SparkSession, docs: DataFrame, path: String,
+      asOf: Option[Long]): DataFrame = {
+    val (cls, nPos, nNeg, v, priorFp) = nbModelAt(s, path, asOf)
     val llrFp = round((log((coalesce(col("c_pos"), lit(0L)) + lit(1.0)) / lit(nPos + v).cast("double"))
       - log((coalesce(col("c_neg"), lit(0L)) + lit(1.0)) / lit(nNeg + v).cast("double"))) * lit(1e6))
       .cast(LongType)

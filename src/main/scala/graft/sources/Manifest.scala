@@ -40,20 +40,13 @@ object Manifest {
     * so plain reads of `path` never see it. One scan of the just-written
     * files, grouped by file — the write-side cost of every later pruned
     * read. */
-  def buildManifest(s: SparkSession, path: String, statsCols: Seq[String]): Unit =
-    writeStats(s.read.parquet(path), manifestPath(path), statsCols, "overwrite")
-
-  /** THE per-file stats shape — bootstrap build and incremental append
-    * share it, so the two manifests can never silently diverge in
-    * schema (which would break [[prunedFiles]] on mixed stores). */
-  private def writeStats(data: DataFrame, manifestDir: String,
-      statsCols: Seq[String], mode: String): Unit = {
+  def buildManifest(s: SparkSession, path: String, statsCols: Seq[String]): Unit = {
     val aggs = statsCols.flatMap(c =>
       Seq(min(col(c)).as(c + "_min"), max(col(c)).as(c + "_max")))
-    data.groupBy(input_file_name().as("file"))
+    s.read.parquet(path).groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
       .coalesce(1) // manifests are file-count-sized: one footer to read
-      .write.mode(mode).parquet(manifestDir)
+      .write.mode("overwrite").parquet(manifestPath(path))
   }
 
   /** Write `df` into `numFiles` range-clustered files by `clusterCol` and
@@ -97,45 +90,16 @@ object Manifest {
     buildManifest(df.sparkSession, path, zCols)
   }
 
-  /** Grow a clustered layout by one batch and extend the manifest with
-    * stats for ONLY the new files — the incremental half of the store:
-    * the existing files and their stats rows are never re-read or
-    * rewritten. At-least-once: a retried call appends its rows again.
-    * New-file identification is a listing diff around the append, so the
-    * stats scan touches exactly the batch just written.
-    *
-    * Crash contract: data lands before its manifest rows, so a crash
-    * between the two leaves UNMANIFESTED files — which [[prunedFiles]]
-    * includes unconditionally (no stats → must-read), trading I/O for
-    * soundness until the next [[buildManifest]] heals the stats
-    * (ManifestSpec plants exactly this state). The unsafe ordering —
-    * stats first — could claim an interval for files holding no rows,
-    * which is harmless, but data-first keeps the store readable by plain
-    * scans at every instant. */
-  def appendClustered(df: DataFrame, path: String, clusterCol: String,
-      numFiles: Int, statsCols: Seq[String]): Unit = {
-    val s = df.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)) {
-      writeClustered(df, path, clusterCol, numFiles, statsCols)
-      return
-    }
-    val before = s.read.parquet(path).inputFiles.toSet
-    df.repartitionByRange(numFiles, col(clusterCol))
-      .sortWithinPartitions(clusterCol)
-      .write.mode("append").parquet(path)
-    val newFiles = s.read.parquet(path).inputFiles.toSet -- before
-    writeStats(s.read.parquet(newFiles.toSeq: _*), manifestPath(path), statsCols, "append")
-  }
-
   /** The data files whose `[c_min, c_max]` interval intersects
     * `[lo, hi]` — the control-plane pruning decision (one
     * file-count-sized manifest read; the collect is the file list, the
     * thing a driver must hold to schedule the scan anyway). Files with
     * NULL stats (all-NULL column) hold no row a range predicate can
     * match, so the null-rejecting comparison pruning them is sound.
-    * Files the manifest does not cover (a crashed [[appendClustered]])
-    * are included UNCONDITIONALLY: no stats means no license to skip. */
+    * Files the manifest does not cover (data appended to `path` after
+    * the last [[buildManifest]], or a writer that crashed before
+    * rebuilding it) are included UNCONDITIONALLY: no stats means no
+    * license to skip. */
   def prunedFiles(s: SparkSession, path: String, c: String, lo: Any, hi: Any): Seq[String] = {
     // ONE manifest job: collect (file, selected?) together — a separate
     // all-files collect would double the control-plane jobs on the hot

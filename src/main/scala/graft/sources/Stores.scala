@@ -378,38 +378,4 @@ object Stores {
     subPartitionDirs(s, path).filter(_.startsWith("batch_id="))
       .map(_.stripPrefix("batch_id=").toLong)
       .exists(b => b >= 0 && b >= watermark)
-
-  /** The store's FIRST-level batch partitions, from a directory listing
-    * alone (no file footer touched; a missing store reads as empty) —
-    * the model-store compactions' fold-candidate discovery, shared so
-    * the LM and NB compactors cannot drift. */
-  def batchIdDirs(s: SparkSession, path: String): Set[Long] = {
-    val fs = fsOf(s, path)
-    val hp = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(hp)) Set.empty
-    else fs.listStatus(hp).filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .map(_.stripPrefix("batch_id=").toLong).toSet
-  }
-
-  /** Fold a store's `_docs` admission-membership sidecar into a
-    * compaction's temp dir: batches below `foldBelow` collapse into the
-    * bootstrap partition, and when `dropTombstoned` (the final-fold
-    * absorption) the retracted docs' rows are removed in the same swap
-    * that purges their corrections — post-absorption, a retracted doc
-    * never existed. Tolerates a store built before the sidecar existed
-    * (no as-of face is possible there; the as-of readers refuse
-    * loudly). One definition for both model-store compactions. */
-  def foldDocsSidecarInto(s: SparkSession, path: String, tmp: String,
-      foldBelow: Long, dropTombstoned: Boolean): Unit = {
-    val fs = fsOf(s, path)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path + "/_docs"))) return
-    val dm0 = s.read.parquet(path + "/_docs")
-      .withColumn("batch_id", org.apache.spark.sql.functions.col("batch_id").cast("long"))
-    val dm = if (dropTombstoned) minusTombstones(s, path, "doc_id", dm0) else dm0
-    import org.apache.spark.sql.functions.{col, lit}
-    dm.filter(col("batch_id") < foldBelow).withColumn("batch_id", lit(-1L))
-      .unionByName(dm.filter(col("batch_id") >= foldBelow))
-      .coalesce(1).write.partitionBy("batch_id").parquet(tmp + "/_docs")
-  }
 }

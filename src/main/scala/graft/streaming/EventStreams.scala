@@ -221,7 +221,7 @@ object EventStreams {
     * ForgetSpec resume contract, arriving one micro-batch at a time.
     * The model-store retractions need the document TEXT, which is why
     * the deletion stream carries it (the deleting party holds the doc
-    * being deleted — [[graft.operators.TextOps.retractLmDocs]]'
+    * being deleted — [[graft.sources.CountStore.retract]]'s
     * contract). */
   def forgetDocStream(docs: DataFrame,
       stores: graft.operators.Pipeline.DocStores,

@@ -59,27 +59,6 @@ class ManifestSpec extends AnyFunSuite {
     assert(got === Seq("a", "b")) // NULL rows can't satisfy BETWEEN anyway
   }
 
-  test("incremental append extends the manifest to exactly a full rebuild's rows") {
-    val df1 = (0L until 2000L).map(i => (i, i % 5)).toDF("k", "grp")
-    val df2 = (2000L until 3000L).map(i => (i, i % 5)).toDF("k", "grp")
-    val path = tmp("graft-mani-app")
-    Manifest.appendClustered(df1, path, "k", 4, Seq("k")) // bootstrap path
-    Manifest.appendClustered(df2, path, "k", 2, Seq("k"))
-    // the incrementally-grown manifest covers every file with the same
-    // stats a from-scratch rebuild would compute
-    val grown = s.read.parquet(path + "/_manifest")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    Manifest.buildManifest(s, path, Seq("k"))
-    val rebuilt = s.read.parquet(path + "/_manifest")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    assert(grown === rebuilt)
-    // appended rows are visible through a pruned read, still a strict subset
-    val pruned = Manifest.prunedFiles(s, path, "k", 2500L, 2599L)
-    assert(pruned.nonEmpty && pruned.length < s.read.parquet(path).inputFiles.length)
-    val got = Manifest.readPruned(s, path, "k", 2500L, 2599L).count()
-    assert(got === 100L)
-  }
-
   test("a crashed append (data without manifest rows) reads conservatively, then heals") {
     val df1 = (0L until 1000L).map(i => (i, "old")).toDF("k", "tag")
     val path = tmp("graft-mani-crash")

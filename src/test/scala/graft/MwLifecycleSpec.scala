@@ -63,6 +63,22 @@ class MwLifecycleSpec extends AnyFunSuite {
     assert(st.length === 1 && st(0).getAs[String]("run_status") === RunStatus.Success)
   }
 
+  test("getRunId reads NVL(MAX(run_id), 0) + 1 per module and day, the id startup assigns next") {
+    val (dir, _, at) = fixture()
+    val lc = driver(dir, at)
+    assert(lc.getRunId(1L, at) === 1L, "a module with no runs starts at 1")
+    val first = lc.startup("etl_load", parameters = Some("a")).fold(
+      e => fail(s"startup failed: $e"), identity)
+    assert(first.runId === 1L)
+    val next = lc.getRunId(1L, at)
+    assert(next === 2L, "max + 1 over the module's runs on the day")
+    assert(lc.getRunId(2L, at) === 1L, "another module's runs do not count")
+    assert(lc.getRunId(1L, at.plusSeconds(86400L)) === 1L, "another day starts at 1 again")
+    val second = lc.startup("etl_load", parameters = Some("b")).fold(
+      e => fail(s"startup failed: $e"), identity)
+    assert(second.runId === next, "the next startup assigns the id getRunId read")
+  }
+
   test("6 racing drivers starting one module get unique contiguous run ids") {
     val (dir, _, at) = fixture()
     val pool = Executors.newFixedThreadPool(6)

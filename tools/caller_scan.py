@@ -11,8 +11,10 @@ overloads share one count, and a common name (`apply`, `schema`) is
 matched wherever the word appears in code or a string. Prints one line
 per name that main, perfbench and tools never mention — `test-only`
 when a test does, `none` when nothing does — with its defining file
-and line. `--all` prints every name with its four
-counts. Dev-only tool; a candidate it prints is read before it is
+and line. `override` members are skipped: they implement an interface
+(a Spark expression's `doGenCode`, an aggregate's `serialize`) that the
+framework calls, so no caller of theirs is in the source. `--all`
+prints every name with its four counts. Dev-only tool; a candidate it prints is read before it is
 deleted (a name reached by reflection or SQL text is not a caller here).
 """
 import os
@@ -26,7 +28,7 @@ TREES = {
     "perfbench": [os.path.join(ROOT, "perfbench/src")],
     "tools": [os.path.join(ROOT, "tools")],
 }
-DEF = re.compile(r"^\s*(?:(?:private|protected)(?:\[\w+\])?\s+|override\s+|final\s+|lazy\s+|implicit\s+)*"
+DEF = re.compile(r"^\s*((?:(?:private|protected)(?:\[\w+\])?\s+|override\s+|final\s+|lazy\s+|implicit\s+)*)"
                  r"(?:def|val)\s+([A-Za-z_][A-Za-z0-9_]*)")
 
 
@@ -50,8 +52,9 @@ def main():
         for i, line in enumerate(lines):
             m = DEF.match(line)
             # member level only: two-space indent under an object or class
-            if m and len(line) - len(line.lstrip()) <= 2:
-                defs.setdefault(m.group(1), []).append((path, i))
+            if m and "override" not in m.group(1).split() and \
+                    len(line) - len(line.lstrip()) <= 2:
+                defs.setdefault(m.group(2), []).append((path, i))
     words = {}
     for tree, by_path in texts.items():
         for path, lines in by_path.items():
